@@ -867,7 +867,7 @@ object DedupOps {
     // checkpoint + count + exceptAll jobs per round. Corpus-grain dup
     // graphs above the cut keep the distributed checkpoint + exceptAll
     // probe — dup pairs are data-derived, not atlas-bounded.
-    val pinCut = 200 * 1000
+    val pinCut = graft.util.Loops.CcPinMaxRows
     var edgeSet: Set[(Any, Any)] =
       if (converged || nE > pinCut) null
       else {
@@ -1078,7 +1078,8 @@ object DedupOps {
     // edge RDD through the serial pin session). The gate reads the
     // CHECKPOINTED edge count, so a data-sized dup graph keeps the
     // distributed checkpoint + agg-probe rounds.
-    val pinned = nV > 0 && nV <= 200 * 1000 && symCk.count() <= 200 * 1000
+    val pinCut = graft.util.Loops.CcPinMaxRows
+    val pinned = nV > 0 && nV <= pinCut && symCk.count() <= pinCut
     val sym = if (pinned) graft.util.Loops.pin(symCk) else symCk
     if (pinned) labels = graft.util.Loops.pin(labels)
     var rounds = 0
@@ -1102,7 +1103,8 @@ object DedupOps {
           col("__l2").as("l"))
       if (pinned) {
         val (next, rows) = graft.util.Loops.pinRows(nextPlan)
-        changed = rows.exists(_.getBoolean(1)) // free driver-side probe
+        val chg = nextPlan.schema.fieldIndex("__chg")
+        changed = rows.exists(_.getBoolean(chg)) // free driver-side probe
         labels = next.select("v", "l")
       } else {
         val next = nextPlan.localCheckpoint() // the round's ONE materialization

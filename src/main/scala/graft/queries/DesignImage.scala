@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 import graft.util.Tables._
 import graft.design.DesignOps
 import graft.image.ImageOps
@@ -876,7 +877,12 @@ object DesignImage extends QueryModule {
 
   /** The q168 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant parcel series. */
-  private[graft] def connectomeCore(series: DataFrame): DataFrame = {
+  private[graft] def connectomeCore(series: DataFrame): DataFrame =
+    connectomeDegrees(connectomePairs(series), Nil)
+
+  /** q168's checkpointed (p1, p2, r_par, edge) pair relation without the
+    * degree columns — for the kernels that pin it and never read them. */
+  private[graft] def connectomePairs(series: DataFrame): DataFrame = {
     val par = series
       .selectExpr(s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p",
         "t", "v")
@@ -890,19 +896,24 @@ object DesignImage extends QueryModule {
         sum("pva").as("sa"), sum("pvb").as("sb"),
         sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
         sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
-    connectomeFromMoments(mom, connRStr, Nil)
+    connectomeThreshold(mom, connRStr, Nil)
   }
 
-  /** The shared moments → r → edges → degrees tail of q168/q178:
-    * threshold the rounded r, fold per-parcel degree, join it back.
-    * `extraCols` are already-named mom columns carried to the output
-    * (q178's n_kept). All relations NP²-bounded. */
-  private def connectomeFromMoments(mom: DataFrame, rStr: String,
+  /** The shared moments → r → edges → degrees tail of q168/q178, in two
+    * steps: threshold the rounded r (checkpointed), then fold per-parcel
+    * degree and join it back. `extraCols` are already-named mom columns
+    * carried to the output (q178's n_kept). All relations NP²-bounded. */
+  private def connectomeThreshold(mom: DataFrame, rStr: String,
       extraCols: Seq[String]): DataFrame = {
     val keep = Seq("p1", "p2") ++ extraCols
-    val pairs = mom.selectExpr(keep :+ s"round($rStr, 6) AS r_par": _*)
+    mom.selectExpr(keep :+ s"round($rStr, 6) AS r_par": _*)
       .selectExpr(keep ++ Seq("r_par", s"$connEdgeStr AS edge"): _*)
       .localCheckpoint() // NP²-bounded; output + two degree reads
+  }
+
+  private def connectomeDegrees(pairs: DataFrame,
+      extraCols: Seq[String]): DataFrame = {
+    val keep = Seq("p1", "p2") ++ extraCols
     val ones = pairs.filter(col("edge") === 1)
     val deg = ones.selectExpr("p1 AS p").union(ones.selectExpr("p2 AS p"))
       .groupBy("p").agg(count(lit(1)).as("deg"))
@@ -1579,9 +1590,13 @@ object DesignImage extends QueryModule {
   // integer moments through the shared mean/var expression strings.
   // Connector hubs read high-PC/high-z; provincial hubs high-z/low-PC.
   //
-  // Scale shape: one NP²-bounded edge relation, two NP-bounded
-  // aggregates (per-parcel-per-module, per-module moments), broadcast
-  // joins; no window, no driver state.
+  // Scale shape: the NP²-bounded edge relation and the NP-row module
+  // assignment are pinned to the driver once each (capped at PinMaxRows:
+  // an over-cap relation fails loudly), the per-parcel-per-module counts
+  // and per-module moments fold there in exact integers
+  // (GraphLoops.roleMoments), and pc / z_within are the expression
+  // strings below evaluated over the one NP-row LocalRelation that
+  // results — no job after the collects.
 
   private val moduleCount = 3
 
@@ -1590,43 +1605,23 @@ object DesignImage extends QueryModule {
     * shared by q204 (fixed atlas-style assignment) and q208 (data-driven
     * label-propagation modules). */
   private[graft] def moduleRolesWith(pairs0: DataFrame,
-      modules: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    val ones = pe.filter(col("edge") === 1)
-    val sym = ones.selectExpr("p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q"))
-    // atlas-bounded tail: pins instead of localCheckpoints (see
-    // modularityCore's r21 note)
-    val mods = graft.util.Loops.pin(modules) // NP-bounded; 2 consumers
-    val km = graft.util.Loops.pin(sym
-      .join(broadcast(mods.selectExpr("p AS q", "m")), Seq("q"))
-      .groupBy("p", "m").agg(count(lit(1)).as("kin")))
-    // NP·modules-bounded; 2 consumers
-    val deg = km.groupBy("p")
-      .agg(sum("kin").as("k"), sum(expr("kin * kin")).as("skk"))
-    val own = parcels
-      .join(deg, Seq("p"), "left").na.fill(0L, Seq("k", "skk"))
-      .join(broadcast(mods), Seq("p"))
-      .join(km.selectExpr("p", "m", "kin AS k_in"), Seq("p", "m"), "left")
-      .na.fill(0L, Seq("k_in")) // NP rows; feeds moments + output
-    val mom = own.groupBy("m")
-      .agg(count(lit(1)).as("n"), sum("k_in").as("s1"),
-        sum(expr("k_in * k_in")).as("s2"))
-    graft.util.Loops.pin(own.join(broadcast(mom), Seq("m"))
+      modules: DataFrame): DataFrame =
+    moduleRolesOn(GraphLoops.pin(pairs0, "DesignImage.moduleRolesWith"),
+      modules)
+
+  /** The role kernel over an already-pinned graph, rows in parcel order. */
+  private def moduleRolesOn(g: GraphLoops.Graph,
+      modules: DataFrame): DataFrame =
+    GraphLoops.roleMoments(g, modules, "DesignImage.moduleRoles")
       .selectExpr("p", "CAST(m AS INT) AS module", "k", "k_in",
         "CASE WHEN k > 0 THEN round(CAST(k * k - skk AS DOUBLE) / (k * k), 6) END AS pc",
         s"CASE WHEN $mrVarStr > 0 THEN round((CAST(k_in AS DOUBLE) - $mrMeanStr) / sqrt($mrVarStr), 6) END AS z_within")
-      .orderBy("p"))
-  }
 
   /** Module-role core under q204's FIXED stand-in assignment. */
   private[graft] def moduleRolesCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    moduleRolesWith(pe, parcels.selectExpr("p", s"p % $moduleCount AS m"))
+    val g = GraphLoops.pin(pairs0, "DesignImage.moduleRolesCore")
+    moduleRolesOn(g,
+      g.relation(Nil)(_ => Nil).selectExpr("p", s"p % $moduleCount AS m"))
   }
 
   private val mrMeanStr = "CAST(s1 AS DOUBLE) / n"
@@ -1697,11 +1692,10 @@ object DesignImage extends QueryModule {
   // rounds cost NP³-bounded joins that the reclaimed LPA rounds don't
   // pay for; see SCALE.md). The synchronous update is a DETERMINISTIC
   // map F over the label relation, so the first round with
-  // lab_k = lab_{k−1} makes every later round a no-op — the Spark loop
-  // detects it with an NP-bounded diff probe per round (the q142/q199
-  // bounded-driver-probe loop shape) and stops, while the ORACLE keeps
-  // its plain connNP-round unroll: its rounds past the fixed point
-  // reproduce the same labels by construction, so the engines agree
+  // lab_k = lab_{k−1} makes every later round a no-op — the driver loop
+  // compares the two label arrays after each round and stops, while the
+  // ORACLE keeps its plain connNP-round unroll: its rounds past the fixed
+  // point reproduce the same labels by construction, so the engines agree
   // EXACTLY whenever a fixed point is reached. Should a pathological
   // graph never converge (synchronous LPA can 2-cycle; the self-vote
   // damps but does not forbid it), the connectome callers pin
@@ -1714,12 +1708,15 @@ object DesignImage extends QueryModule {
   // Guimerà–Amaral PC / within-module-z kernel as q204, so the two
   // queries differ in exactly one input: who says what the modules are.
   //
-  // Scale shape: per round one edge-relation join against the NP-row
-  // label relation, an NP·labels-bounded vote aggregate, and one
-  // NP-bounded cached-diff probe; rounds = observed convergence depth
-  // (≈ graph diameter + O(1) on real graphs), ceilinged at the node
-  // count. Everything stays NP²-bounded, broadcast-class at atlas
-  // scale (the q204 argument).
+  // Scale shape: the NP²-bounded edge relation is collected to the
+  // driver ONCE (capped at PinMaxRows — an over-cap relation fails
+  // loudly with the site's name) and the rounds run there over adjacency
+  // arrays (GraphLoops.lpa): per round one vote tally per node over its
+  // neighbor entries plus itself, O(NP²) integer work with no job;
+  // rounds = observed convergence depth (≈ graph diameter + O(1) on real
+  // graphs), ceilinged at the node count. The labels leave as one NP-row
+  // LocalRelation; q208 feeds the same pinned graph straight into the
+  // role moments, so its only job is the one edge collect.
   //
   // Graph choice: detection (and the roles, for consistency) run on the
   // POSITIVE-tie graph r ≥ 0.2 — module detection conventionally keeps
@@ -1744,53 +1741,26 @@ object DesignImage extends QueryModule {
     * graph still runs the engines in lockstep. */
   private[graft] def lpaModules(pairs0: DataFrame,
       maxRounds: Int = 0): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      pe.select(col("p1").as("p"))
-        .union(pe.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned: cap derivation + init labels, zero jobs
-    val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded, read every vote round — pin (see louvainModules, r21)
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q")))
-    val cap =
-      if (maxRounds > 0) maxRounds else math.max(1, parcelRows.length)
-    var lab = parcels.select(col("p"), col("p").as("lab"))
-    var converged = false
-    var round = 0
-    while (round < cap && !converged) {
-      round += 1
-      // The label relation is NP rows PINNED on the driver (r20: a
-      // LocalRelation broadcasts with zero jobs and carries exact tiny
-      // stats — the per-round localCheckpoint job, the isEmpty probe
-      // job, and the broadcast-build round-trip all collapse into the
-      // ONE collect that materializes the round); BROADCAST it at both
-      // join sites so the edge relation never shuffles, and take the
-      // (count DESC, label ASC) winner as ONE min(struct) aggregate —
-      // hash aggregation, no WindowExec sort.
-      val votes = sym.join(broadcast(lab.selectExpr("p AS q", "lab")), Seq("q"))
-        .select("p", "lab")
-        .unionByName(lab.select("p", "lab")) // the self-vote
-        .groupBy("p", "lab").agg(count(lit(1)).as("c"))
-      val (next, nrows) = graft.util.Loops.pinRows(votes
-        .groupBy("p")
-        .agg(min(struct(expr("-c AS nc"), col("lab"))).as("w"))
-        .select(col("p"), col("w.lab").as("lab"))
-        .join(broadcast(lab.selectExpr("p", "lab AS plab")), Seq("p"))
-        .select(col("p"), col("lab"), (col("lab") =!= col("plab")).as("chg")))
-      // fixed-point probe: a free driver-side check of the pinned rows
-      converged = !nrows.exists(_.getBoolean(2))
-      lab = next.select("p", "lab")
-    }
-    lab.selectExpr("p", "CAST(lab AS INT) AS m")
+    val site = "DesignImage.lpaModules"
+    lpaModulesOn(GraphLoops.pin(pairs0, site), maxRounds, site)
+  }
+
+  /** LPA over an already-pinned graph → (p, m), rows in parcel order. */
+  private def lpaModulesOn(g: GraphLoops.Graph, maxRounds: Int,
+      site: String): DataFrame = {
+    val lab = GraphLoops.lpa(g, maxRounds, site)._1
+    g.relation(Seq(g.idField.copy(name = "lab")))(i => Seq(g.ids(lab(i))))
+      .selectExpr("p", "CAST(lab AS INT) AS m")
   }
 
   def moduleLpa(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
-    moduleRolesWith(pe, lpaModules(pe, maxRounds = connNP))
+    val site = "DesignImage.moduleLpa"
+    val g = GraphLoops.pin(
+      connectomePairs(ImageOps.voxelSeries(lineitem(s, d), L, NT)
+        .select(col("t"), col("x"), col("y"), col("z"),
+          expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+        .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), site)
+    moduleRolesOn(g, lpaModulesOn(g, connNP, site))
   }
 
   // ---- q212: Newman modularity Q of the LPA partition ----------------------
@@ -3698,63 +3668,29 @@ object DesignImage extends QueryModule {
   // core structure, like modules, is a positive-tie notion and the
   // |r| ≥ 0.1 graph is >50% dense at the fixture).
   //
-  // Scale shape: per round one NP²-bounded neighbor join, one window
-  // PARTITIONED BY NODE (no global sort), one NP fold; rounds a fixed
-  // constant. Everything broadcast-class at atlas scale.
+  // Scale shape: the NP²-bounded edge relation is collected to the
+  // driver ONCE (capped at PinMaxRows — an over-cap relation fails
+  // loudly with the site's name); each H-index round then sorts every
+  // node's neighbor values on the driver (GraphLoops.coreness), O(NP²
+  // log NP) integer work with no job, and the (p, deg, coreness) result
+  // leaves as one NP-row LocalRelation.
 
   private val corenessRounds = connNP
 
   private[graft] def corenessCore(pairs0: DataFrame,
       rounds: Int = corenessRounds): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = graft.util.Loops.pin(pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned; per-round fill + output, zero scan jobs
-    val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded, read every round — pin so each H-index round is
-    // LocalRelation-only (see louvainModules' note, r21)
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q")))
-    val deg = graft.util.Loops.pin(sym.groupBy("p")
-      .agg(count(lit(1)).as("deg"))) // NP rows; c⁰ + output
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("p")
-      .orderBy(col("c").desc, col("q").asc)
-    var c = graft.util.Loops.pin(parcels.join(deg, Seq("p"), "left")
-      .na.fill(0L, Seq("deg")).selectExpr("p", "deg AS c"))
-    // The H-index iteration is a deterministic map and monotone
-    // non-increasing, so the first unchanged round is a FIXED POINT and
-    // every later round reproduces it — the loop stops there (the q208
-    // early-stop), while the oracle's plain `rounds` unroll (and the
-    // spec's 2× re-run) still agree exactly. The NP-row coreness
-    // relation broadcasts into the per-round join (checkpointed = no
-    // stats = Catalyst would sort-merge).
-    var converged = false
-    var round = 0
-    while (round < rounds && !converged) {
-      round += 1
-      val h = sym.join(broadcast(c.selectExpr("p AS q", "c")), Seq("q"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("c") >= col("rn"))
-        .groupBy("p").agg(max("rn").cast("long").as("h"))
-      val (next, nrows) = graft.util.Loops.pinRows(
-        parcels.join(broadcast(h), Seq("p"), "left")
-          .na.fill(0L, Seq("h"))
-          .join(broadcast(c.selectExpr("p", "c AS pc")), Seq("p"))
-          .select(col("p"), col("h").as("c"), (col("h") =!= col("pc")).as("chg")))
-      converged = !nrows.exists(_.getBoolean(2)) // free driver-side probe
-      c = next.select("p", "c")
-    }
-    parcels.join(deg, Seq("p"), "left").na.fill(0L, Seq("deg"))
-      .join(c, Seq("p"))
-      .selectExpr("p", "deg", "c AS coreness")
-      .orderBy("p")
+    val site = "DesignImage.corenessCore"
+    val g = GraphLoops.pin(pairs0, site)
+    val (deg, c) = GraphLoops.coreness(g, rounds, site)
+    g.relation(Seq("deg", "coreness").map(StructField(_, LongType, false)))(
+      i => Seq(deg(i), c(i)))
   }
 
   /** The q215 input graph (positive r ≥ 0.2 ties) — split out so the
     * spec can pin round-count convergence on the REAL fixture graph,
     * not just planted shapes. */
   private[graft] def corenessPairs(s: SparkSession, d: String): DataFrame =
-    connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
+    connectomePairs(ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
         expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge")
@@ -5395,7 +5331,8 @@ object DesignImage extends QueryModule {
         sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
         sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
       .withColumn("n", col("n_kept"))
-    connectomeFromMoments(mom, scnRStr, Seq("n_kept"))
+    connectomeDegrees(connectomeThreshold(mom, scnRStr, Seq("n_kept")),
+      Seq("n_kept"))
   }
 
   private def scrubbedConnectomeSql: String =

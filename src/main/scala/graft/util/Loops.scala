@@ -41,6 +41,15 @@ object Loops {
     * data-sized. */
   val PinMaxRows = 8 * 1000 * 1000
 
+  /** Size gate of the dedup connected-component kernels (DedupOps
+    * ccLabels / ccLabelsAlternating): their pair graphs are DATA-derived,
+    * not atlas-bounded, so they pin edge and label state only below this
+    * many rows and keep the distributed checkpoint rounds above it. */
+  val CcPinMaxRows = 200 * 1000
+  require(CcPinMaxRows < PinMaxRows,
+    "CcPinMaxRows must sit below PinMaxRows: a pinned CC round must never " +
+      "reach the pin ceiling's hard failure")
+
   /** Collect a BOUNDED loop-state relation to the driver and rebuild it
     * as a driver-local relation (LocalRelation), returning the rows too.
     *
@@ -108,18 +117,26 @@ object Loops {
     })
 
   def pinRows(df: DataFrame): (DataFrame, Array[org.apache.spark.sql.Row]) = {
-    val sess = df.sparkSession
-    // limit(PinMaxRows+1) bounds what the collect can materialize on the
-    // driver, so the loud not-atlas-class failure below fires BEFORE a
-    // data-sized relation can OOM the driver (r20 verdict item 2). For
-    // any relation actually under the cap the rows and their order are
-    // identical to a plain collect (partition-order prefix of everything).
-    val rows = collectCapped(df, PinMaxRows)
-    require(rows.length <= PinMaxRows,
-      s"Loops.pin got > $PinMaxRows rows — not atlas-class loop state")
-    val local = sess.createDataFrame(
+    val rows = pinnedRows(df, "Loops.pin")
+    val local = df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)
     (local, rows)
+  }
+
+  /** The rows of [[pinRows]] alone, for callers that continue on the
+    * driver; over `cap` rows it fails naming `site` (the cap is injectable
+    * so specs can trip the failure without an 8M-row collect). */
+  private[graft] def pinnedRows(df: DataFrame, site: String,
+      cap: Int = PinMaxRows): Array[org.apache.spark.sql.Row] = {
+    // limit(cap+1) bounds what the collect can materialize on the driver,
+    // so the loud not-atlas-class failure below fires BEFORE a data-sized
+    // relation can OOM the driver (r20 verdict item 2). For any relation
+    // actually under the cap the rows and their order are identical to a
+    // plain collect (partition-order prefix of everything).
+    val rows = collectCapped(df, cap)
+    require(rows.length <= cap,
+      s"$site got > $cap rows — not atlas-class loop state")
+    rows
   }
 
   private def collectCapped(df: DataFrame,

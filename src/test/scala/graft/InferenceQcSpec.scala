@@ -804,6 +804,47 @@ class InferenceQcSpec extends SparkSpec {
       s"derived rounds must flood the whole chain to one label: $mods")
   }
 
+  test("q208: a duplicate pair votes twice; maxRounds caps the round count") {
+    val s = spark
+    import s.implicits._
+    // triangles {0,1,2} and {10,11,12}, node 5 between 2 and 10: once the
+    // triangles settle, 5's vote ties label 0 against 10 and the lower
+    // label wins — a duplicated 5-10 pair (either orientation) votes twice
+    val bridged = Seq(
+      (0, 1, 1L), (0, 2, 1L), (1, 2, 1L),
+      (10, 11, 1L), (10, 12, 1L), (11, 12, 1L),
+      (2, 5, 1L), (5, 10, 1L))
+    def mods(rows: Seq[(Int, Int, Long)], maxRounds: Int = 0): Map[Int, Int] =
+      graft.queries.DesignImage.lpaModules(rows.toDF("p1", "p2", "edge"), maxRounds)
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    assert(mods(bridged)(5) === 0, "single bridge pair: tie to the lower label")
+    assert(mods(bridged :+ ((5, 10, 1L)))(5) === 10, "duplicate pair outvotes")
+    assert(mods(bridged :+ ((10, 5, 1L)))(5) === 10, "reversed duplicate too")
+    // an 8-node chain floods one hop per round: two rounds stop mid-flood
+    val chain = (0 until 7).map(i => (i, i + 1, 1L))
+    assert(mods(chain, maxRounds = 2) ===
+      Map(0 -> 0, 1 -> 0, 2 -> 0, 3 -> 1, 4 -> 2, 5 -> 3, 6 -> 4, 7 -> 5))
+    val g = graft.queries.GraphLoops.pin(chain.toDF("p1", "p2", "edge"), "spec")
+    val (_, capped, cappedDone) = graft.queries.GraphLoops.lpa(g, 2, "spec")
+    assert(capped === 2 && !cappedDone, "maxRounds = 2 runs exactly 2 rounds")
+    // ≤ 0 ⇒ the node count: the flood settles exactly on round 8
+    val (_, full, fullDone) = graft.queries.GraphLoops.lpa(g, 0, "spec")
+    assert(full === 8 && fullDone, s"uncapped chain: $full rounds")
+  }
+
+  test("graph loops: an edge relation over the pin cap fails loudly, naming the site") {
+    val s = spark
+    import s.implicits._
+    val pe = Seq((0, 1, 1L), (1, 2, 1L), (2, 3, 0L)).toDF("p1", "p2", "edge")
+    val e = intercept[IllegalArgumentException](
+      graft.queries.GraphLoops.pin(pe, "DesignImage.corenessCore", cap = 2))
+    assert(e.getMessage.contains("DesignImage.corenessCore got > 2 rows"),
+      e.getMessage)
+    // at the cap the relation pins: 3 rows, 4 nodes (3 only via edge = 0)
+    val g = graft.queries.GraphLoops.pin(pe, "DesignImage.corenessCore", cap = 3)
+    assert(g.edgeRows === 3 && g.n === 4 && g.adj(3).isEmpty)
+  }
+
   test("q241: flexibility counts exactly the planted movers under max-overlap carry-over") {
     val s = spark
     import s.implicits._

@@ -317,4 +317,47 @@ class PropertySpec extends SparkSpec {
       assert(a == b2, s"dsirWeights partition-variance: $texts")
     }
   }
+
+  test("property: driver H-index coreness equals Batagelj-Zaversnik peeling on random multigraphs") {
+    val s = spark
+    import s.implicits._
+    // random pair lists over up to 14 ids: repeated draws and a re-appended
+    // prefix make duplicate pairs (a second edge entry each, as the
+    // oracle's UNION ALL counts them), edge = 0 draws bring nodes that
+    // touch no edge (isolates: degree 0, coreness 0)
+    val genPairs = for {
+      n <- Gen.choose(2, 14)
+      m <- Gen.choose(1, 40)
+      pairs <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1),
+        Gen.frequency(4 -> 1L, 1 -> 0L)))
+      dup <- Gen.choose(0, 6)
+    } yield {
+      val noLoops = pairs.filter(p => p._1 != p._2)
+      noLoops ++ noLoops.take(dup)
+    }
+    for ((pairs, gi) <- samples(genPairs, 12).zipWithIndex if pairs.nonEmpty) {
+      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+      val adj = nodes.map(v => v -> pairs.collect {
+        case (a, b, 1L) if a == v => b
+        case (a, b, 1L) if b == v => a
+      }).toMap
+      // Batagelj-Zaversnik: repeatedly remove a minimum-degree node; its
+      // coreness is the largest removal degree seen so far
+      val deg = scala.collection.mutable.Map(nodes.map(v => v -> adj(v).size): _*)
+      val alive = scala.collection.mutable.Set(nodes: _*)
+      val expected = scala.collection.mutable.Map.empty[Int, (Long, Long)]
+      var k = 0
+      while (alive.nonEmpty) {
+        val v = alive.minBy(u => (deg(u), u))
+        k = math.max(k, deg(v))
+        expected(v) = (adj(v).size.toLong, k.toLong)
+        alive -= v
+        adj(v).foreach(u => if (alive(u)) deg(u) -= 1)
+      }
+      val got = graft.queries.DesignImage
+        .corenessCore(pairs.toDF("p1", "p2", "edge"), rounds = 64)
+        .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got === expected.toMap, s"graph $gi: $pairs")
+    }
+  }
 }
