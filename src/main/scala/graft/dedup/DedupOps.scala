@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.util.Snapshots
 
 /** Deduplication operators for a training-data pipeline: exact, MinHash+LSH,
   * SimHash, and exact n-gram Jaccard.
@@ -279,12 +280,7 @@ object DedupOps {
     * rather than probe a wrong-scale index. */
   def bandIndexMatches(spark: SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("bands", "docs", "texts", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        val m = spark.table(s"${name}_meta").head()
-        m.getAs[String]("dataset_tag") == datasetTag
-      } catch { case _: Throwable => false })
+    Snapshots.storeTagged(spark, name, Seq("bands", "docs", "texts"), datasetTag)
 
   /** Incremental MAINTENANCE of a standing [[buildBandIndex]] index:
     * append a batch of newly ADMITTED documents (the `keep = true` rows a
@@ -303,7 +299,7 @@ object DedupOps {
     * replay (a pure batch loop) keep the default and skip the scan. */
   def appendToBandIndex(spark: SparkSession, newDocs0: DataFrame,
       name: String, idempotent: Boolean = false): Unit = {
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     val (shingleK, numHashes, rowsPerBand, buckets) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
     // the guard must evaluate ONCE, against the PRE-append index: the three
@@ -351,7 +347,7 @@ object DedupOps {
   def probeBandIndexPairs(spark: SparkSession, increment: DataFrame,
       name: String, threshold: Double): DataFrame = {
     import graft.functions.TextExprs
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     val (shingleK, numHashes, rowsPerBand) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val incSh = shingleSets(increment, shingleK)
@@ -395,7 +391,7 @@ object DedupOps {
     * re-paired and unaffected components are never touched. */
   def incrementalClusters(spark: SparkSession, standingLabels: DataFrame,
       increment: DataFrame, name: String, threshold: Double): DataFrame = {
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     val (shingleK, numHashes, rowsPerBand) =
       (meta.getInt(0), meta.getInt(1), meta.getInt(2))
     val crossPairs = probeBandIndexPairs(spark, increment, name, threshold)
@@ -717,12 +713,7 @@ object DedupOps {
   /** Whether store `name` exists AND was built from `datasetTag`. */
   def evalGramStoreMatches(spark: SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("grams", "docs", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.table(s"${name}_meta").head()
-          .getAs[String]("dataset_tag") == datasetTag
-      } catch { case scala.util.control.NonFatal(_) => false })
+    Snapshots.storeTagged(spark, name, Seq("grams", "docs"), datasetTag)
 
   /** Admit a new benchmark slice: append its distinct gram pairs —
     * benchmark-sized work, the standing set is never re-shingled.
@@ -732,7 +723,7 @@ object DedupOps {
   def appendToEvalGramStore(spark: SparkSession, newEval0: DataFrame,
       name: String, idempotent: Boolean = false): Unit = {
     import graft.functions.TextExprs
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     val (shingleK, buckets) = (meta.getInt(0), meta.getInt(1))
     val newEval = if (!idempotent) newEval0 else newEval0.join(
       spark.table(s"${name}_docs"), Seq("doc_id"), "left_anti").localCheckpoint()
@@ -757,7 +748,7 @@ object DedupOps {
   def retagEvalGramStore(spark: SparkSession, name: String,
       location: String, datasetTag: String): Unit = {
     import spark.implicits._
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     Seq((meta.getInt(0), meta.getInt(1), datasetTag))
       .toDF("shingle_k", "buckets", "dataset_tag")
       .write.mode("overwrite").option("path", s"$location/meta")
@@ -784,7 +775,7 @@ object DedupOps {
     // files — without this, a cloned streaming session keeps answering
     // from the file list of its first batch
     spark.catalog.refreshTable(s"${name}_grams")
-    val shingleK = spark.table(s"${name}_meta").head().getInt(0)
+    val shingleK = Snapshots.metaRow(spark, s"${name}_meta").getInt(0)
     val trainGrams = train
       .select(col("doc_id"),
         explode(TextExprs.shingle_hash_set(col("text"), shingleK)).as("h"))

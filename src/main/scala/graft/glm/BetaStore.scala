@@ -46,12 +46,7 @@ object BetaStore {
   /** Whether store `name` exists AND was sealed from `datasetTag`. */
   def storeMatches(spark: SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("betas", "subjects", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.table(s"${name}_meta").head()
-          .getAs[String]("dataset_tag") == datasetTag
-      } catch { case scala.util.control.NonFatal(_) => false })
+    graft.util.Snapshots.storeTagged(spark, name, Seq("betas", "subjects"), datasetTag)
 
   /** Admit subjects: append their (run, g, j, b_fp) facts —
     * subject-bounded work. `idempotent` anti-joins the subject guard to

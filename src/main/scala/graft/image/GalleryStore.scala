@@ -42,12 +42,7 @@ object GalleryStore {
   /** Whether store `name` exists AND was sealed from `datasetTag`. */
   def storeMatches(spark: SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("vecs", "scans", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.table(s"${name}_meta").head()
-          .getAs[String]("dataset_tag") == datasetTag
-      } catch { case scala.util.control.NonFatal(_) => false })
+    graft.util.Snapshots.storeTagged(spark, name, Seq("vecs", "scans"), datasetTag)
 
   /** Enroll scans: append their (g, p1, p2, r_fp) facts — scan-bounded
     * work. `idempotent` anti-joins the scan guard to skip replays cheaply;

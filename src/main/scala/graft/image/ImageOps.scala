@@ -41,7 +41,8 @@ object ImageOps {
         // to sum(cast(decimal)) for 2-decimal inputs (cell sums ≤ 3e9·100
         // stay exact in both int64 and the double division), but the long
         // sum stays in primitive codegen where Decimal sums box — measured
-        // 0.40 → 0.22 s on the sf0.1 ingest (ProbeDecimal)
+        // 0.40 → 0.22 s on the sf0.1 ingest (SCALE.md "Round-14: DECIMAL →
+        // fixed-point int64")
         (sum(round(col("l_quantity") * 100).cast("long")) / 100.0)
           .cast("decimal(18,2)").as("value_dec"),
       )

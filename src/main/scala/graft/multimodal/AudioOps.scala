@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Afp
+import graft.util.Snapshots
 
 /** Audio near-dup machinery over binary payloads — the audio member of
   * the modality-symmetric standing-index family (text bands q90, vector
@@ -90,14 +91,10 @@ object AudioOps {
   /** Guard: exists AND built from `datasetTag` with this band geometry. */
   def audioIndexMatches(spark: SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("abands", "adocs", "ameta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.catalog.refreshTable(s"${name}_ameta")
-        val m = spark.table(s"${name}_ameta").head()
-        m.getAs[String]("dataset_tag") == datasetTag &&
-          m.getAs[Int]("bands") == Bands && m.getAs[Int]("band_bits") == BandBits
-      } catch { case scala.util.control.NonFatal(_) => false })
+    Snapshots.storeMatches(spark, name, Seq("abands", "adocs"), "ameta") { m =>
+      m.getAs[String]("dataset_tag") == datasetTag &&
+        m.getAs[Int]("bands") == Bands && m.getAs[Int]("band_bits") == BandBits
+    }
 
   /** Append a batch — bucket-aligned, batch-sized; `idempotent` anti-joins
     * EACH table against its own existing rows (not just the adocs guard):
@@ -112,8 +109,7 @@ object AudioOps {
     * the crash left behind. */
   def appendToAudioIndex(spark: SparkSession, newMedia0: DataFrame,
       name: String, idempotent: Boolean = false): Unit = {
-    spark.catalog.refreshTable(s"${name}_ameta")
-    val buckets = spark.table(s"${name}_ameta").head().getAs[Int]("buckets")
+    val buckets = Snapshots.metaRow(spark, s"${name}_ameta").getAs[Int]("buckets")
     if (idempotent) {
       spark.catalog.refreshTable(s"${name}_adocs")
       spark.catalog.refreshTable(s"${name}_abands")

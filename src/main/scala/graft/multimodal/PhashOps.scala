@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.BinaryExprs
+import graft.util.Snapshots
 
 /** Perceptual near-dup machinery over binary media payloads — the media
   * modality's twin of the text band index (DedupOps.buildBandIndex) and the
@@ -165,13 +166,10 @@ object PhashOps {
     * answers false → rebuild, never probe a stale index. */
   def phashIndexMatches(spark: SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("pbands", "pdocs", "pmeta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        val m = spark.table(s"${name}_pmeta").head()
-        m.getAs[String]("dataset_tag") == datasetTag &&
-          m.getAs[Int]("bands") == Bands && m.getAs[Int]("band_bits") == BandBits
-      } catch { case _: Throwable => false })
+    Snapshots.storeMatches(spark, name, Seq("pbands", "pdocs"), "pmeta") { m =>
+      m.getAs[String]("dataset_tag") == datasetTag &&
+        m.getAs[Int]("bands") == Bands && m.getAs[Int]("band_bits") == BandBits
+    }
 
   /** Incremental MAINTENANCE: append a batch of newly admitted payloads to
     * both relations — bucket-aligned, batch-sized; the corpus is never
@@ -181,7 +179,7 @@ object PhashOps {
     * append cannot observe the pdocs append mid-flight. */
   def appendToPhashIndex(spark: SparkSession, newMedia0: DataFrame,
       name: String, idempotent: Boolean = false): Unit = {
-    val buckets = spark.table(s"${name}_pmeta").head().getAs[Int]("buckets")
+    val buckets = Snapshots.metaRow(spark, s"${name}_pmeta").getAs[Int]("buckets")
     val newMedia = if (!idempotent) newMedia0 else newMedia0.join(
       spark.table(s"${name}_pdocs").select(col("corp_id").as("doc_id")),
       Seq("doc_id"), "left_anti").localCheckpoint()

@@ -4440,8 +4440,9 @@ object DesignImage extends QueryModule {
         sum(expr("CASE WHEN li = lj THEN CAST(1 AS BIGINT) ELSE 0 END"))
           .as("n_together"))
       .selectExpr("i", "j", "n_windows", "n_together",
-        "CASE WHEN n_windows > 0 THEN round(CAST(n_together AS DOUBLE) / n_windows, 6) END AS allegiance")
-      .orderBy("i", "j")) // NP²-bounded tail: one pin, not 32-task stages
+        "CASE WHEN n_windows > 0 THEN round(CAST(n_together AS DOUBLE) / n_windows, 6) END AS allegiance"))
+      .orderBy("i", "j") // NP²-bounded tail: one pin, not 32-task stages;
+    // the sort stays in the plan, so the order holds on the demoted path too
   }
 
   def moduleAllegiance(s: SparkSession, d: String): DataFrame =
@@ -4523,8 +4524,8 @@ object DesignImage extends QueryModule {
       .selectExpr("i AS p", "mi AS m", "w_pairs", "w_together",
         "CASE WHEN w_pairs > 0 THEN round(CAST(w_together AS DOUBLE) / w_pairs, 6) END AS recruitment",
         "b_pairs", "b_together",
-        "CASE WHEN b_pairs > 0 THEN round(CAST(b_together AS DOUBLE) / b_pairs, 6) END AS integration")
-      .orderBy("p")) // NP-bounded tail: one pin, not 32-task stages
+        "CASE WHEN b_pairs > 0 THEN round(CAST(b_together AS DOUBLE) / b_pairs, 6) END AS integration"))
+      .orderBy("p") // NP-bounded tail: one pin, not 32-task stages
   }
 
   def recruitment(s: SparkSession, d: String): DataFrame = {

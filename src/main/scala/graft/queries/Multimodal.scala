@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Tables._
+import graft.util.Snapshots
 import graft.multimodal.MultimodalOps
 
 /** Multimodal-column queries: binary payload plumbing over `documents`
@@ -367,7 +368,7 @@ object Multimodal extends QueryModule {
       PhashOps.buildPhashIndex(s, corpus, name, location = location,
         datasetTag = d)
     }
-    val standing = s.read.parquet(s"$location/labels")
+    val standing = Snapshots.parquet(s, s"$location/labels")
     PhashOps.incrementalPhashClusters(s, standing, inc, name)
       .orderBy("doc_id")
   }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Tables._
+import graft.util.Snapshots
 import graft.text.TextOps
 import graft.dedup.DedupOps
 
@@ -238,7 +239,7 @@ object TextDedup extends QueryModule {
         shingleK = 3, numHashes = 16, rowsPerBand = 4,
         location = location, datasetTag = d)
     }
-    val standing = s.read.parquet(s"$location/labels")
+    val standing = Snapshots.parquet(s, s"$location/labels")
     DedupOps.incrementalClusters(s, standing, inc, name, threshold = 0.5)
       .orderBy("doc_id")
   }
@@ -1704,7 +1705,7 @@ object TextDedup extends QueryModule {
         location = gramLoc, datasetTag = d)
     }
     // ---- probe: increment pass + standing state only ----
-    val st = s.read.parquet(s"$idxLoc/scalars")
+    val st = Snapshots.parquet(s, s"$idxLoc/scalars")
       .selectExpr("n_docs AS st_docs", "n_tokens AS st_tokens",
         "sfp AS st_sfp", "n_train AS st_train", "n_contam AS st_contam")
     val incAgg = TextOps.qualityStats(inc, Seq("the", "a"))
@@ -1720,11 +1721,11 @@ object TextDedup extends QueryModule {
         "st_sfp + COALESCE(in_sfp, 0) AS sfp",
         "st_train + in_docs AS n_train",
         "st_contam + in_contam AS n_contam")
-    val lc = s.read.parquet(s"$idxLoc/langs")
+    val lc = Snapshots.parquet(s, s"$idxLoc/langs")
       .unionByName(inc.groupBy("lang").agg(count(lit(1)).as("c")))
       .groupBy("lang").agg(sum(col("c")).as("c"))
     val nc = DedupOps
-      .incrementalClusters(s, s.read.parquet(s"$idxLoc/labels"), inc,
+      .incrementalClusters(s, Snapshots.parquet(s, s"$idxLoc/labels"), inc,
         idxName, threshold = 0.5)
       .agg(countDistinct(col("cluster")).as("nc"))
     datacardFromState(merged, lc, nc)

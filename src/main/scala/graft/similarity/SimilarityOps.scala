@@ -949,12 +949,7 @@ object SimilarityOps {
     * on a missing table. */
   def vecIndexMatches(spark: org.apache.spark.sql.SparkSession, name: String,
       datasetTag: String): Boolean =
-    Seq("cells", "cents", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        val m = spark.table(s"${name}_meta").head()
-        m.getAs[String]("dataset_tag") == datasetTag
-      } catch { case _: Throwable => false })
+    graft.util.Snapshots.storeTagged(spark, name, Seq("cells", "cents"), datasetTag)
 
   /** The persisted centroid relation back as driver literals (model-sized:
     * k rows of d doubles). */
@@ -981,7 +976,8 @@ object SimilarityOps {
     * corpus-sized. */
   def appendToVecIndex(spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, name: String, idempotent: Boolean = false): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getAs[Int]("buckets")
+    val buckets = graft.util.Snapshots.metaRow(spark, s"${name}_meta")
+      .getAs[Int]("buckets")
     val assigned = argmaxCell(prepared(newVecs), loadCents(spark, name))
       .select(col("cell"), col("vec_id"), col("v"), col("norm"))
     val rows = if (!idempotent) assigned else {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import graft.util.Snapshots
 
 /** Structured-Streaming surface (SURVEY.md §2.10): the reference is batch
   * over an at-rest BIDS tree, but its `update/` drop-directory
@@ -822,7 +823,7 @@ object StreamOps {
       threshold: Double, labelsPath: String, outPath: String): DataStreamWriter[Row] =
     docs.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
       val s = batch0.sparkSession
-      val standing = s.read.parquet(labelsPath).select("doc_id", "cluster")
+      val standing = Snapshots.parquet(s, labelsPath).select("doc_id", "cluster")
       // replay guard: docs already labeled were absorbed by a prior
       // (successful) run of this batch — process only the remainder
       val batch = batch0.join(standing, Seq("doc_id"), "left_anti")
@@ -866,7 +867,7 @@ object StreamOps {
       labelsPath: String, outPath: String): DataStreamWriter[Row] =
     media.writeStream.foreachBatch { (batch0: DataFrame, _: Long) =>
       val s = batch0.sparkSession
-      val standing = s.read.parquet(labelsPath).select("doc_id", "cluster")
+      val standing = Snapshots.parquet(s, labelsPath).select("doc_id", "cluster")
       val batch = batch0.join(standing, Seq("doc_id"), "left_anti")
       val updated = graft.multimodal.PhashOps
         .incrementalPhashClusters(s, standing, batch, name, tau)
@@ -919,7 +920,7 @@ object StreamOps {
         write(next.toString)
         fs.rename(live, bak); fs.rename(next, live); fs.delete(bak, true)
       }
-      val standing = s.read.parquet(labelsPath).select("doc_id", "cluster")
+      val standing = Snapshots.parquet(s, labelsPath).select("doc_id", "cluster")
       val batch = batch0.join(standing, Seq("doc_id"), "left_anti")
         .localCheckpoint()
       val updated = graft.dedup.DedupOps
@@ -928,7 +929,7 @@ object StreamOps {
       graft.dedup.DedupOps.appendToBandIndex(s, batch, idxName,
         idempotent = true)
       // additive scalar fold (COALESCE: an empty/replayed batch adds 0)
-      val merged = s.read.parquet(scalarsPath)
+      val merged = Snapshots.parquet(s, scalarsPath)
         .crossJoin(graft.text.TextOps.qualityStats(batch, stopwords)
           .agg(count(lit(1)).as("b_docs"),
             sum(col("n_tokens")).as("b_tokens"),
@@ -942,7 +943,7 @@ object StreamOps {
           "n_train + b_docs AS n_train",
           "n_contam + b_contam AS n_contam")
         .localCheckpoint()
-      val lc = s.read.parquet(langsPath)
+      val lc = Snapshots.parquet(s, langsPath)
         .unionByName(batch.groupBy("lang").agg(count(lit(1)).as("c")))
         .groupBy("lang").agg(sum(col("c")).as("c"))
         .localCheckpoint()

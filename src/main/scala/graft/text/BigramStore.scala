@@ -81,12 +81,8 @@ object BigramStore {
 
   /** Whether store `name` exists AND was built from `datasetTag`. */
   def matches(spark: SparkSession, name: String, datasetTag: String): Boolean =
-    Seq("bigrams", "grams", "docs", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.table(s"${name}_meta").head()
-          .getAs[String]("dataset_tag") == datasetTag
-      } catch { case scala.util.control.NonFatal(_) => false })
+    graft.util.Snapshots.storeTagged(spark, name,
+      Seq("bigrams", "grams", "docs"), datasetTag)
 
   /** Admit a batch: append its bigram/unigram count deltas — batch-sized
     * work. `idempotent` anti-joins the doc guard to skip replays; even an

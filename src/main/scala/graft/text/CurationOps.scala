@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs
 import graft.similarity.SimilarityOps
+import graft.util.Snapshots
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw scrape and tokenization: global boilerplate stripping
@@ -178,11 +179,7 @@ object CurationOps {
     * mismatch all answer "rebuild"). */
   def segFreqStoreMatches(spark: org.apache.spark.sql.SparkSession,
       name: String, datasetTag: String): Boolean =
-    Seq("segs", "docs", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.table(s"${name}_meta").head().getAs[String]("dataset_tag") == datasetTag
-      } catch { case _: Throwable => false })
+    Snapshots.storeTagged(spark, name, Seq("segs", "docs"), datasetTag)
 
   /** Append an admitted batch to the standing store — a bucket-aligned
     * append of batch-sized data; the corpus is never re-segmented.
@@ -191,7 +188,7 @@ object CurationOps {
     * verdict against the PRE-append ids before the writes mutate them. */
   def appendToSegFreqStore(spark: org.apache.spark.sql.SparkSession,
       newDocs0: DataFrame, name: String, idempotent: Boolean = false): Unit = {
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     val (segTokens, buckets) = (meta.getInt(0), meta.getInt(2))
     val newDocs = if (!idempotent) newDocs0 else newDocs0.join(
       spark.table(s"${name}_docs"), Seq("doc_id"), "left_anti").localCheckpoint()
@@ -222,7 +219,7 @@ object CurationOps {
     * batch-sized reassembly. Flat per batch as the corpus grows. */
   def probeSegFreqStrip(spark: org.apache.spark.sql.SparkSession,
       increment: DataFrame, name: String): DataFrame = {
-    val meta = spark.table(s"${name}_meta").head()
+    val meta = Snapshots.metaRow(spark, s"${name}_meta")
     val (segTokens, minDocs) = (meta.getInt(0), meta.getInt(1))
     val segs = segmentRelation(increment, segTokens)
     val batchNd = segs.groupBy("h").agg(countDistinct(col("doc_id")).as("__bnd"))
@@ -653,12 +650,7 @@ object CurationOps {
   /** Whether store `name` exists AND was built from `datasetTag`. */
   def dsirStoreMatches(spark: org.apache.spark.sql.SparkSession,
       name: String, datasetTag: String): Boolean =
-    Seq("counts", "docs", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        spark.table(s"${name}_meta").head()
-          .getAs[String]("dataset_tag") == datasetTag
-      } catch { case scala.util.control.NonFatal(_) => false })
+    Snapshots.storeTagged(spark, name, Seq("counts", "docs"), datasetTag)
 
   /** Admit a batch into the model: append its bucket-count delta —
     * batch-sized work, the corpus is never re-counted. `idempotent`
@@ -669,7 +661,7 @@ object CurationOps {
   def appendToDsirStore(spark: org.apache.spark.sql.SparkSession,
       newDocs0: DataFrame, isTarget: Column, name: String,
       idempotent: Boolean = false): Unit = {
-    val buckets = spark.table(s"${name}_meta").head().getInt(0)
+    val buckets = Snapshots.metaRow(spark, s"${name}_meta").getInt(0)
     val newDocs = if (!idempotent) newDocs0 else newDocs0.join(
       spark.table(s"${name}_docs"), Seq("doc_id"), "left_anti").localCheckpoint()
     dsirDelta(newDocs, isTarget, buckets, batchFingerprint(newDocs, isTarget))
@@ -685,14 +677,19 @@ object CurationOps {
     * the arrivals with it (the true DSIR deployment: reference model,
     * new data). Delta rows re-aggregate to exact counts (addition is
     * order-free), then scoring is the projection-only typedLit pass.
-    * Tables are refreshed first: admission may run in another session
-    * while a probe stream is live (the q138 lesson). */
+    * The fitted array is kept per snapshot of `name_counts`
+    * ([[graft.util.Snapshots.ofTable]]): a serve over an unchanged store
+    * runs no model job, and an append or compaction (new files) refits.
+    * The counts table is refreshed before a refit: admission may run in
+    * another session while a probe stream is live (the q138 lesson). */
   def probeDsirScore(spark: org.apache.spark.sql.SparkSession,
       arrivals: DataFrame, name: String): DataFrame = {
-    spark.catalog.refreshTable(s"${name}_counts")
-    val buckets = spark.table(s"${name}_meta").head().getInt(0)
-    dsirScore(dsirFeatures(arrivals, lit(false), buckets),
-      fitLr(liveCounts(spark, name), buckets))
+    val buckets = Snapshots.metaRow(spark, s"${name}_meta").getInt(0)
+    val lr = Snapshots.ofTable(spark, s"dsir_lr:$buckets", s"${name}_counts") {
+      spark.catalog.refreshTable(s"${name}_counts")
+      fitLr(liveCounts(spark, name), buckets)
+    }
+    dsirScore(dsirFeatures(arrivals, lit(false), buckets), lr)
   }
 
   /** Sentinel batch_fp of the folded BASE rows a compaction writes —

@@ -143,7 +143,8 @@ object RetrievalOps {
     // so the whole pipeline pays a single doc-keyed exchange of
     // map-side-combined pairs (the old aggregate shape paid that exchange
     // on RAW token occurrences, then a second one for the per-query sums —
-    // ProbeBm25 has the A/B: 1.28 / 3.84-without-repartition / 1.22 s)
+    // SCALE.md "Round-14 late: term_counts kernel" has the A/B: 1.28 /
+    // 3.84-without-repartition / 1.22 s)
     val tf = docs
       .select(col("doc_id"), size(toks).cast("long").as("dl"),
         explode(graft.functions.TextExprs.term_counts(col("text"))).as("tc"))

@@ -40,7 +40,7 @@ object TokenizerStore {
     * run queries CONCURRENTLY (8-wide), and several tokenizer queries
     * share one store — an unguarded check-then-build races saveAsTable
     * into TABLE_ALREADY_EXISTS. Builds happen once per dataset, so the
-    * serialized check (one cheap meta head()) costs nothing. */
+    * serialized check (a file listing of the meta seal) costs nothing. */
   def ensure(spark: SparkSession, docs: => DataFrame, name: String,
       location: String, ulmRounds: Int, capV: Int, bpeRounds: Int,
       datasetTag: String): Unit = synchronized {
@@ -78,15 +78,12 @@ object TokenizerStore {
     * retrain, never serve a stale or differently-tuned model. */
   def matches(spark: SparkSession, name: String, datasetTag: String,
       ulmRounds: Int, capV: Int, bpeRounds: Int): Boolean =
-    Seq("vocab", "merges", "meta")
-      .forall(t => spark.catalog.tableExists(s"${name}_$t")) &&
-      (try {
-        val m = spark.table(s"${name}_meta").head()
-        m.getAs[String]("dataset_tag") == datasetTag &&
-          m.getAs[Int]("ulm_rounds") == ulmRounds &&
-          m.getAs[Int]("cap_v") == capV &&
-          m.getAs[Int]("bpe_rounds") == bpeRounds
-      } catch { case scala.util.control.NonFatal(_) => false })
+    graft.util.Snapshots.storeMatches(spark, name, Seq("vocab", "merges")) { m =>
+      m.getAs[String]("dataset_tag") == datasetTag &&
+        m.getAs[Int]("ulm_rounds") == ulmRounds &&
+        m.getAs[Int]("cap_v") == capV &&
+        m.getAs[Int]("bpe_rounds") == bpeRounds
+    }
 
   /** The trained unigram vocabulary: (piece, cnt, lnp_fp). */
   def vocab(spark: SparkSession, name: String): DataFrame = {

@@ -106,7 +106,10 @@ object BucketedStores {
     // writer emits one file per (task, bucket) again. A plain parquet
     // read forces a real shuffle; HashPartitioning(bucketCols, n) is
     // exactly the bucket-id function, so each task owns one whole bucket.
-    val src = transform(spark.read.parquet(meta.location.toString))
+    // The catalog already holds the files' schema, so the read infers
+    // nothing (no inference job; no per-location entry in Snapshots for a
+    // location the swap is about to delete).
+    val src = transform(spark.read.schema(meta.schema).parquet(meta.location.toString))
     val writer = src
       .repartition(spec.numBuckets, spec.bucketColumnNames.map(src.col): _*)
       .write.mode("overwrite").option("path", newLoc.toString)

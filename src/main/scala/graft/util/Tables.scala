@@ -6,11 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every `SparkEntry.queries` entry receives `(spark, sfDir)`; these helpers
   * centralize the parquet reads so scans stay prunable (the parquet source
-  * pushes filters/column pruning automatically — SURVEY.md §4).
+  * pushes filters/column pruning automatically — SURVEY.md §4). The
+  * inferred schema is kept per file snapshot ([[Snapshots.parquet]]), so a
+  * query build over unchanged inputs runs no schema-inference job.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Snapshots.parquet(spark, s"$sfDir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = table(s, d, "orders")
