@@ -1119,13 +1119,15 @@ object DesignImage extends QueryModule {
     // aggregate, and signFlipParts reads it twice (base + perms) — without
     // a checkpoint q182 re-ran the full lineitem chain per consumer (the
     // same miss nbsCore fixed in r20; r20 verdict item 3). sf is then
-    // NP²-bounded with two consumers (bh + the verdict join): pin it.
+    // NP²-bounded with two consumers (bh + the verdict join), but its plan
+    // is the fl×PermP expansion: checkpoint it distributed (fresh), not
+    // single-partition on the pin session.
     val fl = facts
       .filter(col("z_fp").isNotNull)
       .select(col("p1").as("run"), col("p2").as("j"), col("g"),
         col("z_fp").as("b_fp"))
       .localCheckpoint()
-    val sf = graft.util.Loops.pin(Glm.signFlipCore(s, fl))
+    val sf = graft.util.Loops.fresh(Glm.signFlipCore(s, fl))
     val bh = Glm.fdrBhCore(sf, alphaOverM)
       .select("run", "j", "rk", "kbh", "rejected")
     sf.join(bh, Seq("run", "j"), "left")
@@ -1413,13 +1415,20 @@ object DesignImage extends QueryModule {
     val ones = pe.filter(col("edge") === 1)
     val sym = ones.selectExpr("p1 AS a", "p2 AS b")
       .union(ones.selectExpr("p2 AS a", "p1 AS b"))
-    var dist = graft.util.Loops.pin(sym.withColumn("d", lit(1L)))
+    pathMetricsFromDist(
+      minPlusDoubling(sym.withColumn("d", lit(1L)), parcelRows.length), parcels)
+  }
+
+  /** q184/q234's min-plus doubling: from the (a, b, d) hop relation to the
+    * all-pairs shortest-distance relation over `nParcels` nodes. */
+  private def minPlusDoubling(hops: DataFrame, nParcels: Int): DataFrame = {
+    var dist = graft.util.Loops.pin(hops)
     // doubling rounds sized from the INPUT's node count (2^rounds ≥ n >
     // diameter), not the global connNP constant — a planted graph with
     // more nodes than the production atlas still gets full coverage.
-    // parcels is an atlas-sized (node-count) relation, driver-pinned,
-    // so the round derivation is free.
-    val nNodes = math.max(2L, parcelRows.length.toLong)
+    // The callers' parcels are an atlas-sized (node-count) relation,
+    // driver-pinned, so the round derivation is free.
+    val nNodes = math.max(2L, nParcels.toLong)
     val rounds = math.max(1,
       math.ceil(math.log(nNodes.toDouble) / math.log(2.0)).toInt)
     for (_ <- 0 until rounds) {
@@ -1431,7 +1440,7 @@ object DesignImage extends QueryModule {
         .groupBy("a", "b").agg(min("d").as("d"))
         .transform(graft.util.Loops.pin) // NP²-bounded distance state
     }
-    pathMetricsFromDist(dist, parcels)
+    dist
   }
 
   /** The q184/q199 aggregation tail over a finished (a, b, d) shortest-
@@ -1446,7 +1455,7 @@ object DesignImage extends QueryModule {
       .agg(max("d").as("ecc"), count(lit(1)).as("n_reach"),
         sum(expr("CAST(round(1e12 / d, 0) AS BIGINT)")).as("srp"))
     // NP-bounded tail over pinned dist/parcel state: pin (r21 — see
-    // modularityCore's note); shared by q184/q199/q234
+    // modularityWeightedCore's note); shared by q184/q199/q234
     graft.util.Loops.pin(parcels
       .join(broadcast(perP), Seq("p"), "left")
       .crossJoin(broadcast(glob))
@@ -1489,7 +1498,8 @@ object DesignImage extends QueryModule {
         .union(pe.select(col("p2").as("p"))).distinct())
     val ones = pe.filter(col("edge") === 1)
     // NP²-bounded adjacency, joined every BFS depth — pin so each
-    // frontier expansion is LocalRelation-only (see louvainModules, r21)
+    // frontier expansion is LocalRelation-only (r21: a checkpointed edge
+    // RDD is re-scanned through the serial pin session every round)
     val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS a", "p2 AS b")
       .union(ones.selectExpr("p2 AS a", "p1 AS b"))
       .distinct())
@@ -1557,7 +1567,7 @@ object DesignImage extends QueryModule {
     val parcels = pe.select(col("p1").as("p"))
       .union(pe.select(col("p2").as("p"))).distinct()
     val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded, read every power step — pin (see louvainModules, r21)
+    // NP²-bounded, read every power step — pin (see pathMetricsBfsCore, r21)
     val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS a", "p2 AS b")
       .union(ones.selectExpr("p2 AS a", "p1 AS b")))
     var x = graft.util.Loops.pin(parcels.select(col("p"), lit(1L).as("x")))
@@ -1734,7 +1744,8 @@ object DesignImage extends QueryModule {
       "THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
 
   /** Deterministic label propagation over a q168-shaped (p1, p2, …,
-    * edge) relation → (p, m) modules; the loop stops at the first
+    * edge) relation (or a (p1, p2, w) one: LPA counts entries, not
+    * weights) → (p, m) modules; the loop stops at the first
     * fixed-point round (see the q208 section note), ceilinged at
     * `maxRounds` (≤ 0 ⇒ the input's node count). Connectome callers
     * pass connNP — the oracle's unroll count — so a never-converging
@@ -1747,11 +1758,14 @@ object DesignImage extends QueryModule {
 
   /** LPA over an already-pinned graph → (p, m), rows in parcel order. */
   private def lpaModulesOn(g: GraphLoops.Graph, maxRounds: Int,
-      site: String): DataFrame = {
-    val lab = GraphLoops.lpa(g, maxRounds, site)._1
+      site: String): DataFrame =
+    modulesOf(g, GraphLoops.lpa(g, maxRounds, site)._1)
+
+  /** Per-node labels (node indices) of a pinned graph → (p, m), rows in
+    * parcel order, m = the label node's id as INT. */
+  private def modulesOf(g: GraphLoops.Graph, lab: Array[Int]): DataFrame =
     g.relation(Seq(g.idField.copy(name = "lab")))(i => Seq(g.ids(lab(i))))
       .selectExpr("p", "CAST(lab AS INT) AS m")
-  }
 
   def moduleLpa(s: SparkSession, d: String): DataFrame = {
     val site = "DesignImage.moduleLpa"
@@ -1775,52 +1789,26 @@ object DesignImage extends QueryModule {
   // Q near 0 ⇒ no better than chance; the planted two-clique spec pins
   // the textbook Q = 5/14 with a bridge and 1/2 without.
   //
+  // Engine form: the unit-weight case of q226's weighted core (w = edge,
+  // so W = M, w_in = e_in, s_tot = d_tot and qn is the same integer),
+  // its columns renamed back to the unweighted names.
+  //
   // Scale shape: everything after the connectome moments is NP²-bounded
   // (edge relation) with NP-bounded module aggregates — q208's class.
 
-  /** Modularity core from a q168-shaped pair relation and (p, m)
-    * modules: (module, n_nodes, e_in, d_tot, q_contrib, q). */
-  private[graft] def modularityCore(pairs0: DataFrame,
-      modules: DataFrame): DataFrame = {
-    // every relation below is atlas-bounded (NP / NP² / modules rows):
-    // pin the multi-consumer ones instead of localCheckpoint (r21) — a
-    // checkpointed LocalRelation-derived module relation re-materialized
-    // through a 32-task job and every downstream leaf scanned 32-wide on
-    // the main session, where a pin is one single-partition collect and
-    // zero-job broadcasts; the Q tail pins too, so the whole post-moment
-    // fold is two collect jobs.
-    val ones = pairs0.filter(col("edge") === 1).select("p1", "p2")
-    val mods = graft.util.Loops.pin(modules) // NP-bounded; 3 consumers
-    val ml = graft.util.Loops.pin(ones
-      .join(broadcast(mods.selectExpr("p AS p1", "m AS m1")), Seq("p1"))
-      .join(broadcast(mods.selectExpr("p AS p2", "m AS m2")), Seq("p2")))
-    // edge-bounded (≤ NP²); 3 consumers (M, e_in, degrees)
-    val me = ml.agg(count(lit(1)).as("m_edges"))
-    val ein = ml.filter(col("m1") === col("m2"))
-      .groupBy(col("m1").as("module")).agg(count(lit(1)).as("e_in"))
-    val dm = ml.selectExpr("m1 AS module").unionByName(ml.selectExpr("m2 AS module"))
-      .groupBy("module").agg(count(lit(1)).as("d_tot"))
-    val per = mods.groupBy(col("m").as("module")).agg(count(lit(1)).as("n_nodes"))
-      .join(ein, Seq("module"), "left")
-      .join(dm, Seq("module"), "left")
-      .na.fill(0L, Seq("e_in", "d_tot"))
-      .crossJoin(broadcast(me))
-      .selectExpr("module", "n_nodes", "e_in", "d_tot", "m_edges",
-        "4 * m_edges * e_in - d_tot * d_tot AS qn")
-    graft.util.Loops.pin(per
-      .crossJoin(broadcast(per.agg(sum("qn").as("qsum"))))
-      .selectExpr("module", "n_nodes", "e_in", "d_tot",
-        "CASE WHEN m_edges > 0 THEN round(CAST(qn AS DOUBLE) / CAST(4 * m_edges * m_edges AS BIGINT), 6) END AS q_contrib",
-        "CASE WHEN m_edges > 0 THEN round(CAST(qsum AS DOUBLE) / CAST(4 * m_edges * m_edges AS BIGINT), 6) END AS q")
-      .orderBy("module"))
-  }
+  /** q212/q225/q239's modularity relation: the weighted core over a
+    * (p1, p2, w = edge) relation, under the unweighted column names
+    * (module, n_nodes, e_in, d_tot, q_contrib, q). */
+  private def edgeModularity(pe: DataFrame, modules: DataFrame): DataFrame =
+    modularityWeightedCore(pe, modules)
+      .toDF("module", "n_nodes", "e_in", "d_tot", "q_contrib", "q")
 
   def modularityQ(s: SparkSession, d: String): DataFrame = {
     val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
         expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
-    modularityCore(pe, lpaModules(pe, maxRounds = connNP))
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
+    edgeModularity(pe, lpaModules(pe, maxRounds = connNP))
   }
 
   /** The modularity CTE tail (edge-label join → per-module aggregates →
@@ -1964,85 +1952,43 @@ object DesignImage extends QueryModule {
   //   - the comparable gain is EXACT INTEGER: dropping the k_i²/(4M²)
   //     term constant across candidates, argmax_c ΔQ(i→c) =
   //     argmax_c [ 2M·k_{i,c} − k_i·Σtot̃(c) ] with Σtot̃ excluding i
-  //     itself (2M·k_{i,c} ≤ 2M·k_i < 2⁶³ through NP ≈ 10⁵ — int64);
+  //     itself (the oracle's int64 holds through NP ≈ 10⁵; the engine
+  //     runs q230's weighted gain at w = 1, in BigInt);
   //   - ties break (gain DESC, c ASC) — a total integer order, so both
   //     engines sweep identically; rounds are FIXED at louvainRounds
   //     (a quality sweep, not a convergence bound — one-level Louvain
   //     is itself a fixed-depth heuristic).
   //
   // The output is the SAME per-module modularity relation as q212
-  // (shared modularityCore / SQL tail), so the two queries differ in
+  // (shared edgeModularity / SQL tail), so the two queries differ in
   // exactly one input — who says what the modules are — and the spec
   // pins the planted path graph where Louvain's Q beats LPA's (LPA
   // floods a path to ONE label → Q = 0; ΔQ-greedy splits it).
   //
-  // Scale shape: per round one edge-relation join against the NP-row
-  // label relation, an NP·communities-bounded candidate aggregate, and
-  // NP-bounded broadcast joins; rounds are a fixed constant — q208's
-  // class exactly.
+  // Engine form: q230's detector at unit weights (w = edge) — one
+  // Louvain for both, run on the driver (GraphLoops.louvain) over one
+  // capped edge collect: per round one gain scan per node over its
+  // neighbor entries, O(NP²) integer work with no job; rounds are the
+  // fixed louvainRounds. The NP-row labels leave as one LocalRelation.
 
   private val louvainRounds = 4
 
-  /** Deterministic one-level Louvain over a q168-shaped (p1, p2, …,
-    * edge) relation → (p, m) modules. Parcel ids must be ≥ 0 (the
-    * parity gate uses p % 2; every caller's ids are hash residues or
-    * planted non-negative ids). */
-  private[graft] def louvainModules(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = graft.util.Loops.pin(pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned; degree fill + init labels, zero jobs
-    val ones = pe.filter(col("edge") === 1)
-    // 2M rows, NP²-bounded — PIN, not checkpoint (r21): every round's
-    // collect otherwise re-scans the distributed edge RDD through the
-    // serial pin session; pinned, each round is LocalRelation-only
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q")))
-    val (deg, degRows) = graft.util.Loops.pinRows(parcels.join(
-        sym.groupBy("p").agg(count(lit(1)).as("k")), Seq("p"), "left")
-      .na.fill(0L, Seq("k")))
-    // NP rows, driver-pinned; joined every round with zero build jobs
-    val m2 = degRows.map(_.getLong(1)).sum // 2M — free off the pinned degrees
-    var lab = parcels.select(col("p"), col("p").as("c"))
-    for (r <- 0 until louvainRounds) {
-      // NP-row relations PINNED on the driver (r20: LocalRelations
-      // broadcast with zero jobs; the per-round checkpoint job
-      // collapses into the one collect) — BROADCAST them at every join
-      // (Catalyst would otherwise sort-merge and re-shuffle the edge
-      // relation each round), and take the (gain DESC, c ASC) winner
-      // as one min(struct) hash aggregate instead of a WindowExec
-      // sort (the q208 round shape).
-      val stot = lab.join(broadcast(deg), Seq("p"))
-        .groupBy("c").agg(sum("k").as("s"))
-      val kic = sym.join(broadcast(lab.selectExpr("p AS q", "c")), Seq("q"))
-        .groupBy("p", "c").agg(count(lit(1)).as("kin"))
-      // staying is always a candidate: an own-community row with kin = 0
-      // unioned in, MAX-deduped against the real kin (kin >= 1 wins)
-      val cand = kic
-        .unionByName(lab.select(col("p"), col("c")).withColumn("kin", lit(0L)))
-        .groupBy("p", "c").agg(max("kin").as("kin"))
-      val gains = cand
-        .join(broadcast(stot), Seq("c"))
-        .join(broadcast(deg), Seq("p"))
-        .join(broadcast(lab.selectExpr("p", "c AS cur")), Seq("p"))
-        .selectExpr("p", "c", "cur",
-          s"$m2 * kin - k * (s - CASE WHEN c = cur THEN k ELSE 0 END) AS g")
-      lab = gains
-        .groupBy("p")
-        .agg(min(struct(expr("-g AS ng"), col("c"), col("cur"))).as("w"))
-        .selectExpr("p",
-          s"CASE WHEN p % 2 = ${r % 2} THEN w.c ELSE w.cur END AS c")
-        .transform(graft.util.Loops.pin) // NP rows; next round reads 3 times
-    }
-    lab.selectExpr("p", "CAST(c AS INT) AS m")
+  /** Deterministic one-level Louvain over a (p1, p2, w) relation (w = 0
+    * ⇒ no edge; unit weights are q225's unweighted detector) → (p, m)
+    * modules. Parcel ids must be ≥ 0 (the parity gate uses p % 2; every
+    * caller's ids are hash residues or planted non-negative ids). */
+  private[graft] def louvainModules(wpairs: DataFrame): DataFrame = {
+    val site = "DesignImage.louvainModules"
+    val g = GraphLoops.pin(wpairs, site)
+    modulesOf(g, GraphLoops.louvain(g, louvainRounds, site))
   }
 
   def modularityLouvain(s: SparkSession, d: String): DataFrame = {
     val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
         expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
-    modularityCore(pe, louvainModules(pe))
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
+    edgeModularity(pe, louvainModules(pe))
   }
 
   /** The generated Louvain round CTEs: lu0 … lu{rounds} over
@@ -2129,107 +2075,41 @@ object DesignImage extends QueryModule {
   // accepted merge (spec-pinned: the ring improves 0.65 → 0.67 and the
   // triangles stay intact). Supernode strengths s_m = Σ member degrees
   // keep intra edges (they live in d, not in w); 2M is the ORIGINAL
-  // graph's. Gains ride DECIMAL(38,0)/HUGEINT (the q230 discipline —
-  // community degrees reach 2M, so d₁·d₂ passes int64 where level-1's
-  // k_i ≤ NP bound could not). The output is the SAME per-module
-  // modularity relation as q212/q225 over the final partition, so the
-  // three queries differ in exactly one input: who says the modules.
+  // graph's. Gains ride BigInt in the engine and HUGEINT in the oracle
+  // (the q230 discipline — community degrees reach 2M, so d₁·d₂ passes
+  // int64 where level-1's k_i ≤ NP bound could not). The output is the
+  // SAME per-module modularity relation as q212/q225 over the final
+  // partition, so the three queries differ in exactly one input: who
+  // says the modules.
   //
-  // Scale shape: level 1 is q225's; the coarse graph is modules²-
-  // bounded (≤ NP²), every level-2 relation is modules-bounded, and
-  // rounds are the fixed louvainRounds (each round halves at best, so
-  // 4 rounds cover a 16× aggregation) — broadcast-class throughout.
+  // Engine form: both levels run on the driver (GraphLoops.louvain then
+  // louvainLevel2) over ONE capped edge collect; level 2 works on the
+  // node labels directly (a community's weight to another is the sum of
+  // its members' entries into it), so no coarse graph is built. A round
+  // with no mutual merge leaves the state unchanged and the sweep is a
+  // deterministic map of the state, so the loop stops there (the q208
+  // fixed-point argument); the oracle's plain unroll of louvainRounds
+  // reproduces the same labels (each round halves at best, so 4 rounds
+  // cover a 16× aggregation).
+  //
+  // Scale shape: q225's — one NP²-bounded edge collect, O(NP²) integer
+  // work per round on the driver, one NP-row LocalRelation out.
 
-  /** Two-level deterministic Louvain over a q168-shaped (p1, p2, …,
-    * edge) relation → (p, m) modules. */
-  private[graft] def louvainTwoLevelModules(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val lab1 = graft.util.Loops.pin(louvainModules(pe)) // (p, m) level 1
-    val ones = pe.filter(col("edge") === 1)
-    val ml = ones
-      .join(broadcast(lab1.selectExpr("p AS p1", "m AS m1")), Seq("p1"))
-      .join(broadcast(lab1.selectExpr("p AS p2", "m AS m2")), Seq("p2"))
-      .localCheckpoint() // edge-bounded; cross edges + strengths + 2M
-    val cross = ml.filter(col("m1") =!= col("m2"))
-    val csym = cross.selectExpr("m1 AS a", "m2 AS b")
-      .unionByName(cross.selectExpr("m2 AS a", "m1 AS b"))
-      .groupBy("a", "b").agg(count(lit(1)).as("w"))
-      .localCheckpoint() // modules²-bounded; every round
-    val cnodes = graft.util.Loops.pin(lab1.select("m").distinct())
-    val (cstr, cstrRows) = graft.util.Loops.pinRows(cnodes.join(
-        ml.selectExpr("m1 AS m").unionByName(ml.selectExpr("m2 AS m"))
-          .groupBy("m").agg(count(lit(1)).as("s")), Seq("m"), "left")
-      .na.fill(0L, Seq("s")))
-    // modules-bounded, driver-pinned; every round with zero build jobs
-    val m2x = cstrRows.map(_.getLong(1)).sum // 2M — free off pinned strengths
-    // lab rides as DRIVER rows + a rebuilt LocalRelation: the mutual-pair
-    // probe and the label remap are pure functions of the pinned best
-    // relation, so running them as two more pins paid ~2 planning+collect
-    // round-trips per round (~90 ms each, ProbePin) for work a hash map
-    // does in microseconds — r21: one pin per round (best), everything
-    // downstream of it folded on the driver. Labels are bit-identical:
-    // mutual iff best(b) = c, nc = least(c, b), c' = COALESCE(nc, c) —
-    // the same integer arithmetic the former relational form evaluated.
-    val labSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("m",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("c",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    var labRows = graft.util.Loops
-      .pinRows(cnodes.select(col("m"), col("m").as("c")))._2
-    def labRel = pairs0.sparkSession.createDataFrame(
-      java.util.Arrays.asList(labRows: _*), labSchema)
-    var lab = labRel
-    var merged = true
-    var round = 0
-    // a round with NO mutual merge leaves the state unchanged, and the
-    // sweep is a deterministic map of the state — so every later round
-    // is a no-op (the q208 fixed-point argument) and the loop stops;
-    // the oracle's plain unroll reproduces the same labels.
-    while (round < louvainRounds && merged) {
-      round += 1
-      val cw = csym
-        .join(broadcast(lab.selectExpr("m AS a", "c AS c1")), Seq("a"))
-        .join(broadcast(lab.selectExpr("m AS b", "c AS c2")), Seq("b"))
-        .filter(col("c1") =!= col("c2"))
-        .groupBy("c1", "c2").agg(sum("w").as("w"))
-      val cd = lab.join(broadcast(cstr), Seq("m"))
-        .groupBy("c").agg(sum("s").as("d"))
-        .transform(graft.util.Loops.pin) // communities-bounded; both gain sides
-      val gains = cw
-        .join(broadcast(cd.selectExpr("c AS c1", "d AS d1")), Seq("c1"))
-        .join(broadcast(cd.selectExpr("c AS c2", "d AS d2")), Seq("c2"))
-        .selectExpr("c1", "c2",
-          s"CAST($m2x AS DECIMAL(38,0)) * w - CAST(d1 AS DECIMAL(38,0)) * d2 AS g")
-        .filter(col("g") > 0) // strict: Q-neutral merges are not merges
-      val bestRows = graft.util.Loops.pinRows(gains.groupBy("c1")
-        .agg(min(struct(expr("-g AS ng"), col("c2"))).as("bw"))
-        .selectExpr("c1 AS c", "bw.c2 AS b"))._2
-      val bestMap = bestRows.iterator
-        .map(r => r.getInt(0) -> r.getInt(1)).toMap
-      val mutual = bestRows.iterator.flatMap { r =>
-        val c = r.getInt(0); val b = r.getInt(1)
-        if (bestMap.get(b).contains(c)) Some(c -> math.min(c, b)) else None
-      }.toMap
-      merged = mutual.nonEmpty
-      if (merged) {
-        labRows = labRows.map { r =>
-          val c = r.getInt(1)
-          org.apache.spark.sql.Row(r.getInt(0), mutual.getOrElse(c, c))
-        }
-        lab = labRel
-      }
-    }
-    lab1.join(broadcast(lab.selectExpr("m", "CAST(c AS INT) AS c2")), Seq("m"))
-      .selectExpr("p", "c2 AS m")
+  /** Two-level deterministic Louvain over a (p1, p2, w) relation → (p, m)
+    * modules. */
+  private[graft] def louvainTwoLevelModules(wpairs: DataFrame): DataFrame = {
+    val site = "DesignImage.louvainTwoLevelModules"
+    val g = GraphLoops.pin(wpairs, site)
+    modulesOf(g, GraphLoops.louvainLevel2(g,
+      GraphLoops.louvain(g, louvainRounds, site), louvainRounds, s"$site/level2"))
   }
 
   def modularityLouvainMulti(s: SparkSession, d: String): DataFrame = {
     val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
         expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
-    modularityCore(pe, louvainTwoLevelModules(pe))
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
+    edgeModularity(pe, louvainTwoLevelModules(pe))
   }
 
   /** The generated level-2 CTEs: coarsen `lumod` over mones into
@@ -2502,15 +2382,23 @@ object DesignImage extends QueryModule {
 
   /** Weighted modularity core from a (p1, p2, w) relation (w = 0 ⇒ no
     * edge) and (p, m) modules: Qw = Σ_m [w_mm/W − (s_m/2W)²] via the
-    * exact numerator qn = 4·W·w_mm − s_m² in DECIMAL(38,0). */
+    * exact numerator qn = 4·W·w_mm − s_m² in DECIMAL(38,0) →
+    * (module, n_nodes, w_in, s_tot, q_contrib, q). */
   private[graft] def modularityWeightedCore(wpairs: DataFrame,
       modules: DataFrame): DataFrame = {
+    // every relation below is atlas-bounded (NP / NP² / modules rows):
+    // pin the multi-consumer ones instead of localCheckpoint (r21) — a
+    // checkpointed LocalRelation-derived module relation re-materialized
+    // through a 32-task job and every downstream leaf scanned 32-wide on
+    // the main session, where a pin is one single-partition collect and
+    // zero-job broadcasts; the Q tail pins too, so the whole post-moment
+    // fold is two collect jobs.
     val ones = wpairs.filter(col("w") > 0).select("p1", "p2", "w")
-    val mods = modules.localCheckpoint() // NP-bounded; 3 consumers
-    val ml = ones
+    val mods = graft.util.Loops.pin(modules) // NP-bounded; 3 consumers
+    val ml = graft.util.Loops.pin(ones
       .join(broadcast(mods.selectExpr("p AS p1", "m AS m1")), Seq("p1"))
-      .join(broadcast(mods.selectExpr("p AS p2", "m AS m2")), Seq("p2"))
-      .localCheckpoint() // edge-bounded; 3 consumers (W, w_in, strengths)
+      .join(broadcast(mods.selectExpr("p AS p2", "m AS m2")), Seq("p2")))
+    // edge-bounded (≤ NP²); 3 consumers (W, w_in, strengths)
     val wt = ml.agg(coalesce(sum("w"), lit(0L)).as("w_tot"))
     val win = ml.filter(col("m1") === col("m2"))
       .groupBy(col("m1").as("module")).agg(sum("w").as("w_in"))
@@ -2524,13 +2412,12 @@ object DesignImage extends QueryModule {
       .crossJoin(broadcast(wt))
       .selectExpr("module", "n_nodes", "w_in", "s_tot", "w_tot",
         "4 * CAST(w_tot AS DECIMAL(38,0)) * w_in - CAST(s_tot AS DECIMAL(38,0)) * s_tot AS qn")
-      .localCheckpoint() // modules-bounded; output + Q sum
-    per
+    graft.util.Loops.pin(per
       .crossJoin(broadcast(per.agg(sum("qn").as("qsum"))))
       .selectExpr("module", "n_nodes", "w_in", "s_tot",
         "CASE WHEN w_tot > 0 THEN round(CAST(qn AS DOUBLE) / CAST(4 * CAST(w_tot AS DECIMAL(38,0)) * w_tot AS DOUBLE), 6) END AS q_contrib",
         "CASE WHEN w_tot > 0 THEN round(CAST(qsum AS DOUBLE) / CAST(4 * CAST(w_tot AS DECIMAL(38,0)) * w_tot AS DOUBLE), 6) END AS q")
-      .orderBy("module")
+      .orderBy("module"))
   }
 
   def modularityWeighted(s: SparkSession, d: String): DataFrame = {
@@ -2598,55 +2485,12 @@ object DesignImage extends QueryModule {
   // w_{i,c} is the weight from i into c, s_i the strength, Σtot̃_w the
   // community strength total excluding i. Same parity-gated synchronous
   // sweeps, same (gain DESC, c ASC) total order — but the gain products
-  // ride DECIMAL(38,0) (2W·w_ic ≈ 5·10²⁰ at atlas NP, past int64; the
-  // q226 discipline). Output = q226's weighted modularity relation over
-  // the detected partition, so q226 (LPA partition) and q230 (weighted-
-  // Louvain partition) differ in exactly one input.
-
-  /** Deterministic one-level WEIGHTED Louvain over a (p1, p2, w)
-    * relation (w = 0 ⇒ no edge) → (p, m) modules. */
-  private[graft] def louvainWeightedModules(wpairs: DataFrame): DataFrame = {
-    val ones = wpairs.filter(col("w") > 0).select("p1", "p2", "w")
-      .localCheckpoint()
-    val parcels = graft.util.Loops.pin(wpairs.select(col("p1").as("p"))
-      .union(wpairs.select(col("p2").as("p"))).distinct())
-    // 2M rows, NP²-bounded — pin so every detector round is
-    // LocalRelation-only (see louvainModules' note, r21)
-    val sym = graft.util.Loops.pin(
-      ones.selectExpr("p1 AS p", "p2 AS q", "w")
-        .union(ones.selectExpr("p2 AS p", "p1 AS q", "w")))
-    val (str, strRows) = graft.util.Loops.pinRows(parcels.join(
-        sym.groupBy("p").agg(sum("w").as("s")), Seq("p"), "left")
-      .na.fill(0L, Seq("s")))
-    // NP rows, driver-pinned; joined every round with zero build jobs
-    val w2 = strRows.map(_.getLong(1)).sum // 2W — free off pinned strengths
-    var lab = parcels.select(col("p"), col("p").as("c"))
-    for (r <- 0 until louvainRounds) {
-      // broadcast label/strength joins + min(struct) winner — the
-      // unweighted detector's round shape (see louvainModules)
-      val stot = lab.join(broadcast(str), Seq("p"))
-        .groupBy("c").agg(sum("s").as("cs"))
-      val wic = sym.join(broadcast(lab.selectExpr("p AS q", "c")), Seq("q"))
-        .groupBy("p", "c").agg(sum("w").as("win"))
-      val cand = wic
-        .unionByName(lab.select(col("p"), col("c")).withColumn("win", lit(0L)))
-        .groupBy("p", "c").agg(max("win").as("win"))
-      val gains = cand
-        .join(broadcast(stot), Seq("c"))
-        .join(broadcast(str), Seq("p"))
-        .join(broadcast(lab.selectExpr("p", "c AS cur")), Seq("p"))
-        .selectExpr("p", "c", "cur",
-          s"CAST($w2 AS DECIMAL(38,0)) * win" +
-            " - CAST(s AS DECIMAL(38,0)) * (cs - CASE WHEN c = cur THEN s ELSE 0 END) AS g")
-      lab = gains
-        .groupBy("p")
-        .agg(min(struct(expr("-g AS ng"), col("c"), col("cur"))).as("w"))
-        .selectExpr("p",
-          s"CASE WHEN p % 2 = ${r % 2} THEN w.c ELSE w.cur END AS c")
-        .transform(graft.util.Loops.pin)
-    }
-    lab.selectExpr("p", "CAST(c AS INT) AS m")
-  }
+  // pass int64 (2W·w_ic ≈ 5·10²⁰ at atlas NP), so they ride BigInt on
+  // the driver and HUGEINT in the oracle (the q226 discipline). It is
+  // THE Louvain detector: q225 is its w = edge case (louvainModules).
+  // Output = q226's weighted modularity relation over the detected
+  // partition, so q226 (LPA partition) and q230 (weighted-Louvain
+  // partition) differ in exactly one input.
 
   def modularityWeightedLouvain(s: SparkSession, d: String): DataFrame = {
     val wp = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
@@ -2654,7 +2498,7 @@ object DesignImage extends QueryModule {
         expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
       .selectExpr("p1", "p2", s"$wPosStr AS w")
       .localCheckpoint() // NP²-bounded; detector + modularity consumers
-    modularityWeightedCore(wp, louvainWeightedModules(wp))
+    modularityWeightedCore(wp, louvainModules(wp))
   }
 
   /** The generated weighted-Louvain round CTEs over wparcels/wsym,
@@ -2939,19 +2783,8 @@ object DesignImage extends QueryModule {
       .selectExpr("p1", "p2", "CAST(round(1e12 / w, 0) AS BIGINT) AS l")
     val sym = ones.selectExpr("p1 AS a", "p2 AS b", "l")
       .union(ones.selectExpr("p2 AS a", "p1 AS b", "l"))
-    var dist = graft.util.Loops.pin(sym.selectExpr("a", "b", "l AS d"))
-    val nNodes = math.max(2L, parcelRows.length.toLong)
-    val rounds = math.max(1,
-      math.ceil(math.log(nNodes.toDouble) / math.log(2.0)).toInt)
-    for (_ <- 0 until rounds) {
-      val through = dist.selectExpr("a", "b AS c", "d AS d1")
-        .join(dist.selectExpr("a AS c", "b AS bb", "d AS d2"), Seq("c"))
-        .selectExpr("a", "bb AS b", "d1 + d2 AS d")
-      dist = dist.unionByName(through)
-        .filter(col("a") =!= col("b"))
-        .groupBy("a", "b").agg(min("d").as("d"))
-        .transform(graft.util.Loops.pin) // NP²-bounded distance state
-    }
+    val dist = minPlusDoubling(sym.selectExpr("a", "b", "l AS d"),
+      parcelRows.length)
     // Reciprocal terms are ≤ 10¹² each (d ≥ 10⁶ for any 1-hop path);
     // at atlas NP² pairs the SUM sits exactly at the int64 edge, so the
     // fold runs in DECIMAL(38,0) (the q230 gain discipline) — each TERM
@@ -3425,41 +3258,17 @@ object DesignImage extends QueryModule {
   // (correctly rounded, the q166 discipline). Cauchy–Schwarz makes the
   // denominator ≥ 0 with equality exactly on regular graphs → NULL.
   //
+  // Engine form: q228's strength-assortativity core at w = edge — a
+  // node's strength is then its degree, so every sum is the same integer.
+  //
   // Scale shape: one NP-bounded degree fold, one NP²-bounded pair join
   // against the broadcast degrees, a single global aggregate row.
 
-  private[graft] def assortativityCore(pairs0: DataFrame): DataFrame = {
-    val ones = pairs0.filter(col("edge") === 1).select("p1", "p2")
-      .localCheckpoint() // NP²-bounded; degree fold + pair join
-    val deg = ones.select(col("p1").as("p"))
-      .union(ones.select(col("p2").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("deg"))
-    val dir = ones.selectExpr("p1 AS a", "p2 AS b")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b"))
-    dir
-      .join(broadcast(deg.selectExpr("p AS a", "deg AS dj")), Seq("a"))
-      .join(broadcast(deg.selectExpr("p AS b", "deg AS dk")), Seq("b"))
-      .agg(count(lit(1)).as("m2"),
-        sum("dj").as("sj"),
-        sum(expr("CAST(dj AS DECIMAL(38,0)) * dk")).as("sjk"),
-        sum(expr("CAST(dj AS DECIMAL(38,0)) * dj")).as("sjj"))
-      .selectExpr(
-        "CAST(m2 AS BIGINT) AS m2",
-        "CAST(COALESCE(sj, 0) AS BIGINT) AS s_j",
-        "CAST(COALESCE(sjk, 0) AS BIGINT) AS s_jk",
-        "CAST(COALESCE(sjj, 0) AS BIGINT) AS s_jj")
-      .selectExpr("m2", "s_j", "s_jk", "s_jj",
-        "CAST(m2 AS DECIMAL(38,0)) * s_jk - CAST(s_j AS DECIMAL(38,0)) * s_j AS num",
-        "CAST(m2 AS DECIMAL(38,0)) * s_jj - CAST(s_j AS DECIMAL(38,0)) * s_j AS den")
-      .selectExpr("m2", "s_j", "s_jk", "s_jj",
-        "CASE WHEN den > 0 THEN round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) END AS r_assort")
-      .orderBy("m2")
-  }
-
   def assortativity(s: SparkSession, d: String): DataFrame =
-    assortativityCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
+    assortativityWeightedCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+      .selectExpr("p1", "p2", "edge AS w"))
 
   private def assortativitySql: String =
     s"""WITH $connectomeCtes,

@@ -1338,12 +1338,15 @@ object Glm extends QueryModule {
     // base/permT are Runs·k(·PermP)-bounded; signFlipCore and maxTCore
     // each re-derived them from fl, running the whole fl×PermP expansion
     // TWICE per chain (r20 verdict item 4: 39 jobs, 71 KB plan on q157).
-    // Compute the parts once, pin the bounded relations, feed all three
-    // verdict consumers from the pins.
+    // Compute the parts once, materialize them, feed all three verdict
+    // consumers from the checkpoints. Their plans are the data-sized
+    // fl×PermP expansion, so they stay distributed (fresh): a pin would
+    // run that expansion single-partition on the pin session (r21's
+    // q155/q156 regression).
     val (base0, permT0) = signFlipParts(s, fl)
-    val base = graft.util.Loops.pin(base0)
-    val permT = graft.util.Loops.pin(permT0)
-    val sf = graft.util.Loops.pin(
+    val base = graft.util.Loops.fresh(base0)
+    val permT = graft.util.Loops.fresh(permT0)
+    val sf = graft.util.Loops.fresh(
       signFlipFromParts(base, permT).select("run", "j", "t_obs", "p_perm"))
     val bh = fdrBhCore(sf).select("run", "j", "rk", "kbh", "rejected")
     val mt = maxTFromParts(base, permT).select("run", "j", "p_maxt")

@@ -1,12 +1,12 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types._
 
 /** The connectome loop kernels — q208's label propagation, q215's H-index
-  * coreness and the q204/q208 module-role moments — run on the DRIVER over
-  * one pinned edge relation.
+  * coreness, the q225/q230/q239 Louvain levels and the q204/q208 module-role
+  * moments — run on the DRIVER over one pinned edge relation.
   *
   * Every relation these kernels touch is atlas-bounded (NP parcels, ≤ NP²
   * pairs: 66 at connNP = 12, ≤ 10⁶ at atlas scale), yet as a DataFrame
@@ -21,15 +21,16 @@ import org.apache.spark.sql.types._
   */
 private[graft] object GraphLoops {
 
-  /** A (p1, p2, …, edge) relation on the driver. Nodes are the distinct
-    * ids over ALL pairs (edge = 0 pairs bring their endpoints in as
-    * isolates), indexed in ascending id order — index order is id order,
-    * which the LPA label-ASC tie-break relies on. `adj(i)` holds one entry
-    * per edge = 1 pair end, so a duplicate pair counts (and votes) twice,
-    * as the oracle's UNION ALL does. */
+  /** A (p1, p2, …, edge) or (p1, p2, …, w) relation on the driver. Nodes
+    * are the distinct ids over ALL pairs (non-edge pairs bring their
+    * endpoints in as isolates), indexed in ascending id order — index order
+    * is id order, which the label-ASC tie-breaks rely on. `adj(i)` holds one
+    * entry per edge pair end and `wt(i)` its weight (1 for an edge = 1
+    * pair, w for a w > 0 pair), so a duplicate pair counts (and votes)
+    * twice, as the oracle's UNION ALL does. */
   final class Graph(val idField: StructField, val ids: Array[Any],
-      val adj: Array[Array[Int]], val edgeRows: Int,
-      spark: org.apache.spark.sql.SparkSession) {
+      val adj: Array[Array[Int]], val wt: Array[Array[Long]],
+      val edgeRows: Int, spark: org.apache.spark.sql.SparkSession) {
     def n: Int = ids.length
 
     /** A driver-local relation: `p` (the input's id type) then `cols`, one
@@ -45,32 +46,42 @@ private[graft] object GraphLoops {
     Set(ByteType, ShortType, IntegerType, LongType)
   private def key(id: Any): Long = id.asInstanceOf[Number].longValue
 
-  /** Pin `pairs`' (p1, p2, edge) rows — at most `cap` of them — and index
-    * them as a [[Graph]]. `edge = 1` is evaluated by Catalyst (NULL is not
-    * an edge), so the edge test is the DataFrame one for any edge type. */
+  /** Pin `pairs`' rows — at most `cap` of them — and index them as a
+    * [[Graph]]. A relation with an integral `w` column is weighted (w > 0
+    * is an edge of weight w); otherwise `edge = 1` is an edge of weight 1.
+    * Both tests are evaluated by Catalyst (NULL is not an edge), so they
+    * are the DataFrame ones for any column type. */
   def pin(pairs: DataFrame, site: String,
       cap: Int = graft.util.Loops.PinMaxRows): Graph = {
     val idType = pairs.schema("p1").dataType
     require(integralIds(idType) && pairs.schema("p2").dataType == idType,
       s"$site: p1/p2 must share one integral id type, got " +
         s"${pairs.schema("p1").dataType}/${pairs.schema("p2").dataType}")
+    val weight =
+      if (pairs.columns.contains("w")) {
+        require(integralIds(pairs.schema("w").dataType),
+          s"$site: w must be integral, got ${pairs.schema("w").dataType}")
+        when(col("w") > 0, col("w").cast(LongType))
+      } else when(col("edge") === 1, lit(1L))
     val rows = graft.util.Loops.pinnedRows(pairs.select(col("p1"), col("p2"),
-      coalesce(col("edge") === 1, lit(false))), site, cap)
+      coalesce(weight, lit(0L))), site, cap)
     require(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
       s"$site: NULL parcel id in the edge relation")
     val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
       .distinctBy(key).toArray.sortBy(key)
     val index = ids.iterator.map(key).zipWithIndex.toMap
     val adj = Array.fill(ids.length)(Array.newBuilder[Int])
+    val wt = Array.fill(ids.length)(Array.newBuilder[Long])
     rows.foreach { r =>
-      if (r.getBoolean(2)) {
+      val w = r.getLong(2)
+      if (w > 0) {
         val (a, b) = (index(key(r.get(0))), index(key(r.get(1))))
-        adj(a) += b
-        adj(b) += a
+        adj(a) += b; wt(a) += w
+        adj(b) += a; wt(b) += w
       }
     }
     new Graph(pairs.schema("p1").copy(name = "p"), ids, adj.map(_.result()),
-      rows.length, pairs.sparkSession)
+      wt.map(_.result()), rows.length, pairs.sparkSession)
   }
 
   /** Synchronous label propagation (the q208 section note): labels start
@@ -80,7 +91,7 @@ private[graft] object GraphLoops {
     * count). Returns (labels as node indices, rounds run, converged). */
   def lpa(g: Graph, maxRounds: Int, site: String): (Array[Int], Int, Boolean) =
     fixpoint(g, Array.tabulate(g.n)(identity),
-      if (maxRounds > 0) maxRounds else math.max(1, g.n), site) { lab =>
+      if (maxRounds > 0) maxRounds else math.max(1, g.n), site) { (lab, _) =>
       Array.tabulate(g.n) { i =>
         (lab(i) +: g.adj(i).map(lab)).groupMapReduce(identity)(_ => 1)(_ + _)
           .minBy { case (l, c) => (-c, l) }._1
@@ -95,24 +106,88 @@ private[graft] object GraphLoops {
       site: String): (Array[Long], Array[Long]) = {
     val deg = g.adj.map(_.length.toLong)
     // values sorted descending: v(h) > h holds exactly on a prefix
-    val (c, _, _) = fixpoint(g, deg, rounds, site) { c =>
+    val (c, _, _) = fixpoint(g, deg, rounds, site) { (c, _) =>
       g.adj.map(_.map(c).sorted(Ordering[Long].reverse).zipWithIndex
         .count { case (v, h) => v > h }.toLong)
     }
     (deg, c)
   }
 
-  /** Apply the deterministic round map `step` from `init` until a round
-    * changes nothing — every later round would reproduce it — or `cap`
-    * rounds have run; returns (state, rounds run, converged). */
-  private def fixpoint[T](g: Graph, init: Array[T], cap: Int, site: String)(
-      step: Array[T] => Array[T]): (Array[T], Int, Boolean) = {
+  /** Level 1 of the deterministic Louvain (the q225 section note) over the
+    * weighted graph: `rounds` synchronous sweeps in which only nodes with
+    * id % 2 = r % 2 move, each to the candidate community (its neighbors'
+    * plus its own) of largest exact-integer gain
+    * 2W·w_ic − s_i·(Σtot(c) − [c = cur]·s_i), ties to the lower id. The
+    * gate makes round r's map depend on r % 2, so an unchanged round is
+    * NOT a fixed point: all `rounds` run. Returns labels as node indices. */
+  def louvain(g: Graph, rounds: Int, site: String): Array[Int] = {
+    val s = g.wt.map(_.sum) // strengths: degrees at unit weight
+    val w2 = BigInt(s.sum)
+    val parity = g.ids.map(key(_) % 2)
+    fixpoint(g, Array.tabulate(g.n)(identity), rounds, site,
+      untilStable = false) { (cur, r) =>
+      val tot = communityTotals(g, cur, s)
+      Array.tabulate(g.n) { i =>
+        if (parity(i) != r % 2) cur(i)
+        else {
+          val wic = weightsInto(g, i, cur)
+          def gain(c: Int): BigInt = w2 * BigInt(wic.getOrElse(c, 0L)) -
+            BigInt(s(i)) * (tot(c) - (if (c == cur(i)) s(i) else 0L))
+          (wic.keySet + cur(i)).minBy(c => (-gain(c), c))
+        }
+      }
+    }._1
+  }
+
+  /** Level 2 of the deterministic Louvain (the q239 section note) from the
+    * `level1` labels: each round every community names the partner of
+    * largest exact-integer gain 2W·w₁₂ − s₁·s₂ > 0 (ties to the lower id),
+    * and only mutual pairs merge, under the lower label — until a round
+    * merges nothing, or `rounds` rounds. Returns labels as node indices. */
+  def louvainLevel2(g: Graph, level1: Array[Int], rounds: Int,
+      site: String): Array[Int] = {
+    val s = g.wt.map(_.sum) // strengths: degrees at unit weight
+    val w2 = BigInt(s.sum)
+    fixpoint(g, level1, rounds, site) { (lab, _) =>
+      val tot = communityTotals(g, lab, s)
+      val cross = (0 until g.n).flatMap(i => weightsInto(g, i, lab).collect {
+        case (c, w) if c != lab(i) => (lab(i), c) -> w
+      }).groupMapReduce(_._1)(_._2)(_ + _)
+      val best = cross.iterator
+        .map { case ((a, b), w) => (a, b, w2 * w - BigInt(tot(a)) * tot(b)) }
+        .filter(_._3 > 0).toSeq.groupBy(_._1).view
+        .mapValues(_.minBy { case (_, b, gain) => (-gain, b) }._2).toMap
+      lab.map(a => best.get(a).filter(b => best.get(b).contains(a))
+        .fold(a)(math.min(a, _)))
+    }._1
+  }
+
+  /** Node i's entry weights summed per community of `lab`. */
+  private def weightsInto(g: Graph, i: Int, lab: Array[Int]): Map[Int, Long] =
+    g.adj(i).zip(g.wt(i)).groupMapReduce(e => lab(e._1))(_._2)(_ + _)
+
+  /** Σ strength per community of `lab` (indexed by label). */
+  private def communityTotals(g: Graph, lab: Array[Int],
+      s: Array[Long]): Array[Long] = {
+    val tot = new Array[Long](g.n)
+    for (i <- 0 until g.n) tot(lab(i)) += s(i)
+    tot
+  }
+
+  /** Apply the deterministic round map `step` (state, 0-based round) from
+    * `init` for `cap` rounds — with `untilStable`, stopping early at a
+    * round that changes nothing, as every later round would reproduce it;
+    * returns (state, rounds run, converged = the last round changed
+    * nothing). */
+  private def fixpoint[T](g: Graph, init: Array[T], cap: Int, site: String,
+      untilStable: Boolean = true)(
+      step: (Array[T], Int) => Array[T]): (Array[T], Int, Boolean) = {
     var state = init
     var round = 0
     var converged = false
-    while (round < cap && !converged) {
+    while (round < cap && !(untilStable && converged)) {
+      val next = step(state, round)
       round += 1
-      val next = step(state)
       converged = next.sameElements(state)
       state = next
     }

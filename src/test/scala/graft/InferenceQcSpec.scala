@@ -774,9 +774,9 @@ class InferenceQcSpec extends SparkSpec {
       (0, 1, 1L), (0, 2, 1L), (1, 2, 1L),
       (10, 11, 1L), (10, 12, 1L), (11, 12, 1L),
       (2, 10, 1L),
-    ).toDF("p1", "p2", "edge")
+    ).toDF("p1", "p2", "w")
     def q(pe: org.apache.spark.sql.DataFrame): Double =
-      graft.queries.DesignImage.modularityCore(pe,
+      graft.queries.DesignImage.modularityWeightedCore(pe,
         graft.queries.DesignImage.lpaModules(pe))
         .head().getAs[Double]("q")
     // M=7, per clique e=3, d=7: Q = 2·(3/7 − (7/14)²) = 5/14
@@ -786,7 +786,7 @@ class InferenceQcSpec extends SparkSpec {
     assert(q(bridged.filter("NOT (p1 = 2 AND p2 = 10)")) === 0.5,
       "disconnected 1/2")
     // per-module rows carry exact counts
-    val rows = graft.queries.DesignImage.modularityCore(bridged,
+    val rows = graft.queries.DesignImage.modularityWeightedCore(bridged,
       graft.queries.DesignImage.lpaModules(bridged))
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(rows === Set((3L, 3L, 7L)), s"both modules read (n=3, e_in=3, d=7): $rows")
@@ -956,7 +956,7 @@ class InferenceQcSpec extends SparkSpec {
       val (a, b, c) = (3 * t, 3 * t + 1, 3 * t + 2)
       Seq((a, b, 1L), (a, c, 1L), (b, c, 1L),
         (c, (3 * (t + 1)) % 30, 1L))
-    }.toDF("p1", "p2", "edge")
+    }.toDF("p1", "p2", "w")
     val l1 = graft.queries.DesignImage.louvainModules(pe)
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     val tri = (0 until 10).map(t => Seq(3 * t, 3 * t + 1, 3 * t + 2))
@@ -971,7 +971,7 @@ class InferenceQcSpec extends SparkSpec {
     assert(l2.values.toSet.size < 10,
       s"level 2 must merge some adjacent triangles: $l2")
     def q(mods: org.apache.spark.sql.DataFrame): Double =
-      graft.queries.DesignImage.modularityCore(pe, mods)
+      graft.queries.DesignImage.modularityWeightedCore(pe, mods)
         .head().getAs[Double]("q")
     val q1 = q(graft.queries.DesignImage.louvainModules(pe))
     val q2 = q(graft.queries.DesignImage.louvainTwoLevelModules(pe))
@@ -985,14 +985,14 @@ class InferenceQcSpec extends SparkSpec {
     // path 0-1-2-3-4-5: LPA's min-label tie-break floods it to ONE
     // module (Q = 0); ΔQ-greedy finds the optimal {0,1,2} | {3,4,5}
     // split (M = 5, e_in = 2 each, d = 5 each: Q = 2·(2/5 − 1/4) = 0.3)
-    val pe = (0 until 5).map(i => (i, i + 1, 1L)).toDF("p1", "p2", "edge")
+    val pe = (0 until 5).map(i => (i, i + 1, 1L)).toDF("p1", "p2", "w")
     val luv = graft.queries.DesignImage.louvainModules(pe)
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(Seq(0, 1, 2).map(luv).distinct.size === 1 &&
       Seq(3, 4, 5).map(luv).distinct.size === 1 && luv(0) != luv(3),
       s"Louvain must find the two-halves split: $luv")
     def q(mods: org.apache.spark.sql.DataFrame): Double =
-      graft.queries.DesignImage.modularityCore(pe, mods)
+      graft.queries.DesignImage.modularityWeightedCore(pe, mods)
         .head().getAs[Double]("q")
     val qLouvain = q(graft.queries.DesignImage.louvainModules(pe))
     val qLpa = q(graft.queries.DesignImage.lpaModules(pe))
@@ -1005,8 +1005,8 @@ class InferenceQcSpec extends SparkSpec {
       (0, 1, 1L), (0, 2, 1L), (1, 2, 1L),
       (10, 11, 1L), (10, 12, 1L), (11, 12, 1L),
       (2, 10, 1L),
-    ).toDF("p1", "p2", "edge")
-    val qB = graft.queries.DesignImage.modularityCore(bridged,
+    ).toDF("p1", "p2", "w")
+    val qB = graft.queries.DesignImage.modularityWeightedCore(bridged,
       graft.queries.DesignImage.louvainModules(bridged))
       .head().getAs[Double]("q")
     assert(qB === BigDecimal(5.0 / 14.0)
@@ -1048,18 +1048,46 @@ class InferenceQcSpec extends SparkSpec {
     // must refuse to cut the dominant edge and put 2 and 3 together
     val wp = Seq((0, 1, 1L), (1, 2, 1L), (2, 3, 10L), (3, 4, 1L), (4, 5, 1L))
       .toDF("p1", "p2", "w")
-    val luv = graft.queries.DesignImage.louvainWeightedModules(wp)
+    val luv = graft.queries.DesignImage.louvainModules(wp)
       .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(luv(2) === luv(3), s"the heavy edge must stay intra-module: $luv")
     assert(luv.values.toSet.size > 1, s"and the path must still split: $luv")
-    // unit weights reduce to the unweighted detector exactly
-    val unit = graft.queries.DesignImage.louvainWeightedModules(
-      (0 until 5).map(i => (i, i + 1, 1L)).toDF("p1", "p2", "w"))
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    val binary = graft.queries.DesignImage.louvainModules(
-      (0 until 5).map(i => (i, i + 1, 1L)).toDF("p1", "p2", "edge"))
-      .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-    assert(unit === binary, s"unit weights must reduce to q225: $unit vs $binary")
+  }
+
+  test("q230/q239: Louvain gains past int64 keep the exact partitions") {
+    val s = spark
+    import s.implicits._
+    // Every gain (2W·w − s·Σtot, 2W·w₁₂ − d₁·d₂) is a sum of products of
+    // two weight sums, so scaling all weights by u = 10⁹ scales every gain
+    // by u² and must leave both levels' partitions unchanged — while
+    // 2W·w_ic and 2W·w₁₂ pass Long.MaxValue ≈ 9.2·10¹⁸.
+    val u = 1000000000L
+    def mods(out: org.apache.spark.sql.DataFrame): Map[Int, Int] =
+      out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+    // Level 1: the heavy-middle path (weights 1,1,10,1,1 in units of u):
+    // s = 1,2,11,11,2,1, 2W = 28. Round 0 moves the even ids: 0 → {1}
+    // (gain 28·1 − 1·2 = 26 > 0), 2 → {3} (28·10 − 11·11 = 159 beats
+    // {1}'s 28 − 11·2 = 6), 4 → {5} (26 beats {3}'s 6). Every later move
+    // loses: 1 → {2,3} reads 28 − 2·22 = −16 against staying at 26, 3 →
+    // {4,5} reads 28 − 11·3 = −5 against 159. Here 2W·w₂₃ = 2.8·10²⁰.
+    val path = Seq((0, 1, 1L), (1, 2, 1L), (2, 3, 10L), (3, 4, 1L), (4, 5, 1L))
+      .map { case (a, b, w) => (a, b, w * u) }.toDF("p1", "p2", "w")
+    assert(mods(graft.queries.DesignImage.louvainModules(path)) ===
+      Map(0 -> 1, 1 -> 1, 2 -> 3, 3 -> 3, 4 -> 5, 5 -> 5))
+    // Level 2: the q239 ring of 10 triangles T0…T9 at weight u, where
+    // level 1 keeps the triangles (labels 1, 3, 7, 9, …, 25, 27). 2W = 80,
+    // each triangle's d = 8, so a triangle pair gains 80·1 − 8·8 = 16 and
+    // a pair against a merged pair 80 − 16·8 < 0. Ties go to the lower
+    // partner, so round r merges exactly T(2r−2) with T(2r−1): after the
+    // 4 rounds T8 and T9 stand alone. Here 2W·w₁₂ = 8·10¹⁹.
+    val ring = (0 until 10).flatMap { t =>
+      val (a, b, c) = (3 * t, 3 * t + 1, 3 * t + 2)
+      Seq((a, b, u), (a, c, u), (b, c, u), (c, (3 * (t + 1)) % 30, u))
+    }.toDF("p1", "p2", "w")
+    val l2 = mods(graft.queries.DesignImage.louvainTwoLevelModules(ring))
+    val expected = (0 until 30).map(p =>
+      p -> (if (p < 24) 6 * (p / 6) + 1 else if (p < 27) 25 else 27)).toMap
+    assert(l2 === expected, s"$l2")
   }
 
   test("q231: the transition matrix counts the planted state sequence exactly") {
@@ -1278,7 +1306,7 @@ class InferenceQcSpec extends SparkSpec {
     import s.implicits._
     def r(rows: Seq[(Int, Int, Long)]): (Long, Long, Long, Long, Option[Double]) = {
       val row = graft.queries.DesignImage
-        .assortativityCore(rows.toDF("p1", "p2", "edge")).head()
+        .assortativityWeightedCore(rows.toDF("p1", "p2", "w")).head()
       (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3),
         Option(row.get(4)).map(_.asInstanceOf[Double]))
     }

@@ -360,4 +360,52 @@ class PropertySpec extends SparkSpec {
       assert(got === expected.toMap, s"graph $gi: $pairs")
     }
   }
+
+  test("property: weighted Louvain labels every node, and level 2 raises Q exactly when it merges") {
+    val s = spark
+    import s.implicits._
+    // random weighted pair lists over up to 14 ids: repeated draws and a
+    // re-appended prefix make duplicate pairs; w = 0 draws and a trailing
+    // pair of two fresh ids at w = 0 bring nodes whose only pairs are
+    // non-edges. The first non-loop draw is forced positive, so W > 0
+    // whenever there is one.
+    val genPairs = for {
+      n <- Gen.choose(2, 14)
+      m <- Gen.choose(1, 40)
+      pairs <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1),
+        Gen.frequency(4 -> Gen.choose(1L, 1000L), 1 -> Gen.const(0L))))
+      dup <- Gen.choose(0, 6)
+    } yield {
+      val noLoops = pairs.filter(p => p._1 != p._2)
+        .zipWithIndex.map { case ((a, b, w), i) => (a, b, if (i == 0) w + 1 else w) }
+      noLoops ++ noLoops.take(dup) :+ ((n, n + 1, 0L))
+    }
+    val merged = for ((pairs, gi) <- samples(genPairs, 12).zipWithIndex) yield {
+      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).toSet
+      val edges = pairs.filter(_._3 > 0)
+      // Q's exact numerator Σ_m (4W·w_mm − s_m²) — the denominator 4W²
+      // is partition-free, so numerators order the Q values exactly
+      def qNum(mod: Map[Int, Int]): BigInt = {
+        val w = BigInt(edges.map(_._3).sum)
+        val inner = edges.collect { case (a, b, x) if mod(a) == mod(b) => mod(a) -> x }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        val str = edges.flatMap { case (a, b, x) => Seq(mod(a) -> x, mod(b) -> x) }
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        str.iterator.map { case (c, sc) =>
+          w * 4 * BigInt(inner.getOrElse(c, 0L)) - BigInt(sc).pow(2)
+        }.sum
+      }
+      val df = pairs.toDF("p1", "p2", "w")
+      def mods(out: org.apache.spark.sql.DataFrame): Map[Int, Int] =
+        out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      val l1 = mods(graft.queries.DesignImage.louvainModules(df))
+      val l2 = mods(graft.queries.DesignImage.louvainTwoLevelModules(df))
+      assert(l1.keySet === nodes && l2.keySet === nodes,
+        s"graph $gi: every node needs a module: $pairs")
+      if (l2 === l1) assert(qNum(l2) === qNum(l1), s"graph $gi: $pairs")
+      else assert(qNum(l2) > qNum(l1), s"graph $gi: a merge must raise Q: $pairs")
+      l2 != l1
+    }
+    assert(merged.distinct.size === 2, s"the sample must hold both cases: $merged")
+  }
 }
