@@ -498,9 +498,7 @@ object DesignImage extends QueryModule {
     "CASE WHEN r > -1.0 AND r < 1.0 THEN 0.5 * ln((1.0 + r) / (1.0 - r)) END"
 
   def seedConnectivity(s: SparkSession, d: String): DataFrame =
-    seedConnectivityCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    seedConnectivityCore(centsSeries(s, d))
 
   /** The q158 body from a (t, x, y, z, v-cents) series — split out so
     * specs can feed planted series. */
@@ -528,6 +526,13 @@ object DesignImage extends QueryModule {
         "round(r, 6) AS r_seed", s"round($fcZStr, 6) AS z_fisher")
       .orderBy("x", "y", "z")
   }
+
+  /** The (t, x, y, z, v) voxel series in integer cents — the engine twin
+    * of [[centsSeriesCte]]. */
+  private def centsSeries(s: SparkSession, d: String): DataFrame =
+    ImageOps.voxelSeries(lineitem(s, d), L, NT)
+      .select(col("t"), col("x"), col("y"), col("z"),
+        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))
 
   /** Shared oracle prefix: the cents voxel series — reused by q158/q166
     * (via [[seedSeriesCtes]]) and q167 (oracle-sharing discipline). */
@@ -620,9 +625,7 @@ object DesignImage extends QueryModule {
   private val ppiSeedQuantum = 1000L // seed regressor unit: $10 = 1000 cents
 
   def ppiGlm(s: SparkSession, d: String): DataFrame =
-    ppiGlmCore(s, ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    ppiGlmCore(s, centsSeries(s, d))
 
   /** The q166 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant seed/probe series with known coefficients. */
@@ -780,9 +783,7 @@ object DesignImage extends QueryModule {
       s"THEN $vmhcNumStr / (sqrt($vmhcDenLStr) * sqrt($vmhcDenRStr)) END"
 
   def vmhc(s: SparkSession, d: String): DataFrame =
-    vmhcCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    vmhcCore(centsSeries(s, d))
 
   /** The q167 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant mirror pairs. */
@@ -871,9 +872,7 @@ object DesignImage extends QueryModule {
       "THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
 
   def connectome(s: SparkSession, d: String): DataFrame =
-    connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    connectomeCore(centsSeries(s, d))
 
   /** The q168 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant parcel series. */
@@ -979,9 +978,7 @@ object DesignImage extends QueryModule {
   // the q168 chain verbatim through pe (donor re-verified).
 
   def graphMetrics(s: SparkSession, d: String): DataFrame =
-    graphMetricsCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    graphMetricsCore(connectomeCore(centsSeries(s, d)))
 
   /** The q173 body from a q168-shaped (p1, p2, r_par, edge, …) pair
     * relation — split out so specs can plant edge graphs. */
@@ -1392,55 +1389,26 @@ object DesignImage extends QueryModule {
   // characteristic path length (mean d over FINITE ordered pairs) and
   // global efficiency (Latora–Marchiori: unreachable contributes 0).
   //
-  // Distances run as min-plus DOUBLING: dist_{2k}(a,b) = min(dist_k,
-  // min_c dist_k(a,c)+dist_k(c,b)) — ⌈log₂ NP⌉ rounds of an NP²-bounded
-  // self-join (each round localCheckpoint'ed), not NP sequential BFS
-  // rounds. Every relation is NP²-bounded (broadcast-class at atlas
-  // scale NP ≈ 10²–10³; the doubling join is NP³ work — the documented
-  // ceiling of this regime, distributed but quadratic state, fine for
-  // atlas graphs and NOT meant for voxel-level graphs). Reciprocals are
-  // per-term 1e12-quantized before summing (the q175 entropy discipline)
-  // so double addition order can never flip a digit.
+  // Distances run on the driver (GraphLoops.distances): the edge
+  // relation is pinned once, and one BFS per source (the shared
+  // shortest-path kernel at unit lengths) gives every exact hop count.
+  // Reciprocals are per-term 1e12-quantized before summing (the q175
+  // entropy discipline) so double addition order can never flip a digit.
+  //
+  // Scale shape: one capped collect of the NP²-bounded pair relation,
+  // O(NP·E log NP) driver work, and the NP²-row (a, b, d) result leaves
+  // as one LocalRelation, so the tail's pin plans LocalRelation-only.
+  // Atlas regime by contract: a relation over the pin cap fails loudly.
   //
   // Oracle: DuckDB recursive-CTE BFS over the same edge set, capped at
-  // d < NP — min-plus doubling and BFS agree on min distance exactly.
+  // d < NP.
 
   /** Per-parcel path metrics from a q168-shaped (p1, p2, …, edge)
     * relation — spec-plantable. */
   private[graft] def pathMetricsCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      pe.select(col("p1").as("p"))
-        .union(pe.select(col("p2").as("p"))).distinct())
-    val ones = pe.filter(col("edge") === 1)
-    val sym = ones.selectExpr("p1 AS a", "p2 AS b")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b"))
-    pathMetricsFromDist(
-      minPlusDoubling(sym.withColumn("d", lit(1L)), parcelRows.length), parcels)
-  }
-
-  /** q184/q234's min-plus doubling: from the (a, b, d) hop relation to the
-    * all-pairs shortest-distance relation over `nParcels` nodes. */
-  private def minPlusDoubling(hops: DataFrame, nParcels: Int): DataFrame = {
-    var dist = graft.util.Loops.pin(hops)
-    // doubling rounds sized from the INPUT's node count (2^rounds ≥ n >
-    // diameter), not the global connNP constant — a planted graph with
-    // more nodes than the production atlas still gets full coverage.
-    // The callers' parcels are an atlas-sized (node-count) relation,
-    // driver-pinned, so the round derivation is free.
-    val nNodes = math.max(2L, nParcels.toLong)
-    val rounds = math.max(1,
-      math.ceil(math.log(nNodes.toDouble) / math.log(2.0)).toInt)
-    for (_ <- 0 until rounds) {
-      val through = dist.selectExpr("a", "b AS c", "d AS d1")
-        .join(dist.selectExpr("a AS c", "b AS bb", "d AS d2"), Seq("c"))
-        .selectExpr("a", "bb AS b", "d1 + d2 AS d")
-      dist = dist.unionByName(through)
-        .filter(col("a") =!= col("b"))
-        .groupBy("a", "b").agg(min("d").as("d"))
-        .transform(graft.util.Loops.pin) // NP²-bounded distance state
-    }
-    dist
+    val site = "DesignImage.pathMetricsCore"
+    val g = GraphLoops.pin(pairs0.select("p1", "p2", "edge"), site)
+    pathMetricsFromDist(GraphLoops.distances(g, site), g.relation(Nil)(_ => Nil))
   }
 
   /** The q184/q199 aggregation tail over a finished (a, b, d) shortest-
@@ -1454,8 +1422,8 @@ object DesignImage extends QueryModule {
     val perP = dist.groupBy(col("a").as("p"))
       .agg(max("d").as("ecc"), count(lit(1)).as("n_reach"),
         sum(expr("CAST(round(1e12 / d, 0) AS BIGINT)")).as("srp"))
-    // NP-bounded tail over pinned dist/parcel state: pin (r21 — see
-    // modularityWeightedCore's note); shared by q184/q199/q234
+    // NP-bounded tail over the driver-built dist/parcel relations: pin
+    // (r21 — see modularityWeightedCore's note); shared by q184/q189/q199
     graft.util.Loops.pin(parcels
       .join(broadcast(perP), Seq("p"), "left")
       .crossJoin(broadcast(glob))
@@ -1467,73 +1435,16 @@ object DesignImage extends QueryModule {
   }
 
   // ---- q199: path metrics by FRONTIER BFS (the voxel-regime road) ----------
-  // q184's min-plus doubling is atlas-regime by design: its self-join is
-  // dist ⋈ dist — NP³ bounded work per round, quadratic distributed
-  // state — which is exactly right for NP ≈ 10²–10³ parcels and exactly
-  // wrong for a 10⁵⁺-node voxel graph. This is the documented
-  // alternative made code (q142's bounded-frontier lesson applied to
-  // distances): keep the full dist relation as accumulated state, but
-  // join ONLY the current FRONTIER (pairs discovered last round) against
-  // the edge list each round — per-round work O(|frontier|·degree), total
-  // O(N·E) like textbook multi-source BFS, with the per-round relation
-  // E-sparse instead of N²-dense. Rounds = graph diameter (not log₂ N —
-  // the doubling trade: more, cheaper rounds), each round one
-  // frontier-sized join + anti-join, terminating on the first empty
-  // frontier (a bounded driver probe per round, the q142 loop shape).
-  // On voxel lattices degree is ≤ 26 and diameter is O(L), so both
-  // factors stay small where doubling's NP³ explodes.
+  // q199 names the per-source frontier BFS, whose total work is O(N·E)
+  // where an all-pairs min-plus doubling joins NP³ per round — the road
+  // for 10⁵⁺-node voxel graphs. The shared driver kernel is that BFS, so
+  // q199 runs q184's entry under q184's oracle; a spec pins its hand
+  // values on a two-component graph.
   //
-  // Same output contract as q184 (the tail is shared code); the oracle
-  // is q184's VERBATIM — its recursive walk CTE already computes
-  // distances the BFS way, so the hash match pins doubling ≡ frontier
-  // BFS on the production graph, and the spec pins equality on planted
-  // graphs including a diameter deeper than doubling's default cover.
-
-  /** Per-parcel path metrics via frontier BFS from a q168-shaped
-    * (p1, p2, …, edge) relation — spec-plantable. */
-  private[graft] def pathMetricsBfsCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      pe.select(col("p1").as("p"))
-        .union(pe.select(col("p2").as("p"))).distinct())
-    val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded adjacency, joined every BFS depth — pin so each
-    // frontier expansion is LocalRelation-only (r21: a checkpointed edge
-    // RDD is re-scanned through the serial pin session every round)
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS a", "p2 AS b")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b"))
-      .distinct())
-    val nNodes = math.max(2L, parcelRows.length.toLong)
-    var dist = graft.util.Loops.pin(sym.withColumn("d", lit(1L)))
-    var frontier = dist.select("a", "b")
-    var frontierNonEmpty = true
-    var depth = 1L
-    while (depth < nNodes && frontierNonEmpty) {
-      depth += 1
-      val (next, nextRows) = graft.util.Loops.pinRows(
-        frontier.selectExpr("a", "b AS c")
-          .join(sym.selectExpr("a AS c", "b"), Seq("c"))
-          .select("a", "b").distinct()
-          .filter(col("a") =!= col("b"))
-          // no broadcast hint: dist is a pinned LocalRelation with EXACT
-          // stats, so Catalyst broadcasts it while it is small and falls
-          // back to a shuffle once the cumulative dist grows toward NP²
-          // (a forced hint re-shipped up to PinMaxRows rows per depth on
-          // planted graphs near the ceiling — r20 ADVICE)
-          .join(dist.select("a", "b"), Seq("a", "b"), "left_anti"))
-      frontier = next
-      frontierNonEmpty = nextRows.nonEmpty
-      if (frontierNonEmpty)
-        dist = graft.util.Loops.pin(
-          dist.unionByName(next.withColumn("d", lit(depth))))
-    }
-    pathMetricsFromDist(dist, parcels)
-  }
+  // Scale shape: q184's.
 
   def pathMetricsBfs(s: SparkSession, d: String): DataFrame =
-    pathMetricsBfsCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    pathMetrics(s, d)
 
   // ---- q203: eigenvector centrality (ECM) -----------------------------------
   // The hub metric of the connectome toolbox (Lohmann et al. 2010's fast
@@ -1554,32 +1465,22 @@ object DesignImage extends QueryModule {
   // a fixed documented constant (the q65 fixed-rounds convention), not a
   // convergence loop — the replayed oracle must run the same arithmetic.
   //
-  // Scale shape: ⌈4⌉ NP-bounded joins against the NP²-bounded symmetric
-  // edge list (broadcast-class at atlas scale); one 1-row max; no
-  // window, no driver state. Isolated parcels stay 0 (dropped from the
-  // sparse product, re-attached by the parcels left join).
+  // Scale shape: one capped collect of the NP²-bounded pair relation;
+  // the four steps run on the driver over its adjacency arrays
+  // (GraphLoops.ecm, O(E) each, exact Long); the NP-row vector leaves as
+  // one LocalRelation and the max/normalization tail is Catalyst over it.
+  // An isolated parcel keeps its initial unit.
 
   private val ecmSteps = 4
 
   /** ECM core from a q168-shaped (p1, p2, …, edge) relation. */
   private[graft] def eigenCentralityCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    val ones = pe.filter(col("edge") === 1)
-    // NP²-bounded, read every power step — pin (see pathMetricsBfsCore, r21)
-    val sym = graft.util.Loops.pin(ones.selectExpr("p1 AS a", "p2 AS b")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b")))
-    var x = graft.util.Loops.pin(parcels.select(col("p"), lit(1L).as("x")))
-    for (_ <- 0 until ecmSteps) {
-      val nx = sym.selectExpr("a", "b AS p")
-        .join(broadcast(x), Seq("p"))
-        .groupBy(col("a").as("p")).agg(sum("x").as("nx"))
-      x = x.join(nx, Seq("p"), "left").na.fill(0L, Seq("nx"))
-        .selectExpr("p", "x + nx AS x")
-        .transform(graft.util.Loops.pin) // NP-bounded; read twice next step
-    }
-    // NP-bounded tail over the pinned vector: pin (r21)
+    val site = "DesignImage.eigenCentralityCore"
+    val g = GraphLoops.pin(pairs0.select("p1", "p2", "edge"), site)
+    val ex = GraphLoops.ecm(g, ecmSteps, site)
+    val x = g.relation(Seq(StructField("x", LongType, nullable = false)))(
+      i => Seq(ex(i)))
+    // NP-bounded tail over the driver-built vector: pin (r21)
     graft.util.Loops.pin(x.crossJoin(broadcast(x.agg(max("x").as("mx"))))
       .selectExpr("p", "x AS ec_raw",
         "CASE WHEN mx > 0 THEN round(CAST(x AS DOUBLE) / mx, 6) END AS ec")
@@ -1639,9 +1540,7 @@ object DesignImage extends QueryModule {
     "(CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))"
 
   def moduleRoles(s: SparkSession, d: String): DataFrame =
-    moduleRolesCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    moduleRolesCore(connectomeCore(centsSeries(s, d)))
 
   private def moduleRolesSql: String =
     s"""WITH $connectomeCtes,
@@ -1681,9 +1580,7 @@ object DesignImage extends QueryModule {
        |ORDER BY o.p""".stripMargin
 
   def eigenCentrality(s: SparkSession, d: String): DataFrame =
-    eigenCentralityCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    eigenCentralityCore(connectomePairs(centsSeries(s, d)))
 
   // ---- q208: data-driven modules (label propagation) + module roles -------
   // Closes q204's declared gap: the named practice (Power et al. 2011;
@@ -1770,9 +1667,7 @@ object DesignImage extends QueryModule {
   def moduleLpa(s: SparkSession, d: String): DataFrame = {
     val site = "DesignImage.moduleLpa"
     val g = GraphLoops.pin(
-      connectomePairs(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-        .select(col("t"), col("x"), col("y"), col("z"),
-          expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+      connectomePairs(centsSeries(s, d))
         .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), site)
     moduleRolesOn(g, lpaModulesOn(g, connNP, site))
   }
@@ -1804,9 +1699,7 @@ object DesignImage extends QueryModule {
       .toDF("module", "n_nodes", "e_in", "d_tot", "q_contrib", "q")
 
   def modularityQ(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    val pe = connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
     edgeModularity(pe, lpaModules(pe, maxRounds = connNP))
   }
@@ -1984,9 +1877,7 @@ object DesignImage extends QueryModule {
   }
 
   def modularityLouvain(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    val pe = connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
     edgeModularity(pe, louvainModules(pe))
   }
@@ -2105,9 +1996,7 @@ object DesignImage extends QueryModule {
   }
 
   def modularityLouvainMulti(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    val pe = connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
     edgeModularity(pe, louvainTwoLevelModules(pe))
   }
@@ -2205,11 +2094,11 @@ object DesignImage extends QueryModule {
   // the documented estimator at scale, and a fixed lowest-id set makes
   // both engines sweep identical pivots with no RNG.
   //
-  // Determinism: σ is an exact integer (sum of predecessor σ per BFS
-  // layer — the q199 frontier kernel carrying a count). The dependency
+  // Determinism: σ is an exact integer (sum of predecessor σ over the
+  // tight adjacency entries, one term per entry). The dependency
   // ratio σ_v/σ_w is NOT an integer, so δ rides 1e-12 FIXED POINT with
   // per-term floor division: term = (σ_v·(10¹² + δ_fp(w))) div σ_w —
-  // the product in DECIMAL(38,0)/HUGEINT (σ·δ_fp passes int64), the
+  // the product in BigInt/HUGEINT (σ·δ_fp passes int64), the
   // floor div exact on non-negative operands in both engines, and the
   // per-(s,v) SUM of integer terms order-free, so no accumulation
   // order can flip a digit anywhere. Truncation bias is ≤ 1e-12 per
@@ -2217,82 +2106,35 @@ object DesignImage extends QueryModule {
   // plants are exact closed forms (σ = 1 ⇒ no truncation; the diamond
   // pins the σ = 2 half-dependency).
   //
-  // Scale shape: |sources|·NP-bounded settled/δ relations; forward
-  // rounds = graph diameter (frontier joins, the q199 shape), backward
-  // rounds = max depth; every per-round relation is |sources|·E-sparse.
-  // The oracle unrolls connNP forward and backward steps — rounds past
-  // the last populated depth are no-ops (empty joins / zero
-  // increments), the q208 early-stop ≡ full-unroll argument.
+  // Scale shape: one capped collect of the NP²-bounded pair relation;
+  // per source one BFS forward sweep and one backward δ sweep on the
+  // driver (GraphLoops.betweenness — the shared shortest-path kernel at
+  // unit lengths, O(|sources|·E log NP)); the NP-row Σδ leaves as one
+  // LocalRelation and the display rounding is Catalyst over it. The
+  // oracle unrolls connNP forward and backward steps — rounds past the
+  // last populated depth are no-ops (empty joins / zero increments).
 
   private val bcSources = 8
 
   /** Per-parcel sampled-source Brandes betweenness from a q168-shaped
     * (p1, p2, …, edge) relation → (p, bc). */
   private[graft] def betweennessCore(pairs0: DataFrame,
-      nSources: Int): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      pe.select(col("p1").as("p"))
-        .union(pe.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned; sources + cap + output grid, zero jobs
-    val ones = pe.filter(col("edge") === 1)
-    val sym = ones.selectExpr("p1 AS a", "p2 AS b")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b"))
-      .localCheckpoint()
-    val sources = parcels.orderBy("p").limit(nSources).selectExpr("p AS s")
-    val cap = math.max(1L, parcelRows.length.toLong)
-    // forward: settled (s, v, d, sigma), frontier = last layer — both
-    // |sources|·NP-bounded and driver-pinned, so the per-depth frontier
-    // probe is a free array check instead of an isEmpty job
-    var settled = graft.util.Loops.pin(sources
-      .selectExpr("s", "s AS v", "CAST(0 AS BIGINT) AS d",
-        "CAST(1 AS BIGINT) AS sigma"))
-    var frontier = settled
-    var frontierNonEmpty = true
-    var depth = 0L
-    while (depth < cap && frontierNonEmpty) {
-      depth += 1
-      val (nxt, nxtRows) = graft.util.Loops.pinRows(
-        frontier.selectExpr("s", "v AS a", "sigma")
-          .join(sym, Seq("a"))
-          .selectExpr("s", "b AS v", "sigma")
-          .join(broadcast(settled.select("s", "v")), Seq("s", "v"), "left_anti")
-          .groupBy("s", "v").agg(sum("sigma").as("sigma"))
-          .selectExpr("s", "v", s"CAST($depth AS BIGINT) AS d", "sigma"))
-      frontier = nxt
-      frontierNonEmpty = nxtRows.nonEmpty
-      if (frontierNonEmpty)
-        settled = graft.util.Loops.pin(settled.unionByName(nxt))
-    }
-    // backward: delta_fp (s, v), accumulated from the deepest layer in
-    var delta = graft.util.Loops.pin(settled.select("s", "v")
-      .withColumn("delta", lit(0L)))
-    for (dd <- depth to 1L by -1L) {
-      val contrib = settled.filter(col("d") === dd)
-        .selectExpr("s", "v AS w", "sigma AS sw")
-        .join(delta.selectExpr("s", "v AS w", "delta AS dw"), Seq("s", "w"))
-        .join(sym.selectExpr("a AS v", "b AS w"), Seq("w"))
-        .join(settled.filter(col("d") === dd - 1)
-          .selectExpr("s", "v", "sigma AS sv"), Seq("s", "v"))
-        .selectExpr("s", "v",
-          "(CAST(sv AS DECIMAL(38,0)) * (1000000000000 + dw)) div sw AS t")
-        .groupBy("s", "v").agg(sum("t").as("inc"))
-      delta = delta.join(contrib, Seq("s", "v"), "left")
-        .selectExpr("s", "v", "delta + COALESCE(inc, CAST(0 AS BIGINT)) AS delta")
-        .transform(graft.util.Loops.pin)
-    }
-    parcels
-      .join(delta.filter(col("v") =!= col("s"))
-        .groupBy(col("v").as("p")).agg(sum("delta").as("t")), Seq("p"), "left")
-      .na.fill(0L, Seq("t"))
+      nSources: Int): DataFrame =
+    betweennessOn(pairs0.select("p1", "p2", "edge"), nSources,
+      "DesignImage.betweennessCore")
       .selectExpr("p", "round(CAST(t AS DOUBLE) / 1e12, 6) AS bc")
-      .orderBy("p")
+
+  /** (p, t = Σ_{s ≠ p} δ_s(p) in 10⁻¹² fixed point) over the first
+    * `nSources` parcels, pinned from an edge or length relation. */
+  private def betweennessOn(pairs: DataFrame, nSources: Int,
+      site: String): DataFrame = {
+    val g = GraphLoops.pin(pairs, site)
+    val t = GraphLoops.betweenness(g, nSources, site)
+    g.relation(Seq(StructField("t", LongType, nullable = false)))(i => Seq(t(i)))
   }
 
   def betweenness(s: SparkSession, d: String): DataFrame =
-    betweennessCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    betweennessCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), bcSources)
 
   private def betweennessSql: String = {
@@ -2421,9 +2263,7 @@ object DesignImage extends QueryModule {
   }
 
   def modularityWeighted(s: SparkSession, d: String): DataFrame = {
-    val base = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    val base = connectomeCore(centsSeries(s, d))
       .localCheckpoint() // NP²-bounded; edge + weight consumers
     modularityWeightedCore(
       base.selectExpr("p1", "p2", s"$wPosStr AS w"),
@@ -2493,9 +2333,7 @@ object DesignImage extends QueryModule {
   // partition) differ in exactly one input.
 
   def modularityWeightedLouvain(s: SparkSession, d: String): DataFrame = {
-    val wp = connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    val wp = connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w")
       .localCheckpoint() // NP²-bounded; detector + modularity consumers
     modularityWeightedCore(wp, louvainModules(wp))
@@ -2638,9 +2476,7 @@ object DesignImage extends QueryModule {
   }
 
   def richClubWeighted(s: SparkSession, d: String): DataFrame =
-    richClubWeightedCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    richClubWeightedCore(connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def richClubWeightedSql: String =
@@ -2721,9 +2557,7 @@ object DesignImage extends QueryModule {
   }
 
   def assortativityWeighted(s: SparkSession, d: String): DataFrame =
-    assortativityWeightedCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    assortativityWeightedCore(connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def assortativityWeightedSql: String =
@@ -2760,13 +2594,18 @@ object DesignImage extends QueryModule {
   // §"paths and distances": "connection lengths are the inverse of
   // connection weights"): per-hop length ℓ = round(1e12 / w) — an exact
   // int64 both engines since w is the 1e6-fixed-point r, so ℓ = 1e6/r
-  // in 1e-6 "inverse-correlation" units — then the SAME min-plus
-  // doubling as q184 over integer lengths (rounds = ⌈log₂ n⌉ still
-  // covers every ≤ n−1-hop shortest path; sums stay int64 through atlas
-  // scale: d ≤ n·5·10⁶ ≈ 5·10⁹). The oracle UNROLLS the doubling as
+  // in 1e-6 "inverse-correlation" units — then q184's driver kernel over
+  // integer lengths (Dijkstra per source, exact Long sums: d ≤ n·5·10⁶
+  // ≈ 5·10⁹ at atlas scale). The oracle UNROLLS a min-plus doubling as
   // generated CTEs (the q65/q225 replay discipline — q184's recursive
   // BFS walk dedups on exact (a,b,d) tuples, which bounds state only
-  // when d is the hop count; weighted sums would blow the walk up).
+  // when d is the hop count; weighted sums would blow the walk up);
+  // doubling and Dijkstra agree on every minimum exactly.
+  //
+  // Scale shape: q184's — one capped collect of the NP²-bounded length
+  // relation, NP² (a, b, d) rows back as one LocalRelation. ℓ is pinned
+  // as Catalyst computes it, so a weight above 2·10¹² (ℓ = 0) would
+  // drop its edge; the connectome's w ≤ 10⁶.
   // Reciprocal terms quantize at round(1e18/d) ≤ 10¹² each; the Σ sat
   // exactly at the int64 edge at atlas NP, so the fold now runs
   // DECIMAL(38,0) on the Spark side (DuckDB's SUM(BIGINT) is already
@@ -2775,16 +2614,10 @@ object DesignImage extends QueryModule {
 
   /** Weighted path-metrics core from a (p1, p2, w) relation. */
   private[graft] def pathMetricsWeightedCore(wpairs: DataFrame): DataFrame = {
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      wpairs.select(col("p1").as("p"))
-        .union(wpairs.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned; rounds derivation free + tail joins
-    val ones = wpairs.filter(col("w") > 0)
-      .selectExpr("p1", "p2", "CAST(round(1e12 / w, 0) AS BIGINT) AS l")
-    val sym = ones.selectExpr("p1 AS a", "p2 AS b", "l")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b", "l"))
-    val dist = minPlusDoubling(sym.selectExpr("a", "b", "l AS d"),
-      parcelRows.length)
+    val site = "DesignImage.pathMetricsWeightedCore"
+    val g = GraphLoops.pin(wpairs.selectExpr("p1", "p2", connLengthStr), site)
+    val dist = GraphLoops.distances(g, site)
+    val parcels = g.relation(Nil)(_ => Nil)
     // Reciprocal terms are ≤ 10¹² each (d ≥ 10⁶ for any 1-hop path);
     // at atlas NP² pairs the SUM sits exactly at the int64 edge, so the
     // fold runs in DECIMAL(38,0) (the q230 gain discipline) — each TERM
@@ -2812,10 +2645,13 @@ object DesignImage extends QueryModule {
   }
 
   def pathMetricsWeighted(s: SparkSession, d: String): DataFrame =
-    pathMetricsWeightedCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    pathMetricsWeightedCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
+
+  /** The q234/q247 connection length ℓ = round(1e12 / w) as the pinned
+    * `w` column (w ≤ 0 ⇒ no edge). */
+  private val connLengthStr =
+    "CASE WHEN w > 0 THEN CAST(round(1e12 / w, 0) AS BIGINT) END AS w"
 
   private def pathMetricsWeightedSql: String = {
     val rounds = math.max(1,
@@ -2868,133 +2704,31 @@ object DesignImage extends QueryModule {
   // q240's centrality on the weighted graph (Rubinov & Sporns define
   // the weighted variant over 1/w connection lengths — the q234
   // integer lengths ℓ = round(1e12/w), exact int64 both engines).
-  // Three fixed-point stages, all sampled-source-bounded:
-  //   1. DISTANCES: source-restricted Bellman–Ford — per round the
-  //      IMPROVED rows (new pair or shorter d) propagate one more hop;
-  //      rounds ≤ max shortest-path hop count ≤ NP−1. (Not the q234
-  //      all-pairs doubling: |sources|·E per round beats NP²·log NP
-  //      when sources ≪ NP — the scale-correct shape for the sampled
-  //      estimator.)
-  //   2. σ COUNTING on TIGHT edges (d(s,u) + ℓ(u,v) = d(s,v) — the
-  //      shortest-path DAG): full recompute per round from σ(s) = 1;
-  //      σ values are exact integers, nondecreasing per round, stable
-  //      once rounds reach the DAG's hop depth.
-  //   3. δ SWEEP, also recompute-per-round: δ(v) = Σ_{tight (v,w)}
-  //      (σ_v·(10¹² + δ_fp(w))) div σ_w — q240's 1e-12 fixed point
-  //      with exact per-term floor division; δ is nondecreasing per
-  //      round and stable at the DAG depth.
-  // Early stop: σ/δ are NONDECREASING with a fixed (s,v) support once
-  // distances settle, so (count, sum) equality with the previous round
-  // certifies the fixed point; the oracle UNROLLS connNP rounds of the
-  // identical recurrences — rounds past the fixed point recompute the
-  // same relation (idempotent no-ops), the q208 early-stop ≡
-  // full-unroll argument. bc(v) = Σ_{s ≠ v} δ_s(v).
+  // Engine form: q240's driver kernel over those lengths — per source one
+  // Dijkstra sweep (exact Long distances, σ over the tight entries
+  // d(s,u) + ℓ(u,v) = d(s,v)), then q240's backward δ sweep
+  //   δ(v) = Σ_{tight (v,w)} (σ_v·(10¹² + δ_fp(w))) div σ_w,
+  // bc(v) = Σ_{s ≠ v} δ_s(v).
+  // Oracle: three fixed-point stages unrolled connNP rounds each —
+  // source-restricted Bellman–Ford distances, σ recomputed from σ(s) = 1
+  // over the tight edges, δ recomputed over them; each reaches Brandes'
+  // exact values once the rounds cover the shortest-path DAG's hop depth
+  // (≤ NP−1), and later rounds recompute the same relation.
   //
-  // Scale shape: every relation is |sources|·NP- or |sources|·E-
-  // bounded; per-round driver actions (isEmpty / fixed-point probes)
-  // are bounded by the weighted-hop diameter — the q240 acknowledged
-  // pattern, inherent to synchronous iteration.
+  // Scale shape: q240's — one capped collect of the NP²-bounded length
+  // relation, O(|sources|·E log NP) driver work, one NP-row
+  // LocalRelation out.
 
   /** Weighted sampled-source Brandes from a (p1, p2, w) relation
     * (w = 0 ⇒ no edge) → (p, bc_w). */
   private[graft] def betweennessWeightedCore(wpairs: DataFrame,
-      nSources: Int): DataFrame = {
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
-      wpairs.select(col("p1").as("p"))
-        .union(wpairs.select(col("p2").as("p"))).distinct())
-    // NP rows, driver-pinned; sources + cap + output grid, zero jobs
-    val ones = wpairs.filter(col("w") > 0)
-      .selectExpr("p1", "p2", "CAST(round(1e12 / w, 0) AS BIGINT) AS l")
-    val sym = ones.selectExpr("p1 AS a", "p2 AS b", "l")
-      .union(ones.selectExpr("p2 AS a", "p1 AS b", "l"))
-      .localCheckpoint()
-    val sources = parcels.orderBy("p").limit(nSources).selectExpr("p AS s")
-    val cap = math.max(1L, parcelRows.length.toLong)
-    // 1. distances: relax from the improved frontier only — per-round
-    // state driver-pinned, so the empty-frontier probe is a free check
-    var dist = graft.util.Loops.pin(sources
-      .selectExpr("s", "s AS v", "CAST(0 AS BIGINT) AS d"))
-    var frontier = dist
-    var frontierNonEmpty = true
-    var round = 0L
-    while (round < cap && frontierNonEmpty) {
-      round += 1
-      val cand = frontier.selectExpr("s", "v AS a", "d")
-        .join(sym, Seq("a"))
-        .selectExpr("s", "b AS v", "d + l AS d")
-        .groupBy("s", "v").agg(min("d").as("d"))
-      val (improved, impRows) = graft.util.Loops.pinRows(cand
-        .join(dist.selectExpr("s", "v", "d AS d_old"), Seq("s", "v"), "left")
-        .filter(col("d_old").isNull || col("d") < col("d_old"))
-        .select("s", "v", "d")) // |sources|·NP-bounded
-      frontier = improved
-      frontierNonEmpty = impRows.nonEmpty
-      if (frontierNonEmpty)
-        dist = dist.unionByName(improved)
-          .groupBy("s", "v").agg(min("d").as("d"))
-          .transform(graft.util.Loops.pin)
-    }
-    val dists = dist
-    // 2. tight edges: the per-source shortest-path DAG
-    val tight = dists.selectExpr("s", "v AS u", "d AS du")
-      .join(sym.selectExpr("a AS u", "b AS v", "l"), Seq("u"))
-      .join(dists.selectExpr("s", "v", "d AS dv"), Seq("s", "v"))
-      .filter(col("du") + col("l") === col("dv"))
-      .select("s", "u", "v")
-      .localCheckpoint() // |sources|·E-bounded; σ + δ rounds
-    val base = sources.selectExpr("s", "s AS v", "CAST(1 AS BIGINT) AS sigma")
-    var sigma = graft.util.Loops.pin(base)
-    var sigStat = (0L, 0L)
-    var k = 0L
-    var stable = false
-    while (k < cap && !stable) {
-      k += 1
-      val (nsig, nsigRows) = graft.util.Loops.pinRows(base.unionByName(
-        tight.selectExpr("s", "u AS v", "v AS w")
-          .join(sigma.selectExpr("s", "v", "sigma"), Seq("s", "v"))
-          .groupBy(col("s"), col("w").as("v")).agg(sum("sigma").as("sigma"))))
-      sigma = nsig
-      // fixed-point certificate (count, Σσ) — free off the pinned rows
-      val now = (nsigRows.length.toLong, nsigRows.map(_.getLong(2)).sum)
-      stable = now == sigStat
-      sigStat = now
-    }
-    val sig = sigma
-    // 3. dependency sweep: full recompute per round in 1e-12 fixed point
-    val grid = dists.select("s", "v")
-    var delta = graft.util.Loops.pin(grid.withColumn("delta", lit(0L)))
-    var delSum = 0L
-    k = 0L
-    stable = false
-    while (k < cap && !stable) {
-      k += 1
-      val contrib = tight
-        .join(sig.selectExpr("s", "v AS u", "sigma AS sv"), Seq("s", "u"))
-        .join(sig.selectExpr("s", "v", "sigma AS sw"), Seq("s", "v"))
-        .join(delta.selectExpr("s", "v", "delta AS dw"), Seq("s", "v"))
-        .selectExpr("s", "u",
-          "(CAST(sv AS DECIMAL(38,0)) * (1000000000000 + dw)) div sw AS t")
-        .groupBy(col("s"), col("u").as("v")).agg(sum("t").as("inc"))
-      val (ndelta, ndeltaRows) = graft.util.Loops.pinRows(
-        grid.join(contrib, Seq("s", "v"), "left")
-          .selectExpr("s", "v", "COALESCE(inc, CAST(0 AS BIGINT)) AS delta"))
-      delta = ndelta
-      val st = ndeltaRows.map(_.getLong(2)).sum // free fixed-point probe
-      stable = st == delSum
-      delSum = st
-    }
-    parcels
-      .join(delta.filter(col("v") =!= col("s"))
-        .groupBy(col("v").as("p")).agg(sum("delta").as("t")), Seq("p"), "left")
-      .na.fill(0L, Seq("t"))
+      nSources: Int): DataFrame =
+    betweennessOn(wpairs.selectExpr("p1", "p2", connLengthStr), nSources,
+      "DesignImage.betweennessWeightedCore")
       .selectExpr("p", "round(CAST(t AS DOUBLE) / 1e12, 6) AS bc_w")
-      .orderBy("p")
-  }
 
   def betweennessWeighted(s: SparkSession, d: String): DataFrame =
-    betweennessWeightedCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    betweennessWeightedCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"), bcSources)
 
   private def betweennessWeightedSql: String = {
@@ -3122,9 +2856,7 @@ object DesignImage extends QueryModule {
   }
 
   def weightedClustering(s: SparkSession, d: String): DataFrame =
-    weightedClusteringCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    weightedClusteringCore(connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def weightedClusteringSql: String =
@@ -3204,9 +2936,7 @@ object DesignImage extends QueryModule {
   }
 
   def richClub(s: SparkSession, d: String): DataFrame =
-    richClubCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    richClubCore(connectomeCore(centsSeries(s, d)))
 
   private def richClubSql: String =
     s"""WITH $connectomeCtes,
@@ -3265,9 +2995,7 @@ object DesignImage extends QueryModule {
   // against the broadcast degrees, a single global aggregate row.
 
   def assortativity(s: SparkSession, d: String): DataFrame =
-    assortativityWeightedCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    assortativityWeightedCore(connectomeCore(centsSeries(s, d))
       .selectExpr("p1", "p2", "edge AS w"))
 
   private def assortativitySql: String =
@@ -3307,7 +3035,7 @@ object DesignImage extends QueryModule {
   // graph's edge count, characteristic path length, and global
   // efficiency per (strategy, k). Hub curves cratering while leaf
   // curves hold is the small-world resilience signature. Distances ride
-  // q184's min-plus doubling keyed by (strategy, k) — 2·(kmax+1) = 8
+  // a min-plus doubling keyed by (strategy, k) — 2·(kmax+1) = 8
   // keys in place of PermP, rounds sized from the input's node count —
   // and the efficiency tail is q184's exact fixed-point convention
   // (sr = Σ round(1e12/d) BIGINT, ONE division per output).
@@ -3384,9 +3112,7 @@ object DesignImage extends QueryModule {
   }
 
   def attackRobustness(s: SparkSession, d: String): DataFrame =
-    attackCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    attackCore(connectomeCore(centsSeries(s, d)))
 
   private def attackSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -3499,9 +3225,7 @@ object DesignImage extends QueryModule {
     * spec can pin round-count convergence on the REAL fixture graph,
     * not just planted shapes. */
   private[graft] def corenessPairs(s: SparkSession, d: String): DataFrame =
-    connectomePairs(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge")
 
   def coreness(s: SparkSession, d: String): DataFrame =
@@ -3621,9 +3345,7 @@ object DesignImage extends QueryModule {
       .orderBy("p1", "p2")
 
   def dynamicConnectivity(s: SparkSession, d: String): DataFrame =
-    dfcCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    dfcCore(centsSeries(s, d))
 
   private def dynamicConnectivitySql: String =
     s"""WITH $centsSeriesCte,
@@ -3734,9 +3456,7 @@ object DesignImage extends QueryModule {
 
   def dfcStates(s: SparkSession, d: String): DataFrame =
     dfcStatesFromVectors(
-      dfcWindowR(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-        .select(col("t"), col("x"), col("y"), col("z"),
-          expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+      dfcWindowR(centsSeries(s, d))
         .selectExpr("ws", "p1", "p2", "COALESCE(r_fp, CAST(0 AS BIGINT)) AS v"))
 
   /** The generated series → window-vector CTE prefix (ends in
@@ -3911,9 +3631,7 @@ object DesignImage extends QueryModule {
 
   def dfcTransitions(s: SparkSession, d: String): DataFrame =
     dfcTransitionsFromVectors(
-      dfcWindowR(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-        .select(col("t"), col("x"), col("y"), col("z"),
-          expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+      dfcWindowR(centsSeries(s, d))
         .selectExpr("ws", "p1", "p2", "COALESCE(r_fp, CAST(0 AS BIGINT)) AS v"))
 
   private def dfcTransitionsSql: String =
@@ -4040,10 +3758,7 @@ object DesignImage extends QueryModule {
   }
 
   def dfcModuleStability(s: SparkSession, d: String): DataFrame =
-    dfcModuleStabilityCore(
-      dfcWindowR(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-        .select(col("t"), col("x"), col("y"), col("z"),
-          expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    dfcModuleStabilityCore(dfcWindowR(centsSeries(s, d)))
 
   /** The keyed LPA round CTEs: klp0 … klp{rounds} over
     * kparcels(ws, p) / ksym(ws, p, q), ending in `klpmod(ws, p, lab)`.
@@ -4163,10 +3878,7 @@ object DesignImage extends QueryModule {
   }
 
   def dfcFlexibility(s: SparkSession, d: String): DataFrame =
-    dfcFlexibilityCore(
-      dfcWindowR(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-        .select(col("t"), col("x"), col("y"), col("z"),
-          expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    dfcFlexibilityCore(dfcWindowR(centsSeries(s, d)))
 
   private def dfcFlexibilitySql: String =
     s"""WITH $dfcVectorCtes,
@@ -4255,10 +3967,7 @@ object DesignImage extends QueryModule {
   }
 
   def moduleAllegiance(s: SparkSession, d: String): DataFrame =
-    moduleAllegianceCore(
-      dfcWindowR(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-        .select(col("t"), col("x"), col("y"), col("z"),
-          expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    moduleAllegianceCore(dfcWindowR(centsSeries(s, d)))
 
   private def moduleAllegianceSql: String =
     s"""WITH $dfcVectorCtes,
@@ -4338,9 +4047,7 @@ object DesignImage extends QueryModule {
   }
 
   def recruitment(s: SparkSession, d: String): DataFrame = {
-    val vox = ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))
+    val vox = centsSeries(s, d)
       .localCheckpoint() // ONE voxel-series pass feeds both chains
     val pe = connectomeCore(vox)
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
@@ -4450,9 +4157,7 @@ object DesignImage extends QueryModule {
   }
 
   def percolation(s: SparkSession, d: String): DataFrame =
-    percolationCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    percolationCore(connectomeCore(centsSeries(s, d)))
 
   private def percolationSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -4524,9 +4229,7 @@ object DesignImage extends QueryModule {
   }
 
   def pathMetrics(s: SparkSession, d: String): DataFrame =
-    pathMetricsCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    pathMetricsCore(connectomePairs(centsSeries(s, d)))
 
   private def pathMetricsSql: String =
     // NOTE: under WITH RECURSIVE, DuckDB gives ANY top-level-UNION CTE
@@ -4604,9 +4307,7 @@ object DesignImage extends QueryModule {
   }
 
   def smallWorld(s: SparkSession, d: String): DataFrame =
-    smallWorldCore(connectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v"))))
+    smallWorldCore(connectomeCore(centsSeries(s, d)))
 
   private def smallWorldSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -4837,9 +4538,7 @@ object DesignImage extends QueryModule {
   }
 
   def gsrConnectome(s: SparkSession, d: String): DataFrame =
-    gsrConnectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    gsrConnectomeCore(centsSeries(s, d))
 
   private def gsrConnectomeSql: String =
     s"""WITH $centsSeriesCte,
@@ -5110,9 +4809,7 @@ object DesignImage extends QueryModule {
   private val scnSpikeStr = "CAST(dv AS DOUBLE) > 2.5 * med"
 
   def scrubbedConnectome(s: SparkSession, d: String): DataFrame =
-    scrubbedConnectomeCore(ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    scrubbedConnectomeCore(centsSeries(s, d))
 
   /** The q178 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant spike frames and censored-frame garbage. */
@@ -5214,9 +4911,7 @@ object DesignImage extends QueryModule {
     s"round(CAST(COALESCE(sv, 0) AS DOUBLE) / 100 / $NT, 6) AS mean_v"
 
   def restingPanel(s: SparkSession, d: String): DataFrame =
-    restingPanelCore(s, ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    restingPanelCore(s, centsSeries(s, d))
 
   /** The q169 body from a (t, x, y, z, v-cents) series — split out so
     * specs can pin panel ≡ standalone maps. */
@@ -5300,9 +4995,7 @@ object DesignImage extends QueryModule {
     s"CASE WHEN $rehoDenStr > 0 THEN 12.0 * $rehoSVarStr / $rehoDenStr END"
 
   def reho(s: SparkSession, d: String): DataFrame =
-    rehoCore(s, ImageOps.voxelSeries(lineitem(s, d), L, NT)
-      .select(col("t"), col("x"), col("y"), col("z"),
-        expr("CAST(value_dec * 100 AS BIGINT)").as("v")))
+    rehoCore(s, centsSeries(s, d))
 
   /** The q163 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant neighborhoods.

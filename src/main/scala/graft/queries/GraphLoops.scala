@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types._
 
 /** The connectome loop kernels — q208's label propagation, q215's H-index
-  * coreness, the q225/q230/q239 Louvain levels and the q204/q208 module-role
-  * moments — run on the DRIVER over one pinned edge relation.
+  * coreness, the q225/q230/q239 Louvain levels, the q204/q208 module-role
+  * moments, q203's ECM power steps and one single-source shortest-path
+  * sweep (q184/q189/q199/q234 path metrics, q240/q247 Brandes betweenness)
+  * — run on the DRIVER over one pinned edge relation.
   *
   * Every relation these kernels touch is atlas-bounded (NP parcels, ≤ NP²
   * pairs: 66 at connNP = 12, ≤ 10⁶ at atlas scale), yet as a DataFrame
@@ -37,9 +39,12 @@ private[graft] object GraphLoops {
       * row per node of `nodes` (id order), `cells(i)` filling node i's cols. */
     def relation(cols: Seq[StructField], nodes: Seq[Int] = ids.indices)(
         cells: Int => Seq[Any]): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(nodes.map(i => Row(ids(i) +: cells(i): _*)): _*),
-        StructType(idField +: cols))
+      local(idField +: cols, nodes.map(i => ids(i) +: cells(i)))
+
+    /** A driver-local relation of `rows` under `fields`. */
+    def local(fields: Seq[StructField], rows: Seq[Seq[Any]]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
+        StructType(fields))
   }
 
   private val integralIds: Set[DataType] =
@@ -162,6 +167,96 @@ private[graft] object GraphLoops {
     }._1
   }
 
+  /** ECM's unnormalized power steps (the q203 section note): x⁰ = 1, then
+    * x ← x + A·x `steps` times, A counting one term per adjacency entry. */
+  def ecm(g: Graph, steps: Int, site: String): Array[Long] =
+    fixpoint(g, Array.fill(g.n)(1L), steps, site, untilStable = false) {
+      (x, _) => Array.tabulate(g.n)(i => g.adj(i).foldLeft(x(i))(
+        (acc, j) => Math.addExact(acc, x(j))))
+    }._1
+
+  /** One source's shortest paths, the entry weights read as lengths (all
+    * ≥ 1): `dist` (Long.MaxValue = unreached), `sigma` the shortest-path
+    * counts and `order` the reached nodes in settle order (non-decreasing
+    * dist). */
+  final class Paths(val dist: Array[Long], val sigma: Array[Long],
+      val order: Array[Int])
+
+  /** Dijkstra from node `s` — BFS order when every length is 1. Distances
+    * are exact (`Math.addExact`); σ(v) sums σ over v's tight entries, so a
+    * duplicate pair counts twice, as the oracle's UNION ALL does. Every
+    * tight entry comes from a node of smaller dist (lengths ≥ 1), settled
+    * earlier, so σ(v) is final when v settles. */
+  def shortestPaths(g: Graph, s: Int): Paths = {
+    val dist = Array.fill(g.n)(Long.MaxValue)
+    val sigma = new Array[Long](g.n)
+    val order = Array.newBuilder[Int]
+    val heap = collection.mutable.PriorityQueue((0L, s))(
+      Ordering[(Long, Int)].reverse)
+    dist(s) = 0L
+    while (heap.nonEmpty) {
+      val (d, v) = heap.dequeue()
+      if (d == dist(v)) { // not improved on since it was queued
+        order += v
+        sigma(v) = if (v == s) 1L else g.adj(v).indices
+          .filter(tight(g, dist, v, _))
+          .foldLeft(0L)((acc, e) => Math.addExact(acc, sigma(g.adj(v)(e))))
+        for (e <- g.adj(v).indices) {
+          val (u, du) = (g.adj(v)(e), Math.addExact(d, g.wt(v)(e)))
+          if (du < dist(u)) { dist(u) = du; heap.enqueue((du, u)) }
+        }
+      }
+    }
+    new Paths(dist, sigma, order.result())
+  }
+
+  /** Entry e of node w ends a shortest path to w. */
+  private def tight(g: Graph, dist: Array[Long], w: Int, e: Int): Boolean =
+    dist(w) - g.wt(w)(e) == dist(g.adj(w)(e))
+
+  /** Brandes' dependencies of one source's [[Paths]] in 10⁻¹² fixed point
+    * (the q240 section note): from the last-settled node back, over each
+    * tight entry (v → w), δ(v) += (σ_v·(10¹² + δ(w))) div σ_w — the product
+    * in BigInt, the floor exact on non-negative operands. */
+  def dependencies(g: Graph, p: Paths): Array[Long] = {
+    val delta = new Array[Long](g.n)
+    for (w <- p.order.reverseIterator; e <- g.adj(w).indices
+         if tight(g, p.dist, w, e)) {
+      val v = g.adj(w)(e)
+      val term = BigInt(p.sigma(v)) * (BigInt(delta(w)) + FixedOne) / p.sigma(w)
+      delta(v) = Math.addExact(delta(v), term.bigInteger.longValueExact)
+    }
+    delta
+  }
+
+  /** Σ over the first `sources` node indices s of δ_s(v), v ≠ s: the
+    * (sampled-source) betweenness in 10⁻¹² fixed point. */
+  def betweenness(g: Graph, sources: Int, site: String): Array[Long] = {
+    val k = math.max(0, math.min(sources, g.n))
+    val bc = new Array[Long](g.n)
+    for (s <- 0 until k) {
+      val delta = dependencies(g, shortestPaths(g, s))
+      for (v <- 0 until g.n if v != s) bc(v) = Math.addExact(bc(v), delta(v))
+    }
+    trace(g, site, k, converged = true)
+    bc
+  }
+
+  /** All-pairs shortest distances: one (a, b, d) row per ordered pair
+    * a ≠ b with b reachable from a. */
+  def distances(g: Graph, site: String): DataFrame = {
+    val rows = for {
+      s <- 0 until g.n
+      p = shortestPaths(g, s)
+      v <- p.order if v != s
+    } yield Seq(g.ids(s), g.ids(v), p.dist(v))
+    trace(g, site, g.n, converged = true)
+    g.local(Seq(g.idField.copy(name = "a"), g.idField.copy(name = "b"),
+      StructField("d", LongType, nullable = false)), rows)
+  }
+
+  private val FixedOne = BigInt(1000000000000L)
+
   /** Node i's entry weights summed per community of `lab`. */
   private def weightsInto(g: Graph, i: Int, lab: Array[Int]): Map[Int, Long] =
     g.adj(i).zip(g.wt(i)).groupMapReduce(e => lab(e._1))(_._2)(_ + _)
@@ -191,8 +286,7 @@ private[graft] object GraphLoops {
       converged = next.sameElements(state)
       state = next
     }
-    log.info(s"""{"event":"driver_loop","site":"$site","nodes":${g.n},""" +
-      s""""edge_rows":${g.edgeRows},"rounds":$round,"converged":$converged}""")
+    trace(g, site, round, converged)
     (state, round, converged)
   }
 
@@ -224,6 +318,12 @@ private[graft] object GraphLoops {
   }
 
   /** One structured INFO line per driver loop (site, nodes, edge_rows,
-    * rounds, converged): where the loop ran and how long it took to settle. */
+    * rounds, converged): where the loop ran and how long it took to settle.
+    * A shortest-path sweep reports its sources as rounds, converged. */
+  private def trace(g: Graph, site: String, rounds: Int,
+      converged: Boolean): Unit =
+    log.info(s"""{"event":"driver_loop","site":"$site","nodes":${g.n},""" +
+      s""""edge_rows":${g.edgeRows},"rounds":$rounds,"converged":$converged}""")
+
   private val log = org.slf4j.LoggerFactory.getLogger("graft.loops")
 }

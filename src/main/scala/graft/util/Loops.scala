@@ -112,7 +112,7 @@ object Loops {
       p.conf.set("spark.sql.limit.initialNumPartitions", "100000")
       // (probed and rejected: constraintPropagation=false and
       // codegen.wholeStage=false moved a round-shaped pin not at all —
-      // ProbePin: ~93 ms either way, ~15 ms job dispatch + planning)
+      // ~93 ms either way, ~15 ms job dispatch; OPTIMIZATION_r21.md)
       p
     })
 

@@ -911,6 +911,20 @@ class InferenceQcSpec extends SparkSpec {
     assert(star2(0) === 4.0, s"2-pivot star center: $star2")
   }
 
+  test("q240: sigma past int64 - a path of 8-fold pairs keeps the plain path's bc") {
+    val s = spark
+    import s.implicits._
+    // 10-node path, every pair 8 times: sigma from node 0 reaches 8⁹, and
+    // sigma_v·(10¹² + delta_w) at the last hop is 8⁸·10¹² > Long.MaxValue.
+    // Each of the 8 entries carries (10¹² + delta_w) / 8 exactly, so every
+    // dependency is the plain path's: bc(i) = 2·i·(9 − i) over all sources.
+    val pairs = for (i <- 0 until 9; _ <- 0 until 8) yield (i, i + 1, 1L)
+    val bc = graft.queries.DesignImage.betweennessCore(
+      pairs.toDF("p1", "p2", "edge"), 10)
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assert(bc === (0 to 9).map(i => i -> 2.0 * i * (9 - i)).toMap, s"$bc")
+  }
+
   test("q247: weighted betweenness — the weighted diamond re-routes the binary center") {
     val s = spark
     import s.implicits._
@@ -1461,25 +1475,28 @@ class InferenceQcSpec extends SparkSpec {
     assert(mean.exists(m => math.abs(m) < 0.3), s"static mean hides it: $mean")
   }
 
-  test("q199: frontier BFS equals min-plus doubling on every planted shape") {
+  test("q199: two components - per-component reach and efficiency, NULL ecc off every edge") {
     val s = spark
     import s.implicits._
-    // the q184 fixture (path + isolate), a deep 21-node path (diameter
-    // 20), and a two-component graph with a cycle
-    val shapes = Seq(
-      Seq((0, 1, 1L), (1, 2, 1L), (2, 3, 1L), (0, 4, 0L)),
-      (0 until 20).map(i => (i, i + 1, 1L)),
-      Seq((0, 1, 1L), (1, 2, 1L), (2, 0, 1L), (5, 6, 1L), (6, 7, 1L),
-        (3, 7, 0L)),
-    )
-    shapes.zipWithIndex.foreach { case (rows, i) =>
-      val pe = rows.toDF("p1", "p2", "edge")
-      val doubling = graft.queries.DesignImage.pathMetricsCore(pe)
-        .collect().map(_.toString).sorted.toSeq
-      val bfs = graft.queries.DesignImage.pathMetricsBfsCore(pe)
-        .collect().map(_.toString).sorted.toSeq
-      assert(bfs === doubling, s"shape $i diverged")
-    }
+    // triangle 0-1-2, path 5-6-7, and parcel 3 only in a non-edge pair:
+    // np = 7, so every nodal efficiency divides by 6
+    val pe = Seq((0, 1, 1L), (1, 2, 1L), (2, 0, 1L), (5, 6, 1L), (6, 7, 1L),
+      (3, 7, 0L)).toDF("p1", "p2", "edge")
+    val out = graft.queries.DesignImage.pathMetricsCore(pe)
+      .collect().map(r => r.getInt(0) -> ((
+        Option(r.get(1)).map(_.asInstanceOf[Long]), r.getLong(2),
+        r.getDouble(3), Option(r.get(4)).map(_.asInstanceOf[Double]),
+        r.getDouble(5)))).toMap
+    assert(out.keySet === Set(0, 1, 2, 3, 5, 6, 7))
+    // cpl = (6·1 + 4·1 + 2·2) / 12 finite ordered pairs; eff_glob =
+    // (6 + 4 + 2·½) / (7·6)
+    val glob = (Some(1.166667), 0.261905)
+    Seq(0, 1, 2, 6).foreach(p => assert(out(p) ===
+      ((Some(1L), 2L, 0.333333, glob._1, glob._2)), s"node $p: ${out(p)}"))
+    Seq(5, 7).foreach(p => assert(out(p) ===
+      ((Some(2L), 2L, 0.25, glob._1, glob._2)), s"path end $p: ${out(p)}"))
+    assert(out(3) === ((None, 0L, 0.0, glob._1, glob._2)),
+      s"no edge: NULL ecc, zero reach/efficiency: ${out(3)}")
   }
 
   // ---- q194 GSR connectome ------------------------------------------------------

@@ -408,4 +408,71 @@ class PropertySpec extends SparkSpec {
     }
     assert(merged.distinct.size === 2, s"the sample must hold both cases: $merged")
   }
+
+  test("property: driver shortest paths, sigma and Brandes delta equal a BigInt Floyd-Warshall reference") {
+    val s = spark
+    import s.implicits._
+    // random weighted pair lists over up to 12 ids, lengths 1..3 so ties
+    // (sigma > 1) are common; a re-appended prefix with redrawn weights
+    // makes duplicate pairs (same or different length), w = 0 draws and a
+    // trailing pair of two fresh ids at w = 0 bring nodes with no edge
+    val genGraph = for {
+      n <- Gen.choose(2, 12)
+      m <- Gen.choose(1, 30)
+      pairs <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1),
+        Gen.frequency(5 -> Gen.choose(1L, 3L), 1 -> Gen.const(0L))))
+      dup <- Gen.choose(0, 8)
+      redrawn <- Gen.listOfN(dup, Gen.choose(1L, 3L))
+      k <- Gen.choose(1, n)
+    } yield {
+      val noLoops = pairs.filter(p => p._1 != p._2)
+      val dups = noLoops.zip(redrawn).map { case ((a, b, _), w) => (a, b, w) }
+      (noLoops ++ dups :+ ((n, n + 1, 0L)), k)
+    }
+    val fixed = BigInt(1000000000000L)
+    val multi = for (((pairs, k), gi) <- samples(genGraph, 12).zipWithIndex) yield {
+      val g = graft.queries.GraphLoops.pin(pairs.toDF("p1", "p2", "w"), "PropertySpec")
+      val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+      assert(g.ids.toSeq === ids, s"graph $gi: nodes in id order")
+      val n = ids.size
+      val ix = ids.zipWithIndex.toMap
+      val entries = pairs.filter(_._3 > 0).flatMap { case (a, b, w) =>
+        Seq((ix(a), ix(b), BigInt(w)), (ix(b), ix(a), BigInt(w))) }
+      // Floyd-Warshall over BigInt, None = unreachable
+      val d = Array.tabulate(n, n)((i, j) => if (i == j) Option(BigInt(0)) else None)
+      for ((a, b, w) <- entries if d(a)(b).forall(w < _)) d(a)(b) = Some(w)
+      for (c <- 0 until n; a <- 0 until n; b <- 0 until n)
+        for (x <- d(a)(c); y <- d(c)(b) if d(a)(b).forall(x + y < _))
+          d(a)(b) = Some(x + y)
+      val bc = Array.fill(n)(BigInt(0))
+      for (src <- 0 until n) {
+        val ds = d(src)
+        val reached = (0 until n).filter(ds(_).isDefined).sortBy(ds(_).get)
+        def tight(u: Int, v: Int, w: BigInt) =
+          ds(u).isDefined && ds(v).isDefined && ds(u).get + w == ds(v).get
+        // sigma by DP in distance order, one term per entry
+        val sigma = Array.fill(n)(BigInt(0))
+        sigma(src) = 1
+        for (v <- reached if v != src)
+          sigma(v) = entries.collect { case (u, `v`, w) if tight(u, v, w) => sigma(u) }.sum
+        val delta = Array.fill(n)(BigInt(0))
+        for (v <- reached.reverse)
+          delta(v) = entries.collect { case (`v`, w, l) if tight(v, w, l) =>
+            sigma(v) * (fixed + delta(w)) / sigma(w) }.sum
+        val p = graft.queries.GraphLoops.shortestPaths(g, src)
+        assert(p.dist.toSeq === ds.map(_.fold(Long.MaxValue)(_.toLong)).toSeq,
+          s"graph $gi source $src distances: $pairs")
+        assert(p.order.toSet === reached.toSet, s"graph $gi source $src reach")
+        assert(p.sigma.toSeq.map(BigInt(_)) === sigma.toSeq,
+          s"graph $gi source $src sigma: $pairs")
+        assert(graft.queries.GraphLoops.dependencies(g, p).toSeq.map(BigInt(_)) ===
+          delta.toSeq, s"graph $gi source $src delta: $pairs")
+        if (src < k) for (v <- 0 until n if v != src) bc(v) += delta(v)
+      }
+      assert(graft.queries.GraphLoops.betweenness(g, k, "PropertySpec").toSeq
+        .map(BigInt(_)) === bc.toSeq, s"graph $gi: $k-source betweenness")
+      k < n && entries.size > entries.distinct.size
+    }
+    assert(multi.contains(true), "the sample must hold a duplicate pair and k < n")
+  }
 }
