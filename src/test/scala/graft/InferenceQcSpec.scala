@@ -1475,7 +1475,7 @@ class InferenceQcSpec extends SparkSpec {
     assert(mean.exists(m => math.abs(m) < 0.3), s"static mean hides it: $mean")
   }
 
-  test("q199: two components - per-component reach and efficiency, NULL ecc off every edge") {
+  test("q199: two components - per-component reach and efficiency, NULL ecc off edges") {
     val s = spark
     import s.implicits._
     // triangle 0-1-2, path 5-6-7, and parcel 3 only in a non-edge pair:
