@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
 import graft.util.Tables._
 import graft.design.DesignOps
 import graft.image.ImageOps
@@ -1208,16 +1208,19 @@ object DesignImage extends QueryModule {
   // rule. Undefined observed tests (NULL t_obs) are excluded from the
   // observed graph.
   //
-  // Components run as reachability DOUBLING keyed by permutation
-  // (identity ∪ edges, squared ⌈log₂ n⌉ times, then comp = min reachable
-  // parcel) — the q184 lesson: rounds derive from the input's node
-  // count, and every relation is (PermP·NP²)-bounded, broadcast-class.
+  // Components run on the driver: the observed and permuted edges cross
+  // in ONE keyed pin (GraphLoops.pinKeyed, key = permutation, −1 the
+  // observed graph), and per key a min-label fixed point
+  // (GraphLoops.components) gives comp = the least parcel reachable —
+  // the oracle's recursive walk's MIN(b). Deterministic: labels are
+  // parcel ids, and a fixed point is unique.
   //
   // Scale shape: ONE data-sized exchange (q182's per-session parcel
-  // aggregate); the threshold, the PermP-keyed component fold, and the
-  // null-max comparison are all bounded by PermP·NP² rows. At the mass
-  // regime the doubling join is PermP·NP³ bounded work — atlas-regime
-  // like q184, documented.
+  // aggregate); the threshold and the null-max comparison are bounded by
+  // PermP·NP² rows, and the component state is PermP·NP labels on the
+  // driver — O(PermP·NP·E) work, no closure is ever materialized. Atlas
+  // regime by contract: a keyed edge relation over the pin cap fails
+  // loudly.
 
   // |t| > 3.0 primary: the fixture's sign-flip null is heavily
   // inter-edge correlated (one flip pattern moves every edge of a
@@ -1233,33 +1236,9 @@ object DesignImage extends QueryModule {
   /** (k, p, comp) component labels for a (k, a, b)-keyed undirected edge
     * relation: comp = min parcel reachable within key k. */
   private[graft] def nbsComponentsCore(edges: DataFrame): DataFrame = {
-    val sym = edges.selectExpr("k", "a", "b")
-      .unionByName(edges.selectExpr("k", "b AS a", "a AS b"))
-    val nodes = sym.select(col("k"), col("a").as("p")).distinct()
-    val pinned0 = graft.util.Loops.pinRows(
-      sym.unionByName(nodes.selectExpr("k", "p AS a", "p AS b")).distinct())
-    var reach = pinned0._1
-    val reachRows = pinned0._2
-    // rounds from the distinct-node count — free off the pinned pairs
-    val nNodes = math.max(2L,
-      reachRows.iterator.filter(r => r.get(1) == r.get(2))
-        .map(_.get(1)).toSet.size.toLong)
-    val rounds = math.max(1,
-      math.ceil(math.log(nNodes.toDouble) / math.log(2.0)).toInt)
-    for (_ <- 0 until rounds) {
-      val sq = reach.selectExpr("k", "a", "b AS c")
-        .join(reach.selectExpr("k", "a AS c", "b"), Seq("k", "c"))
-        .select("k", "a", "b")
-      reach = graft.util.Loops.pin(reach.unionByName(sq).distinct())
-    }
-    // fold to components INSIDE the pin: reach is the round family's one
-    // LARGE pinned relation (full per-k transitive closure), and a
-    // multi-task scan of a LocalRelation deserializes the whole relation
-    // from every task's closure (measured: a 9 s 32-task stage on q196).
-    // Pinned, the fold is one single-task job and consumers read the
-    // keys·nodes-bounded component labels instead.
-    graft.util.Loops.pin(
-      reach.groupBy(col("k"), col("a").as("p")).agg(min("b").as("comp")))
+    val site = "DesignImage.nbsComponentsCore"
+    GraphLoops.pinKeyed(edges.selectExpr("k", "a AS p1", "b AS p2", "1 AS edge"),
+      Seq("k"), site).labels("comp", site)(GraphLoops.components(_, site))
   }
 
   /** The q196 body over q182's (g, p1, p2, z_fp) facts — spec-plantable. */
@@ -1284,8 +1263,8 @@ object DesignImage extends QueryModule {
     val permE = graft.util.Loops.pin(permT
       .filter(expr(s"t_p IS NULL OR abs(t_p) > $tPrim"))
       .selectExpr("perm AS k", "CAST(run AS INT) AS a", "CAST(j AS INT) AS b"))
-    // already a pinned LocalRelation (nbsComponentsCore ends in a pin) —
-    // a localCheckpoint on top only re-materialized it as one more job
+    // a driver-local relation already (one keyed pin) — a
+    // localCheckpoint on top would only re-materialize it as one more job
     val comp = nbsComponentsCore(obsE.unionByName(permE))
     val obsComp = comp.filter(col("k") === -1L).selectExpr("p", "comp")
     val oc = obsE
@@ -1316,8 +1295,8 @@ object DesignImage extends QueryModule {
         .selectExpr("CAST(comp AS INT) AS comp", "n_nodes", "n_edges",
           s"round((1 + n_ge) / CAST(${1 + Glm.PermP} AS DOUBLE), 6) AS p_nbs")
         .selectExpr("comp", "n_nodes", "n_edges", "p_nbs",
-          s"p_nbs <= $nbsAlpha AS rejected")
-        .orderBy("comp"))
+          s"p_nbs <= $nbsAlpha AS rejected"))
+      .orderBy("comp") // the sort stays in the plan, past the pin
   }
 
   def nbsComponents(s: SparkSession, d: String): DataFrame =
@@ -3034,24 +3013,28 @@ object DesignImage extends QueryModule {
   // low-degree removal bounds it from below), and report the surviving
   // graph's edge count, characteristic path length, and global
   // efficiency per (strategy, k). Hub curves cratering while leaf
-  // curves hold is the small-world resilience signature. Distances ride
-  // a min-plus doubling keyed by (strategy, k) — 2·(kmax+1) = 8
-  // keys in place of PermP, rounds sized from the input's node count —
-  // and the efficiency tail is q184's exact fixed-point convention
-  // (sr = Σ round(1e12/d) BIGINT, ONE division per output).
+  // curves hold is the small-world resilience signature. Distances run
+  // on the driver: the surviving edges of all 2·(kmax+1) = 8 (strategy,
+  // k) keys cross in ONE keyed pin (GraphLoops.pinKeyed), and per key the
+  // shared shortest-path kernel at unit lengths (BFS, exact hop counts)
+  // gives every (a, b, d) — q184's kernel, keyed. The efficiency tail is
+  // q184's exact fixed-point convention (sr = Σ round(1e12/d) BIGINT,
+  // ONE division per output).
   //
   // Scale shape: one NP window for the two degree rankings (NP rows —
-  // broadcast-class), a |keys|·NP²-bounded keyed edge relation, keyed
-  // doubling = |keys|·NP³ worst case (q196's class). No data-sized work
-  // past the q168 moments.
+  // broadcast-class), a |keys|·NP²-bounded keyed edge relation pinned
+  // once, O(|keys|·NP·E) driver BFS work, and the |keys|·NP²-row distance
+  // relation leaves as one LocalRelation. No data-sized work past the
+  // q168 moments.
 
   private val attackKMax = 3L
 
   private[graft] def attackCore(pairs0: DataFrame): DataFrame = {
     val s = pairs0.sparkSession
     import s.implicits._
+    val site = "DesignImage.attackCore"
     val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
-    val (parcels, parcelRows) = graft.util.Loops.pinRows(
+    val parcels = graft.util.Loops.pin(
       pe.select(col("p1").as("p"))
         .union(pe.select(col("p2").as("p"))).distinct())
     // NP rows, driver-pinned; deg fill + count + np, zero scan jobs
@@ -3079,24 +3062,10 @@ object DesignImage extends QueryModule {
       .filter(expr("CASE WHEN strategy = 'hub' THEN ra > k AND rb > k " +
         "ELSE la > k AND lb > k END"))
       .select("strategy", "k", "p1", "p2")
-      .localCheckpoint() // |keys|·NP²-bounded; edge counts + sym
+      .localCheckpoint() // |keys|·NP²-bounded; edge counts + keyed pin
     val ec = onesK.groupBy("strategy", "k").agg(count(lit(1)).as("n_edges"))
-    val sym = onesK.selectExpr("strategy", "k", "p1 AS a", "p2 AS b")
-      .unionByName(onesK.selectExpr("strategy", "k", "p2 AS a", "p1 AS b"))
-    var dist = graft.util.Loops.pin(sym.withColumn("d", lit(1L)))
-    val nNodes = math.max(2L, parcelRows.length.toLong)
-    val rounds = math.max(1,
-      math.ceil(math.log(nNodes.toDouble) / math.log(2.0)).toInt)
-    for (_ <- 0 until rounds) {
-      val through = dist.selectExpr("strategy", "k", "a", "b AS c", "d AS d1")
-        .join(dist.selectExpr("strategy", "k", "a AS c", "b AS bb", "d AS d2"),
-          Seq("strategy", "k", "c"))
-        .selectExpr("strategy", "k", "a", "bb AS b", "d1 + d2 AS d")
-      dist = dist.unionByName(through)
-        .filter(col("a") =!= col("b"))
-        .groupBy("strategy", "k", "a", "b").agg(min("d").as("d"))
-        .transform(graft.util.Loops.pin) // |keys|·NP²-bounded state
-    }
+    val dist = GraphLoops.pinKeyed(onesK.withColumn("edge", lit(1)),
+      Seq("strategy", "k"), site).distances(site)
     val st = dist.groupBy("strategy", "k").agg(sum("d").as("sd"),
       count(lit(1)).as("n_fin"),
       sum(expr("CAST(round(1e12 / d, 0) AS BIGINT)")).as("sr"))
@@ -3407,32 +3376,28 @@ object DesignImage extends QueryModule {
   // Output per state: window count, occupancy fraction, run count, and
   // mean dwell (windows per visit) — the Allen et al. state statistics.
   //
-  // Scale shape: the window-vector relation is |W|·NP²-bounded; each
-  // round is one broadcast join against the k·NP²-row centroid relation
-  // + a |W|·k aggregate. At production |W| (thousands of windows ×
-  // subjects) this is exactly mini-batch-free distributed Lloyd — the
-  // q65 shape with pair-dims instead of embedding dims.
+  // Engine form: Lloyd runs on the driver over ONE capped collect of the
+  // window vectors (dfcStatesAssign), in exact Long arithmetic
+  // (Math.multiplyExact / addExact: an overflow fails, as ANSI SQL does);
+  // a distance sums the dims a window shares with the centroid, as the
+  // oracle's join does, and c = floorDiv(2s + n, 2n) is the oracle's
+  // floor division. The (ws, state) assignment leaves as one
+  // LocalRelation; the run and occupancy statistics stay Catalyst.
+  //
+  // Scale shape: the window-vector relation is |W|·NP²-bounded and
+  // crosses to the driver once; each round is O(|W|·k·NP²) integer work
+  // there. Atlas regime by contract: vectors over the pin cap fail
+  // loudly with the site's name.
 
   private val dfcK = 2
   private val dfcLloydRounds = 2
-
-  /** One Lloyd assignment: nearest centroid per window, exact-integer
-    * distances, ties to the lowest state. */
-  private def dfcAssign(wr: DataFrame, cent: DataFrame): DataFrame =
-    wr.join(cent, Seq("p1", "p2"))
-      .selectExpr("ws", "state", "(v - c) * (v - c) AS d2")
-      .groupBy("ws", "state").agg(sum("d2").as("dist"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("ws")
-          .orderBy(col("dist").asc, col("state").asc)))
-      .filter(col("rn") === 1).select("ws", "state")
 
   /** The q229 body from a (ws, p1, p2, v) window-vector relation —
     * split out so specs can plant alternating / blocked state
     * sequences. Every window must carry every (p1, p2) dim. */
   private[graft] def dfcStatesFromVectors(wr0: DataFrame): DataFrame = {
     val wr = wr0.select("ws", "p1", "p2", "v").localCheckpoint()
-    val fin = dfcStatesAssign(wr).localCheckpoint() // |W| rows; 2 consumers
+    val fin = dfcStatesAssign(wr) // driver-local, |W| rows
     val runs = fin
       .withColumn("prev", lag("state", 1).over(
         graft.util.Windows.boundedGlobalWindow(
@@ -3577,13 +3542,13 @@ object DesignImage extends QueryModule {
   // correctly-rounded division per row (NULL when the source state was
   // never left — no transitions out).
   //
-  // Scale shape: the q229 chain + one |W|-row lead window + a k²-grid
-  // broadcast join. Nothing new is data-sized.
+  // Scale shape: q229's driver Lloyd + one |W|-row lead window + a
+  // k²-grid broadcast join. Nothing new is data-sized.
 
   /** The q231 body from a (ws, p1, p2, v) window-vector relation. */
   private[graft] def dfcTransitionsFromVectors(wr0: DataFrame): DataFrame = {
-    val wr = wr0.select("ws", "p1", "p2", "v").localCheckpoint()
-    val fin = dfcStatesAssign(wr).localCheckpoint() // |W| rows; 1 window read
+    val wr = wr0.select("ws", "p1", "p2", "v")
+    val fin = dfcStatesAssign(wr) // driver-local, |W| rows
     val tr = fin
       .withColumn("to_state", lead("state", 1).over(
         graft.util.Windows.boundedGlobalWindow(
@@ -3605,28 +3570,45 @@ object DesignImage extends QueryModule {
       .orderBy("from_state", "to_state")
   }
 
-  /** The shared q229/q231 Lloyd fit → final (ws, state) assignment. */
-  private def dfcStatesAssign(wr: DataFrame): DataFrame = {
-    val wsIdx = wr.select("ws").distinct()
-      .withColumn("st", row_number().over(
-        graft.util.Windows.boundedGlobalWindow(
-          "|W|-bounded: one row per dFC window", col("ws"))) - 1)
-    var cent = wr.join(wsIdx.filter(col("st") < dfcK), Seq("ws"))
-      .selectExpr("st AS state", "p1", "p2", "v AS c")
-      .localCheckpoint()
-    for (_ <- 0 until dfcLloydRounds) {
-      val upd = wr.join(dfcAssign(wr, cent), Seq("ws"))
-        .groupBy("state", "p1", "p2")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .selectExpr("state", "p1", "p2",
-          "(2 * s + n - pmod(2 * s + n, 2 * n)) div (2 * n) AS c_new")
-      cent = cent
-        .join(upd, Seq("state", "p1", "p2"), "left")
-        .selectExpr("state", "p1", "p2",
-          "CAST(COALESCE(c_new, c) AS BIGINT) AS c")
-        .localCheckpoint()
+  /** The shared q229/q231 Lloyd fit → final (ws, state) assignment, on
+    * the driver (the q229 section note). Seeds are the first k windows by
+    * ws; each round assigns every window to the state of least exact
+    * squared distance over the dims it shares with that state's centroid
+    * (ties to the lower state; a window sharing no dim with any centroid
+    * stays unassigned), then moves each centroid dim to
+    * floorDiv(2s + n, 2n) over its assigned windows — an emptied state, or
+    * a dim no assigned window carries, keeps its value. Every window must
+    * carry each (p1, p2) dim at most once. */
+  private[graft] def dfcStatesAssign(wr: DataFrame): DataFrame = {
+    val rows = graft.util.Loops.pinnedRows(wr.select("ws", "p1", "p2", "v"),
+      "DesignImage.dfcStatesAssign")
+    val byWs = rows.groupBy(_.get(0))
+    val windows = byWs.keys.toSeq.sorted(
+      Ordering.fromLessThan[Any](_.asInstanceOf[Comparable[Any]].compareTo(_) < 0))
+    val vecs = windows.map(byWs(_).map(r => (r.get(1), r.get(2)) -> r.getLong(3)).toMap)
+    def sq(x: Long): Long = Math.multiplyExact(x, x)
+    def assign(cent: Seq[Map[(Any, Any), Long]]): Seq[Option[Int]] = vecs.map { v =>
+      cent.indices.flatMap { st =>
+        val shared = cent(st).filter(d => v.contains(d._1))
+        Option.when(shared.nonEmpty)((shared.foldLeft(0L) { case (acc, (d, c)) =>
+          Math.addExact(acc, sq(Math.subtractExact(v(d), c))) }, st))
+      }.minOption.map(_._2)
     }
-    dfcAssign(wr, cent)
+    val cent = (0 until dfcLloydRounds).foldLeft(vecs.take(dfcK)) { (cent, _) =>
+      val a = assign(cent)
+      cent.indices.map { st =>
+        val members = vecs.indices.filter(a(_).contains(st)).map(vecs)
+        cent(st).map { case (d, c) =>
+          val vs = members.flatMap(_.get(d))
+          val (s, n) = (vs.foldLeft(0L)(Math.addExact), vs.size.toLong)
+          d -> (if (n == 0) c
+            else Math.floorDiv(Math.addExact(Math.multiplyExact(2L, s), n), 2 * n))
+        }
+      }
+    }
+    GraphLoops.local(wr.sparkSession,
+      Seq(wr.schema("ws"), StructField("state", IntegerType, nullable = false)),
+      windows.zip(assign(cent)).collect { case (ws, Some(st)) => Seq(ws, st) })
   }
 
   def dfcTransitions(s: SparkSession, d: String): DataFrame =
@@ -3666,86 +3648,57 @@ object DesignImage extends QueryModule {
   // agree / C(n, 2), ONE division per window pair. A stable connectome
   // reads RI ≈ 1 across all pairs; reconfiguration windows dip.
   //
-  // Determinism: LPA runs KEYED BY WINDOW in one chain (the q218
-  // strategy-keyed discipline — |W| graphs propagate in the same
-  // NP-bounded rounds, no per-window unroll), stopping when EVERY
-  // window's labels reach their fixed point (the q208 early-stop;
-  // a window already at its fixed point reproduces its labels, so
-  // mixed convergence depths and the oracle's full unroll all agree),
-  // ceilinged at connNP. Window pairs compare over their COMMON node
-  // pairs (inner join — identical sets on the driver graph).
+  // Determinism: the windows' edge relations cross to the driver in ONE
+  // keyed pin (GraphLoops.pinKeyed, key = ws), and q208's LPA kernel
+  // (GraphLoops.lpa: same tie rule, same self-vote) runs per window,
+  // stopping at that window's fixed point, ceilinged at connNP. The
+  // oracle unrolls all windows in lockstep for connNP rounds; a window
+  // at its fixed point reproduces its labels, so the per-window fixed
+  // points are the lockstep ones. Window pairs compare over their COMMON
+  // node pairs (inner join — identical sets on the driver graph).
   //
-  // Scale shape: one data-sized exchange (the q223 window moments);
-  // then |W|·(edge relation) per LPA round and a |W|·NP²-bounded pair
-  // comparison. No window function except the |W|-row index.
+  // Scale shape: one data-sized exchange (the q223 window moments); the
+  // |W|·NP²-bounded keyed edge relation is pinned once, LPA is
+  // O(|W|·connNP·E) driver work, and the |W|·NP labels leave as one
+  // LocalRelation feeding a |W|·NP²-bounded pair comparison. No window
+  // function except the |W|-row index.
 
-  /** Per-consecutive-window Rand index from a (ws, p1, p2, r_fp)
-    * windowed-correlation relation. */
   /** Per-window LPA labels (ws, p, lab) from a (ws, p1, p2, r_fp)
     * windowed-correlation relation — the keyed detection kernel shared
-    * by q236 (Rand-index stability) and q241 (flexibility). */
+    * by q236 (Rand-index stability), q241 (flexibility), q256
+    * (allegiance) and q257 (recruitment). p and lab are the input's id
+    * type. */
   private[graft] def dfcWindowModules(wr0: DataFrame): DataFrame = {
-    val pe = wr0.selectExpr("ws", "p1", "p2",
-      "CASE WHEN r_fp IS NOT NULL AND r_fp >= 200000 THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS edge")
-      .localCheckpoint() // |W|·NP²-bounded; parcels + edges
-    val parcels = pe.select(col("ws"), col("p1").as("p"))
-      .union(pe.select(col("ws"), col("p2").as("p"))).distinct()
-      .localCheckpoint() // |W|·NP rows; init + rounds derivation
-    val ones = pe.filter(col("edge") === 1)
-    val sym = ones.selectExpr("ws", "p1 AS p", "p2 AS q")
-      .union(ones.selectExpr("ws", "p2 AS p", "p1 AS q"))
-      .localCheckpoint()
-    // The loop stops when EVERY window's labels hit their fixed point
-    // (one keyed diff probe per round — already-stable windows keep
-    // reproducing their labels, so mixed convergence depths need no
-    // per-window gating), ceilinged at connNP = the oracle's unroll
-    // count (the q208 lockstep argument, keyed).
-    var lab = graft.util.Loops.pin(parcels.selectExpr("ws", "p", "p AS lab"))
-    var converged = false
-    var round = 0
-    while (round < connNP && !converged) {
-      round += 1
-      // broadcast label joins + min(struct) winner — the q208 round
-      // shape, keyed by ws (|W|·NP label rows stay broadcast-class,
-      // driver-pinned: the per-round checkpoint + isEmpty probe jobs
-      // collapse into the one collect, the diff probe is a free check)
-      val votes = sym
-        .join(broadcast(lab.selectExpr("ws", "p AS q", "lab")), Seq("ws", "q"))
-        .select("ws", "p", "lab")
-        .unionByName(lab.select("ws", "p", "lab")) // the self-vote
-        .groupBy("ws", "p", "lab").agg(count(lit(1)).as("c"))
-      val (next, nrows) = graft.util.Loops.pinRows(votes
-        .groupBy("ws", "p")
-        .agg(min(struct(expr("-c AS nc"), col("lab"))).as("w"))
-        .select(col("ws"), col("p"), col("w.lab").as("lab"))
-        .join(broadcast(lab.selectExpr("ws", "p", "lab AS plab")),
-          Seq("ws", "p"))
-        .select(col("ws"), col("p"), col("lab"),
-          (col("lab") =!= col("plab")).as("chg"))) // |W|·NP rows
-      converged = !nrows.exists(_.getBoolean(3))
-      lab = next.select("ws", "p", "lab")
-    }
-    lab
+    val site = "DesignImage.dfcWindowModules"
+    GraphLoops.pinKeyed(wr0.selectExpr("ws", "p1", "p2",
+      "CASE WHEN r_fp IS NOT NULL AND r_fp >= 200000 THEN 1 ELSE 0 END AS edge"),
+      Seq("ws"), site).labels("lab", site)(GraphLoops.lpa(_, connNP, site)._1)
   }
 
-  private[graft] def dfcModuleStabilityCore(wr0: DataFrame): DataFrame = {
-    val lab = dfcWindowModules(wr0) // pinned LocalRelation already —
-    // a localCheckpoint would re-materialize it as a 32-task job
+  /** The consecutive window pairs (ws_from, ws_to) over `lab`'s windows
+    * in ws order — q236's and q241's transitions. */
+  private def dfcWindowPairs(lab: DataFrame): DataFrame = {
     val wsIdx = graft.util.Loops.pin(lab.select("ws").distinct()
       .withColumn("idx", row_number().over(
         graft.util.Windows.boundedGlobalWindow(
           "|W|-bounded: one row per dFC window", col("ws")))))
     // |W| rows; both pair endpoints (pin, not checkpoint — r21)
-    val wsPairs = wsIdx.selectExpr("ws AS ws_from", "idx")
+    wsIdx.selectExpr("ws AS ws_from", "idx")
       .join(wsIdx.selectExpr("ws AS ws_to", "idx - 1 AS idx"), Seq("idx"))
       .select("ws_from", "ws_to")
+  }
+
+  /** Per-consecutive-window Rand index from a (ws, p1, p2, r_fp)
+    * windowed-correlation relation. */
+  private[graft] def dfcModuleStabilityCore(wr0: DataFrame): DataFrame = {
+    val lab = dfcWindowModules(wr0) // driver-local already
     val same = graft.util.Loops.pin(lab.selectExpr("ws", "p AS i", "lab AS li")
       .join(lab.selectExpr("ws", "p AS j", "lab AS lj"), Seq("ws"))
       .filter(col("i") < col("j"))
       .selectExpr("ws", "i", "j",
         "CASE WHEN li = lj THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS sm"))
     // |W|·NP²-bounded; both comparison sides
-    graft.util.Loops.pin(wsPairs
+    graft.util.Loops.pin(dfcWindowPairs(lab)
       .join(same.selectExpr("ws AS ws_from", "i", "j", "sm AS sm_f"), Seq("ws_from"))
       .join(same.selectExpr("ws AS ws_to", "i", "j", "sm AS sm_t"),
         Seq("ws_to", "i", "j"))
@@ -3753,8 +3706,8 @@ object DesignImage extends QueryModule {
       .agg(count(lit(1)).as("n_pairs"),
         sum(expr("CASE WHEN sm_f = sm_t THEN 1 ELSE 0 END")).as("n_agree"))
       .selectExpr("ws_from", "ws_to", "n_pairs", "n_agree",
-        "CASE WHEN n_pairs > 0 THEN round(CAST(n_agree AS DOUBLE) / n_pairs, 6) END AS rand_index")
-      .orderBy("ws_from"))
+        "CASE WHEN n_pairs > 0 THEN round(CAST(n_agree AS DOUBLE) / n_pairs, 6) END AS rand_index"))
+      .orderBy("ws_from") // the sort stays in the plan, past the pin
   }
 
   def dfcModuleStability(s: SparkSession, d: String): DataFrame =
@@ -3762,9 +3715,9 @@ object DesignImage extends QueryModule {
 
   /** The keyed LPA round CTEs: klp0 … klp{rounds} over
     * kparcels(ws, p) / ksym(ws, p, q), ending in `klpmod(ws, p, lab)`.
-    * Unroll count = the Spark loop's round cap; rounds past a window's
+    * Unroll count = the driver kernel's round cap; rounds past a window's
     * fixed point reproduce its labels (the q208 lockstep argument), so
-    * the plain unroll agrees with the early-stopped keyed loop. */
+    * the plain unroll agrees with each window's early-stopped loop. */
   private def lpaKeyedCtes(rounds: Int): String = {
     val roundCtes = (1 to rounds).map { i =>
       s"""klpv$i AS MATERIALIZED (
@@ -3842,24 +3795,16 @@ object DesignImage extends QueryModule {
   // dfcWindowModules kernel + shared klpmod oracle CTEs), so the two
   // statistics can never disagree about who was in which module.
   //
-  // Scale shape: the q236 chain (one data-sized window-moment pass,
-  // keyed LPA rounds) + a |W|·NP-bounded transition join, a
-  // |W|·modules²-bounded overlap aggregate, and an NP-bounded output.
+  // Scale shape: the q236 chain (one data-sized window-moment pass, one
+  // keyed pin, driver LPA per window) + a |W|·NP-bounded transition
+  // join, a |W|·modules²-bounded overlap aggregate, and an NP-bounded
+  // output.
 
   /** Per-node flexibility from a (ws, p1, p2, r_fp) windowed-
     * correlation relation → (p, n_trans, n_changes, flexibility). */
   private[graft] def dfcFlexibilityCore(wr0: DataFrame): DataFrame = {
-    val lab = dfcWindowModules(wr0) // pinned LocalRelation already —
-    // a localCheckpoint would re-materialize it as a 32-task job
-    val wsIdx = graft.util.Loops.pin(lab.select("ws").distinct()
-      .withColumn("idx", row_number().over(
-        graft.util.Windows.boundedGlobalWindow(
-          "|W|-bounded: one row per dFC window", col("ws")))))
-    // |W| rows; both pair endpoints (pin, not checkpoint — r21)
-    val wsPairs = wsIdx.selectExpr("ws AS ws_from", "idx")
-      .join(wsIdx.selectExpr("ws AS ws_to", "idx - 1 AS idx"), Seq("idx"))
-      .select("ws_from", "ws_to")
-    val fj = graft.util.Loops.pin(wsPairs
+    val lab = dfcWindowModules(wr0) // driver-local already
+    val fj = graft.util.Loops.pin(dfcWindowPairs(lab)
       .join(lab.selectExpr("ws AS ws_from", "p", "lab AS lf"), Seq("ws_from"))
       .join(lab.selectExpr("ws AS ws_to", "p", "lab AS lt"),
         Seq("ws_to", "p"))) // |W|·NP rows; overlap + change counts
@@ -3873,8 +3818,8 @@ object DesignImage extends QueryModule {
         sum(expr("CASE WHEN lm <> lf THEN CAST(1 AS BIGINT) ELSE 0 END"))
           .as("n_changes"))
       .selectExpr("p", "n_trans", "n_changes",
-        "round(CAST(n_changes AS DOUBLE) / n_trans, 6) AS flexibility")
-      .orderBy("p"))
+        "round(CAST(n_changes AS DOUBLE) / n_trans, 6) AS flexibility"))
+      .orderBy("p") // the sort stays in the plan, past the pin
   }
 
   def dfcFlexibility(s: SparkSession, d: String): DataFrame =
@@ -3944,15 +3889,14 @@ object DesignImage extends QueryModule {
   // over ordered pairs i < j by construction (every parcel is in every
   // window's set — the all-pairs windowed-r relation registers them).
   //
-  // Scale shape: the q236 chain (one data-sized window-moment pass,
-  // keyed LPA rounds), then a |W|·NP²-bounded same-module join folding
-  // straight into an NP²-bounded aggregate.
+  // Scale shape: the q236 chain (one data-sized window-moment pass, one
+  // keyed pin, driver LPA per window), then a |W|·NP²-bounded same-module
+  // join folding straight into an NP²-bounded aggregate.
 
   /** Allegiance matrix from a (ws, p1, p2, r_fp) windowed-correlation
     * relation → (i, j, n_windows, n_together, allegiance). */
   private[graft] def moduleAllegianceCore(wr0: DataFrame): DataFrame = {
-    val lab = dfcWindowModules(wr0) // pinned LocalRelation already —
-    // a localCheckpoint would re-materialize it as a 32-task job
+    val lab = dfcWindowModules(wr0) // driver-local already
     graft.util.Loops.pin(lab.selectExpr("ws", "p AS i", "lab AS li")
       .join(lab.selectExpr("ws", "p AS j", "lab AS lj"), Seq("ws"))
       .filter(col("i") < col("j"))
@@ -4012,15 +3956,14 @@ object DesignImage extends QueryModule {
   //
   // Scale shape: the q236 keyed chain + the q208 static chain (both
   // connectome-moment dominated, sharing ONE voxel-series pass via the
-  // checkpointed input), then a |W|·NP²-bounded ordered-pair fold and
-  // an NP-bounded output.
+  // checkpointed input; each a driver LPA over one pin), then a
+  // |W|·NP²-bounded ordered-pair fold and an NP-bounded output.
 
   /** Recruitment/integration from a (ws, p1, p2, r_fp) windowed-
     * correlation relation and a (p, m) static module relation. */
   private[graft] def recruitmentCore(wr0: DataFrame,
       modules: DataFrame): DataFrame = {
-    val lab = dfcWindowModules(wr0) // pinned LocalRelation already —
-    // a localCheckpoint would re-materialize it as a 32-task job
+    val lab = dfcWindowModules(wr0) // driver-local already
     val mods = graft.util.Loops.pin(modules) // NP rows; both join sides
     val pairAg = lab.selectExpr("ws", "p AS i", "lab AS li")
       .join(lab.selectExpr("ws", "p AS j", "lab AS lj"), Seq("ws"))
@@ -4114,15 +4057,16 @@ object DesignImage extends QueryModule {
   // component count (isolated parcels count as singletons), the giant
   // component's size, and its fraction of all parcels — the percolation
   // curve whose cliff marks where the network disintegrates. Components
-  // come from the SAME threshold-keyed reachability doubling as q196
-  // (k = τ·100, a fixed-point integer key; rounds sized from the input's
-  // node count), so correctness rides a hash-proven kernel. τ·100/100 is
-  // a correctly-rounded IEEE division in both engines and r_par is the
-  // shared 6-dp rounded column — no boundary ULP risk beyond q168's own.
+  // come from the SAME keyed driver kernel as q196 (nbsComponentsCore:
+  // one keyed pin, key k = τ·100, a fixed-point integer key; a min-label
+  // fixed point per key), so correctness rides a hash-proven kernel.
+  // τ·100/100 is a correctly-rounded IEEE division in both engines and
+  // r_par is the shared 6-dp rounded column — no boundary ULP risk
+  // beyond q168's own.
   //
-  // Scale shape: the τ×pairs expansion is |τ|·NP²-bounded, the doubling
-  // is |τ|·NP³ worst case — q196's PermP-keyed class with |τ| = 7 keys
-  // instead of PermP. No window, driver state = one node count (rounds).
+  // Scale shape: the τ×pairs expansion is |τ|·NP²-bounded and pinned
+  // once; the component state is |τ|·NP labels on the driver, q196's
+  // class with |τ| = 7 keys instead of PermP. No window.
 
   private val percTaus = Seq(10L, 15L, 20L, 25L, 30L, 35L, 40L)
 

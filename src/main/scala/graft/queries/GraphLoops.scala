@@ -1,25 +1,29 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types._
 
 /** The connectome loop kernels — q208's label propagation, q215's H-index
-  * coreness, the q225/q230/q239 Louvain levels, the q204/q208 module-role
-  * moments, q203's ECM power steps and one single-source shortest-path
-  * sweep (q184/q189/q199/q234 path metrics, q240/q247 Brandes betweenness)
-  * — run on the DRIVER over one pinned edge relation.
+  * coreness, the q196/q217 connected components, the q225/q230/q239
+  * Louvain levels, the q204/q208 module-role moments, q203's ECM power
+  * steps and one single-source shortest-path sweep (q184/q189/q199/q218/
+  * q234 path metrics, q240/q247 Brandes betweenness) — run on the DRIVER
+  * over one pinned edge relation. The keyed loops (q196's permutations,
+  * q217's thresholds, q218's attack strategies, q236–q257's dFC windows)
+  * run the same kernels once per key over one keyed pin ([[pinKeyed]]).
   *
   * Every relation these kernels touch is atlas-bounded (NP parcels, ≤ NP²
-  * pairs: 66 at connNP = 12, ≤ 10⁶ at atlas scale), yet as a DataFrame
-  * choreography each round still paid a planned and dispatched pin collect
-  * for a few hundred integer operations. Here the edge relation
-  * crosses to the driver ONCE, through the capped pin collect (a relation
-  * over the cap fails loudly with the calling site's name — never a driver
-  * OOM, never a second execution path), the rounds run over adjacency
-  * arrays, and each result leaves as one LocalRelation. Integer arithmetic
-  * only: double-valued outputs stay Catalyst expressions evaluated over
-  * that relation, so their rounding is the oracle-compared one.
+  * pairs: 66 at connNP = 12, ≤ 10⁶ at atlas scale; |keys|·NP² keyed),
+  * yet as a DataFrame choreography each round still paid a planned and
+  * dispatched pin collect for a few hundred integer operations. Here the
+  * edge relation crosses to the driver ONCE, through the capped pin
+  * collect (a relation over the cap fails loudly with the calling site's
+  * name — never a driver OOM, never a second execution path), the rounds
+  * run over adjacency arrays, and each result leaves as one LocalRelation.
+  * Integer arithmetic only: double-valued outputs stay Catalyst
+  * expressions evaluated over that relation, so their rounding is the
+  * oracle-compared one.
   */
 private[graft] object GraphLoops {
 
@@ -32,7 +36,7 @@ private[graft] object GraphLoops {
     * twice, as the oracle's UNION ALL does. */
   final class Graph(val idField: StructField, val ids: Array[Any],
       val adj: Array[Array[Int]], val wt: Array[Array[Long]],
-      val edgeRows: Int, spark: org.apache.spark.sql.SparkSession) {
+      val edgeRows: Int, spark: SparkSession) {
     def n: Int = ids.length
 
     /** A driver-local relation: `p` (the input's id type) then `cols`, one
@@ -43,9 +47,48 @@ private[graft] object GraphLoops {
 
     /** A driver-local relation of `rows` under `fields`. */
     def local(fields: Seq[StructField], rows: Seq[Seq[Any]]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
-        StructType(fields))
+      GraphLoops.local(spark, fields, rows)
   }
+
+  /** One [[Graph]] per distinct key tuple of a [[pinKeyed]] relation, in
+    * first-seen row order; `idField` is the graphs' shared `p` field. A
+    * kernel run over every key through [[labels]] or [[distances]] logs
+    * ONE driver_loop line for the call: the key count, nodes and edge rows
+    * summed, the most rounds any key ran, and whether every key converged. */
+  final class Keyed(keyFields: Seq[StructField], idField: StructField,
+      val graphs: Seq[(Row, Graph)], spark: SparkSession) {
+
+    /** (keys…, p, `name`): each key's node labels (node indices) from
+      * `kernel`, as ids. */
+    def labels(name: String, site: String)(kernel: Graph => Array[Int]): DataFrame =
+      relation(Seq(idField, idField.copy(name = name)), site)(kernel) { (g, lab) =>
+        g.ids.indices.map(i => Seq(g.ids(i), g.ids(lab(i))))
+      }
+
+    /** (keys…, a, b, d): [[GraphLoops.distances]] per key. */
+    def distances(site: String): DataFrame =
+      relation(distanceFields(idField), site)(distanceRows(_, site))((_, rows) => rows)
+
+    private def relation[A](fields: Seq[StructField], site: String)(
+        kernel: Graph => A)(rows: (Graph, A) => Seq[Seq[Any]]): DataFrame = {
+      val calls = collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
+      val out = keyedCalls.withValue(Some(calls)) {
+        graphs.flatMap { case (k, g) => rows(g, kernel(g)).map(k.toSeq ++ _) }
+      }
+      log.info(s"""{"event":"driver_loop","site":"$site","keys":${graphs.size},""" +
+        s""""nodes":${graphs.map(_._2.n).sum},""" +
+        s""""edge_rows":${graphs.map(_._2.edgeRows).sum},""" +
+        s""""rounds":${calls.map(_._1).maxOption.getOrElse(0)},""" +
+        s""""converged":${calls.forall(_._2)}}""")
+      local(spark, keyFields ++ fields, out)
+    }
+  }
+
+  /** A driver-local relation of `rows` under `fields`. */
+  private[queries] def local(spark: SparkSession, fields: Seq[StructField],
+      rows: Seq[Seq[Any]]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map(Row.fromSeq): _*),
+      StructType(fields))
 
   private val integralIds: Set[DataType] =
     Set(ByteType, ShortType, IntegerType, LongType)
@@ -57,7 +100,29 @@ private[graft] object GraphLoops {
     * Both tests are evaluated by Catalyst (NULL is not an edge), so they
     * are the DataFrame ones for any column type. */
   def pin(pairs: DataFrame, site: String,
-      cap: Int = graft.util.Loops.PinMaxRows): Graph = {
+      cap: Int = graft.util.Loops.PinMaxRows): Graph =
+    index(pairs, edgeRows(pairs, Nil, site, cap), 0)
+
+  /** [[pin]] per key: ONE capped collect of (`keys`…, p1, p2, weight) rows
+    * — at most `cap` over all keys — indexed by the same indexer as one
+    * [[Graph]] per distinct key tuple. A key with no edge row is a graph
+    * of isolates; a key absent from `pairs` has no graph. */
+  def pinKeyed(pairs: DataFrame, keys: Seq[String], site: String,
+      cap: Int = graft.util.Loops.PinMaxRows): Keyed = {
+    val groups = collection.mutable.LinkedHashMap.empty[Row,
+      collection.mutable.ArrayBuffer[Row]]
+    for (r <- edgeRows(pairs, keys, site, cap))
+      groups.getOrElseUpdate(Row.fromSeq(r.toSeq.take(keys.size)),
+        collection.mutable.ArrayBuffer.empty) += r
+    new Keyed(keys.map(pairs.schema(_)), pairs.schema("p1").copy(name = "p"),
+      groups.toSeq.map { case (k, rows) => k -> index(pairs, rows, keys.size) },
+      pairs.sparkSession)
+  }
+
+  /** The capped collect behind [[pin]] and [[pinKeyed]]: (`keys`…, p1, p2,
+    * weight) rows, weight 0 for a non-edge pair. */
+  private def edgeRows(pairs: DataFrame, keys: Seq[String], site: String,
+      cap: Int): Array[Row] = {
     val idType = pairs.schema("p1").dataType
     require(integralIds(idType) && pairs.schema("p2").dataType == idType,
       s"$site: p1/p2 must share one integral id type, got " +
@@ -68,19 +133,25 @@ private[graft] object GraphLoops {
           s"$site: w must be integral, got ${pairs.schema("w").dataType}")
         when(col("w") > 0, col("w").cast(LongType))
       } else when(col("edge") === 1, lit(1L))
-    val rows = graft.util.Loops.pinnedRows(pairs.select(col("p1"), col("p2"),
-      coalesce(weight, lit(0L))), site, cap)
-    require(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
+    val rows = graft.util.Loops.pinnedRows(pairs.select(keys.map(col) ++
+      Seq(col("p1"), col("p2"), coalesce(weight, lit(0L))): _*), site, cap)
+    require(rows.forall(r => !r.isNullAt(keys.size) && !r.isNullAt(keys.size + 1)),
       s"$site: NULL parcel id in the edge relation")
-    val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+    rows
+  }
+
+  /** Index `rows` — p1, p2 and weight at columns `at`, `at` + 1, `at` + 2 —
+    * as a [[Graph]] over `pairs`' id type. */
+  private def index(pairs: DataFrame, rows: collection.Seq[Row], at: Int): Graph = {
+    val ids = rows.iterator.flatMap(r => Iterator(r.get(at), r.get(at + 1)))
       .distinctBy(key).toArray.sortBy(key)
     val index = ids.iterator.map(key).zipWithIndex.toMap
     val adj = Array.fill(ids.length)(Array.newBuilder[Int])
     val wt = Array.fill(ids.length)(Array.newBuilder[Long])
     rows.foreach { r =>
-      val w = r.getLong(2)
+      val w = r.getLong(at + 2)
       if (w > 0) {
-        val (a, b) = (index(key(r.get(0))), index(key(r.get(1))))
+        val (a, b) = (index(key(r.get(at))), index(key(r.get(at + 1))))
         adj(a) += b; wt(a) += w
         adj(b) += a; wt(b) += w
       }
@@ -102,6 +173,18 @@ private[graft] object GraphLoops {
           .minBy { case (l, c) => (-c, l) }._1
       }
     }
+
+  /** Connected components (the q196 section note): labels start as the
+    * nodes themselves, and each round every node takes the least label
+    * among its own and its neighbor entries' — at the fixed point the
+    * least node index, so the least id, of its component. A component of
+    * diameter d settles in d + 1 ≤ n rounds, the cap. Returns labels as
+    * node indices. */
+  def components(g: Graph, site: String): Array[Int] =
+    fixpoint(g, Array.tabulate(g.n)(identity), math.max(1, g.n), site) {
+      (lab, _) => Array.tabulate(g.n)(i =>
+        g.adj(i).foldLeft(lab(i))((m, j) => math.min(m, lab(j))))
+    }._1
 
   /** H-index coreness (the q215 section note): c⁰ = degree, then c(v) =
     * the largest h with at least h neighbor entries valued ≥ h — non-
@@ -244,15 +327,21 @@ private[graft] object GraphLoops {
 
   /** All-pairs shortest distances: one (a, b, d) row per ordered pair
     * a ≠ b with b reachable from a. */
-  def distances(g: Graph, site: String): DataFrame = {
+  def distances(g: Graph, site: String): DataFrame =
+    g.local(distanceFields(g.idField), distanceRows(g, site))
+
+  private def distanceFields(idField: StructField): Seq[StructField] =
+    Seq(idField.copy(name = "a"), idField.copy(name = "b"),
+      StructField("d", LongType, nullable = false))
+
+  private def distanceRows(g: Graph, site: String): Seq[Seq[Any]] = {
     val rows = for {
       s <- 0 until g.n
       p = shortestPaths(g, s)
       v <- p.order if v != s
     } yield Seq(g.ids(s), g.ids(v), p.dist(v))
     trace(g, site, g.n, converged = true)
-    g.local(Seq(g.idField.copy(name = "a"), g.idField.copy(name = "b"),
-      StructField("d", LongType, nullable = false)), rows)
+    rows
   }
 
   private val FixedOne = BigInt(1000000000000L)
@@ -319,11 +408,20 @@ private[graft] object GraphLoops {
 
   /** One structured INFO line per driver loop (site, nodes, edge_rows,
     * rounds, converged): where the loop ran and how long it took to settle.
-    * A shortest-path sweep reports its sources as rounds, converged. */
+    * A shortest-path sweep reports its sources as rounds, converged. Inside
+    * a [[Keyed]] call the line folds into that call's one line. */
   private def trace(g: Graph, site: String, rounds: Int,
-      converged: Boolean): Unit =
-    log.info(s"""{"event":"driver_loop","site":"$site","nodes":${g.n},""" +
-      s""""edge_rows":${g.edgeRows},"rounds":$rounds,"converged":$converged}""")
+      converged: Boolean): Unit = keyedCalls.value match {
+    case Some(calls) => calls += ((rounds, converged))
+    case None =>
+      log.info(s"""{"event":"driver_loop","site":"$site","nodes":${g.n},""" +
+        s""""edge_rows":${g.edgeRows},"rounds":$rounds,"converged":$converged}""")
+  }
+
+  /** The (rounds, converged) of each kernel run inside a [[Keyed]] call,
+    * on the calling thread. */
+  private val keyedCalls = new scala.util.DynamicVariable[
+    Option[collection.mutable.ArrayBuffer[(Int, Boolean)]]](None)
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.loops")
 }

@@ -149,10 +149,9 @@ object Loops {
   /** [[pinRows]] when the caller only needs the relation. Unlike
     * [[pinRows]] (whose callers consume the rows for fixpoint probes and
     * so genuinely require boundedness), a relation that turns out to
-    * exceed [[PinMaxRows]] here — e.g. a permutation-keyed closure grown
-    * past the ceiling by a raised PermP (r20 ADVICE) — DEMOTES to the
-    * [[fresh]] distributed checkpoint path instead of failing the query:
-    * same results, pre-pin execution shape, one wasted capped collect. */
+    * exceed [[PinMaxRows]] here DEMOTES to the [[fresh]] distributed
+    * checkpoint path instead of failing the query: same results, pre-pin
+    * execution shape, one wasted capped collect. */
   def pin(df: DataFrame): DataFrame = pinWithCap(df, PinMaxRows)
 
   /** [[pin]] with an injectable ceiling — package-private so the spec can

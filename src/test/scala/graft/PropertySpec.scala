@@ -475,4 +475,142 @@ class PropertySpec extends SparkSpec {
     }
     assert(multi.contains(true), "the sample must hold a duplicate pair and k < n")
   }
+
+  test("property: keyed pin kernels equal per-key pins; components equal a BFS") {
+    val s = spark
+    import s.implicits._
+    // random keyed pair lists: up to 4 (s, k) keys over up to 9 ids each,
+    // edge = 0 draws, a re-appended prefix (duplicate pairs) and a trailing
+    // edge = 0 pair of two fresh ids per key (non-edge-only nodes), plus
+    // one key whose rows are all non-edges. Keys share ids, so merging
+    // keys changes graphs.
+    val genKeyed = for {
+      nk <- Gen.choose(1, 4)
+      graphs <- Gen.listOfN(nk, for {
+        n <- Gen.choose(2, 9)
+        m <- Gen.choose(0, 20)
+        pairs <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1),
+          Gen.frequency(4 -> Gen.const(1), 1 -> Gen.const(0))))
+        dup <- Gen.choose(0, 5)
+      } yield {
+        val noLoops = pairs.filter(p => p._1 != p._2)
+        noLoops ++ noLoops.take(dup) :+ ((n, n + 1, 0))
+      })
+    } yield (graphs :+ Seq((0, 1, 0), (1, 2, 0))).zipWithIndex.flatMap {
+      case (ps, i) => ps.map { case (a, b, e) => (if (i % 2 == 0) "hub" else "leaf", i.toLong, a, b, e) }
+    }
+    val site = "PropertySpec.keyed"
+    val depths = for ((rows, gi) <- samples(genKeyed, 12).zipWithIndex) yield {
+      val df = rows.toDF("s", "k", "p1", "p2", "edge")
+      val keyed = graft.queries.GraphLoops.pinKeyed(df, Seq("s", "k"), site)
+      val keys = rows.map(r => (r._1, r._2)).distinct
+      assert(keyed.graphs.map(_._1.toSeq) === keys.map(k => Seq(k._1, k._2)),
+        s"sample $gi: one graph per key, first-seen order")
+      def byKey(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(_.toSeq).groupBy(r => (r(0), r(1)))
+          .view.mapValues(_.map(_.drop(2)).toSet).toMap
+      val lpaOut = byKey(keyed.labels("lab", site)(graft.queries.GraphLoops.lpa(_, 0, site)._1))
+      val compOut = byKey(keyed.labels("comp", site)(graft.queries.GraphLoops.components(_, site)))
+      val distOut = byKey(keyed.distances(site))
+      keys.map { case (st, k) =>
+        val own = rows.filter(r => r._1 == st && r._2 == k)
+        val g = graft.queries.GraphLoops.pin(
+          own.map(r => (r._3, r._4, r._5)).toDF("p1", "p2", "edge"), site)
+        val kg = keyed.graphs.find(_._1.toSeq == Seq(st, k)).get._2
+        assert(kg.ids.toSeq === g.ids.toSeq && kg.adj.map(_.toSeq).toSeq ===
+          g.adj.map(_.toSeq).toSeq, s"sample $gi key ($st, $k): graph")
+        def labels(lab: Array[Int]) = g.ids.indices.map(i => Seq(g.ids(i), g.ids(lab(i)))).toSet
+        val (lab, rounds, _) = graft.queries.GraphLoops.lpa(g, 0, site)
+        assert(lpaOut((st, k)) === labels(lab), s"sample $gi key ($st, $k): lpa")
+        val comp = graft.queries.GraphLoops.components(g, site)
+        assert(compOut((st, k)) === labels(comp), s"sample $gi key ($st, $k): components")
+        assert(distOut.getOrElse((st, k), Set.empty) ===
+          graft.queries.GraphLoops.distances(g, site).collect().map(_.toSeq).toSet,
+          s"sample $gi key ($st, $k): distances")
+        // BFS reference: every endpoint, edge = 1 pairs as adjacency
+        val nodes = own.flatMap(r => Seq(r._3, r._4)).distinct
+        val nbr = own.filter(_._5 == 1).flatMap(r => Seq(r._3 -> r._4, r._4 -> r._3))
+          .groupMap(_._1)(_._2)
+        val bfs = nodes.map { v =>
+          var (seen, frontier) = (Set(v), Set(v))
+          while (frontier.nonEmpty) {
+            frontier = frontier.flatMap(nbr.getOrElse(_, Nil)) -- seen
+            seen ++= frontier
+          }
+          Seq(v, seen.min)
+        }.toSet
+        assert(compOut((st, k)) === bfs, s"sample $gi key ($st, $k): BFS components $own")
+        rounds
+      }.distinct.size
+    }
+    assert(depths.exists(_ > 1), s"the sample must mix LPA convergence depths: $depths")
+    val err = intercept[IllegalArgumentException](graft.queries.GraphLoops.pinKeyed(
+      Seq(("a", 1L, 0, 1, 1), ("b", 1L, 0, 1, 1)).toDF("s", "k", "p1", "p2", "edge"),
+      Seq("s", "k"), "PropertySpec.overCap", cap = 1))
+    assert(err.getMessage.contains("PropertySpec.overCap"), err.getMessage)
+  }
+
+  test("property: driver Lloyd assigns the windows the DataFrame Lloyd assigns") {
+    val s = spark
+    import s.implicits._
+    // The DataFrame Lloyd the driver kernel replaced (k = 2 states, 2
+    // rounds), verbatim: the reference.
+    val (dfcK, dfcLloydRounds) = (2, 2)
+    def dfcAssign(wr: org.apache.spark.sql.DataFrame,
+        cent: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      wr.join(cent, Seq("p1", "p2"))
+        .selectExpr("ws", "state", "(v - c) * (v - c) AS d2")
+        .groupBy("ws", "state").agg(sum("d2").as("dist"))
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("ws")
+            .orderBy(col("dist").asc, col("state").asc)))
+        .filter(col("rn") === 1).select("ws", "state")
+    def dfcStatesAssign(wr: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      val wsIdx = wr.select("ws").distinct()
+        .withColumn("st", row_number().over(
+          graft.util.Windows.boundedGlobalWindow(
+            "|W|-bounded: one row per dFC window", col("ws"))) - 1)
+      var cent = wr.join(wsIdx.filter(col("st") < dfcK), Seq("ws"))
+        .selectExpr("st AS state", "p1", "p2", "v AS c")
+        .localCheckpoint()
+      for (_ <- 0 until dfcLloydRounds) {
+        val upd = wr.join(dfcAssign(wr, cent), Seq("ws"))
+          .groupBy("state", "p1", "p2")
+          .agg(sum("v").as("s"), count(lit(1)).as("n"))
+          .selectExpr("state", "p1", "p2",
+            "(2 * s + n - pmod(2 * s + n, 2 * n)) div (2 * n) AS c_new")
+        cent = cent
+          .join(upd, Seq("state", "p1", "p2"), "left")
+          .selectExpr("state", "p1", "p2",
+            "CAST(COALESCE(c_new, c) AS BIGINT) AS c")
+          .localCheckpoint()
+      }
+      dfcAssign(wr, cent)
+    }
+    // random window vectors: 1–6 windows in shuffled ws order over up to
+    // 3 dims of small signed values (negative sums, distance ties), a
+    // window sometimes missing a dim (distances over the shared dims);
+    // planted: |W| = 1 < k, an equidistant window, an emptied state (two
+    // equal seeds: state 1 never wins a tie)
+    val genVecs = for {
+      nw <- Gen.choose(1, 6)
+      dims <- Gen.choose(1, 3)
+      wins <- Gen.listOfN(nw, Gen.listOfN(dims, Gen.choose(-4L, 4L)))
+      drop <- Gen.choose(0, 2 * nw)
+      order <- Gen.pick(nw, 0 until 2 * nw)
+    } yield wins.zip(order).zipWithIndex.flatMap { case ((vec, ws), w) =>
+      vec.zipWithIndex.collect { case (v, d) if w * dims + d != drop => (ws, 0, d + 1, v) }
+    }
+    val planted = Seq(
+      Seq((3, 0, 1, -5L)),
+      Seq((0, 0, 1, 0L), (1, 0, 1, 2L), (2, 0, 1, 1L), (3, 0, 1, -3L)),
+      Seq((0, 0, 1, 1L), (1, 0, 1, 1L), (2, 0, 1, -2L), (3, 0, 1, 5L)))
+    for ((vecs, gi) <- (planted ++ samples(genVecs, 12)).zipWithIndex) {
+      val wr = vecs.toDF("ws", "p1", "p2", "v")
+      def got(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      assert(got(graft.queries.DesignImage.dfcStatesAssign(wr)) ===
+        got(dfcStatesAssign(wr)), s"sample $gi: $vecs")
+    }
+  }
 }
