@@ -1,21 +1,20 @@
 package graft.image
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Voxel-grid image algebra (SURVEY.md §2.7, §2.2 P8/P9, §2.4 A4/A5/A8/A9):
   * the long voxel model `(x, y, z, label, value)` plus binarize, value-set
   * masking, 19-tap stencil mode (AFNI 3dcalc hmode, preprocess_parallel.sh:
-  * 63-82), separable binomial smoothing (the discretized Gaussian of
+  * 63-82), integer-kernel smoothing (the discretized Gaussian of
   * ssm_loop.py:88), per-slice reductions, and nearest-neighbor resampling.
   *
-  * Scale notes (100 TB): stencil ops are self-joins on shifted coordinates.
-  * The plan below shuffles by cell key; at cluster scale the voxel table is
-  * ingested partitioned by spatial block (blockId = (x/B, y/B, z/B)) with
-  * halo rows duplicated into neighboring blocks (SURVEY.md §4, §7.5.4 —
-  * halo factor ≈1.95× at 8³ blocks), which turns every stencil groupBy into
-  * a partition-local aggregation with NO exchange. The declarative form
-  * here is identical either way — only the ingest layout changes.
+  * Stencils run block+halo (`perBlock`): every cell is copied into each
+  * spatial block (blockId = (x/B, y/B, z/B)) whose interior stencil reads
+  * it, the copies are exchanged ONCE by blockId, and the stencil gathers
+  * partition-locally over a dense block array (SURVEY.md §4, §7.5.4 —
+  * halo factor ((B+2r)/B)³, ≈1.95× at B = 8, r = 1). With block-
+  * partitioned ingest at cluster scale even that one exchange goes.
   */
 object ImageOps {
 
@@ -63,48 +62,43 @@ object ImageOps {
     if math.abs(dx) + math.abs(dy) + math.abs(dz) <= 2
   } yield (dx, dy, dz)
 
-  private def offsetsDf(spark: SparkSession, offs: Seq[(Int, Int, Int, Long)]) = {
-    import spark.implicits._
-    offs.toDF("dx", "dy", "dz", "w")
-  }
+  /** The block+halo pipeline every stencil kernel shares: `copies` — rows
+    * led by their block key (bx, by, bz), one copy per block that reads
+    * the cell — are exchanged ONCE by block, sorted so each block's rows
+    * are contiguous, and `body` runs once per block over that block's
+    * rows. Blocks stream one at a time off the sorted iterator, so peak
+    * memory is O(block + halo), not O(partition), and SortExec spills
+    * under pressure. */
+  private def perBlock[T <: Product : Encoder, U : Encoder](copies: DataFrame)(
+      body: Vector[T] => Iterator[U]): Dataset[U] =
+    copies
+      .repartition(col("bx"), col("by"), col("bz")) // the ONE exchange
+      .sortWithinPartitions(col("bx"), col("by"), col("bz"))
+      .as[T]
+      .mapPartitions { it =>
+        val rows = it.buffered
+        def block(r: T) = (r.productElement(0), r.productElement(1), r.productElement(2))
+        // one block group per next(): consume rows while the block key holds
+        new Iterator[Vector[T]] {
+          override def hasNext: Boolean = rows.hasNext
+          override def next(): Vector[T] = {
+            val key = block(rows.head)
+            val buf = Vector.newBuilder[T]
+            while (rows.hasNext && block(rows.head) == key) buf += rows.next()
+            buf.result()
+          }
+        }.flatMap(body)
+      }
 
-  /** I3 stencil mode filter: each cell's label replaced by the most frequent
-    * label among its existing 19-tap neighbors, smallest label on ties
-    * (AFNI hmode tie-break, SURVEY.md §7.5.6). Neighbors outside the grid
-    * simply don't vote (inner join).
-    */
-  def stencilMode(spark: SparkSession, grid: DataFrame): DataFrame = {
-    val offs = offsetsDf(spark, Offsets19.map { case (a, b, c) => (a, b, c, 1L) })
-    val votes = grid
-      .join(broadcast(offs), expr("true"))
-      .select(
-        (col("x") + col("dx")).as("cx"),
-        (col("y") + col("dy")).as("cy"),
-        (col("z") + col("dz")).as("cz"),
-        col("label"),
-      )
-      // votes target a cell; only cells that exist in the grid are output
-      .join(grid.select(col("x").as("cx"), col("y").as("cy"), col("z").as("cz")),
-        Seq("cx", "cy", "cz"), "left_semi")
-    val counted = votes.groupBy("cx", "cy", "cz", "label").agg(count(lit(1)).as("cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cx", "cy", "cz")
-      .orderBy(col("cnt").desc, col("label").asc)
-    counted
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("cx").as("x"), col("cy").as("y"), col("cz").as("z"),
-        col("label").as("clean_label"))
-  }
-
-  /** Block+halo stencil execution — the 100 TB physical design the
-    * declarative stencilMode documents (SURVEY.md §4 "stencil locality",
-    * §7.5.4): cells are duplicated into every block whose interior stencil
-    * reads them (halo), data is exchanged ONCE by blockId, and the mode
-    * itself runs partition-local with zero further shuffle. Output is
-    * bit-identical to stencilMode (ImageDesignSpec proves it); the win at
-    * scale is one bounded exchange (≤ halo factor ≈ 2-3× rows at 8³..4³
-    * blocks) instead of a 19× vote shuffle keyed by cell.
+  /** I3 stencil mode filter (the q37/q51 kernel): each cell's label
+    * replaced by the most frequent label among its existing 19-tap
+    * neighbors, smallest label on ties (AFNI hmode tie-break, SURVEY.md
+    * §7.5.6); neighbors outside the grid simply don't vote. Offsets19 is
+    * symmetric, so the blocks whose stencil reads a cell are the blocks of
+    * (cell + offset): each cell is copied into those, and the mode runs
+    * per block over a dense (b+2)³ label array. ImageDesignSpec pins it
+    * against a driver 19-tap reference at two block sizes; the oracle
+    * hash-match re-checks it end to end.
     */
   def blockLocalStencilMode(spark: SparkSession, grid: DataFrame,
       blockSize: Int): DataFrame = {
@@ -120,72 +114,47 @@ object ImageOps {
     val copies = cells.flatMap { case (x, y, z, l) =>
       def fd(v: Int) = Math.floorDiv(v, b)
       val home = (fd(x), fd(y), fd(z))
-      // Offsets19 is symmetric, so "blocks whose stencil reads me" =
-      // blocks of (me + offset)
       offs.map { case (dx, dy, dz) => (fd(x + dx), fd(y + dy), fd(z + dz)) }
         .distinct
         .map { bk => (bk._1, bk._2, bk._3, x, y, z, l, bk == home) }
     }.toDF("bx", "by", "bz", "x", "y", "z", "label", "owner")
-    copies
-      .repartition(col("bx"), col("by"), col("bz")) // the ONE exchange
-      // sort co-locates each block's rows so the mode pass can STREAM one
-      // block at a time off the iterator: peak memory is O(block + halo)
-      // (b³ · halo factor cells), not O(partition) — and SortExec spills to
-      // disk under pressure, which an it.toVector buffer never could
-      .sortWithinPartitions(col("bx"), col("by"), col("bz"))
-      .as[(Int, Int, Int, Int, Int, Int, Int, Boolean)]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        // one block group per next(): consume rows while the block key holds
-        val blocks = new Iterator[Vector[(Int, Int, Int, Int, Int, Int, Int, Boolean)]] {
-          override def hasNext: Boolean = rows.hasNext
-          override def next(): Vector[(Int, Int, Int, Int, Int, Int, Int, Boolean)] = {
-            val h = rows.head
-            val key = (h._1, h._2, h._3)
-            val buf = Vector.newBuilder[(Int, Int, Int, Int, Int, Int, Int, Boolean)]
-            while (rows.hasNext &&
-              (rows.head._1, rows.head._2, rows.head._3) == key) buf += rows.next()
-            buf.result()
-          }
-        }
-        blocks.flatMap { cs =>
-          // dense (b+2)³ label array addressed by block-local coordinates
-          // (stencil radius 1), sentinel Int.MinValue for absent cells —
-          // same no-hash, no-boxing gather as blockLocalWeightedMean
-          val h0 = cs.head
-          val ext = b + 2
-          val x0 = h0._1 * b - 1; val y0 = h0._2 * b - 1; val z0 = h0._3 * b - 1
-          val dense = Array.fill(ext * ext * ext)(Int.MinValue)
-          cs.foreach { c =>
-            dense(((c._4 - x0) * ext + (c._5 - y0)) * ext + (c._6 - z0)) = c._7
-          }
-          val votes = new Array[Int](nO)
-          cs.iterator.filter(_._8).map { c =>
-            var nV = 0
-            var i = 0
-            while (i < nO) {
-              val l = dense(((c._4 + oDx(i) - x0) * ext + (c._5 + oDy(i) - y0)) * ext
-                + (c._6 + oDz(i) - z0))
-              if (l != Int.MinValue) { votes(nV) = l; nV += 1 }
-              i += 1
-            }
-            // mode with smallest-label tie-break over ≤19 votes: sort the
-            // slice, then the longest equal run (first on ties, since equal
-            // counts are met in ascending label order)
-            java.util.Arrays.sort(votes, 0, nV)
-            var best = votes(0); var bestN = 0
-            var j = 0
-            while (j < nV) {
-              var k = j
-              while (k < nV && votes(k) == votes(j)) k += 1
-              if (k - j > bestN) { bestN = k - j; best = votes(j) }
-              j = k
-            }
-            (c._4, c._5, c._6, best)
-          }
-        }
+    perBlock[(Int, Int, Int, Int, Int, Int, Int, Boolean), (Int, Int, Int, Int)](
+        copies) { cs =>
+      // dense (b+2)³ label array addressed by block-local coordinates
+      // (stencil radius 1), sentinel Int.MinValue for absent cells —
+      // same no-hash, no-boxing gather as blockLocalWeightedMean
+      val h0 = cs.head
+      val ext = b + 2
+      val x0 = h0._1 * b - 1; val y0 = h0._2 * b - 1; val z0 = h0._3 * b - 1
+      val dense = Array.fill(ext * ext * ext)(Int.MinValue)
+      cs.foreach { c =>
+        dense(((c._4 - x0) * ext + (c._5 - y0)) * ext + (c._6 - z0)) = c._7
       }
-      .toDF("x", "y", "z", "clean_label")
+      val votes = new Array[Int](nO)
+      cs.iterator.filter(_._8).map { c =>
+        var nV = 0
+        var i = 0
+        while (i < nO) {
+          val l = dense(((c._4 + oDx(i) - x0) * ext + (c._5 + oDy(i) - y0)) * ext
+            + (c._6 + oDz(i) - z0))
+          if (l != Int.MinValue) { votes(nV) = l; nV += 1 }
+          i += 1
+        }
+        // mode with smallest-label tie-break over ≤19 votes: sort the
+        // slice, then the longest equal run (first on ties, since equal
+        // counts are met in ascending label order)
+        java.util.Arrays.sort(votes, 0, nV)
+        var best = votes(0); var bestN = 0
+        var j = 0
+        while (j < nV) {
+          var k = j
+          while (k < nV && votes(k) == votes(j)) k += 1
+          if (k - j > bestN) { bestN = k - j; best = votes(j) }
+          j = k
+        }
+        (c._4, c._5, c._6, best)
+      }
+    }.toDF("x", "y", "z", "clean_label")
   }
 
   /** Block+halo ReHo moments (the q163 kernel): from a sparse
@@ -240,155 +209,136 @@ object ImageOps {
     val seeds = (for {
       bx <- 0 until nBlocks; by <- 0 until nBlocks; bz <- 0 until nBlocks
     } yield (bx, by, bz, bx * b, by * b, bz * b, -1, 0L)).toDS()
-    copies.union(seeds).toDF("bx", "by", "bz", "x", "y", "z", "t", "v")
-      .repartition(col("bx"), col("by"), col("bz")) // the ONE exchange
-      .sortWithinPartitions(col("bx"), col("by"), col("bz"))
-      .as[(Int, Int, Int, Int, Int, Int, Int, Long)]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        val blocks = new Iterator[Vector[(Int, Int, Int, Int, Int, Int, Int, Long)]] {
-          override def hasNext: Boolean = rows.hasNext
-          override def next(): Vector[(Int, Int, Int, Int, Int, Int, Int, Long)] = {
-            val h = rows.head
-            val key = (h._1, h._2, h._3)
-            val buf = Vector.newBuilder[(Int, Int, Int, Int, Int, Int, Int, Long)]
-            while (rows.hasNext &&
-              (rows.head._1, rows.head._2, rows.head._3) == key) buf += rows.next()
-            buf.result()
+    perBlock[(Int, Int, Int, Int, Int, Int, Int, Long),
+        (Long, Long, Long, Long, Double, Double, Double)](
+        copies.union(seeds).toDF("bx", "by", "bz", "x", "y", "z", "t", "v")) { cs =>
+      val h0 = cs.head
+      val ext = b + 2
+      val nCells = ext * ext * ext
+      val x0 = h0._1 * b - 1; val y0 = h0._2 * b - 1; val z0 = h0._3 * b - 1
+      // dense (b+2)³ × nt value grid, zeros for absent cells
+      val vals = Array.ofDim[Long](nCells, nt)
+      cs.foreach { c =>
+        if (c._7 >= 0)
+          vals(((c._4 - x0) * ext + (c._5 - y0)) * ext + (c._6 - z0))(c._7) = c._8
+      }
+      // per in-grid cell: rank2(t) = 2·(RANK + (n_eq−1)/2) — exact int —
+      // and the tie term tu = Σ(n_eq³ − n_eq) over the cell's value runs
+      val rank2 = Array.ofDim[Int](nCells, nt)
+      val tu = new Array[Long](nCells)
+      val sorted = new Array[Long](nt)
+      var ci = 0
+      while (ci < nCells) {
+        val cx = x0 + ci / (ext * ext)
+        val cy = y0 + (ci / ext) % ext
+        val cz = z0 + ci % ext
+        if (cx >= 0 && cx < gridL && cy >= 0 && cy < gridL &&
+            cz >= 0 && cz < gridL) {
+          val v = vals(ci)
+          System.arraycopy(v, 0, sorted, 0, nt)
+          java.util.Arrays.sort(sorted)
+          val vr = new java.util.HashMap[java.lang.Long, Integer]()
+          var tuc = 0L
+          var i = 0
+          while (i < nt) {
+            var j = i
+            while (j < nt && sorted(j) == sorted(i)) j += 1
+            val c = j - i
+            vr.put(sorted(i), 2 * (i + 1) + (c - 1))
+            tuc += c.toLong * c * c - c
+            i = j
           }
+          tu(ci) = tuc
+          val r2 = rank2(ci)
+          var tt = 0
+          while (tt < nt) { r2(tt) = vr.get(v(tt)); tt += 1 }
         }
-        blocks.flatMap { cs =>
-          val h0 = cs.head
-          val ext = b + 2
-          val nCells = ext * ext * ext
-          val x0 = h0._1 * b - 1; val y0 = h0._2 * b - 1; val z0 = h0._3 * b - 1
-          // dense (b+2)³ × nt value grid, zeros for absent cells
-          val vals = Array.ofDim[Long](nCells, nt)
-          cs.foreach { c =>
-            if (c._7 >= 0)
-              vals(((c._4 - x0) * ext + (c._5 - y0)) * ext + (c._6 - z0))(c._7) = c._8
-          }
-          // per in-grid cell: rank2(t) = 2·(RANK + (n_eq−1)/2) — exact int —
-          // and the tie term tu = Σ(n_eq³ − n_eq) over the cell's value runs
-          val rank2 = Array.ofDim[Int](nCells, nt)
-          val tu = new Array[Long](nCells)
-          val sorted = new Array[Long](nt)
-          var ci = 0
-          while (ci < nCells) {
-            val cx = x0 + ci / (ext * ext)
-            val cy = y0 + (ci / ext) % ext
-            val cz = z0 + ci % ext
-            if (cx >= 0 && cx < gridL && cy >= 0 && cy < gridL &&
-                cz >= 0 && cz < gridL) {
-              val v = vals(ci)
-              System.arraycopy(v, 0, sorted, 0, nt)
-              java.util.Arrays.sort(sorted)
-              val vr = new java.util.HashMap[java.lang.Long, Integer]()
-              var tuc = 0L
-              var i = 0
-              while (i < nt) {
-                var j = i
-                while (j < nt && sorted(j) == sorted(i)) j += 1
-                val c = j - i
-                vr.put(sorted(i), 2 * (i + 1) + (c - 1))
-                tuc += c.toLong * c * c - c
-                i = j
-              }
-              tu(ci) = tuc
-              val r2 = rank2(ci)
-              var tt = 0
-              while (tt < nt) { r2(tt) = vr.get(v(tt)); tt += 1 }
-            }
-            ci += 1
-          }
-          // owners: the block's own in-grid cells; gather the 27-stencil
-          val out = Vector.newBuilder[(Long, Long, Long, Long, Double, Double, Double)]
-          val rt2 = new Array[Long](nt)
-          var ox = 0
-          while (ox < b) {
-            val gx = h0._1 * b + ox
-            var oy = 0
-            while (oy < b) {
-              val gy = h0._2 * b + oy
-              var oz = 0
-              while (oz < b) {
-                val gz = h0._3 * b + oz
-                if (gx < gridL && gy < gridL && gz < gridL) {
-                  java.util.Arrays.fill(rt2, 0L)
-                  var m = 0L
-                  var sumTu = 0L
-                  var dx = -1
-                  while (dx <= 1) {
-                    val nx = gx + dx
-                    if (nx >= 0 && nx < gridL) {
-                      var dy = -1
-                      while (dy <= 1) {
-                        val ny = gy + dy
-                        if (ny >= 0 && ny < gridL) {
-                          var dz = -1
-                          while (dz <= 1) {
-                            val nz = gz + dz
-                            if (nz >= 0 && nz < gridL) {
-                              val ni = ((nx - x0) * ext + (ny - y0)) * ext + (nz - z0)
-                              m += 1
-                              sumTu += tu(ni)
-                              val nr2 = rank2(ni)
-                              var tt = 0
-                              while (tt < nt) { rt2(tt) += nr2(tt); tt += 1 }
-                            }
-                            dz += 1
-                          }
+        ci += 1
+      }
+      // owners: the block's own in-grid cells; gather the 27-stencil
+      val out = Vector.newBuilder[(Long, Long, Long, Long, Double, Double, Double)]
+      val rt2 = new Array[Long](nt)
+      var ox = 0
+      while (ox < b) {
+        val gx = h0._1 * b + ox
+        var oy = 0
+        while (oy < b) {
+          val gy = h0._2 * b + oy
+          var oz = 0
+          while (oz < b) {
+            val gz = h0._3 * b + oz
+            if (gx < gridL && gy < gridL && gz < gridL) {
+              java.util.Arrays.fill(rt2, 0L)
+              var m = 0L
+              var sumTu = 0L
+              var dx = -1
+              while (dx <= 1) {
+                val nx = gx + dx
+                if (nx >= 0 && nx < gridL) {
+                  var dy = -1
+                  while (dy <= 1) {
+                    val ny = gy + dy
+                    if (ny >= 0 && ny < gridL) {
+                      var dz = -1
+                      while (dz <= 1) {
+                        val nz = gz + dz
+                        if (nz >= 0 && nz < gridL) {
+                          val ni = ((nx - x0) * ext + (ny - y0)) * ext + (nz - z0)
+                          m += 1
+                          sumTu += tu(ni)
+                          val nr2 = rank2(ni)
+                          var tt = 0
+                          while (tt < nt) { rt2(tt) += nr2(tt); tt += 1 }
                         }
-                        dy += 1
+                        dz += 1
                       }
                     }
-                    dx += 1
+                    dy += 1
                   }
-                  var srtH = 0L
-                  var srt2Q = 0L
-                  var tt = 0
-                  while (tt < nt) {
-                    val r = rt2(tt); srtH += r; srt2Q += r * r; tt += 1
-                  }
-                  out += ((gx.toLong, gy.toLong, gz.toLong, m,
-                    srt2Q / 4.0, srtH / 2.0, sumTu.toDouble))
                 }
-                oz += 1
+                dx += 1
               }
-              oy += 1
+              var srtH = 0L
+              var srt2Q = 0L
+              var tt = 0
+              while (tt < nt) {
+                val r = rt2(tt); srtH += r; srt2Q += r * r; tt += 1
+              }
+              out += ((gx.toLong, gy.toLong, gz.toLong, m,
+                srt2Q / 4.0, srtH / 2.0, sumTu.toDouble))
             }
-            ox += 1
+            oz += 1
           }
-          out.result()
+          oy += 1
         }
+        ox += 1
       }
-      .toDF("x", "y", "z", "m", "srt2", "srt", "sum_tu")
+      out.result().iterator
+    }.toDF("x", "y", "z", "m", "srt2", "srt", "sum_tu")
   }
 
-  /** Block+halo execution of [[weightedNeighborMean]] — the scale twin that
-    * closes the one gap q51 left open: [[gaussianSmooth]]/[[binomialSmooth]]
-    * always ran the cell-keyed tap-scatter shuffle, which at a (2r+1)³-tap
-    * kernel ships ~kernel-size× the grid through the exchange. Here cells
-    * are duplicated into every block whose interior gathers them (halo
-    * width = kernel radius r), exchanged ONCE by blockId, and the weighted
-    * mean runs partition-local, streaming one block at a time off the
-    * sorted iterator exactly like [[blockLocalStencilMode]].
+  /** I4 smoothing (the q38/q73 binomial and q61/q71 fwhm=4 kernels):
+    * each cell's weighted mean over its PRESENT neighbors under the integer
+    * kernel `offs`, renormalized by the sum of present weights (masked-
+    * smoothing semantics): out(c) = Σ_o w(o)·value(c − o) / Σ_o w(o) over
+    * the taps o whose source cell exists (correct for asymmetric kernels
+    * too). Cells are copied into every block whose interior gathers them
+    * (halo width = kernel radius r) and the mean runs per block over a
+    * dense (b+2r)³ array.
     *
-    * Bit-identical to the declarative form — ImageDesignSpec
-    * ("blockLocalWeightedMean is bit-identical to the declarative
-    * smoothing") pins it on a gappy grid with holes at block boundaries,
-    * for both the fwhm=4 Gaussian and the binomial kernel, at two block
-    * sizes; the driver's oracle hash-match (q71 vs q61's SQL at both SFs)
-    * re-checks it end-to-end. Why it holds: the per-cell gather multiplies
-    * the SAME decimal values by the SAME int64 weights and sums with
-    * java.math.BigDecimal — exact, order-free, like Spark's decimal sum —
-    * then performs the identical final double division num/den.
+    * Exact until the final division: the gather multiplies the decimal
+    * values by the int64 weights and sums with java.math.BigDecimal —
+    * exact and order-free, like the oracle's decimal SUM — then divides
+    * num/den once in double. ImageDesignSpec pins it against a driver
+    * BigDecimal reference on a gappy grid with holes at block boundaries,
+    * for both kernels, at two block sizes; the oracle hash-match re-checks
+    * it end to end.
     *
     * Halo factor is ((b+2r)/b)³ copies per cell: at b=32, r=4 that is
-    * 1.95× — bounded data inflation through ONE exchange, vs the
-    * declarative plan's (2r+1)³−zeros taps (729−) through a shuffle keyed
-    * by cell. Pick b ≫ r at scale; the 16³ test grid uses b=8 (8 blocks)
-    * so the spec exercises real block boundaries in every axis.
+    * 1.95× through ONE exchange, where a tap scatter ships (2r+1)³ taps
+    * (729 at r = 4) keyed by cell. Pick b ≫ r at scale; the 16³ test
+    * grid uses b=8 (8 blocks) so the spec exercises real block boundaries
+    * in every axis.
     */
   def blockLocalWeightedMean(spark: SparkSession, grid: DataFrame,
       offs: Seq[(Int, Int, Int, Long)], blockSize: Int): DataFrame = {
@@ -398,11 +348,6 @@ object ImageOps {
     val r = offs.iterator.map { case (dx, dy, dz, _) =>
       math.max(math.abs(dx), math.max(math.abs(dy), math.abs(dz)))
     }.max
-    // gather form: out(c) = Σ_o w(o)·value(c − o) over PRESENT neighbors —
-    // the exact mirror of the scatter join (cx = x + dx ⇒ source = cx − dx),
-    // correct for asymmetric kernels too
-    val kernel: Map[(Int, Int, Int), Long] =
-      offs.map { case (dx, dy, dz, w) => ((dx, dy, dz), w) }.toMap
     val cells = grid
       .select(col("x"), col("y"), col("z"),
         col("value_dec").cast("decimal(38,18)").as("value_dec"))
@@ -418,116 +363,58 @@ object ImageOps {
       } yield (bx, by, bz, x, y, z, v, (bx, by, bz) == home)
     }.toDF("bx", "by", "bz", "x", "y", "z", "value_dec", "owner")
     // kernel as primitive arrays: the per-cell gather is the hot loop, and
-    // a boxed tuple→Map probe per tap was its dominant constant (ProbeBlock
-    // measured the dense-array form below ~3× faster at 64³/b=16)
+    // a boxed tuple→Map probe per tap was its dominant constant (the dense-
+    // array form measured ~3× faster at 64³/b=16, SCALE.md)
     val kOffs = offs.toArray
     val nK = kOffs.length
     val kDx = kOffs.map(_._1); val kDy = kOffs.map(_._2); val kDz = kOffs.map(_._3)
     val kW = kOffs.map(_._4)
     val kWBig = kW.map(java.math.BigDecimal.valueOf)
-    copies
-      .repartition(col("bx"), col("by"), col("bz")) // the ONE exchange
-      .sortWithinPartitions(col("bx"), col("by"), col("bz"))
-      .as[(Int, Int, Int, Int, Int, Int, BigDecimal, Boolean)]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        val blocks = new Iterator[Vector[(Int, Int, Int, Int, Int, Int, BigDecimal, Boolean)]] {
-          override def hasNext: Boolean = rows.hasNext
-          override def next(): Vector[(Int, Int, Int, Int, Int, Int, BigDecimal, Boolean)] = {
-            val h = rows.head
-            val key = (h._1, h._2, h._3)
-            val buf = Vector.newBuilder[(Int, Int, Int, Int, Int, Int, BigDecimal, Boolean)]
-            while (rows.hasNext &&
-              (rows.head._1, rows.head._2, rows.head._3) == key) buf += rows.next()
-            buf.result()
-          }
-        }
-        blocks.flatMap { cs =>
-          // dense (b+2r)³ value array addressed by block-local coordinates:
-          // every copy in this block lies in [block·b − r, block·b + b + r)
-          // per axis by construction, so indices never escape; absent cells
-          // stay null (the renormalize-on-present path). O(ext³) refs per
-          // block — the same O(block + halo) peak memory as before.
-          val h0 = cs.head
-          val ext = b + 2 * r
-          val x0 = h0._1 * b - r; val y0 = h0._2 * b - r; val z0 = h0._3 * b - r
-          val dense = new Array[java.math.BigDecimal](ext * ext * ext)
-          cs.foreach { c =>
-            dense(((c._4 - x0) * ext + (c._5 - y0)) * ext + (c._6 - z0)) = c._7.bigDecimal
-          }
-          cs.iterator.filter(_._8).map { c =>
-            var num = java.math.BigDecimal.ZERO
-            var den = 0L
-            var i = 0
-            while (i < nK) {
-              val v = dense(((c._4 - kDx(i) - x0) * ext + (c._5 - kDy(i) - y0)) * ext
-                + (c._6 - kDz(i) - z0))
-              if (v != null) {
-                num = num.add(v.multiply(kWBig(i)))
-                den += kW(i)
-              }
-              i += 1
-            }
-            (c._4, c._5, c._6, num.doubleValue / den.toDouble)
-          }
-        }
+    perBlock[(Int, Int, Int, Int, Int, Int, BigDecimal, Boolean), (Int, Int, Int, Double)](
+        copies) { cs =>
+      // dense (b+2r)³ value array addressed by block-local coordinates:
+      // every copy in this block lies in [block·b − r, block·b + b + r)
+      // per axis by construction, so indices never escape; absent cells
+      // stay null (the renormalize-on-present path). O(ext³) refs per
+      // block: O(block + halo) peak memory.
+      val h0 = cs.head
+      val ext = b + 2 * r
+      val x0 = h0._1 * b - r; val y0 = h0._2 * b - r; val z0 = h0._3 * b - r
+      val dense = new Array[java.math.BigDecimal](ext * ext * ext)
+      cs.foreach { c =>
+        dense(((c._4 - x0) * ext + (c._5 - y0)) * ext + (c._6 - z0)) = c._7.bigDecimal
       }
-      .toDF("x", "y", "z", "smoothed")
+      cs.iterator.filter(_._8).map { c =>
+        var num = java.math.BigDecimal.ZERO
+        var den = 0L
+        var i = 0
+        while (i < nK) {
+          val v = dense(((c._4 - kDx(i) - x0) * ext + (c._5 - kDy(i) - y0)) * ext
+            + (c._6 - kDz(i) - z0))
+          if (v != null) {
+            num = num.add(v.multiply(kWBig(i)))
+            den += kW(i)
+          }
+          i += 1
+        }
+        (c._4, c._5, c._6, num.doubleValue / den.toDouble)
+      }
+    }.toDF("x", "y", "z", "smoothed")
   }
 
-  /** Shared weighted-neighborhood mean: scatter each cell's value through
-    * the integer kernel table, keep taps landing on existing cells, and
-    * renormalize by the sum of PRESENT weights (masked-smoothing
-    * semantics). Integer weights × DECIMAL values keep the weighted mean
-    * exact until the final double division. */
-  private def weightedNeighborMean(spark: SparkSession, grid: DataFrame,
-      offs: Seq[(Int, Int, Int, Long)]): DataFrame = {
-    val taps = grid
-      .join(broadcast(offsetsDf(spark, offs)), expr("true"))
-      .select(
-        (col("x") + col("dx")).as("cx"),
-        (col("y") + col("dy")).as("cy"),
-        (col("z") + col("dz")).as("cz"),
-        col("w"), col("value_dec"),
-      )
-      .join(grid.select(col("x").as("cx"), col("y").as("cy"), col("z").as("cz")),
-        Seq("cx", "cy", "cz"), "left_semi")
-    taps
-      .groupBy("cx", "cy", "cz")
-      .agg(
-        sum(col("w") * col("value_dec")).as("num"),
-        sum(col("w")).as("den"),
-      )
-      .select(col("cx").as("x"), col("cy").as("y"), col("cz").as("z"),
-        (col("num").cast("double") / col("den").cast("double")).as("smoothed"))
-  }
-
-  /** A9/I4 smoothing: separable binomial kernel (1,2,1)³ — the discretized
-    * small-FWHM Gaussian (σ ≈ 0.7 voxel) — kept as the cheap 27-tap
-    * special case; see [[gaussianSmooth]] for arbitrary FWHM.
-    */
-  def binomialSmooth(spark: SparkSession, grid: DataFrame): DataFrame =
-    weightedNeighborMean(spark, grid, binomialKernelInts)
-
-  /** The (1,2,1)³ separable binomial weight table [[binomialSmooth]] uses —
-    * exposed so the block+halo path (q73) can route the SAME kernel. */
+  /** The (1,2,1)³ separable binomial weight table — the discretized
+    * small-FWHM Gaussian (σ ≈ 0.7 voxel), the cheap 27-tap kernel q38/q73
+    * run through [[blockLocalWeightedMean]]. */
   val binomialKernelInts: Seq[(Int, Int, Int, Long)] = {
     def b(d: Int): Long = if (d == 0) 2L else 1L
     for { dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1 }
       yield (dx, dy, dz, b(dx) * b(dy) * b(dz))
   }
 
-  /** Truncated Gaussian kernel at arbitrary FWHM as an integer weight
-    * table: σ = fwhm/2.3548 voxels (FWHM = 2·√(2·ln 2)·σ), 1-D weights
-    * w₁(d) = rint(1000·e^(−d²/2σ²)) for |d| ≤ r with r = ⌈2σ⌉, 3-D weight
-    * = w₁(dx)·w₁(dy)·w₁(dz) (separability of the Gaussian), zero-weight
-    * taps dropped. Integer weights make the smoothed means exactly
-    * reproducible in any engine — the kernel table IS the oracle literal.
-    */
-  /** The 1-D integer weight row w₁(d) = rint(1000·e^(−d²/2σ²)), |d| ≤ ⌈2σ⌉,
-    * zero weights dropped — the factor both [[gaussianKernelInts]] (joint
-    * product kernel) and [[gaussianSmoothSeparableDense]] (3-pass) build
-    * from, so the two paths share literals by construction. */
+  /** The 1-D integer weight row of the truncated Gaussian at arbitrary
+    * FWHM: σ = fwhm/2.3548 voxels (FWHM = 2·√(2·ln 2)·σ), w₁(d) =
+    * rint(1000·e^(−d²/2σ²)) for |d| ≤ r with r = ⌈2σ⌉, zero weights
+    * dropped — the factor [[gaussianKernelInts]] builds from. */
   def gaussian1dInts(fwhmVox: Double): Seq[(Int, Long)] = {
     require(fwhmVox > 0, s"fwhm must be positive, got $fwhmVox")
     val sigma = fwhmVox / (2.0 * math.sqrt(2.0 * math.log(2.0)))
@@ -537,6 +424,12 @@ object ImageOps {
       .filter(_._2 > 0)
   }
 
+  /** The 3-D Gaussian kernel (ssm_loop.py:88 `smooth(fwhm=4)` at 4.0) as
+    * an integer weight table for [[blockLocalWeightedMean]]: weight =
+    * w₁(dx)·w₁(dy)·w₁(dz) over [[gaussian1dInts]] (separability of the
+    * Gaussian), zero-weight taps dropped. Integer weights make the
+    * smoothed means exactly reproducible in any engine — the kernel table
+    * IS the oracle literal. */
   def gaussianKernelInts(fwhmVox: Double): Seq[(Int, Int, Int, Long)] = {
     val w1 = gaussian1dInts(fwhmVox)
     for {
@@ -544,62 +437,6 @@ object ImageOps {
       w = wx * wy * wz if w > 0
     } yield (dx, dy, dz, w)
   }
-
-  /** SEPARABLE 3-pass Gaussian for DENSE grids (the nilearn/FSL interior
-    * fast path the joint kernel's scaladoc defers to): one scatter join +
-    * sum per axis with the (2r+1)-tap 1-D row, then a single division by
-    * (Σw₁)³ — 3·(2r+1) taps per cell instead of (2r+1)³, an ~r²× tap
-    * reduction (r=4: 27 vs 729).
-    *
-    * Semantics: ZERO-PADDED dense convolution — each pass keeps exact
-    * DECIMAL numerators (no per-pass division), missing neighbors
-    * contribute 0, and the divisor is the full kernel mass. On cells
-    * whose full (2r+1)³ neighborhood exists this is BIT-IDENTICAL to
-    * [[gaussianSmooth]] (same integer weights by construction, same
-    * exact decimal triple sum, same final double division —
-    * ImageDesignSpec pins it); on boundary/masked-edge cells the joint
-    * form renormalizes over PRESENT taps while this one divides by full
-    * mass, which is why the gappy-grid queries (q61/q71) keep the joint
-    * kernel and this stays the dense-interior scale path (ProbeSmooth
-    * measures the win; SCALE.md has the table).
-    */
-  def gaussianSmoothSeparableDense(spark: SparkSession, grid: DataFrame,
-      fwhmVox: Double): DataFrame = {
-    import spark.implicits._
-    val taps = gaussian1dInts(fwhmVox)
-    val denL = { val s = taps.map(_._2).sum; s * s * s }
-    def pass(df: DataFrame, axis: String): DataFrame = {
-      val offs = taps.toDF("d", "w")
-      df.join(broadcast(offs), expr("true"))
-        .select(
-          (if (axis == "x") col("x") + col("d") else col("x")).as("x"),
-          (if (axis == "y") col("y") + col("d") else col("y")).as("y"),
-          (if (axis == "z") col("z") + col("d") else col("z")).as("z"),
-          (col("num") * col("w")).as("num"))
-        .groupBy("x", "y", "z").agg(sum(col("num")).as("num"))
-    }
-    val start = grid.select(col("x"), col("y"), col("z"),
-      col("value_dec").cast("decimal(38,2)").as("num"))
-    pass(pass(pass(start, "x"), "y"), "z")
-      // zero-padding scatters partial sums past the grid edge; only cells
-      // of the input volume are output (same footprint as the joint form)
-      .join(grid.select("x", "y", "z"), Seq("x", "y", "z"), "left_semi")
-      .select(col("x"), col("y"), col("z"),
-        (col("num").cast("double") / lit(denL).cast("double")).as("smoothed"))
-  }
-
-  /** A9 at arbitrary FWHM (ssm_loop.py:88 `smooth(fwhm=4)`): one-pass
-    * joint kernel through the stencil join, renormalizing on present
-    * neighbors like [[binomialSmooth]].
-    *
-    * Scale note: the joint kernel is (2r+1)³ taps. On a DENSE 100 TB
-    * volume the separable decomposition (three (2r+1)-tap passes along x,
-    * y, z — same join/groupBy shape each) cuts tap volume ~r²×; it is not
-    * used here because per-pass renormalization on a gappy grid changes
-    * masked-boundary semantics, and the oracle checks the joint form.
-    */
-  def gaussianSmooth(spark: SparkSession, grid: DataFrame, fwhmVox: Double): DataFrame =
-    weightedNeighborMean(spark, grid, gaussianKernelInts(fwhmVox))
 
   /** A4/A5 global reductions: per-z-slice count and exact mean of masked
     * cells (the global-signal / mean-image shape over the semi-joined

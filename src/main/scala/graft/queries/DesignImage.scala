@@ -118,11 +118,15 @@ object DesignImage extends QueryModule {
        |FROM grid
        |ORDER BY x, y, z""".stripMargin
 
-  // ---- q37: 19-tap stencil mode (hmode) ----------------------------------
+  // ---- q37/q51: 19-tap stencil mode (hmode) -----------------------------
+  // Both names run the block+halo kernel (ImageOps.blockLocalStencilMode:
+  // ONE blockId exchange, the mode gathered per block) against the one
+  // oracle below, whose tap scatter + ROW_NUMBER is the hmode definition;
+  // q37 and q51 are the same call, at 4³ blocks.
 
-  def stencilMode(s: SparkSession, d: String): DataFrame =
+  def stencilBlock(s: SparkSession, d: String): DataFrame =
     ImageOps
-      .stencilMode(s, ImageOps.voxelGrid(lineitem(s, d), L))
+      .blockLocalStencilMode(s, ImageOps.voxelGrid(lineitem(s, d), L), blockSize = 4)
       .orderBy("x", "y", "z")
 
   private val stencilModeSql = {
@@ -151,23 +155,19 @@ object DesignImage extends QueryModule {
        |ORDER BY x, y, z""".stripMargin
   }
 
-  // ---- q51: block+halo partition-local stencil (same oracle as q37) -----
+  // ---- q38/q73, q61/q71: integer-kernel smoothing --------------------------
+  // q38/q73 smooth with the binomial (1,2,1)³ kernel, q61/q71 with the
+  // reference's fwhm=4 Gaussian (ssm_loop.py:88): truncated integer
+  // kernel, σ = 4/2.3548 voxels, radius ⌈2σ⌉ = 4 → 9³ −zero-weight taps.
+  // All four run the block+halo gather (ImageOps.blockLocalWeightedMean:
+  // ONE blockId exchange, exact decimal gather, one final double
+  // division) at 8³ blocks — halo factor (10/8)³ ≈ 1.95× for the
+  // binomial kernel. The kernel integers are the SAME literals in both
+  // engines, so the renormalized means hash-match.
 
-  def stencilBlock(s: SparkSession, d: String): DataFrame =
-    ImageOps
-      .blockLocalStencilMode(s, ImageOps.voxelGrid(lineitem(s, d), L), blockSize = 4)
-      .orderBy("x", "y", "z")
-
-  // ---- q38: binomial (discretized Gaussian) smoothing --------------------
-
-  def smooth(s: SparkSession, d: String): DataFrame =
-    ImageOps
-      .binomialSmooth(s, ImageOps.voxelGrid(lineitem(s, d), L))
-      .orderBy("x", "y", "z")
-
-  /** Shared weighted-neighborhood-mean oracle (the SQL twin of
-    * ImageOps.weightedNeighborMean): only the kernel VALUES literal
-    * varies between q38 and q61. */
+  /** The weighted-neighborhood-mean oracle: a tap scatter over the kernel
+    * table, renormalized on present taps. Only the kernel VALUES literal
+    * varies between the binomial and the fwhm=4 queries. */
   private def weightedSmoothSql(offs: Seq[(Int, Int, Int, Long)]): String = {
     val vals = offs.map { case (dx, dy, dz, w) => s"($dx, $dy, $dz, $w)" }.mkString(", ")
     s"""WITH $duckGrid,
@@ -185,41 +185,16 @@ object DesignImage extends QueryModule {
        |ORDER BY x, y, z""".stripMargin
   }
 
-  private val smoothSql = weightedSmoothSql(
-    for { dx <- -1 to 1; dy <- -1 to 1; dz <- -1 to 1 } yield {
-      def b(v: Int) = if (v == 0) 2L else 1L
-      (dx, dy, dz, b(dx) * b(dy) * b(dz))
-    })
-
-  // ---- q61: Gaussian smoothing at the reference's fwhm=4 -----------------
-  // (ssm_loop.py:88): truncated integer kernel, σ = 4/2.3548 voxels,
-  // radius ⌈2σ⌉ = 4 → 9³ −zero-weight taps. The kernel integers are the
-  // SAME literals in both engines, so the renormalized means hash-match.
-
-  def smoothFwhm(s: SparkSession, d: String): DataFrame =
-    ImageOps
-      .gaussianSmooth(s, ImageOps.voxelGrid(lineitem(s, d), L), 4.0)
-      .orderBy("x", "y", "z")
+  private val smoothSql = weightedSmoothSql(ImageOps.binomialKernelInts)
 
   private def smoothFwhmSql: String =
     weightedSmoothSql(ImageOps.gaussianKernelInts(4.0))
-
-  // ---- q71: block+halo Gaussian smoothing (same oracle as q61) -----------
-  // The q51-style scale twin for the smoothing family: the fwhm=4 kernel
-  // (radius 4) gathered partition-locally after ONE blockId exchange,
-  // bit-identical to the declarative tap-scatter form by construction
-  // (exact decimal gather, same final double division).
 
   def smoothBlock(s: SparkSession, d: String): DataFrame =
     ImageOps
       .blockLocalWeightedMean(s, ImageOps.voxelGrid(lineitem(s, d), L),
         ImageOps.gaussianKernelInts(4.0), blockSize = 8)
       .orderBy("x", "y", "z")
-
-  // ---- q73: block+halo binomial smoothing (same oracle as q38) -----------
-  // Completes the smoothing family's scale story: BOTH kernels now have a
-  // block+halo twin. Radius 1 at blockSize 8 → halo factor (10/8)³ ≈ 1.95×
-  // through the single blockId exchange, vs 27 scatter taps keyed by cell.
 
   def smoothBinomBlock(s: SparkSession, d: String): DataFrame =
     ImageOps
@@ -971,43 +946,34 @@ object DesignImage extends QueryModule {
   // §"segregation"): per parcel, degree, TRIANGLE count, and the local
   // clustering coefficient C_p = 2·T_p / (deg·(deg−1)) — NULL when deg <
   // 2 leaves it undefined — plus the graph-level edge density every row
-  // carries. Triangles enumerate once each as a<b<c via two joins of the
-  // ordered edge list against itself; every relation past the q168
-  // moments is NP- or NP²-bounded (NP ≈ 10²–10³ at atlas scale:
-  // broadcast-class), so nothing here grows with the data. Oracle shares
-  // the q168 chain verbatim through pe (donor re-verified).
+  // carries. The edges are pinned to the driver and the triangles counted
+  // there by GraphLoops.triangles (q232's pass, whose Barrat coefficient
+  // is this C at unit weights); C and the density stay Catalyst
+  // expressions over its relation, with the edge and parcel counts
+  // carried as literals. Every relation past the q168 moments is NP- or
+  // NP²-bounded (NP ≈ 10²–10³ at atlas scale), so nothing here grows
+  // with the data. Oracle shares the q168 chain verbatim through pe
+  // (donor re-verified).
 
   def graphMetrics(s: SparkSession, d: String): DataFrame =
     graphMetricsCore(connectomeCore(centsSeries(s, d)))
 
   /** The q173 body from a q168-shaped (p1, p2, r_par, edge, …) pair
-    * relation — split out so specs can plant edge graphs. */
+    * relation of unique p1 < p2 pairs (the `mom` GROUP BY) — split out so
+    * specs can plant edge graphs. */
   private[graft] def graphMetricsCore(pairs0: DataFrame): DataFrame = {
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint() // NP²-bounded
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    val ones = pe.filter(col("edge") === 1).select("p1", "p2")
-    val deg = ones.select(col("p1").as("p"))
-      .union(ones.select(col("p2").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("deg"))
-    // a<b<c once per triangle: (a,b) joins (b,c), closed by (a,c)
-    val tri = ones.selectExpr("p1 AS a", "p2 AS b")
-      .join(ones.selectExpr("p1 AS b", "p2 AS c"), Seq("b"))
-      .join(ones.selectExpr("p1 AS a", "p2 AS c"), Seq("a", "c"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("p"))
-      .groupBy("p").agg(count(lit(1)).as("tri"))
-    val glob = ones.agg(count(lit(1)).as("m"))
-      .crossJoin(parcels.agg(count(lit(1)).as("np")))
-    parcels
-      .join(broadcast(deg), Seq("p"), "left")
-      .join(broadcast(tri), Seq("p"), "left")
-      .na.fill(0L, Seq("deg", "tri"))
-      .crossJoin(broadcast(glob))
-      .selectExpr("p", "deg", "tri",
+    val site = "DesignImage.graphMetricsCore"
+    graphMetricsOf(GraphLoops.pin(pairs0.select("p1", "p2", "edge"), site), site)
+  }
+
+  private def graphMetricsOf(g: GraphLoops.Graph, site: String): DataFrame =
+    GraphLoops.triangles(g, site)
+      .withColumn("m", lit(g.adj.map(_.length.toLong).sum / 2))
+      .withColumn("np", lit(g.n.toLong))
+      .selectExpr("p", "k AS deg", "n_tri AS tri",
         "CASE WHEN deg >= 2 THEN round(2.0 * tri / (CAST(deg AS DOUBLE) * (deg - 1)), 6) END AS c_coef",
         "CASE WHEN np >= 2 THEN round(2.0 * m / (CAST(np AS DOUBLE) * (np - 1)), 6) END AS density")
       .orderBy("p")
-  }
 
   private def graphMetricsSql: String =
     s"""WITH $connectomeCtes,
@@ -1213,7 +1179,10 @@ object DesignImage extends QueryModule {
   // observed graph), and per key a min-label fixed point
   // (GraphLoops.components) gives comp = the least parcel reachable —
   // the oracle's recursive walk's MIN(b). Deterministic: labels are
-  // parcel ids, and a fixed point is unique.
+  // parcel ids, and a fixed point is unique. The component node and edge
+  // counts and each permutation's null max are read off the same keyed
+  // graphs, so the permuted edges reach the driver once and only the
+  // p-value arithmetic is left to Catalyst.
   //
   // Scale shape: ONE data-sized exchange (q182's per-session parcel
   // aggregate); the threshold and the null-max comparison are bounded by
@@ -1246,9 +1215,9 @@ object DesignImage extends QueryModule {
       tPrim: Double): DataFrame = {
     // fl is GRuns·NP²-bounded (264 rows at the fixture) but sits behind
     // the DATA-SIZED session-series aggregate — without a checkpoint its
-    // three consumers (obsE, permE×2) re-ran the full lineitem chain
-    // each (r20, stage accounting: an 8 s re-aggregate stage). One
-    // checkpoint = one data pass per run.
+    // consumers (the observed t and the permutations) re-ran the full
+    // lineitem chain each (r20, stage accounting: an 8 s re-aggregate
+    // stage). One checkpoint = one data pass per run.
     val fl = facts
       .filter(col("z_fp").isNotNull)
       .select(col("p1").as("run"), col("p2").as("j"), col("g"),
@@ -1259,44 +1228,33 @@ object DesignImage extends QueryModule {
       .filter(expr(s"t_obs IS NOT NULL AND abs(t_obs) > $tPrim"))
       .selectExpr("CAST(-1 AS BIGINT) AS k", "CAST(run AS INT) AS a",
         "CAST(j AS INT) AS b")
-      .localCheckpoint() // bounded (≤ NP² rows); 3 consumers
-    val permE = graft.util.Loops.pin(permT
+    val permE = permT
       .filter(expr(s"t_p IS NULL OR abs(t_p) > $tPrim"))
-      .selectExpr("perm AS k", "CAST(run AS INT) AS a", "CAST(j AS INT) AS b"))
-    // a driver-local relation already (one keyed pin) — a
-    // localCheckpoint on top would only re-materialize it as one more job
-    val comp = nbsComponentsCore(obsE.unionByName(permE))
-    val obsComp = comp.filter(col("k") === -1L).selectExpr("p", "comp")
-    val oc = obsE
-      .join(obsComp.selectExpr("p AS a", "comp"), Seq("a"))
-      .groupBy("comp").agg(count(lit(1)).as("n_edges"))
-    val onodes = obsE.selectExpr("a AS p").unionByName(obsE.selectExpr("b AS p"))
-      .distinct()
-      .join(obsComp, Seq("p"))
-      .groupBy("comp").agg(count(lit(1)).as("n_nodes"))
-    val permSize = permE
-      .join(comp.selectExpr("k", "p AS a", "comp"), Seq("k", "a"))
-      .groupBy("k", "comp").agg(count(lit(1)).as("sz"))
-    val permMax = s.range(Glm.PermP).select(col("id").as("k"))
-      .join(permSize.groupBy("k").agg(max("sz").as("mx")), Seq("k"), "left")
-      .na.fill(0L, Seq("mx"))
-    // the whole null-max tail is (PermP·NP²)-bounded arithmetic over
-    // pinned LocalRelations, but executed on the MAIN session every
-    // LocalRelation/Range leaf fans out leafNodeDefaultParallelism-wide
-    // and every groupBy runs 32 shuffle tasks — ProbeJobs: three 32-task
-    // stages of 1.8-3.9 s summed task time for ≤17k-row inputs. Pinning
-    // the final relation runs the tail single-partition on the pin
-    // session: one collect job, identical rows.
-    graft.util.Loops.pin(
-      oc.join(onodes, Seq("comp"))
-        .crossJoin(broadcast(permMax.select("mx")))
-        .groupBy("comp", "n_nodes", "n_edges")
-        .agg(expr("SUM(CASE WHEN mx >= n_edges THEN 1 ELSE 0 END)").as("n_ge"))
-        .selectExpr("CAST(comp AS INT) AS comp", "n_nodes", "n_edges",
-          s"round((1 + n_ge) / CAST(${1 + Glm.PermP} AS DOUBLE), 6) AS p_nbs")
-        .selectExpr("comp", "n_nodes", "n_edges", "p_nbs",
-          s"p_nbs <= $nbsAlpha AS rejected"))
-      .orderBy("comp") // the sort stays in the plan, past the pin
+      .selectExpr("perm AS k", "CAST(run AS INT) AS a", "CAST(j AS INT) AS b")
+    // per key, each component's (least node index, (nodes, edges)): every
+    // edge row is two adjacency entries of one component
+    val site = "DesignImage.nbsCore"
+    val sizes = GraphLoops.pinKeyed(obsE.unionByName(permE)
+        .selectExpr("k", "a AS p1", "b AS p2", "1 AS edge"), Seq("k"), site)
+      .map(site) { g =>
+        val comp = GraphLoops.components(g, site)
+        g.ids.indices.groupMapReduce(comp)(i => (1L, g.adj(i).length.toLong)) {
+          case ((n1, e1), (n2, e2)) => (n1 + n2, e1 + e2)
+        }.view.mapValues { case (n, e2) => (n, e2 / 2) }.toMap
+      }.map { case (k, g, cs) => k.getAs[Number](0).longValue -> (g, cs) }.toMap
+    // the null max component size per permutation, 0 with no edge
+    val permMax = (0L until Glm.PermP).map(
+      sizes.get(_).fold(0L)(_._2.values.map(_._2).max))
+    val obs = sizes.get(-1L).toSeq.flatMap { case (g, cs) =>
+      cs.toSeq.map { case (c, (n, e)) => Seq(g.ids(c), n, e, permMax.count(_ >= e).toLong) }
+    }
+    GraphLoops.local(s, StructField("comp", IntegerType) +:
+        Seq("n_nodes", "n_edges", "n_ge").map(StructField(_, LongType)), obs)
+      .selectExpr("CAST(comp AS INT) AS comp", "n_nodes", "n_edges",
+        s"round((1 + n_ge) / CAST(${1 + Glm.PermP} AS DOUBLE), 6) AS p_nbs")
+      .selectExpr("comp", "n_nodes", "n_edges", "p_nbs",
+        s"p_nbs <= $nbsAlpha AS rejected")
+      .orderBy("comp")
   }
 
   def nbsComponents(s: SparkSession, d: String): DataFrame =
@@ -1386,9 +1344,11 @@ object DesignImage extends QueryModule {
     * relation — spec-plantable. */
   private[graft] def pathMetricsCore(pairs0: DataFrame): DataFrame = {
     val site = "DesignImage.pathMetricsCore"
-    val g = GraphLoops.pin(pairs0.select("p1", "p2", "edge"), site)
-    pathMetricsFromDist(GraphLoops.distances(g, site), g.relation(Nil)(_ => Nil))
+    pathMetricsOf(GraphLoops.pin(pairs0.select("p1", "p2", "edge"), site), site)
   }
+
+  private def pathMetricsOf(g: GraphLoops.Graph, site: String): DataFrame =
+    pathMetricsFromDist(GraphLoops.distances(g, site), g.relation(Nil)(_ => Nil))
 
   /** The q184/q199 aggregation tail over a finished (a, b, d) shortest-
     * distance relation: per-parcel ecc/reach/nodal efficiency plus the
@@ -2805,30 +2765,20 @@ object DesignImage extends QueryModule {
   // ONE correctly-rounded division per node, unlike Onnela's cube-root
   // form whose pow(x, 1/3) is not correctly rounded and could ULP-split
   // the engines. Reduces to the binary clustering coefficient on unit
-  // weights (spec-pinned). k_i < 2 ⇒ NULL (no pairs to close).
+  // weights (spec-pinned), so q173 runs the same pass. k_i < 2 ⇒ NULL (no
+  // pairs to close).
   //
-  // Scale shape: the neighbor-pair join is NP³-bounded worst case
-  // (q184's class); degree/strength folds NP-bounded. Requires the
-  // canonical p1 < p2 edge orientation every caller already has.
+  // Runs on the driver: the w > 0 edges are pinned once and
+  // GraphLoops.triangles gives (k, s, n_tri, nsum) per parcel in exact
+  // Long arithmetic; cw stays the Catalyst expression. The neighbor-pair
+  // scan is Σ k_i² ≤ NP³ (q184's class). Requires unique p1 < p2 pairs,
+  // the canonical orientation every caller already has.
 
+  /** The q232 body from a (p1, p2, w) relation of unique p1 < p2 pairs
+    * (the `mom` GROUP BY) — split out so specs can plant weighted graphs. */
   private[graft] def weightedClusteringCore(wpairs: DataFrame): DataFrame = {
-    val ones = wpairs.filter(col("w") > 0).select("p1", "p2", "w")
-      .localCheckpoint() // NP²-bounded; sym + triangle closure
-    val parcels = wpairs.select(col("p1").as("p"))
-      .union(wpairs.select(col("p2").as("p"))).distinct()
-    val sym = ones.selectExpr("p1 AS p", "p2 AS q", "w")
-      .union(ones.selectExpr("p2 AS p", "p1 AS q", "w"))
-      .localCheckpoint() // 2M rows; deg/strength + both pair sides
-    val degStr = sym.groupBy("p").agg(count(lit(1)).as("k"), sum("w").as("s"))
-    val tri = sym.selectExpr("p", "q AS j", "w AS wij")
-      .join(sym.selectExpr("p", "q AS h", "w AS wih"), Seq("p"))
-      .filter(col("j") < col("h"))
-      .join(ones.selectExpr("p1 AS j", "p2 AS h"), Seq("j", "h"), "left_semi")
-      .groupBy("p").agg(count(lit(1)).as("n_tri"),
-        sum(expr("wij + wih")).as("nsum"))
-    parcels
-      .join(degStr, Seq("p"), "left").na.fill(0L, Seq("k", "s"))
-      .join(tri, Seq("p"), "left").na.fill(0L, Seq("n_tri", "nsum"))
+    val site = "DesignImage.weightedClusteringCore"
+    GraphLoops.triangles(GraphLoops.pin(wpairs.select("p1", "p2", "w"), site), site)
       .selectExpr("p", "k", "s", "n_tri",
         "CASE WHEN k >= 2 AND s > 0 THEN round(CAST(nsum AS DOUBLE) / CAST(s * (k - 1) AS BIGINT), 6) END AS cw")
       .orderBy("p")
@@ -4225,18 +4175,21 @@ object DesignImage extends QueryModule {
   // (sum order can never flip a digit); every other moment is integer.
   // Undefined guards: no deg≥2 node → NULL C; k̄ ≤ 1 → NULL L_rand → NULL σ.
   //
-  // Scale shape: the q168 pair relation is computed ONCE and pinned
-  // (NP²-bounded) and feeds both bounded layers; output is ONE row.
+  // Scale shape: the q168 pair relation is computed ONCE and pinned to
+  // the driver as one GraphLoops.Graph (NP²-bounded) that feeds both
+  // layers; output is ONE row.
 
   /** One-row small-world summary from a q168-shaped pair relation. */
   private[graft] def smallWorldCore(pairs0: DataFrame): DataFrame = {
-    val pairs = pairs0.localCheckpoint() // NP²-bounded; two graph layers read it
-    val g = graphMetricsCore(pairs)
+    val site = "DesignImage.smallWorldCore"
+    // one pin feeds both graph layers
+    val graph = GraphLoops.pin(pairs0.select("p1", "p2", "edge"), site)
+    val g = graphMetricsOf(graph, site)
       .agg(count(lit(1)).as("np"),
         (sum("deg") / 2).cast("long").as("m"),
         sum(expr("CAST(round(c_coef * 1e6, 0) AS BIGINT)")).as("c_fp"),
         count(col("c_coef")).as("n_c"))
-    val l = pathMetricsCore(pairs)
+    val l = pathMetricsOf(graph, site)
       .agg(max("cpl").as("l_obs"), max("eff_glob").as("eff_glob"))
     g.crossJoin(l)
       .selectExpr("np", "m",
@@ -5111,7 +5064,7 @@ object DesignImage extends QueryModule {
     * minimum vid, so labels equal the ccLabels min-label fixpoint. */
   private[graft] def clusterLabels(vids: Array[Long]): Map[Long, Long] = {
     val present = vids.toSet
-    val parent = scala.collection.mutable.HashMap(vids.map(v => v -> v): _*)
+    val parent = scala.collection.mutable.HashMap.from(vids.iterator.map(v => v -> v))
     def find(v: Long): Long = {
       var r = v
       while (parent(r) != r) r = parent(r)
@@ -5168,10 +5121,10 @@ object DesignImage extends QueryModule {
     Q("q34_dct_poly", dctPoly, Some(dctPolySql)),
     Q("q35_hrf_convolve", hrfConvolve, Some(hrfConvolveSql)),
     Q("q36_voxel_mask", voxelMask, Some(voxelMaskSql)),
-    Q("q37_stencil_mode", stencilMode, Some(stencilModeSql)),
+    Q("q37_stencil_mode", stencilBlock, Some(stencilModeSql)),
     Q("q51_stencil_block", stencilBlock, Some(stencilModeSql)),
-    Q("q38_smooth", smooth, Some(smoothSql)),
-    Q("q61_smooth_fwhm", smoothFwhm, Some(smoothFwhmSql)),
+    Q("q38_smooth", smoothBinomBlock, Some(smoothSql)),
+    Q("q61_smooth_fwhm", smoothBlock, Some(smoothFwhmSql)),
     Q("q71_smooth_block", smoothBlock, Some(smoothFwhmSql)),
     Q("q73_smooth_binom_block", smoothBinomBlock, Some(smoothSql)),
     Q("q72_mean_image", meanImage, Some(meanImageSql)),

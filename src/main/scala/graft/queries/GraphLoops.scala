@@ -7,9 +7,10 @@ import org.apache.spark.sql.types._
 /** The connectome loop kernels — q208's label propagation, q215's H-index
   * coreness, the q196/q217 connected components, the q225/q230/q239
   * Louvain levels, the q204/q208 module-role moments, q203's ECM power
-  * steps and one single-source shortest-path sweep (q184/q189/q199/q218/
-  * q234 path metrics, q240/q247 Brandes betweenness) — run on the DRIVER
-  * over one pinned edge relation. The keyed loops (q196's permutations,
+  * steps, the q173/q189/q232 triangle pass and one single-source
+  * shortest-path sweep (q184/q189/q199/q218/q234 path metrics, q240/q247
+  * Brandes betweenness) — run on the DRIVER over one pinned edge
+  * relation. The keyed loops (q196's permutations,
   * q217's thresholds, q218's attack strategies, q236–q257's dFC windows)
   * run the same kernels once per key over one keyed pin ([[pinKeyed]]).
   *
@@ -69,19 +70,25 @@ private[graft] object GraphLoops {
     def distances(site: String): DataFrame =
       relation(distanceFields(idField), site)(distanceRows(_, site))((_, rows) => rows)
 
-    private def relation[A](fields: Seq[StructField], site: String)(
-        kernel: Graph => A)(rows: (Graph, A) => Seq[Seq[Any]]): DataFrame = {
+    /** `kernel` over every key's graph, as (key, graph, result) on the
+      * driver — the call's one driver_loop line. */
+    def map[A](site: String)(kernel: Graph => A): Seq[(Row, Graph, A)] = {
       val calls = collection.mutable.ArrayBuffer.empty[(Int, Boolean)]
       val out = keyedCalls.withValue(Some(calls)) {
-        graphs.flatMap { case (k, g) => rows(g, kernel(g)).map(k.toSeq ++ _) }
+        graphs.map { case (k, g) => (k, g, kernel(g)) }
       }
       log.info(s"""{"event":"driver_loop","site":"$site","keys":${graphs.size},""" +
         s""""nodes":${graphs.map(_._2.n).sum},""" +
         s""""edge_rows":${graphs.map(_._2.edgeRows).sum},""" +
         s""""rounds":${calls.map(_._1).maxOption.getOrElse(0)},""" +
         s""""converged":${calls.forall(_._2)}}""")
-      local(spark, keyFields ++ fields, out)
+      out
     }
+
+    private def relation[A](fields: Seq[StructField], site: String)(
+        kernel: Graph => A)(rows: (Graph, A) => Seq[Seq[Any]]): DataFrame =
+      local(spark, keyFields ++ fields,
+        map(site)(kernel).flatMap { case (k, g, a) => rows(g, a).map(k.toSeq ++ _) })
   }
 
   /** A driver-local relation of `rows` under `fields`. */
@@ -257,6 +264,29 @@ private[graft] object GraphLoops {
       (x, _) => Array.tabulate(g.n)(i => g.adj(i).foldLeft(x(i))(
         (acc, j) => Math.addExact(acc, x(j))))
     }._1
+
+  /** The local clustering moments (the q173/q232 section notes) as a
+    * (p, k, s, n_tri, nsum) relation: per node its degree k (adjacency
+    * entries), strength s (Σ entry weights), n_tri (neighbor pairs j < h
+    * that are themselves adjacent — the triangles at the node) and nsum
+    * (Σ w_ij + w_ih over those pairs), exact `Long`s. The graph must come
+    * from unique p1 < p2 pairs (a duplicate pair would count its
+    * entries twice). */
+  def triangles(g: Graph, site: String): DataFrame = {
+    val nbr = g.adj.map(_.toSet)
+    val rows = Array.tabulate(g.n) { i =>
+      val (a, w) = (g.adj(i), g.wt(i))
+      var (nTri, nsum) = (0L, 0L)
+      for (x <- a.indices; y <- a.indices if a(x) < a(y) && nbr(a(x))(a(y))) {
+        nTri += 1
+        nsum = Math.addExact(nsum, Math.addExact(w(x), w(y)))
+      }
+      Seq(a.length.toLong, w.foldLeft(0L)(Math.addExact), nTri, nsum)
+    }
+    trace(g, site, 1, converged = true)
+    g.relation(Seq("k", "s", "n_tri", "nsum")
+      .map(StructField(_, LongType, nullable = false)))(rows(_))
+  }
 
   /** One source's shortest paths, the entry weights read as lengths (all
     * ≥ 1): `dist` (Long.MaxValue = unreached), `sigma` the shortest-path

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 import graft.util.Tables._
 import graft.util.Snapshots
 import graft.text.TextOps
@@ -1388,7 +1389,7 @@ object TextDedup extends QueryModule {
       .foldLeft(mom.selectExpr(
         ((0 until k).map(i => s"s_$i") ++
           (for (i <- 0 until k; j <- 0 to i) yield s"q_${i}_$j") :+ "n"): _*)) {
-        (df, st) => df.selectExpr(df.columns ++ st: _*)
+        (df, st) => df.selectExpr(ArraySeq.unsafeWrapArray(df.columns) ++ st: _*)
       }
     val zCols = fwdSubst(k,
       i => s"CAST(xf_$i AS DOUBLE) / 1e6 - CAST(s_$i AS DOUBLE) / (n * 1e6)")

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 import graft.functions.VectorExprs
 
 /** Approximate-nearest-neighbor / similarity-search operators over an
@@ -985,7 +986,7 @@ object SimilarityOps {
       // evaluate the guard against the PRE-append cells (the write below
       // appends to the same table the anti-join reads)
       assigned.join(
-        spark.table(s"${name}_cells").filter(col("cell").isin(touched: _*))
+        spark.table(s"${name}_cells").filter(col("cell").isin(ArraySeq.unsafeWrapArray(touched): _*))
           .select("vec_id"),
         Seq("vec_id"), "left_anti").localCheckpoint()
     }
@@ -1021,7 +1022,7 @@ object SimilarityOps {
     // bit-equality with embeddingAdmission).
     val touched = probes.select("cell").distinct().collect().map(_.getLong(0))
     val near = spark.table(s"${name}_cells")
-      .filter(col("cell").isin(touched: _*))
+      .filter(col("cell").isin(ArraySeq.unsafeWrapArray(touched): _*))
       .select(col("cell"), col("vec_id").as("corp_id"), col("v").as("cv"),
         col("norm").as("cnorm"))
       .join(broadcast(probes), Seq("cell"))

@@ -38,87 +38,6 @@ object Probe {
   }
 }
 
-/** Scratch main: joint (2r+1)³-tap Gaussian vs the separable 3-pass form
-  * on a DENSE 32³ volume at two radii. The separable path trades one
-  * (2r+1)³-tap exchange for three (2r+1)-tap exchanges — tap volume drops
-  * ~r²× — at the cost of dense/zero-padded edge semantics (the gappy-grid
-  * queries keep the joint kernel; see ImageOps.gaussianSmoothSeparableDense).
-  * Not part of the driver contract; numbers go to SCALE.md. */
-object ProbeSmooth {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val l = 32
-    val grid = spark.range(0, l.toLong * l * l).select(
-      (col("id") / (l * l)).cast("int").as("x"),
-      (col("id") / l % l).cast("int").as("y"),
-      (col("id") % l).cast("int").as("z"),
-      lit(1).as("label"),
-      ((col("id") * 37 % 9973).cast("decimal(18,2)") / 100).cast("decimal(18,2)").as("value_dec"))
-    def time(label: String, q: => org.apache.spark.sql.DataFrame): Unit = {
-      q.count() // warm
-      val t0 = System.nanoTime()
-      var rows = 0L
-      var i = 0
-      while (i < 3) { rows = q.count(); i += 1 }
-      println(f"$label%-28s ${(System.nanoTime() - t0) / 3e9}%.3f s/run  ($rows cells)")
-    }
-    for (fwhm <- Seq(4.0, 6.0)) {
-      val taps1d = graft.image.ImageOps.gaussian1dInts(fwhm).size
-      println(s"fwhm=$fwhm: joint ${taps1d * taps1d * taps1d} taps vs separable 3x$taps1d")
-      time(f"joint  fwhm=$fwhm%.0f", graft.image.ImageOps.gaussianSmooth(spark, grid, fwhm))
-      time(f"separable fwhm=$fwhm%.0f",
-        graft.image.ImageOps.gaussianSmoothSeparableDense(spark, grid, fwhm))
-    }
-    spark.stop()
-  }
-}
-
-/** Scratch main: declarative tap-scatter smoothing vs the block+halo
-  * gather on a DENSE 64³ volume (262k cells) — the regime the q71/q73
-  * twins are FOR, as opposed to the 16³ driver grid where one exchange
-  * cannot amortize. fwhm=4 → 729 taps: the declarative plan shuffles
-  * ~191M tap rows keyed by cell; block b=16 ships halo (24/16)³ ≈ 3.4×
-  * ≈ 0.9M rows through ONE exchange then gathers partition-locally.
-  * Not part of the driver contract; numbers go to SCALE.md. */
-object ProbeBlock {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val l = 64
-    val grid = spark.range(0, l.toLong * l * l).select(
-      (col("id") / (l * l)).cast("int").as("x"),
-      (col("id") / l % l).cast("int").as("y"),
-      (col("id") % l).cast("int").as("z"),
-      lit(1).as("label"),
-      ((col("id") * 37 % 9973).cast("decimal(18,2)") / 100).cast("decimal(18,2)").as("value_dec"))
-    def time(label: String, q: => org.apache.spark.sql.DataFrame): Unit = {
-      q.count() // warm
-      val t0 = System.nanoTime()
-      var rows = 0L
-      var i = 0
-      while (i < 3) { rows = q.count(); i += 1 }
-      println(f"$label%-34s ${(System.nanoTime() - t0) / 3e9}%.3f s/run  ($rows cells)")
-    }
-    val kernel = graft.image.ImageOps.gaussianKernelInts(4.0)
-    println(s"dense $l³, fwhm=4, ${kernel.size} taps")
-    time("declarative tap-scatter",
-      graft.image.ImageOps.gaussianSmooth(spark, grid, 4.0))
-    for (b <- Seq(16, 32))
-      time(f"block+halo b=$b (halo ${math.pow((b + 8.0) / b, 3)}%.2fx)",
-        graft.image.ImageOps.blockLocalWeightedMean(spark, grid, kernel, b))
-    spark.stop()
-  }
-}
-
 /** Scratch main: the mass-GLM scale shape at reference-like group counts —
   * 500k series of 40 TRs (20M observation rows, k = 6 regressors), i.e.
   * the voxel regime the r2 verdict said the per-group broadcasts would
@@ -431,7 +350,7 @@ object ProbeSpaceSaving {
       .agg(graft.functions.KmvDistinct.kmv_distinct(col("h"), 1024, 1000000007L))
     time("exact countDistinct (~4M keys)", exactDistinct)
     time("kmv_distinct k=1024", kmv)
-    println(s"exact=${exactDistinct.head.getLong(0)} kmv=${kmv.head.getLong(0)}")
+    println(s"exact=${exactDistinct.head().getLong(0)} kmv=${kmv.head().getLong(0)}")
     // agreement on the unambiguous head
     val e = exact.collect().map(_.getString(0)).toSeq
     val sk = sketch.select(col("item.term")).collect().map(_.getString(0)).toSeq

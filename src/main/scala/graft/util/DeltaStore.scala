@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Generalized ADDITIVE delta store — the BigramStore/DSIR count-delta
   * discipline (per-batch fingerprinted deltas, probe-side
@@ -63,7 +64,7 @@ object DeltaStore {
     require(batchFp >= 0, s"batchFp must be >= 0 (got $batchFp): " +
       s"${BaseFp} is the fold sentinel")
     BucketedStores.recoverSwap(spark, table)
-    val w = delta.select(lit(batchFp).as("batch_fp") +: delta.columns.map(col): _*)
+    val w = delta.select(lit(batchFp).as("batch_fp") +: ArraySeq.unsafeWrapArray(delta.columns).map(col): _*)
       .write.mode("append").format("parquet")
     (if (spark.catalog.tableExists(table)) w else w.option("path", location))
       .saveAsTable(table)

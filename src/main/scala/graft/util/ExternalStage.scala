@@ -3,6 +3,7 @@ package graft.util
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
 
 /** O3 — external-tool stages (SURVEY.md §2.9; reference
   * `preprocess_parallel.sh:17-159`: recon-all / mri_convert / ANTs /
@@ -61,7 +62,7 @@ object ExternalStage {
             col(df.columns.head).cast("string"))))
         .otherwise(sc)
     }
-    val lines = df.select(concat_ws("\t", guarded: _*).as("line"))
+    val lines = df.select(concat_ws("\t", ArraySeq.unsafeWrapArray(guarded): _*).as("line"))
       .rdd.map(_.getString(0))
     val piped0 = lines.pipe(cmd)
     // same-task count compare: pipe preserves partitioning, so input
@@ -95,6 +96,6 @@ object ExternalStage {
     val strSchema = StructType(outSchema.fields.map(f =>
       StructField(f.name, StringType, nullable = true)))
     spark.createDataFrame(asRows, strSchema)
-      .select(outSchema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+      .select(outSchema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 }

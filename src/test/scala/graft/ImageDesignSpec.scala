@@ -19,8 +19,37 @@ class ImageDesignSpec extends SparkSpec {
       yield (x, y, z, if (x == 1 && y == 1 && z == 1) rogue else bg, BigDecimal(1))): _*
   )
 
+  /** Driver reference for the hmode filter, straight from its oracle
+    * SQL: every cell votes its label into each existing 19-tap target, and
+    * a target keeps the label of (count DESC, label ASC). */
+  private def modeReference(cells: Seq[(Int, Int, Int, Int, BigDecimal)]) = {
+    val label = cells.map(c => (c._1, c._2, c._3) -> c._4).toMap
+    val votes = for {
+      ((x, y, z), l) <- label.toSeq
+      (dx, dy, dz) <- ImageOps.Offsets19
+      t = (x + dx, y + dy, z + dz) if label.contains(t)
+    } yield t -> l
+    votes.groupMap(_._1)(_._2).view.mapValues(ls =>
+      ls.groupMapReduce(identity)(_ => 1)(_ + _).minBy { case (l, n) => (-n, l) }._1).toMap
+  }
+
+  /** Driver reference for the smoothing oracle: every cell scatters
+    * w·value into each existing target cell + o, exactly in BigDecimal, and
+    * a target's mean is Σ w·v / Σ w over the taps it received. */
+  private def meanReference(cells: Seq[(Int, Int, Int, Int, BigDecimal)],
+      offs: Seq[(Int, Int, Int, Long)]) = {
+    val value = cells.map(c => (c._1, c._2, c._3) -> c._5).toMap
+    val taps = for {
+      ((x, y, z), v) <- value.toSeq
+      (dx, dy, dz, w) <- offs
+      t = (x + dx, y + dy, z + dz) if value.contains(t)
+    } yield t -> (v * w, w)
+    taps.groupMapReduce(_._1)(_._2)((a, b) => (a._1 + b._1, a._2 + b._2))
+      .view.mapValues { case (num, den) => num.toDouble / den.toDouble }.toMap
+  }
+
   test("stencilMode removes a rogue voxel (hmode clean)") {
-    val cleaned = ImageOps.stencilMode(spark, rogueGrid(bg = 11, rogue = 50))
+    val cleaned = ImageOps.blockLocalStencilMode(spark, rogueGrid(bg = 11, rogue = 50), 2)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getInt(3)).toMap
     assert(cleaned((1, 1, 1)) === 11) // neighbors outvote the rogue label
     assert(cleaned((0, 0, 0)) === 11)
@@ -30,8 +59,9 @@ class ImageDesignSpec extends SparkSpec {
   test("stencilMode breaks ties by smallest label (AFNI hmode)") {
     // isolated voxel: only its own 1 tap votes... craft a 2-cell tie instead:
     // two cells (0,0,0) lbl 7 and (1,0,0) lbl 3; each sees both labels once
+    // — in different 1³ blocks, so each tie is decided across the halo
     val g = grid((0, 0, 0, 7, BigDecimal(1)), (1, 0, 0, 3, BigDecimal(1)))
-    val out = ImageOps.stencilMode(spark, g)
+    val out = ImageOps.blockLocalStencilMode(spark, g, 1)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getInt(3)).toMap
     assert(out((0, 0, 0)) === 3) // tie 1:1 → smallest label wins
     assert(out((1, 0, 0)) === 3)
@@ -46,11 +76,11 @@ class ImageDesignSpec extends SparkSpec {
     val g = grid(cells: _*)
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getInt(3)).toMap
-    val declarative = toMap(ImageOps.stencilMode(spark, g))
+    val declarative = modeReference(cells)
     val blockLocal = toMap(ImageOps.blockLocalStencilMode(spark, g, blockSize = 4))
     assert(blockLocal === declarative)
-    assert(declarative.nonEmpty)
-    // blockSize=2 → 64 blocks over 32 shuffle partitions: several blocks
+    assert(declarative.size === cells.size)
+    // blockSize=2 → 64 blocks over the suite's 4 shuffle partitions: many blocks
     // per partition, exercising the streaming per-block group iterator's
     // boundaries (the O(block), not O(partition), memory path)
     val blockLocal2 = toMap(ImageOps.blockLocalStencilMode(spark, g, blockSize = 2))
@@ -70,51 +100,21 @@ class ImageDesignSpec extends SparkSpec {
     def toMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
     // fwhm=4 (radius 4, the q61/q71 kernel): exact-double equality
-    val declarative = toMap(ImageOps.gaussianSmooth(spark, g, 4.0))
-    assert(declarative.nonEmpty)
     val fwhm4 = ImageOps.gaussianKernelInts(4.0)
-    for (b <- Seq(4, 2)) { // b=2 → 125 blocks over 32 partitions: many
+    val declarative = meanReference(cells, fwhm4)
+    assert(declarative.size === cells.size)
+    for (b <- Seq(4, 2)) { // b=2 → 125 blocks over 4 partitions: many
       // blocks per partition, streaming group-iterator boundaries hit
       val block = toMap(ImageOps.blockLocalWeightedMean(spark, g, fwhm4, b))
       assert(block === declarative, s"fwhm=4 blockSize=$b")
     }
-    // binomial (1,2,1)³ kernel — the q38/q73 pair
-    val declBinom = toMap(ImageOps.binomialSmooth(spark, g))
-    val blockBinom = toMap(
-      ImageOps.blockLocalWeightedMean(spark, g, ImageOps.binomialKernelInts, 4))
-    assert(blockBinom === declBinom)
-  }
-
-  test("separable Gaussian equals the joint kernel exactly on dense interiors") {
-    // dense 12³ grid; interior = cells ≥ r from every face, where the full
-    // (2r+1)³ neighborhood exists and zero-padding vs renormalization
-    // cannot differ. Exact-double equality — same integer weights, same
-    // exact decimal sums, same final division.
-    val cells = for { x <- 0 to 11; y <- 0 to 11; z <- 0 to 11 }
-      yield (x, y, z, 1, BigDecimal(x * 37 + y * 11 + z * 3) / 4)
-    val g = grid(cells: _*)
-    for (fwhm <- Seq(2.0, 4.0)) {
-      val r = ImageOps.gaussian1dInts(fwhm).map(_._1).max
-      assert(r >= 2)
-      def interior(df: org.apache.spark.sql.DataFrame) = df
-        .filter((col("x") >= r && col("x") <= 11 - r) &&
-          (col("y") >= r && col("y") <= 11 - r) &&
-          (col("z") >= r && col("z") <= 11 - r))
-        .collect().map(rr => (rr.getInt(0), rr.getInt(1), rr.getInt(2)) -> rr.getDouble(3))
-        .toMap
-      val joint = interior(ImageOps.gaussianSmooth(spark, g, fwhm))
-      val sep = interior(ImageOps.gaussianSmoothSeparableDense(spark, g, fwhm))
-      assert(joint.nonEmpty)
-      assert(sep === joint, s"fwhm=$fwhm interior mismatch")
+    // binomial (1,2,1)³ kernel — the q38/q73 kernel
+    val declBinom = meanReference(cells, ImageOps.binomialKernelInts)
+    for (b <- Seq(4, 2)) {
+      val blockBinom = toMap(
+        ImageOps.blockLocalWeightedMean(spark, g, ImageOps.binomialKernelInts, b))
+      assert(blockBinom === declBinom, s"binomial blockSize=$b")
     }
-    // and at the boundary they legitimately differ (renormalize vs zero-pad)
-    val jEdge = ImageOps.gaussianSmooth(spark, g, 4.0)
-      .filter(col("x") === 0 && col("y") === 0 && col("z") === 0)
-      .collect().head.getDouble(3)
-    val sEdge = ImageOps.gaussianSmoothSeparableDense(spark, g, 4.0)
-      .filter(col("x") === 0 && col("y") === 0 && col("z") === 0)
-      .collect().head.getDouble(3)
-    assert(sEdge < jEdge) // zero-padding pulls the corner toward 0
   }
 
   test("globalSignal: per-TR masked mean, exact; out-of-mask voxels don't vote") {
@@ -211,12 +211,13 @@ class ImageDesignSpec extends SparkSpec {
     assert(padded((3, 3, 3)) == 0.125) // s=1.75: only corner (1,1,1) in-grid, w=(1/4)³·8
   }
 
-  test("binomialSmooth preserves a constant field") {
+  test("binomial smoothing preserves a constant field") {
     val g = grid(
       (for { x <- 0 to 2; y <- 0 to 2; z <- 0 to 2 }
         yield (x, y, z, 1, BigDecimal(5))): _*
     )
-    val sm = ImageOps.binomialSmooth(spark, g).collect()
+    val sm = ImageOps.blockLocalWeightedMean(spark, g, ImageOps.binomialKernelInts, 2)
+      .collect()
     assert(sm.length === 27)
     sm.foreach(r => assert(math.abs(r.getDouble(3) - 5.0) < 1e-12))
   }

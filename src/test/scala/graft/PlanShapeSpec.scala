@@ -62,12 +62,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "mask semi-join degraded to SMJ")
   }
 
-  test("q61: arbitrary-FWHM smooth broadcasts the kernel table, one agg exchange") {
+  test("q61: fwhm=4 smooth is block+halo — one exchange by block id, no tap cross join") {
     val p = plan("q61_smooth_fwhm")
-    // the kernel-weights table is a driver literal — never shuffled
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
+    // cells are exchanged ONCE by spatial block and gathered per block; the
+    // kernel is a driver array, never a broadcast tap table
+    assert("hashpartitioning\\(bx#\\d+, by#\\d+, bz#\\d+".r.findAllIn(p).size === 1,
       p.take(800))
-    assert(p.contains("HashAggregate"))
+    assert(!p.contains("BroadcastNestedLoopJoin"), p.take(800))
   }
 
   test("q49: IVF cell assignment is map-side — no window, no k× corpus shuffle") {

@@ -550,6 +550,55 @@ class PropertySpec extends SparkSpec {
     assert(err.getMessage.contains("PropertySpec.overCap"), err.getMessage)
   }
 
+  test("property: driver triangle pass equals a brute-force per-node count") {
+    val s = spark
+    import s.implicits._
+    // random simple graphs as unique p1 < p2 pairs over up to 12 ids, at
+    // unit, small or ~10⁹ weights (two of those pass 2³¹ in nsum), with
+    // w = 0 pairs and a trailing w = 0 pair of two fresh ids (isolates)
+    val genGraph = for {
+      n <- Gen.choose(3, 12)
+      density <- Gen.choose(0.2, 0.9)
+      mode <- Gen.choose(0, 2)
+      draws <- Gen.listOfN(n * (n - 1) / 2,
+        Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(1L, 1200000000L)))
+    } yield {
+      val slots = for (a <- 0 until n; b <- a + 1 until n) yield (a, b)
+      (mode, slots.zip(draws).map { case ((a, b), (u, r)) =>
+        (a, b, if (u > density) 0L else Seq(1L, 1L + r % 5, 1000000000L + r)(mode))
+      } :+ ((n, n + 1, 0L)))
+    }
+    val site = "PropertySpec.triangles"
+    val graphs = samples(genGraph, 12)
+    assert(graphs.map(_._1).toSet === Set(0, 1, 2), "unit, small and ~10⁹ weights")
+    val seen = for ((_, pairs) <- graphs) yield {
+      val g = graft.queries.GraphLoops.pin(pairs.toDF("p1", "p2", "w"), site)
+      val out = graft.queries.GraphLoops.triangles(g, site).collect()
+        .map(r => Seq(r.getInt(0), r.getLong(1), BigInt(r.getLong(2)), r.getLong(3),
+          BigInt(r.getLong(4)))).toSeq
+      // O(n³): every node i, every id pair j < h, closed when all three
+      // pairs are edges
+      val w = pairs.filter(_._3 > 0)
+        .flatMap { case (a, b, x) => Seq((a, b) -> x, (b, a) -> x) }.toMap
+      val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+      val expect = ids.map { i =>
+        val nb = ids.filter(j => w.contains((i, j)))
+        val closed = for (j <- nb; h <- nb if j < h && w.contains((j, h)))
+          yield BigInt(w((i, j))) + w((i, h))
+        Seq(i, nb.size.toLong, nb.map(j => BigInt(w((i, j)))).sum,
+          closed.size.toLong, closed.sum)
+      }
+      assert(out.sortBy(_.head.asInstanceOf[Int]) === expect, s"graph: $pairs")
+      expect
+    }
+    val rows = seen.flatten
+    assert(rows.exists(_(3) == 0L) && rows.exists(_(3).asInstanceOf[Long] > 1L),
+      "the sample must mix open and multi-triangle nodes")
+    assert(rows.exists(_(1) == 0L), "the sample must hold isolates")
+    assert(rows.exists(_(4).asInstanceOf[BigInt] > Int.MaxValue),
+      "the sample must push nsum past 2³¹")
+  }
+
   test("property: driver Lloyd assigns the windows the DataFrame Lloyd assigns") {
     val s = spark
     import s.implicits._

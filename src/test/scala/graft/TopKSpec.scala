@@ -14,7 +14,7 @@ class TopKSpec extends SparkSpec {
   // queries whose plans contain filter(row_number().over(...) <= k | = 1)
   private val affected = Seq(
     "q27_cosine_topk", "q28_lsh_topk", "q49_ivf_topk",
-    "q09_mode_quantity", "q37_stencil_mode", "q11_top_orders", "q58_lang_quota",
+    "q09_mode_quantity", "q11_top_orders", "q58_lang_quota",
     "q84_kmeans_coreset", "q86_exact_sample", "q118_cluster_quota")
 
   test("rewrite fires on the quota/coreset windows: no Window survives (r12 item 6)") {
