@@ -827,10 +827,13 @@ object DesignImage extends QueryModule {
   // BEFORE thresholding so an engine's last-ulp can't flip an edge.
   //
   // Scale shape: ONE data-sized exchange (the parcel-series aggregate,
-  // combining map-side to NP·NT rows, pinned for its two join sides);
-  // the t-keyed self-join, moments, threshold, and degree fold are all
-  // parcel-bounded. At atlas scale (NP ≈ 10²-10³) the pair relation is
-  // NP²/2 rows — still broadcast-class.
+  // combining map-side to NP·NT rows, checkpointed). That checkpoint is
+  // pinned once and GraphLoops.pairMoments folds the pair moments on the
+  // driver in exact integer arithmetic — no self-join, no second exchange
+  // — so r, the threshold and the edge column are projections of one
+  // LocalRelation; only the degree fold is a (broadcast-class) Spark
+  // aggregate. At atlas scale (NP ≈ 10²-10³) the pin is NP·NT rows and
+  // the pair relation NP²/2.
 
   private val connNP = 12
   private val connNumStr =
@@ -854,35 +857,33 @@ object DesignImage extends QueryModule {
   private[graft] def connectomeCore(series: DataFrame): DataFrame =
     connectomeDegrees(connectomePairs(series), Nil)
 
-  /** q168's checkpointed (p1, p2, r_par, edge) pair relation without the
+  /** q168's driver-local (p1, p2, r_par, edge) pair relation without the
     * degree columns — for the kernels that pin it and never read them. */
-  private[graft] def connectomePairs(series: DataFrame): DataFrame = {
-    val par = series
-      .selectExpr(s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p",
-        "t", "v")
-      .groupBy("p", "t").agg(sum("v").as("pv"))
+  private[graft] def connectomePairs(series: DataFrame): DataFrame =
+    connectomeThreshold(GraphLoops.pairMoments(parcelSeries(series, Nil), Nil,
+      "DesignImage.connectomePairs"), connRStr, Nil)
+
+  /** The data-sized parcel aggregate every connectome starts from:
+    * (`keys`…, p, t, pv = Σ v) over the coordinate-hash atlas of a
+    * (`keys`…, t, x, y, z, v) series, checkpointed — NP·NT rows per key,
+    * the relation [[GraphLoops.pairMoments]] pins. */
+  private def parcelSeries(series: DataFrame, keys: Seq[String]): DataFrame =
+    series
+      .selectExpr(keys ++ Seq(
+        s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p", "t", "v"): _*)
+      .groupBy((keys ++ Seq("p", "t")).map(col): _*).agg(sum("v").as("pv"))
       .localCheckpoint()
-    val a = par.selectExpr("p AS p1", "t", "pv AS pva")
-    val b = par.selectExpr("p AS p2", "t", "pv AS pvb")
-    val mom = a.join(b, Seq("t")).filter(col("p1") < col("p2"))
-      .groupBy("p1", "p2")
-      .agg(sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
-        sum("pva").as("sa"), sum("pvb").as("sb"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
-        sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
-    connectomeThreshold(mom, connRStr, Nil)
-  }
 
   /** The shared moments → r → edges → degrees tail of q168/q178, in two
-    * steps: threshold the rounded r (checkpointed), then fold per-parcel
-    * degree and join it back. `extraCols` are already-named mom columns
-    * carried to the output (q178's n_kept). All relations NP²-bounded. */
+    * steps: threshold the rounded r, then fold per-parcel degree and join
+    * it back. `extraCols` are already-named mom columns carried to the
+    * output (q178's n_kept). `mom` is driver-local, so the thresholded
+    * relation is a projection of it: nothing to checkpoint. */
   private def connectomeThreshold(mom: DataFrame, rStr: String,
       extraCols: Seq[String]): DataFrame = {
     val keep = Seq("p1", "p2") ++ extraCols
     mom.selectExpr(keep :+ s"round($rStr, 6) AS r_par": _*)
       .selectExpr(keep ++ Seq("r_par", s"$connEdgeStr AS edge"): _*)
-      .localCheckpoint() // NP²-bounded; output + two degree reads
   }
 
   private def connectomeDegrees(pairs: DataFrame,
@@ -1029,9 +1030,11 @@ object DesignImage extends QueryModule {
   // permutation arithmetic plus the shared t expression strings.
   //
   // Scale shape: ONE data-sized exchange (the per-session parcel-series
-  // aggregate, map-side combined to GRuns·NP·NT rows); moments, z, the
-  // PermP expansion, and BH are all GRuns·NP²-bounded. BH ranks via the
-  // distinct-p relation — never a global window over the edge set.
+  // aggregate, map-side combined to GRuns·NP·NT rows, checkpointed); the
+  // driver pair-moment kernel (GraphLoops.pairMoments, key g) pins it
+  // once and returns the GRuns·NP² moments as a LocalRelation that r and
+  // z project; the PermP expansion and BH are GRuns·NP²-bounded. BH ranks
+  // via the distinct-p relation — never a global window over the edge set.
 
   private val GRuns = 4
   private val edgeAlphaOverM: Double = 0.1 / (connNP * (connNP - 1) / 2)
@@ -1055,24 +1058,12 @@ object DesignImage extends QueryModule {
   /** Per-session per-edge Fisher-z facts (g, p1, p2, z_fp) from a
     * (g, t, x, y, z, v-cents) series — the first-level relation the
     * permutation kernel flips. Split out so specs can plant series. */
-  private[graft] def edgeZFactsCore(series: DataFrame): DataFrame = {
-    val par = series
-      .selectExpr("g", s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p",
-        "t", "v")
-      .groupBy("g", "p", "t").agg(sum("v").as("pv"))
-      .localCheckpoint()
-    val a = par.selectExpr("g", "p AS p1", "t", "pv AS pva")
-    val b = par.selectExpr("g", "p AS p2", "t", "pv AS pvb")
-    a.join(b, Seq("g", "t")).filter(col("p1") < col("p2"))
-      .groupBy("g", "p1", "p2")
-      .agg(sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
-        sum("pva").as("sa"), sum("pvb").as("sb"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
-        sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
+  private[graft] def edgeZFactsCore(series: DataFrame): DataFrame =
+    GraphLoops.pairMoments(parcelSeries(series, Seq("g")), Seq("g"),
+        "DesignImage.edgeZFactsCore")
       .selectExpr("g", "p1", "p2", s"$connRStr AS r_par")
       .selectExpr("g", "p1", "p2",
         s"CAST(round(($edgeZStr) * 1e6, 0) AS BIGINT) AS z_fp")
-  }
 
   /** Permutation + BH tail over (g, p1, p2, z_fp) facts — split out so
     * specs can plant z patterns and alphas. */
@@ -1202,14 +1193,6 @@ object DesignImage extends QueryModule {
   private val nbsTPrim = 3.0
   private val nbsAlpha = 0.05
 
-  /** (k, p, comp) component labels for a (k, a, b)-keyed undirected edge
-    * relation: comp = min parcel reachable within key k. */
-  private[graft] def nbsComponentsCore(edges: DataFrame): DataFrame = {
-    val site = "DesignImage.nbsComponentsCore"
-    GraphLoops.pinKeyed(edges.selectExpr("k", "a AS p1", "b AS p2", "1 AS edge"),
-      Seq("k"), site).labels("comp", site)(GraphLoops.components(_, site))
-  }
-
   /** The q196 body over q182's (g, p1, p2, z_fp) facts — spec-plantable. */
   private[graft] def nbsCore(s: SparkSession, facts: DataFrame,
       tPrim: Double): DataFrame = {
@@ -1236,12 +1219,7 @@ object DesignImage extends QueryModule {
     val site = "DesignImage.nbsCore"
     val sizes = GraphLoops.pinKeyed(obsE.unionByName(permE)
         .selectExpr("k", "a AS p1", "b AS p2", "1 AS edge"), Seq("k"), site)
-      .map(site) { g =>
-        val comp = GraphLoops.components(g, site)
-        g.ids.indices.groupMapReduce(comp)(i => (1L, g.adj(i).length.toLong)) {
-          case ((n1, e1), (n2, e2)) => (n1 + n2, e1 + e2)
-        }.view.mapValues { case (n, e2) => (n, e2 / 2) }.toMap
-      }.map { case (k, g, cs) => k.getAs[Number](0).longValue -> (g, cs) }.toMap
+      .map(site)(GraphLoops.componentSizes(_, site)).map { case (k, g, cs) => k.getAs[Number](0).longValue -> (g, cs) }.toMap
     // the null max component size per permutation, 0 with no edge
     val permMax = (0L until Glm.PermP).map(
       sizes.get(_).fold(0L)(_._2.values.map(_._2).max))
@@ -1605,9 +1583,7 @@ object DesignImage extends QueryModule {
 
   def moduleLpa(s: SparkSession, d: String): DataFrame = {
     val site = "DesignImage.moduleLpa"
-    val g = GraphLoops.pin(
-      connectomePairs(centsSeries(s, d))
-        .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), site)
+    val g = GraphLoops.pin(corenessPairs(s, d), site) // q215's graph too
     moduleRolesOn(g, lpaModulesOn(g, connNP, site))
   }
 
@@ -3208,10 +3184,13 @@ object DesignImage extends QueryModule {
   // window (count skips them); a pair flat in EVERY window reads
   // n_win = 0 with NULL mean/sd.
   //
-  // Scale shape: one data-sized exchange (the parcel-series aggregate);
-  // the window expansion multiplies the NP·NT relation by ≤ wl/step = 2
-  // live windows per TR, the (w, t)-keyed pair join and the window and
-  // pair moments are |w|·NP²-bounded. No window function.
+  // Scale shape: one data-sized exchange (the parcel-series aggregate,
+  // checkpointed); the window expansion multiplies the NP·NT relation by
+  // ≤ wl/step = 2 live windows per TR, and that expansion is pinned once
+  // to the driver pair-moment kernel (GraphLoops.pairMoments, key ws),
+  // which returns the |w|·NP² window moments as a LocalRelation — no
+  // pair join. The across-window moments are |w|·NP²-bounded. No window
+  // function.
 
   private val dfcWl = 10
   private val dfcStep = 5
@@ -3231,22 +3210,11 @@ object DesignImage extends QueryModule {
   private[graft] def dfcWindowR(series: DataFrame): DataFrame = {
     val s = series.sparkSession
     import s.implicits._
-    val par = series
-      .selectExpr(s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p",
-        "t", "v")
-      .groupBy("p", "t").agg(sum("v").as("pv"))
-      .localCheckpoint() // NP·NT rows; both join sides
-    val wins = dfcStarts.toDF("ws")
-    val pw = par.crossJoin(broadcast(wins))
+    // each window's (ws, p, t, pv) slice of the parcel series: ≤ wl/step
+    // = 2 live windows per TR, expanded before the pin
+    val pw = parcelSeries(series, Nil).crossJoin(broadcast(dfcStarts.toDF("ws")))
       .filter(expr(s"t >= ws AND t < ws + $dfcWl"))
-    val a = pw.selectExpr("ws", "p AS p1", "t", "pv AS pva")
-    val b = pw.selectExpr("ws", "p AS p2", "t", "pv AS pvb")
-    a.join(b, Seq("ws", "t")).filter(col("p1") < col("p2"))
-      .groupBy("ws", "p1", "p2")
-      .agg(sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
-        sum("pva").as("sa"), sum("pvb").as("sb"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
-        sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
+    GraphLoops.pairMoments(pw, Seq("ws"), "DesignImage.dfcWindowR")
       .selectExpr("ws", "p1", "p2",
         s"CAST(round(($dfcRStr) * 1e6, 0) AS BIGINT) AS r_fp")
   }
@@ -4007,42 +3975,42 @@ object DesignImage extends QueryModule {
   // component count (isolated parcels count as singletons), the giant
   // component's size, and its fraction of all parcels — the percolation
   // curve whose cliff marks where the network disintegrates. Components
-  // come from the SAME keyed driver kernel as q196 (nbsComponentsCore:
-  // one keyed pin, key k = τ·100, a fixed-point integer key; a min-label
-  // fixed point per key), so correctness rides a hash-proven kernel.
+  // come from the SAME keyed driver kernel as q196 (GraphLoops.components
+  // over one keyed pin, key k = τ·100, a fixed-point integer key; a
+  // min-label fixed point per key), so correctness rides a hash-proven
+  // kernel.
   // τ·100/100 is a correctly-rounded IEEE division in both engines and
   // r_par is the shared 6-dp rounded column — no boundary ULP risk
   // beyond q168's own.
   //
-  // Scale shape: the τ×pairs expansion is |τ|·NP²-bounded and pinned
-  // once; the component state is |τ|·NP labels on the driver, q196's
-  // class with |τ| = 7 keys instead of PermP. No window.
+  // Scale shape: the τ×pairs expansion (q168's driver-local pairs, an
+  // edge column per τ) is |τ|·NP²-bounded and pinned once; per τ the
+  // components, edge, node and component counts are read off that τ's
+  // graph on the driver (q196's Keyed.map and its per-component (nodes,
+  // edges) fold, GraphLoops.componentSizes), and one |τ|-row LocalRelation
+  // carries them to the tail expressions. No window, no checkpoint.
 
   private val percTaus = Seq(10L, 15L, 20L, 25L, 30L, 35L, 40L)
 
-  private[graft] def percolationCore(pairs0: DataFrame): DataFrame = {
-    val s = pairs0.sparkSession
+  private[graft] def percolationCore(pairs: DataFrame): DataFrame = {
+    val s = pairs.sparkSession
     import s.implicits._
-    val pe = pairs0.select("p1", "p2", "r_par").localCheckpoint()
-    val parcels = pe.select(col("p1").as("p"))
-      .union(pe.select(col("p2").as("p"))).distinct()
-    val np = parcels.agg(count(lit(1)).as("np"))
-    val taus = percTaus.toDF("k")
-    val edges = pe.filter(col("r_par").isNotNull)
-      .crossJoin(broadcast(taus))
-      .filter(expr("r_par >= CAST(k AS DOUBLE) / 100"))
-      .selectExpr("k", "p1 AS a", "p2 AS b")
-      .localCheckpoint() // |τ|·NP²-bounded; components + edge counts
-    val comp = nbsComponentsCore(edges)
-    val sizes = comp.groupBy("k", "comp").agg(count(lit(1)).as("sz"))
-    val stats = sizes.groupBy("k").agg(count(lit(1)).as("n_comp_conn"),
-      max("sz").as("giant_sz0"), sum("sz").as("n_conn_nodes"))
-    val ec = edges.groupBy("k").agg(count(lit(1)).as("n_edges"))
-    taus
-      .crossJoin(broadcast(np))
-      .join(stats, Seq("k"), "left")
-      .join(ec, Seq("k"), "left")
-      .na.fill(0L, Seq("n_comp_conn", "giant_sz0", "n_conn_nodes", "n_edges"))
+    // every pair under every τ, an edge where r_par clears it: each τ's
+    // graph holds all parcels, the non-edge pairs' ends as isolates
+    val site = "DesignImage.percolationCore"
+    val stats = GraphLoops.pinKeyed(pairs.crossJoin(broadcast(percTaus.toDF("k")))
+        .selectExpr("k", "p1", "p2", "CASE WHEN r_par IS NOT NULL AND " +
+          "r_par >= CAST(k AS DOUBLE) / 100 THEN 1 ELSE 0 END AS edge"),
+        Seq("k"), site)
+      .map(site) { g =>
+        // the components holding an edge; the rest are isolates
+        val conn = GraphLoops.componentSizes(g, site).values.filter(_._2 > 0)
+        Seq(g.n.toLong, conn.size.toLong, conn.map(_._1).maxOption.getOrElse(0L),
+          conn.map(_._1).sum, conn.map(_._2).sum)
+      }.map { case (k, _, st) => k.getLong(0) -> st }.toMap
+    GraphLoops.local(s, Seq("k", "np", "n_comp_conn", "giant_sz0",
+        "n_conn_nodes", "n_edges").map(StructField(_, LongType, nullable = false)),
+      percTaus.map(k => k +: stats.getOrElse(k, Seq.fill(5)(0L))))
       .selectExpr("k AS tau_fp", "n_edges", "n_conn_nodes",
         "n_comp_conn + (np - n_conn_nodes) AS n_comp",
         "CASE WHEN np > 0 THEN greatest(giant_sz0, 1) ELSE CAST(0 AS BIGINT) END AS giant_sz",
@@ -4051,7 +4019,7 @@ object DesignImage extends QueryModule {
   }
 
   def percolation(s: SparkSession, d: String): DataFrame =
-    percolationCore(connectomeCore(centsSeries(s, d)))
+    percolationCore(connectomePairs(centsSeries(s, d)))
 
   private def percolationSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -4282,9 +4250,10 @@ object DesignImage extends QueryModule {
   // diagonal-hit verdict.
   //
   // Scale shape: ONE data-sized exchange (the (g, h)-keyed parcel-series
-  // aggregate); moments, r, and the identification matrix are
-  // GRuns·NP²-bounded; the argmax window partitions by ga over
-  // GRuns²-sized rows. At atlas scale the edge vectors are the standing
+  // aggregate, checkpointed and pinned once to the driver pair-moment
+  // kernel, GraphLoops.pairMoments, keys g and h); moments, r, and the
+  // identification matrix are GRuns·NP²-bounded; the argmax window
+  // partitions by ga over GRuns²-sized rows. At atlas scale the edge vectors are the standing
   // per-scan artifact (NP²/2 rows each) a fingerprint service stores.
 
   private val fpIdRStr =
@@ -4296,24 +4265,12 @@ object DesignImage extends QueryModule {
 
   /** Per-(session, scan-half) quantized edge vectors (g, h, p1, p2, r_fp)
     * from a (g, h, t, x, y, z, v-cents) series — spec-plantable. */
-  private[graft] def scanEdgeVectors(series: DataFrame): DataFrame = {
-    val par = series
-      .selectExpr("g", "h",
-        s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p", "t", "v")
-      .groupBy("g", "h", "p", "t").agg(sum("v").as("pv"))
-      .localCheckpoint()
-    val a = par.selectExpr("g", "h", "p AS p1", "t", "pv AS pva")
-    val b = par.selectExpr("g", "h", "p AS p2", "t", "pv AS pvb")
-    a.join(b, Seq("g", "h", "t")).filter(col("p1") < col("p2"))
-      .groupBy("g", "h", "p1", "p2")
-      .agg(sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
-        sum("pva").as("sa"), sum("pvb").as("sb"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
-        sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
+  private[graft] def scanEdgeVectors(series: DataFrame): DataFrame =
+    GraphLoops.pairMoments(parcelSeries(series, Seq("g", "h")), Seq("g", "h"),
+        "DesignImage.scanEdgeVectors")
       .selectExpr("g", "h", "p1", "p2",
         s"CAST(round(($connRStr) * 1e6, 0) AS BIGINT) AS r_fp")
       .filter(col("r_fp").isNotNull)
-  }
 
   /** Identification matrix from (g, h, p1, p2, r_fp) edge vectors. */
   private[graft] def fingerprintCore(vectors: DataFrame): DataFrame =
@@ -4375,9 +4332,11 @@ object DesignImage extends QueryModule {
   // (threshold the ROUNDED partial r at |r| ≥ 0.1).
   //
   // Scale shape: ONE data-sized exchange (the parcel-series aggregate,
-  // pinned); g and the parcel-vs-g moments are NT- and NP-bounded; pair
-  // moments NP²-bounded; the partial-r projection and degree fold are
-  // broadcast-class. Undefined guards: any degenerate marginal
+  // checkpointed); g and the parcel-vs-g moments are NT- and NP-bounded
+  // Spark aggregates over it; the NP² pair moments come off the driver
+  // (GraphLoops.pairMoments pins the checkpoint once) as a LocalRelation;
+  // the partial-r projection and q168's degree fold are broadcast-class.
+  // Undefined guards: any degenerate marginal
   // (zero-variance parcel or |r_xg| = 1 — a parcel that IS the global
   // signal) yields NULL r, never a fabricated edge.
 
@@ -4388,11 +4347,7 @@ object DesignImage extends QueryModule {
 
   /** q194 body from a (t, x, y, z, v-cents) series — spec-plantable. */
   private[graft] def gsrConnectomeCore(series: DataFrame): DataFrame = {
-    val par = series
-      .selectExpr(s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p",
-        "t", "v")
-      .groupBy("p", "t").agg(sum("v").as("pv"))
-      .localCheckpoint()
+    val par = parcelSeries(series, Nil)
     val g = par.groupBy("t").agg(sum("pv").as("gv"))
     val gm = g.agg(sum("gv").as("sg"),
       sum(expr("CAST(gv AS DECIMAL(38,0)) * gv")).as("sgg"))
@@ -4408,30 +4363,14 @@ object DesignImage extends QueryModule {
            |THEN ($NT * CAST(sxg AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sg AS DOUBLE)) /
            | (sqrt($NT * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
            |  sqrt($NT * CAST(sgg AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE))) END AS r_pg""".stripMargin.replace("\n", " "))
-    val a = par.selectExpr("p AS p1", "t", "pv AS pva")
-    val b = par.selectExpr("p AS p2", "t", "pv AS pvb")
-    val mom = a.join(b, Seq("t")).filter(col("p1") < col("p2"))
-      .groupBy("p1", "p2")
-      .agg(sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
-        sum("pva").as("sa"), sum("pvb").as("sb"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
-        sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
+    val mom = GraphLoops.pairMoments(par, Nil, "DesignImage.gsrConnectomeCore")
       .selectExpr("p1", "p2", s"$connRStr AS r_xy")
     val pairs = mom
       .join(broadcast(pg.selectExpr("p AS p1", "r_pg AS r_xg")), Seq("p1"))
       .join(broadcast(pg.selectExpr("p AS p2", "r_pg AS r_yg")), Seq("p2"))
       .selectExpr("p1", "p2", s"round($gsrPartialStr, 6) AS r_par")
       .selectExpr("p1", "p2", "r_par", s"$connEdgeStr AS edge")
-      .localCheckpoint() // NP²-bounded; output + two degree reads
-    val ones = pairs.filter(col("edge") === 1)
-    val deg = ones.selectExpr("p1 AS p").union(ones.selectExpr("p2 AS p"))
-      .groupBy("p").agg(count(lit(1)).as("deg"))
-    pairs
-      .join(broadcast(deg.selectExpr("p AS p1", "deg AS deg_p1")), Seq("p1"), "left")
-      .join(broadcast(deg.selectExpr("p AS p2", "deg AS deg_p2")), Seq("p2"), "left")
-      .na.fill(0L, Seq("deg_p1", "deg_p2"))
-      .select("p1", "p2", "r_par", "edge", "deg_p1", "deg_p2")
-      .orderBy("p1", "p2")
+    connectomeDegrees(pairs, Nil)
   }
 
   def gsrConnectome(s: SparkSession, d: String): DataFrame =
@@ -4689,10 +4628,15 @@ object DesignImage extends QueryModule {
   // censor signal must come from the scan itself) are censored with the
   // standard f−1..f+2 augmentation, and the connectome correlates only
   // the SURVIVING frames — so the moments carry a data-dependent n
-  // (count per pair) instead of q168's dense NT. Every post-series
-  // relation is NT- or NP²-bounded; the lag/censor windows run on the
-  // NT-row global-signal relation (bounded — the q151 distinct-relation
-  // class, not a data-sized window).
+  // (count per pair) instead of q168's dense NT.
+  //
+  // Scale shape: the series is checkpointed once for its two readers;
+  // every post-series relation is NT- or NP²-bounded. The lag/censor
+  // windows run on the NT-row global-signal relation (bounded — the q151
+  // distinct-relation class, not a data-sized window), and the kept
+  // frames' parcel aggregate (checkpointed) is pinned once to the driver
+  // pair-moment kernel (GraphLoops.pairMoments), whose n — the kept
+  // frames a pair shares — is n_kept.
 
   private val scnNum =
     "(CAST(n AS DOUBLE) * CAST(sab AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE))"
@@ -4720,21 +4664,11 @@ object DesignImage extends QueryModule {
       .selectExpr("t", "MAX(spike) OVER (ORDER BY t " +
         "ROWS BETWEEN 2 PRECEDING AND 1 FOLLOWING) AS censored")
       .filter(col("censored") === 0).select("t")
-    val par = series.join(broadcast(keep), Seq("t"))
-      .selectExpr(s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p",
-        "t", "v")
-      .groupBy("p", "t").agg(sum("v").as("pv"))
-      .localCheckpoint()
-    val a = par.selectExpr("p AS p1", "t", "pv AS pva")
-    val b = par.selectExpr("p AS p2", "t", "pv AS pvb")
-    val mom = a.join(b, Seq("t")).filter(col("p1") < col("p2"))
-      .groupBy("p1", "p2")
-      .agg(count(lit(1)).as("n_kept"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
-        sum("pva").as("sa"), sum("pvb").as("sb"),
-        sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
-        sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
-      .withColumn("n", col("n_kept"))
+    // n = the surviving frames the pair shares
+    val mom = GraphLoops.pairMoments(
+        parcelSeries(series.join(broadcast(keep), Seq("t")), Nil), Nil,
+        "DesignImage.scrubbedConnectomeCore")
+      .withColumn("n_kept", col("n"))
     connectomeDegrees(connectomeThreshold(mom, scnRStr, Seq("n_kept")),
       Seq("n_kept"))
   }

@@ -13,6 +13,9 @@ import org.apache.spark.sql.types._
   * relation. The keyed loops (q196's permutations,
   * q217's thresholds, q218's attack strategies, q236–q257's dFC windows)
   * run the same kernels once per key over one keyed pin ([[pinKeyed]]).
+  * Upstream of them, [[pairMoments]] folds the Pearson pair moments every
+  * parcel connectome starts from (q168 and its callers, q178, q182,
+  * q183/q190, q194, the q223 dFC windows) over one pinned parcel series.
   *
   * Every relation these kernels touch is atlas-bounded (NP parcels, ≤ NP²
   * pairs: 66 at connNP = 12, ≤ 10⁶ at atlas scale; |keys|·NP² keyed),
@@ -192,6 +195,16 @@ private[graft] object GraphLoops {
       (lab, _) => Array.tabulate(g.n)(i =>
         g.adj(i).foldLeft(lab(i))((m, j) => math.min(m, lab(j))))
     }._1
+
+  /** Per connected component of `g`, keyed by its [[components]] label
+    * (the least node index): (nodes, edges) — each edge pair is two
+    * adjacency entries of one component. */
+  def componentSizes(g: Graph, site: String): Map[Int, (Long, Long)] = {
+    val comp = components(g, site)
+    g.ids.indices.groupMapReduce(comp)(i => (1L, g.adj(i).length.toLong)) {
+      case ((n1, e1), (n2, e2)) => (n1 + n2, e1 + e2)
+    }.view.mapValues { case (n, e2) => (n, e2 / 2) }.toMap
+  }
 
   /** H-index coreness (the q215 section note): c⁰ = degree, then c(v) =
     * the largest h with at least h neighbor entries valued ≥ h — non-
@@ -435,6 +448,89 @@ private[graft] object GraphLoops {
         kin(i), n, s1, s2)
     }
   }
+
+  /** The Pearson pair moments of a (`keys`…, p, t, pv) parcel-series
+    * relation, pinned ONCE through the capped collect: per key and per
+    * p1 < p2 pair sharing at least one t, one (keys…, p1, p2, n, sab, sa,
+    * sb, saa, sbb) row over their common t — n its count, sa/sb the BIGINT
+    * sums of each side's pv, sab/saa/sbb the DECIMAL(38,0) sums of
+    * pva·pvb, pva², pvb². This is the t-keyed self-join fold — join the
+    * relation to itself on (keys, t), keep p1 < p2, group by (keys, p1,
+    * p2) and sum — run on the driver, with that fold's schema (the
+    * products cast to DECIMAL(38,0) before summing): a NULL pv adds no
+    * term to a sum, a sum with no term is NULL, a row with a NULL key, p
+    * or t joins nothing, and a BIGINT or 38-digit overflow fails naming
+    * `site`, as the ANSI sum does. (keys, p, t) must be unique — the grain of the
+    * parcel aggregate every caller pins. Rows come in first-seen key
+    * order, then (p1, p2) order; the call logs one `pair_moments` line. */
+  def pairMoments(par: DataFrame, keys: Seq[String], site: String): DataFrame = {
+    val k = keys.size
+    require(integralIds(par.schema("p").dataType) &&
+      integralIds(par.schema("pv").dataType),
+      s"$site: p and pv must be integral, got " +
+        s"${par.schema("p").dataType}/${par.schema("pv").dataType}")
+    val rows = graft.util.Loops.pinnedRows(
+      par.select((keys ++ Seq("p", "t", "pv")).map(col): _*), site)
+    // per key, per parcel: t → pv (null for a NULL pv)
+    val cells = collection.mutable.LinkedHashMap.empty[Row,
+      collection.mutable.Map[Any, collection.mutable.Map[Any, java.lang.Long]]]
+    for (r <- rows if (0 to k + 1).forall(!r.isNullAt(_))) {
+      val byT = cells.getOrElseUpdate(Row.fromSeq(r.toSeq.take(k)),
+        collection.mutable.HashMap.empty)
+        .getOrElseUpdate(r.get(k), collection.mutable.HashMap.empty)
+      val pv = if (r.isNullAt(k + 2)) null
+        else java.lang.Long.valueOf(r.getAs[Number](k + 2).longValue)
+      require(!byT.contains(r.get(k + 1)),
+        s"$site: duplicate (keys, p, t) cell $r — not a parcel aggregate")
+      byT(r.get(k + 1)) = pv
+    }
+    val out = for {
+      (kr, series) <- cells.toSeq
+      ps = series.keys.toArray.sortBy(key)
+      i <- ps.indices
+      j <- i + 1 until ps.length
+      m <- moments(series(ps(i)), series(ps(j)), s"$site ($kr, ${ps(i)}, ${ps(j)})")
+    } yield kr.toSeq ++ Seq(ps(i), ps(j)) ++ m
+    log.info(s"""{"event":"pair_moments","site":"$site","keys":${cells.size},""" +
+      s""""rows":${rows.length},"pairs":${out.size}}""")
+    val idField = par.schema("p")
+    val dec = DecimalType(38, 0)
+    local(par.sparkSession, keys.map(par.schema(_)) ++ Seq(
+      idField.copy(name = "p1"), idField.copy(name = "p2"),
+      StructField("n", LongType, nullable = false), StructField("sab", dec),
+      StructField("sa", LongType), StructField("sb", LongType),
+      StructField("saa", dec), StructField("sbb", dec)), out)
+  }
+
+  /** (n, sab, sa, sb, saa, sbb) of two parcel series over their common t,
+    * or None when they share no t. Every sum is an exact BigInt, range-
+    * checked once: sa/sb against BIGINT, the products against
+    * DECIMAL(38,0); a sum with no non-NULL term is NULL. */
+  private def moments(a: collection.Map[Any, java.lang.Long],
+      b: collection.Map[Any, java.lang.Long], at: => String): Option[Seq[Any]] = {
+    val common = a.toSeq.flatMap { case (t, va) => b.get(t).map((va, _)) }
+    def vals(vs: Seq[java.lang.Long]) = vs.filter(_ != null).map(BigInt(_))
+    val (as, bs) = (vals(common.map(_._1)), vals(common.map(_._2)))
+    def bigint(terms: Seq[BigInt], name: String): Any =
+      terms.reduceOption(_ + _).map { v =>
+        if (!v.isValidLong) throw new ArithmeticException(
+          s"$at: BIGINT overflow in the pair moment sum $name")
+        v.toLong: Any
+      }.orNull
+    def decimal(terms: Seq[BigInt], name: String): Any =
+      terms.reduceOption(_ + _).map { v =>
+        if (v.abs >= Decimal38) throw new ArithmeticException(
+          s"$at: $name overflows DECIMAL(38,0)")
+        new java.math.BigDecimal(v.bigInteger)
+      }.orNull
+    Option.when(common.nonEmpty)(Seq(common.size.toLong,
+      decimal(common.collect { case (va, vb) if va != null && vb != null =>
+        BigInt(va) * BigInt(vb) }, "sab"),
+      bigint(as, "sa"), bigint(bs, "sb"),
+      decimal(as.map(v => v * v), "saa"), decimal(bs.map(v => v * v), "sbb")))
+  }
+
+  private val Decimal38 = BigInt(10).pow(38)
 
   /** One structured INFO line per driver loop (site, nodes, edge_rows,
     * rounds, converged): where the loop ran and how long it took to settle.

@@ -251,7 +251,7 @@ class CurationSpec extends SparkSpec {
   test("segmentRelation + chunk: native kernels are bit-identical to the HOF spec forms") {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
+      df.orderBy(df.columns.toIndexedSeq.map(col): _*).collect().map(_.toString).toSeq
     for (st <- Seq(2, 6))
       assert(rows(CurationOps.segmentRelation(docs, st))
         == rows(CurationOps.segmentRelationSpec(docs, st)), s"segTokens=$st")

@@ -23,8 +23,8 @@ class LoopsSpec extends SparkSpec {
     val df = spark.range(50).select(col("id"), (col("id") % 7).as("v"))
     val p = graft.util.Loops.pinWithCap(df, 10) // 50 rows > cap
     assert(p.count() == 50)
-    assert(p.select(sum("v")).head.getLong(0)
-      == df.select(sum("v")).head.getLong(0))
+    assert(p.select(sum("v")).head().getLong(0)
+      == df.select(sum("v")).head().getLong(0))
     // demoted: NOT a LocalRelation (fresh rebuilds over the RDD)
     assert(!p.queryExecution.optimizedPlan.collectLeaves()
       .forall(_.getClass.getSimpleName.contains("LocalRelation")))

@@ -252,6 +252,16 @@ class PlanShapeSpec extends SparkSpec {
       "q194 degraded an NP-bounded join to SMJ:\n" + p.take(600))
   }
 
+  test("q208/q215: the pinned edge relation is driver-local — no join, aggregate or exchange") {
+    // both pin corenessPairs: q168's pair moments come off the driver
+    // kernel, so the r, threshold and edge projections fold into it
+    val qe = graft.queries.DesignImage.corenessPairs(spark, sf001).queryExecution
+    val ops = qe.optimizedPlan.collect { case n => n.nodeName }
+    assert(!ops.exists(n => n.contains("Join") || n.contains("Aggregate")),
+      qe.optimizedPlan.toString)
+    assert(!qe.executedPlan.toString.contains("Exchange"), qe.executedPlan.toString)
+  }
+
   test("q116: the Gauss-Jordan solve is projection-only — no exchange in the elimination") {
     // beta = (XtX)^-1 Xty runs as generated per-group projections: the
     // plan's exchanges serve the moment aggregations, the grid join, and

@@ -193,7 +193,7 @@ class PropertySpec extends SparkSpec {
     val doc = Gen.choose(1, 24).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
     val docsGen = Gen.listOfN(12, doc)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
+      df.orderBy(df.columns.toIndexedSeq.map(col): _*).collect().map(_.toString).toSeq
     for (texts <- samples(docsGen, 6)) {
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       for (st <- Seq(1, 2, 5)) {
@@ -295,7 +295,7 @@ class PropertySpec extends SparkSpec {
     val doc = Gen.choose(1, 24).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
     val docsGen = Gen.listOfN(12, doc)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
+      df.orderBy(df.columns.toIndexedSeq.map(col): _*).collect().map(_.toString).toSeq
     for (texts <- samples(docsGen, 6)) {
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       for (b <- Seq(16, 512)) {
@@ -661,5 +661,82 @@ class PropertySpec extends SparkSpec {
       assert(got(graft.queries.DesignImage.dfcStatesAssign(wr)) ===
         got(dfcStatesAssign(wr)), s"sample $gi: $vecs")
     }
+  }
+
+  test("property: driver pair moments equal the t-keyed self-join fold; overflows fail") {
+    val s = spark
+    import s.implicits._
+    type DF = org.apache.spark.sql.DataFrame
+    // The DataFrame fold the kernel replaced, verbatim up to the keys: the
+    // reference.
+    def fold(par: DF, keys: Seq[String]): DF = {
+      val a = par.selectExpr(keys ++ Seq("p AS p1", "t", "pv AS pva"): _*)
+      val b = par.selectExpr(keys ++ Seq("p AS p2", "t", "pv AS pvb"): _*)
+      a.join(b, keys :+ "t").filter(col("p1") < col("p2"))
+        .groupBy((keys ++ Seq("p1", "p2")).map(col): _*)
+        .agg(count(lit(1)).as("n"),
+          sum(expr("CAST(pva AS DECIMAL(38,0)) * pvb")).as("sab"),
+          sum("pva").as("sa"), sum("pvb").as("sb"),
+          sum(expr("CAST(pva AS DECIMAL(38,0)) * pva")).as("saa"),
+          sum(expr("CAST(pvb AS DECIMAL(38,0)) * pvb")).as("sbb"))
+    }
+    // random keyed parcel series: 1–4 keys, each over 1–6 parcels (a key
+    // may hold one) and 8 TRs, a cell present at ~70%, so some pairs share
+    // few t; pv small signed (zeros and negatives), ~2⁵⁹ (products past
+    // 2⁶³) or NULL. Every sample also carries key 100 — two parcels with no
+    // common t — key 200, a single parcel, and key 300, a pair whose one
+    // common t is NULL on one side (NULL sab, sa and saa).
+    val pv = Gen.frequency(6 -> Gen.choose(-40L, 40L).map(Option(_)),
+      2 -> Gen.choose(-(1L << 59), 1L << 59).map(Option(_)),
+      1 -> Gen.const(Option.empty[Long]))
+    val genRel = for {
+      nk <- Gen.choose(1, 4)
+      np <- Gen.listOfN(nk, Gen.choose(1, 6))
+      cells <- Gen.listOfN(nk * 6 * 8, Gen.zip(Gen.choose(0.0, 1.0), pv))
+    } yield {
+      val drawn = for {
+        k <- 0 until nk; p <- 0 until np(k); t <- 0 until 8
+        (u, v) = cells((k * 6 + p) * 8 + t) if u < 0.7
+      } yield (k, p * 3 % 7, t, v)
+      drawn ++ Seq((100, 0, 0, Option(5L)), (100, 0, 1, Option(-3L)),
+        (100, 1, 2, Option(7L)), (100, 1, 3, Option(0L)), (200, 4, 0, Option(9L)),
+        (300, 0, 0, None), (300, 1, 0, Option(4L)), (300, 1, 1, Option(2L)))
+    }
+    val site = "PropertySpec.pairMoments"
+    def sorted(df: DF) = df.collect().map(_.toString).sorted.toSeq
+    val outs = for ((rel, gi) <- samples(genRel, 12).zipWithIndex) yield {
+      val par = new scala.util.Random(gi).shuffle(rel).toDF("k", "p", "t", "pv")
+      val keyed = graft.queries.GraphLoops.pairMoments(par, Seq("k"), site)
+      val ref = fold(par, Seq("k"))
+      assert(keyed.schema === ref.schema, s"sample $gi schema")
+      assert(sorted(keyed) === sorted(ref), s"sample $gi: $rel")
+      val one = par.filter(col("k") === 0).drop("k")
+      assert(sorted(graft.queries.GraphLoops.pairMoments(one, Nil, site)) ===
+        sorted(fold(one, Nil)), s"sample $gi, key 0 unkeyed")
+      keyed.collect()
+    }
+    val rows = outs.flatten
+    assert(!rows.exists(r => Set(100, 200)(r.getInt(0))),
+      "no common t, or a single parcel: no pair row")
+    assert(rows.exists(r => !r.isNullAt(4) &&
+      r.getDecimal(4).abs.compareTo(new java.math.BigDecimal(BigInt(2).pow(63).bigInteger)) > 0),
+      "the sample must push sab past 2⁶³")
+    assert(rows.exists(_.isNullAt(4)) && rows.exists(_.getLong(3) > 1L),
+      "the sample must hold NULL-only and multi-t sums")
+    // planted overflows: sa past BIGINT; saa/sbb/sab past 38 digits with
+    // sa and sb in range (alternating signs)
+    val big = Long.MaxValue / 2 + 1
+    val bigintOver = Seq((0, 0, big), (0, 1, big), (1, 0, 1L), (1, 1, 1L))
+      .toDF("p", "t", "pv")
+    val e1 = intercept[ArithmeticException](
+      graft.queries.GraphLoops.pairMoments(bigintOver, Nil, site))
+    assert(e1.getMessage.contains(site) && e1.getMessage.contains("BIGINT"), e1.getMessage)
+    val x = 3000000000000000000L
+    val decOver = (0 until 12).flatMap(t =>
+      Seq((0, t, if (t % 2 == 0) x else -x), (1, t, if (t % 2 == 0) x else -x)))
+      .toDF("p", "t", "pv")
+    val e2 = intercept[ArithmeticException](
+      graft.queries.GraphLoops.pairMoments(decOver, Nil, site))
+    assert(e2.getMessage.contains(site) && e2.getMessage.contains("DECIMAL(38,0)"), e2.getMessage)
   }
 }

@@ -111,7 +111,7 @@ class StreamMultimodalSpec extends SparkSpec {
       .parquet(dir)
       .as[PackDoc]
     val streamed = StreamOps.runToMemoryAppend(
-        s, StreamOps.streamingContextPack(stream, budget = 4L).toDF.writeStream,
+        s, StreamOps.streamingContextPack(stream, budget = 4L).toDF().writeStream,
         "pack_test")
       .collect()
       .map(r => (r.getLong(0), r.getLong(3), r.getLong(4))).toSet
@@ -153,7 +153,7 @@ class StreamMultimodalSpec extends SparkSpec {
       .as[PackDoc]
     val streamed = StreamOps.runToMemoryAppend(
         s, StreamOps.streamingContextPackSharded(stream, budget = 4L,
-          numShards = 3).toDF.writeStream,
+          numShards = 3).toDF().writeStream,
         "packsh_test")
       .collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(4), r.getLong(5))).toSet
