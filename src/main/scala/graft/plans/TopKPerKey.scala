@@ -226,28 +226,31 @@ object RewriteTopKPerKey extends Rule[LogicalPlan] {
   }
 }
 
-/** Session wiring. `install` uses the public experimental hooks (works on
-  * an already-built session); [[GraftExtensions]] is the
+/** Session wiring — the one hook every entry point calls, so it also
+  * installs [[SortLocalRelation]]. `install` uses the public experimental
+  * hooks (works on an already-built session); [[GraftExtensions]] is the
   * `spark.sql.extensions=graft.plans.GraftExtensions` entry point for
   * config-driven deployments. */
 object TopKPerKey {
+  private val rules = Seq(RewriteTopKPerKey, SortLocalRelation)
   def install(s: SparkSession): Unit = {
     if (!s.experimental.extraStrategies.contains(TopKPerKeyStrategy))
       s.experimental.extraStrategies = TopKPerKeyStrategy +: s.experimental.extraStrategies
-    if (!s.experimental.extraOptimizations.contains(RewriteTopKPerKey))
-      s.experimental.extraOptimizations = RewriteTopKPerKey +: s.experimental.extraOptimizations
+    val missing = rules.filterNot(s.experimental.extraOptimizations.contains)
+    s.experimental.extraOptimizations = missing ++ s.experimental.extraOptimizations
   }
   def uninstall(s: SparkSession): Unit = {
     s.experimental.extraStrategies =
       s.experimental.extraStrategies.filterNot(_ == TopKPerKeyStrategy)
     s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations.filterNot(_ == RewriteTopKPerKey)
+      s.experimental.extraOptimizations.filterNot(rules.contains)
   }
 }
 
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => RewriteTopKPerKey)
+    ext.injectOptimizerRule(_ => SortLocalRelation)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
   }
 }

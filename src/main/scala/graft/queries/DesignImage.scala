@@ -831,9 +831,11 @@ object DesignImage extends QueryModule {
   // pinned once and GraphLoops.pairMoments folds the pair moments on the
   // driver in exact integer arithmetic — no self-join, no second exchange
   // — so r, the threshold and the edge column are projections of one
-  // LocalRelation; only the degree fold is a (broadcast-class) Spark
-  // aggregate. At atlas scale (NP ≈ 10²-10³) the pin is NP·NT rows and
-  // the pair relation NP²/2.
+  // LocalRelation (`connectomePairs`, what every connectome consumer
+  // reads); only the degree fold is a (broadcast-class) Spark aggregate,
+  // and only q168, q178 and q194, whose outputs carry the degrees, run
+  // it. At atlas scale (NP ≈ 10²-10³) the pin is NP·NT rows and the pair
+  // relation NP²/2.
 
   private val connNP = 12
   private val connNumStr =
@@ -858,15 +860,26 @@ object DesignImage extends QueryModule {
     connectomeDegrees(connectomePairs(series), Nil)
 
   /** q168's driver-local (p1, p2, r_par, edge) pair relation without the
-    * degree columns — for the kernels that pin it and never read them. */
+    * degree columns, rows in (p1, p2) order — what every connectome
+    * consumer that never reads the degrees starts from. */
   private[graft] def connectomePairs(series: DataFrame): DataFrame =
-    connectomeThreshold(GraphLoops.pairMoments(parcelSeries(series, Nil), Nil,
+    connectomePairsOf(parcelSeries(series, Nil))
+
+  /** [[connectomePairs]] from an already-built (p, t, pv) parcel series. */
+  private def connectomePairsOf(par: DataFrame): DataFrame =
+    connectomeThreshold(GraphLoops.pairMoments(par, Nil,
       "DesignImage.connectomePairs"), connRStr, Nil)
 
   /** The data-sized parcel aggregate every connectome starts from:
     * (`keys`…, p, t, pv = Σ v) over the coordinate-hash atlas of a
     * (`keys`…, t, x, y, z, v) series, checkpointed — NP·NT rows per key,
-    * the relation [[GraphLoops.pairMoments]] pins. */
+    * the relation [[GraphLoops.pairMoments]] pins.
+    *
+    * The checkpoint stays even where the pin is its only reader: without
+    * it the pin would run the data-sized scan and aggregate itself, in
+    * the pin session (single-partition leaves, one shuffle partition, AQE
+    * off) — the serial data-sized pin of q155/q156. Dropping it needs a
+    * measured claim on `connectome_loops`, which runs this checkpoint. */
   private def parcelSeries(series: DataFrame, keys: Seq[String]): DataFrame =
     series
       .selectExpr(keys ++ Seq(
@@ -957,7 +970,7 @@ object DesignImage extends QueryModule {
   // (donor re-verified).
 
   def graphMetrics(s: SparkSession, d: String): DataFrame =
-    graphMetricsCore(connectomeCore(centsSeries(s, d)))
+    graphMetricsCore(connectomePairs(centsSeries(s, d)))
 
   /** The q173 body from a q168-shaped (p1, p2, r_par, edge, …) pair
     * relation of unique p1 < p2 pairs (the `mom` GROUP BY) — split out so
@@ -1347,8 +1360,8 @@ object DesignImage extends QueryModule {
       .selectExpr("p", "ecc", "COALESCE(n_reach, 0L) AS n_reach",
         "round(CAST(COALESCE(srp, 0L) AS DOUBLE) / (np - 1) / 1e12, 6) AS eff_p",
         "CASE WHEN n_fin > 0 THEN round(CAST(sd AS DOUBLE) / n_fin, 6) END AS cpl",
-        "round(CAST(sr AS DOUBLE) / (CAST(np AS DOUBLE) * (np - 1)) / 1e12, 6) AS eff_glob")
-      .orderBy("p"))
+        "round(CAST(sr AS DOUBLE) / (CAST(np AS DOUBLE) * (np - 1)) / 1e12, 6) AS eff_glob"))
+      .orderBy("p") // the sort stays in the plan, past the pin
   }
 
   // ---- q199: path metrics by FRONTIER BFS (the voxel-regime road) ----------
@@ -1400,8 +1413,8 @@ object DesignImage extends QueryModule {
     // NP-bounded tail over the driver-built vector: pin (r21)
     graft.util.Loops.pin(x.crossJoin(broadcast(x.agg(max("x").as("mx"))))
       .selectExpr("p", "x AS ec_raw",
-        "CASE WHEN mx > 0 THEN round(CAST(x AS DOUBLE) / mx, 6) END AS ec")
-      .orderBy("p"))
+        "CASE WHEN mx > 0 THEN round(CAST(x AS DOUBLE) / mx, 6) END AS ec"))
+      .orderBy("p") // the sort stays in the plan, past the pin
   }
 
   // ---- q204: module roles — participation coefficient + within-module z ---
@@ -1457,7 +1470,7 @@ object DesignImage extends QueryModule {
     "(CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))"
 
   def moduleRoles(s: SparkSession, d: String): DataFrame =
-    moduleRolesCore(connectomeCore(centsSeries(s, d)))
+    moduleRolesCore(connectomePairs(centsSeries(s, d)))
 
   private def moduleRolesSql: String =
     s"""WITH $connectomeCtes,
@@ -1603,8 +1616,10 @@ object DesignImage extends QueryModule {
   // so W = M, w_in = e_in, s_tot = d_tot and qn is the same integer),
   // its columns renamed back to the unweighted names.
   //
-  // Scale shape: everything after the connectome moments is NP²-bounded
-  // (edge relation) with NP-bounded module aggregates — q208's class.
+  // Scale shape: the edge relation is a projection of the driver-local
+  // q168 pair relation (`connectomePairs`: no degree fold, nothing to
+  // checkpoint); LPA runs on the driver over one pin of it, and the
+  // NP-bounded module aggregates are q226's pinned tail — q208's class.
 
   /** q212/q225/q239's modularity relation: the weighted core over a
     * (p1, p2, w = edge) relation, under the unweighted column names
@@ -1614,8 +1629,8 @@ object DesignImage extends QueryModule {
       .toDF("module", "n_nodes", "e_in", "d_tot", "q_contrib", "q")
 
   def modularityQ(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(centsSeries(s, d))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
+    val pe = connectomePairs(centsSeries(s, d))
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w")
     edgeModularity(pe, lpaModules(pe, maxRounds = connNP))
   }
 
@@ -1778,6 +1793,10 @@ object DesignImage extends QueryModule {
   // capped edge collect: per round one gain scan per node over its
   // neighbor entries, O(NP²) integer work with no job; rounds are the
   // fixed louvainRounds. The NP-row labels leave as one LocalRelation.
+  //
+  // Scale shape: q212's — the w = edge relation is a projection of the
+  // driver-local q168 pair relation, read by the detector's collect and
+  // by q226's pinned modularity tail; nothing is checkpointed.
 
   private val louvainRounds = 4
 
@@ -1792,8 +1811,8 @@ object DesignImage extends QueryModule {
   }
 
   def modularityLouvain(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(centsSeries(s, d))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
+    val pe = connectomePairs(centsSeries(s, d))
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w")
     edgeModularity(pe, louvainModules(pe))
   }
 
@@ -1898,8 +1917,9 @@ object DesignImage extends QueryModule {
   // reproduces the same labels (each round halves at best, so 4 rounds
   // cover a 16× aggregation).
   //
-  // Scale shape: q225's — one NP²-bounded edge collect, O(NP²) integer
-  // work per round on the driver, one NP-row LocalRelation out.
+  // Scale shape: q225's — one NP²-bounded collect of the driver-local
+  // edge relation, O(NP²) integer work per round on the driver, one
+  // NP-row LocalRelation out, then q226's pinned modularity tail.
 
   /** Two-level deterministic Louvain over a (p1, p2, w) relation → (p, m)
     * modules. */
@@ -1911,8 +1931,8 @@ object DesignImage extends QueryModule {
   }
 
   def modularityLouvainMulti(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomeCore(centsSeries(s, d))
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w").localCheckpoint()
+    val pe = connectomePairs(centsSeries(s, d))
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS w")
     edgeModularity(pe, louvainTwoLevelModules(pe))
   }
 
@@ -2129,9 +2149,11 @@ object DesignImage extends QueryModule {
   // (w_in/s_tot ≤ 2W ≤ 10¹²) hold through atlas scale, and widen to
   // DECIMAL with the same internal arithmetic beyond it.
   //
-  // Scale shape: identical to the binarized versions — NP²-bounded edge
-  // relations, NP-bounded module/degree/strength aggregates, broadcast
-  // joins, one global-window rank over the NP²-bounded edge list (q227).
+  // Scale shape: the binarized versions' — each w relation is a
+  // projection of the driver-local q168 pair relation (`connectomePairs`:
+  // no degree fold, nothing to checkpoint), and the NP²-bounded edge and
+  // NP-bounded module/degree/strength folds (with q227's one global-window
+  // rank over the edge list) run as one pinned tail, sorted after the pin.
 
   private val wPosStr =
     "CASE WHEN r_par IS NOT NULL AND r_par >= CAST(0.2 AS DOUBLE) " +
@@ -2173,13 +2195,12 @@ object DesignImage extends QueryModule {
       .crossJoin(broadcast(per.agg(sum("qn").as("qsum"))))
       .selectExpr("module", "n_nodes", "w_in", "s_tot",
         "CASE WHEN w_tot > 0 THEN round(CAST(qn AS DOUBLE) / CAST(4 * CAST(w_tot AS DECIMAL(38,0)) * w_tot AS DOUBLE), 6) END AS q_contrib",
-        "CASE WHEN w_tot > 0 THEN round(CAST(qsum AS DOUBLE) / CAST(4 * CAST(w_tot AS DECIMAL(38,0)) * w_tot AS DOUBLE), 6) END AS q")
-      .orderBy("module"))
+        "CASE WHEN w_tot > 0 THEN round(CAST(qsum AS DOUBLE) / CAST(4 * CAST(w_tot AS DECIMAL(38,0)) * w_tot AS DOUBLE), 6) END AS q"))
+      .orderBy("module") // the sort stays in the plan, past the pin
   }
 
   def modularityWeighted(s: SparkSession, d: String): DataFrame = {
-    val base = connectomeCore(centsSeries(s, d))
-      .localCheckpoint() // NP²-bounded; edge + weight consumers
+    val base = connectomePairs(centsSeries(s, d))
     modularityWeightedCore(
       base.selectExpr("p1", "p2", s"$wPosStr AS w"),
       lpaModules(base.selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), maxRounds = connNP))
@@ -2246,11 +2267,14 @@ object DesignImage extends QueryModule {
   // Output = q226's weighted modularity relation over the detected
   // partition, so q226 (LPA partition) and q230 (weighted-Louvain
   // partition) differ in exactly one input.
+  //
+  // Scale shape: q226's — the w relation is a projection of the
+  // driver-local q168 pair relation, shared by the detector's collect and
+  // the pinned modularity tail; nothing is checkpointed.
 
   def modularityWeightedLouvain(s: SparkSession, d: String): DataFrame = {
-    val wp = connectomeCore(centsSeries(s, d))
+    val wp = connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w")
-      .localCheckpoint() // NP²-bounded; detector + modularity consumers
     modularityWeightedCore(wp, louvainModules(wp))
   }
 
@@ -2348,23 +2372,17 @@ object DesignImage extends QueryModule {
        |FROM wper CROSS JOIN wqt
        |ORDER BY module""".stripMargin
 
-  /** Weighted rich-club core from a (p1, p2, w) relation: per degree
-    * level k, φw(k) = W_{>k} / Σ(top-E_{>k} ranked weights) — the van
-    * den Heuvel & Sporns 2011 weighted form. The denominator's ranked
-    * cumulative sum is tie-order-INVARIANT (equal weights straddling
-    * the cut contribute the same sum whichever is counted), so the
-    * row_number tie-break on (p1, p2) cannot move the output. */
-  private[graft] def richClubWeightedCore(wpairs: DataFrame): DataFrame = {
-    val ones = wpairs.filter(col("w") > 0).select("p1", "p2", "w")
-      .localCheckpoint() // NP²-bounded; degree fold + level join + rank
+  /** The rich-club level fold q213 and q227 share, over a (p1, p2, w)
+    * edge relation (w > 0): per degree level k in 1 .. kmax − 1, n_k
+    * nodes of degree > k, and e_k edges (weight sum w_k) with both ends
+    * of degree > k. */
+  private def richClubLevels(ones: DataFrame): DataFrame = {
     val deg = ones.select(col("p1").as("p"))
       .union(ones.select(col("p2").as("p")))
       .groupBy("p").agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // NP-bounded; 3 consumers
     val ks = deg.agg(max("deg").as("kmax"))
       .selectExpr("explode(CASE WHEN kmax >= 2 " +
         "THEN sequence(CAST(1 AS BIGINT), kmax - 1) ELSE array() END) AS k")
-      .localCheckpoint() // ≤ NP rows; 2 consumers
     val nk = broadcast(ks).join(deg, col("deg") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("n_k"))
     val ed = ones
@@ -2373,6 +2391,18 @@ object DesignImage extends QueryModule {
       .selectExpr("least(d1, d2) AS dmin", "w")
     val ek = broadcast(ks).join(ed, col("dmin") > col("k"))
       .groupBy("k").agg(count(lit(1)).as("e_k"), sum("w").as("w_k"))
+    ks.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
+      .na.fill(0L, Seq("n_k", "e_k", "w_k"))
+  }
+
+  /** Weighted rich-club core from a (p1, p2, w) relation: per degree
+    * level k, φw(k) = W_{>k} / Σ(top-E_{>k} ranked weights) — the van
+    * den Heuvel & Sporns 2011 weighted form. The denominator's ranked
+    * cumulative sum is tie-order-INVARIANT (equal weights straddling
+    * the cut contribute the same sum whichever is counted), so the
+    * row_number tie-break on (p1, p2) cannot move the output. */
+  private[graft] def richClubWeightedCore(wpairs: DataFrame): DataFrame = {
+    val ones = wpairs.filter(col("w") > 0).select("p1", "p2", "w")
     val w = graft.util.Windows.boundedGlobalWindow(
       "NP²-bounded undirected edge list", col("w").desc, col("p1"), col("p2"))
     val cum = ones
@@ -2382,16 +2412,16 @@ object DesignImage extends QueryModule {
           "NP²-bounded undirected edge list", col("rk"))
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .select("rk", "cw")
-    ks.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
-      .na.fill(0L, Seq("n_k", "e_k", "w_k"))
+    // NP²-bounded tail over the driver-local edges: one pin (r21)
+    graft.util.Loops.pin(richClubLevels(ones)
       .join(cum.selectExpr("rk AS e_k", "cw"), Seq("e_k"), "left")
       .selectExpr("k", "n_k", "e_k", "w_k",
-        "CASE WHEN e_k > 0 THEN round(CAST(w_k AS DOUBLE) / cw, 6) END AS phi_w")
-      .orderBy("k")
+        "CASE WHEN e_k > 0 THEN round(CAST(w_k AS DOUBLE) / cw, 6) END AS phi_w"))
+      .orderBy("k") // the sort stays in the plan, past the pin
   }
 
   def richClubWeighted(s: SparkSession, d: String): DataFrame =
-    richClubWeightedCore(connectomeCore(centsSeries(s, d))
+    richClubWeightedCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def richClubWeightedSql: String =
@@ -2445,13 +2475,13 @@ object DesignImage extends QueryModule {
     * exports hold to atlas NP (s_jk ≤ 2M·s² — widen to DECIMAL beyond). */
   private[graft] def assortativityWeightedCore(wpairs: DataFrame): DataFrame = {
     val ones = wpairs.filter(col("w") > 0).select("p1", "p2", "w")
-      .localCheckpoint() // NP²-bounded; strength fold + pair join
     val str = ones.selectExpr("p1 AS p", "w")
       .union(ones.selectExpr("p2 AS p", "w"))
       .groupBy("p").agg(sum("w").as("s"))
     val dir = ones.selectExpr("p1 AS a", "p2 AS b")
       .union(ones.selectExpr("p2 AS a", "p1 AS b"))
-    dir
+    // NP²-bounded tail over the driver-local edges: one pin (r21)
+    graft.util.Loops.pin(dir
       .join(broadcast(str.selectExpr("p AS a", "s AS sj")), Seq("a"))
       .join(broadcast(str.selectExpr("p AS b", "s AS sk")), Seq("b"))
       .agg(count(lit(1)).as("m2"),
@@ -2467,12 +2497,12 @@ object DesignImage extends QueryModule {
         "CAST(m2 AS DECIMAL(38,0)) * s_jk - CAST(s_j AS DECIMAL(38,0)) * s_j AS num",
         "CAST(m2 AS DECIMAL(38,0)) * s_jj - CAST(s_j AS DECIMAL(38,0)) * s_j AS den")
       .selectExpr("m2", "s_j", "s_jk", "s_jj",
-        "CASE WHEN den > 0 THEN round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) END AS r_assort")
-      .orderBy("m2")
+        "CASE WHEN den > 0 THEN round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) END AS r_assort"))
+      .orderBy("m2") // the sort stays in the plan, past the pin
   }
 
   def assortativityWeighted(s: SparkSession, d: String): DataFrame =
-    assortativityWeightedCore(connectomeCore(centsSeries(s, d))
+    assortativityWeightedCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def assortativityWeightedSql: String =
@@ -2761,7 +2791,7 @@ object DesignImage extends QueryModule {
   }
 
   def weightedClustering(s: SparkSession, d: String): DataFrame =
-    weightedClusteringCore(connectomeCore(centsSeries(s, d))
+    weightedClusteringCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def weightedClusteringSql: String =
@@ -2810,38 +2840,22 @@ object DesignImage extends QueryModule {
   // edgeless graph yields array() and an empty sweep, matching DuckDB's
   // empty generate_series.
   //
-  // Scale shape: degree fold NP-bounded, level relation ≤ NP rows, the
-  // level×edge theta-join NP³-bounded worst case (q184's class) with the
-  // level side broadcast; no window, no driver state.
+  // Scale shape: the edges are the driver-local q168 pair relation, and
+  // q227's level fold at unit weights — the NP-bounded degree fold, the
+  // ≤ NP-row level relation and the level×edge theta-join (NP³-bounded
+  // worst case, q184's class, level side broadcast) — runs as one pin,
+  // sorted after it; no window.
 
-  private[graft] def richClubCore(pairs0: DataFrame): DataFrame = {
-    val ones = pairs0.filter(col("edge") === 1).select("p1", "p2")
-      .localCheckpoint() // NP²-bounded; degree fold + level join
-    val deg = ones.select(col("p1").as("p"))
-      .union(ones.select(col("p2").as("p")))
-      .groupBy("p").agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // NP-bounded; 3 consumers
-    val ks = deg.agg(max("deg").as("kmax"))
-      .selectExpr("explode(CASE WHEN kmax >= 2 " +
-        "THEN sequence(CAST(1 AS BIGINT), kmax - 1) ELSE array() END) AS k")
-      .localCheckpoint() // ≤ NP rows; 3 consumers
-    val nk = broadcast(ks).join(deg, col("deg") > col("k"))
-      .groupBy("k").agg(count(lit(1)).as("n_k"))
-    val ed = ones
-      .join(broadcast(deg.selectExpr("p AS p1", "deg AS d1")), Seq("p1"))
-      .join(broadcast(deg.selectExpr("p AS p2", "deg AS d2")), Seq("p2"))
-      .selectExpr("least(d1, d2) AS dmin")
-    val ek = broadcast(ks).join(ed, col("dmin") > col("k"))
-      .groupBy("k").agg(count(lit(1)).as("e_k"))
-    ks.join(nk, Seq("k"), "left").join(ek, Seq("k"), "left")
-      .na.fill(0L, Seq("n_k", "e_k"))
+  private[graft] def richClubCore(pairs0: DataFrame): DataFrame =
+    // NP²-bounded tail over the driver-local edges: one pin (r21)
+    graft.util.Loops.pin(richClubLevels(pairs0.filter(col("edge") === 1)
+        .selectExpr("p1", "p2", "CAST(1 AS BIGINT) AS w"))
       .selectExpr("k", "n_k", "e_k",
-        "CASE WHEN n_k >= 2 THEN round(2.0 * e_k / (CAST(n_k AS DOUBLE) * (n_k - 1)), 6) END AS phi")
-      .orderBy("k")
-  }
+        "CASE WHEN n_k >= 2 THEN round(2.0 * e_k / (CAST(n_k AS DOUBLE) * (n_k - 1)), 6) END AS phi"))
+      .orderBy("k") // the sort stays in the plan, past the pin
 
   def richClub(s: SparkSession, d: String): DataFrame =
-    richClubCore(connectomeCore(centsSeries(s, d)))
+    richClubCore(connectomePairs(centsSeries(s, d)))
 
   private def richClubSql: String =
     s"""WITH $connectomeCtes,
@@ -2896,11 +2910,12 @@ object DesignImage extends QueryModule {
   // Engine form: q228's strength-assortativity core at w = edge — a
   // node's strength is then its degree, so every sum is the same integer.
   //
-  // Scale shape: one NP-bounded degree fold, one NP²-bounded pair join
-  // against the broadcast degrees, a single global aggregate row.
+  // Scale shape: q228's — one NP-bounded degree fold, one NP²-bounded
+  // pair join against the broadcast degrees and a single global aggregate
+  // row, run as one pin over the driver-local q168 pair relation.
 
   def assortativity(s: SparkSession, d: String): DataFrame =
-    assortativityWeightedCore(connectomeCore(centsSeries(s, d))
+    assortativityWeightedCore(connectomePairs(centsSeries(s, d))
       .selectExpr("p1", "p2", "edge AS w"))
 
   private def assortativitySql: String =
@@ -2947,11 +2962,12 @@ object DesignImage extends QueryModule {
   // q184's exact fixed-point convention (sr = Σ round(1e12/d) BIGINT,
   // ONE division per output).
   //
-  // Scale shape: one NP window for the two degree rankings (NP rows —
-  // broadcast-class), a |keys|·NP²-bounded keyed edge relation pinned
-  // once, O(|keys|·NP·E) driver BFS work, and the |keys|·NP²-row distance
-  // relation leaves as one LocalRelation. No data-sized work past the
-  // q168 moments.
+  // Scale shape: every relation past the q168 moments is driver-local
+  // and each step is one pin: the NP-row degree ranking (two windows),
+  // the |keys|·NP²-bounded keyed edge relation (shared by the edge counts
+  // and the keyed graphs), O(|keys|·NP·E) driver BFS work, and the
+  // per-key tail over the |keys|·NP²-row distance LocalRelation, sorted
+  // after its pin. No data-sized work past the q168 moments.
 
   private val attackKMax = 3L
 
@@ -2959,7 +2975,7 @@ object DesignImage extends QueryModule {
     val s = pairs0.sparkSession
     import s.implicits._
     val site = "DesignImage.attackCore"
-    val pe = pairs0.select("p1", "p2", "edge").localCheckpoint()
+    val pe = pairs0.select("p1", "p2", "edge")
     val parcels = graft.util.Loops.pin(
       pe.select(col("p1").as("p"))
         .union(pe.select(col("p2").as("p"))).distinct())
@@ -2970,44 +2986,44 @@ object DesignImage extends QueryModule {
           .groupBy("p").agg(count(lit(1)).as("deg")),
         Seq("p"), "left")
       .na.fill(0L, Seq("deg"))
-    val ranked = deg
+    // NP rows; both endpoint joins
+    val ranked = graft.util.Loops.pin(deg
       .withColumn("rhub", row_number()
         .over(graft.util.Windows.boundedGlobalWindow(
           "NP-bounded degree table", col("deg").desc, col("p").asc)).cast("long"))
       .withColumn("rleaf", row_number()
         .over(graft.util.Windows.boundedGlobalWindow(
-          "NP-bounded degree table", col("deg").asc, col("p").asc)).cast("long"))
-      .localCheckpoint() // NP rows (the single-partition window is fine here)
+          "NP-bounded degree table", col("deg").asc, col("p").asc)).cast("long")))
     val ks = Seq("hub", "leaf")
       .flatMap(st => (0L to attackKMax).map(st -> _))
       .toDF("strategy", "k")
-    val onesK = ones
+    // |keys|·NP²-bounded; edge counts + keyed pin
+    val onesK = graft.util.Loops.pin(ones
       .join(broadcast(ranked.selectExpr("p AS p1", "rhub AS ra", "rleaf AS la")), Seq("p1"))
       .join(broadcast(ranked.selectExpr("p AS p2", "rhub AS rb", "rleaf AS lb")), Seq("p2"))
       .crossJoin(broadcast(ks))
       .filter(expr("CASE WHEN strategy = 'hub' THEN ra > k AND rb > k " +
         "ELSE la > k AND lb > k END"))
-      .select("strategy", "k", "p1", "p2")
-      .localCheckpoint() // |keys|·NP²-bounded; edge counts + keyed pin
+      .select("strategy", "k", "p1", "p2"))
     val ec = onesK.groupBy("strategy", "k").agg(count(lit(1)).as("n_edges"))
     val dist = GraphLoops.pinKeyed(onesK.withColumn("edge", lit(1)),
       Seq("strategy", "k"), site).distances(site)
     val st = dist.groupBy("strategy", "k").agg(sum("d").as("sd"),
       count(lit(1)).as("n_fin"),
       sum(expr("CAST(round(1e12 / d, 0) AS BIGINT)")).as("sr"))
-    ks.crossJoin(broadcast(parcels.agg(count(lit(1)).as("np"))))
+    graft.util.Loops.pin(ks.crossJoin(broadcast(parcels.agg(count(lit(1)).as("np"))))
       .join(ec, Seq("strategy", "k"), "left")
       .join(st, Seq("strategy", "k"), "left")
       .na.fill(0L, Seq("n_edges", "sd", "n_fin", "sr"))
       .selectExpr("strategy", "k AS k_removed",
         "greatest(np - k, CAST(0 AS BIGINT)) AS n_nodes", "n_edges",
         "CASE WHEN n_fin > 0 THEN round(CAST(sd AS DOUBLE) / n_fin, 6) END AS cpl",
-        "CASE WHEN np - k >= 2 THEN round(CAST(sr AS DOUBLE) / (CAST(np - k AS DOUBLE) * (np - k - 1)) / 1e12, 6) END AS eff_glob")
-      .orderBy("strategy", "k_removed")
+        "CASE WHEN np - k >= 2 THEN round(CAST(sr AS DOUBLE) / (CAST(np - k AS DOUBLE) * (np - k - 1)) / 1e12, 6) END AS eff_glob"))
+      .orderBy("strategy", "k_removed") // the sort stays in the plan, past the pin
   }
 
   def attackRobustness(s: SparkSession, d: String): DataFrame =
-    attackCore(connectomeCore(centsSeries(s, d)))
+    attackCore(connectomePairs(centsSeries(s, d)))
 
   private def attackSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -3207,12 +3223,16 @@ object DesignImage extends QueryModule {
 
   /** The shared (ws, p1, p2, r_fp) windowed-correlation relation of the
     * dFC family (q223 variability + q229 state clustering). */
-  private[graft] def dfcWindowR(series: DataFrame): DataFrame = {
-    val s = series.sparkSession
+  private[graft] def dfcWindowR(series: DataFrame): DataFrame =
+    dfcWindowROf(parcelSeries(series, Nil))
+
+  /** [[dfcWindowR]] from an already-built (p, t, pv) parcel series. */
+  private def dfcWindowROf(par: DataFrame): DataFrame = {
+    val s = par.sparkSession
     import s.implicits._
     // each window's (ws, p, t, pv) slice of the parcel series: ≤ wl/step
     // = 2 live windows per TR, expanded before the pin
-    val pw = parcelSeries(series, Nil).crossJoin(broadcast(dfcStarts.toDF("ws")))
+    val pw = par.crossJoin(broadcast(dfcStarts.toDF("ws")))
       .filter(expr(s"t >= ws AND t < ws + $dfcWl"))
     GraphLoops.pairMoments(pw, Seq("ws"), "DesignImage.dfcWindowR")
       .selectExpr("ws", "p1", "p2",
@@ -3872,10 +3892,12 @@ object DesignImage extends QueryModule {
   // membership. A single-member module has no within partners →
   // recruitment NULL (not 0 — the q32-class honest-null rule).
   //
-  // Scale shape: the q236 keyed chain + the q208 static chain (both
-  // connectome-moment dominated, sharing ONE voxel-series pass via the
-  // checkpointed input; each a driver LPA over one pin), then a
-  // |W|·NP²-bounded ordered-pair fold and an NP-bounded output.
+  // Scale shape: ONE data-sized exchange — the parcel-series aggregate,
+  // checkpointed once and pinned by both chains: the q236 keyed chain
+  // (window pair moments, driver LPA per window) and the q208 static
+  // chain (pair moments, driver LPA). Past it every relation is
+  // driver-local: a |W|·NP²-bounded ordered-pair fold and an NP-bounded
+  // output, pinned as one tail.
 
   /** Recruitment/integration from a (ws, p1, p2, r_fp) windowed-
     * correlation relation and a (p, m) static module relation. */
@@ -3908,11 +3930,10 @@ object DesignImage extends QueryModule {
   }
 
   def recruitment(s: SparkSession, d: String): DataFrame = {
-    val vox = centsSeries(s, d)
-      .localCheckpoint() // ONE voxel-series pass feeds both chains
-    val pe = connectomeCore(vox)
-      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge").localCheckpoint()
-    recruitmentCore(dfcWindowR(vox), lpaModules(pe, maxRounds = connNP))
+    val par = parcelSeries(centsSeries(s, d), Nil) // ONE aggregate, both chains
+    val pe = connectomePairsOf(par)
+      .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge")
+    recruitmentCore(dfcWindowROf(par), lpaModules(pe, maxRounds = connNP))
   }
 
   private def recruitmentSql: String =
@@ -4172,7 +4193,7 @@ object DesignImage extends QueryModule {
   }
 
   def smallWorld(s: SparkSession, d: String): DataFrame =
-    smallWorldCore(connectomeCore(centsSeries(s, d)))
+    smallWorldCore(connectomePairs(centsSeries(s, d)))
 
   private def smallWorldSql: String =
     s"""WITH RECURSIVE $connectomeCtes,

@@ -262,6 +262,41 @@ class PlanShapeSpec extends SparkSpec {
     assert(!qe.executedPlan.toString.contains("Exchange"), qe.executedPlan.toString)
   }
 
+  test("q213/q214/q218/q227/q228: the graph tail is pinned — LocalRelation leaves, only a sort") {
+    // each reads q168's driver-local pair relation and pins its whole
+    // NP²-bounded tail: the parcel aggregate is the one checkpoint built,
+    // and nothing past the pin re-plans a join, aggregate or window
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    for (name <- Seq("q213_rich_club", "q214_assortativity",
+        "q218_attack_robustness", "q227_rich_club_weighted",
+        "q228_assortativity_strength")) {
+      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          j.stageInfos.map(_.name).find(_.startsWith("localCheckpoint")).foreach(sites.add)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val df = try SparkEntry.queries(name)(spark, sf001) finally {
+        org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(sites.size == 1, s"$name checkpoints at $sites")
+      val p = df.queryExecution.optimizedPlan
+      assert(p.collectLeaves().forall(_.nodeName == "LocalRelation"), s"$name:\n$p")
+      val ops = p.collect { case n => n.nodeName }
+      assert(!ops.exists(n => n.contains("Join") || n.contains("Aggregate") ||
+        n.contains("Window")), s"$name:\n$p")
+      // what is left is a sort of the pinned rows, which the installed
+      // SortLocalRelation runs on the driver: the same rows, same order
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      graft.plans.SortLocalRelation(p) match {
+        case l: LocalRelation => assert(l.data.map(toRow) == df.collect().toSeq, name)
+        case other => fail(s"$name: the sort did not fold:\n$other")
+      }
+    }
+  }
+
   test("q116: the Gauss-Jordan solve is projection-only — no exchange in the elimination") {
     // beta = (XtX)^-1 Xty runs as generated per-group projections: the
     // plan's exchanges serve the moment aggregations, the grid join, and
