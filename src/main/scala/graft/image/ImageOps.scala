@@ -455,15 +455,22 @@ object ImageOps {
     * `lineitem` like [[voxelGrid]], with `t` a key residue over `nT` TRs;
     * the DuckDB oracle rebuilds it identically. */
   def voxelSeries(lineitem: DataFrame, l: Int, nT: Int): DataFrame =
-    lineitem
-      .groupBy(
-        ((col("l_orderkey") + col("l_linenumber") * 11) % nT).cast("int").as("t"),
-        (col("l_orderkey") % l).cast("int").as("x"),
-        (col("l_partkey") % l).cast("int").as("y"),
-        (col("l_suppkey") % l).cast("int").as("z"),
-      )
-      .agg((sum(round(col("l_quantity") * 100).cast("long")) / 100.0)
+    voxelRows(lineitem, l, nT)
+      .groupBy("t", "x", "y", "z")
+      .agg((sum("v") / 100.0)
         .cast("decimal(18,2)").as("value_dec")) // see voxelGrid's note
+
+  /** The row grain under [[voxelSeries]]: one (t, x, y, z, v) row per
+    * lineitem row, `v` its quantity in integer cents. A consumer that only
+    * sums `v` over a function of (t, x, y, z) — an atlas-zone sum — reads
+    * these rows directly and skips the voxel aggregate's exchange. */
+  def voxelRows(lineitem: DataFrame, l: Int, nT: Int): DataFrame =
+    lineitem.select(
+      ((col("l_orderkey") + col("l_linenumber") * 11) % nT).cast("int").as("t"),
+      (col("l_orderkey") % l).cast("int").as("x"),
+      (col("l_partkey") % l).cast("int").as("y"),
+      (col("l_suppkey") % l).cast("int").as("z"),
+      round(col("l_quantity") * 100).cast("long").as("v"))
 
   /** A4 proper — PER-TR global signal (nb cell 42 `np.mean(data, axis=1)`
     * over the masked 4-D series): for each TR, the count and exact-decimal

@@ -504,10 +504,16 @@ object DesignImage extends QueryModule {
 
   /** The (t, x, y, z, v) voxel series in integer cents — the engine twin
     * of [[centsSeriesCte]]. */
-  private def centsSeries(s: SparkSession, d: String): DataFrame =
+  private[graft] def centsSeries(s: SparkSession, d: String): DataFrame =
     ImageOps.voxelSeries(lineitem(s, d), L, NT)
       .select(col("t"), col("x"), col("y"), col("z"),
         expr("CAST(value_dec * 100 AS BIGINT)").as("v"))
+
+  /** [[centsSeries]] before its voxel aggregate: one (t, x, y, z, v) row
+    * per lineitem row — what every parcel series sums (see
+    * [[parcelSeries]]). */
+  private[graft] def centsRows(s: SparkSession, d: String): DataFrame =
+    ImageOps.voxelRows(lineitem(s, d), L, NT)
 
   /** Shared oracle prefix: the cents voxel series — reused by q158/q166
     * (via [[seedSeriesCtes]]) and q167 (oracle-sharing discipline). */
@@ -826,16 +832,17 @@ object DesignImage extends QueryModule {
   // semantics (n = NT); r is the shared expression, ROUNDED to 6 dp
   // BEFORE thresholding so an engine's last-ulp can't flip an edge.
   //
-  // Scale shape: ONE data-sized exchange (the parcel-series aggregate,
-  // combining map-side to NP·NT rows, checkpointed). That checkpoint is
-  // pinned once and GraphLoops.pairMoments folds the pair moments on the
-  // driver in exact integer arithmetic — no self-join, no second exchange
-  // — so r, the threshold and the edge column are projections of one
-  // LocalRelation (`connectomePairs`, what every connectome consumer
-  // reads); only the degree fold is a (broadcast-class) Spark aggregate,
-  // and only q168, q178 and q194, whose outputs carry the degrees, run
-  // it. At atlas scale (NP ≈ 10²-10³) the pin is NP·NT rows and the pair
-  // relation NP²/2.
+  // Scale shape: ONE data-sized exchange — lineitem rows summed straight
+  // into the parcel series, combining map-side to NP·NT rows, with no
+  // voxel aggregate between — and one collect of those rows to the driver
+  // (parcelSeries' gather). GraphLoops.pairMoments folds the pair moments
+  // there in exact integer arithmetic — no self-join, no checkpoint, no
+  // second exchange — so r, the threshold and the edge column are
+  // projections of one LocalRelation (`connectomePairs`, what every
+  // connectome consumer reads); only the degree fold is a
+  // (broadcast-class) Spark aggregate, and only q168, q178 and q194, whose
+  // outputs carry the degrees, run it. At atlas scale (NP ≈ 10²-10³) the
+  // gather is NP·NT rows and the pair relation NP²/2.
 
   private val connNP = 12
   private val connNumStr =
@@ -852,7 +859,7 @@ object DesignImage extends QueryModule {
       "THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END"
 
   def connectome(s: SparkSession, d: String): DataFrame =
-    connectomeCore(centsSeries(s, d))
+    connectomeCore(centsRows(s, d))
 
   /** The q168 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant parcel series. */
@@ -872,20 +879,27 @@ object DesignImage extends QueryModule {
 
   /** The data-sized parcel aggregate every connectome starts from:
     * (`keys`…, p, t, pv = Σ v) over the coordinate-hash atlas of a
-    * (`keys`…, t, x, y, z, v) series, checkpointed — NP·NT rows per key,
-    * the relation [[GraphLoops.pairMoments]] pins.
+    * (`keys`…, t, x, y, z, v) series — NP·NT rows per key, the relation
+    * [[GraphLoops.pairMoments]] pins.
     *
-    * The checkpoint stays even where the pin is its only reader: without
-    * it the pin would run the data-sized scan and aggregate itself, in
-    * the pin session (single-partition leaves, one shuffle partition, AQE
-    * off) — the serial data-sized pin of q155/q156. Dropping it needs a
-    * measured claim on `connectome_loops`, which runs this checkpoint. */
-  private def parcelSeries(series: DataFrame, keys: Seq[String]): DataFrame =
-    series
+    * The series may be at row grain (one row per lineitem row, several
+    * per voxel) or at voxel grain: p is a function of (x, y, z) and pv a
+    * plain integer sum, so both give the same pv. The voxel series'
+    * `S / 100.0 → DECIMAL(18,2) → × 100 → BIGINT` round trip returns
+    * every voxel sum S below 2⁵² cents unchanged, so up to that bound the
+    * row-grain pv equals the voxel-grain one exactly; the row grain skips
+    * the voxel exchange, leaving ONE data-sized exchange.
+    *
+    * The aggregate ends in [[graft.util.Loops.gather]]: one capped collect
+    * on the caller's session (full parallelism, AQE), returned as a
+    * LocalRelation, so the pin and every other reader read driver-local
+    * rows — no checkpoint, no second job over the scan. */
+  private[graft] def parcelSeries(series: DataFrame, keys: Seq[String]): DataFrame =
+    graft.util.Loops.gather(series
       .selectExpr(keys ++ Seq(
         s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p", "t", "v"): _*)
-      .groupBy((keys ++ Seq("p", "t")).map(col): _*).agg(sum("v").as("pv"))
-      .localCheckpoint()
+      .groupBy((keys ++ Seq("p", "t")).map(col): _*).agg(sum("v").as("pv")),
+      "DesignImage.parcelSeries")
 
   /** The shared moments → r → edges → degrees tail of q168/q178, in two
     * steps: threshold the rounded r, then fold per-parcel degree and join
@@ -970,7 +984,7 @@ object DesignImage extends QueryModule {
   // (donor re-verified).
 
   def graphMetrics(s: SparkSession, d: String): DataFrame =
-    graphMetricsCore(connectomePairs(centsSeries(s, d)))
+    graphMetricsCore(connectomePairs(centsRows(s, d)))
 
   /** The q173 body from a q168-shaped (p1, p2, r_par, edge, …) pair
     * relation of unique p1 < p2 pairs (the `mom` GROUP BY) — split out so
@@ -1043,10 +1057,11 @@ object DesignImage extends QueryModule {
   // permutation arithmetic plus the shared t expression strings.
   //
   // Scale shape: ONE data-sized exchange (the per-session parcel-series
-  // aggregate, map-side combined to GRuns·NP·NT rows, checkpointed); the
-  // driver pair-moment kernel (GraphLoops.pairMoments, key g) pins it
-  // once and returns the GRuns·NP² moments as a LocalRelation that r and
-  // z project; the PermP expansion and BH are GRuns·NP²-bounded. BH ranks
+  // aggregate over lineitem rows, map-side combined to GRuns·NP·NT rows
+  // and gathered to the driver once); the driver pair-moment kernel
+  // (GraphLoops.pairMoments, key g) returns the GRuns·NP² moments as a
+  // LocalRelation that r and z project; the PermP expansion and BH are
+  // GRuns·NP²-bounded. BH ranks
   // via the distinct-p relation — never a global window over the edge set.
 
   private val GRuns = 4
@@ -1056,17 +1071,23 @@ object DesignImage extends QueryModule {
     "CASE WHEN r_par > -1.0 AND r_par < 1.0 " +
       "THEN 0.5 * ln((1.0 + r_par) / (1.0 - r_par)) END"
 
-  /** The per-session cents series (g, t, x, y, z, v). */
+  /** The per-session cents series (g, t, x, y, z, v) at row grain — one
+    * row per lineitem row, summed by [[parcelSeries]]. */
   private def sessionSeries(s: SparkSession, d: String): DataFrame =
     lineitem(s, d)
-      .groupBy(
+      .select(
         (col("l_linenumber") % GRuns).cast("int").as("g"),
         ((col("l_orderkey") + col("l_linenumber") * 11) % NT).cast("int").as("t"),
         (col("l_orderkey") % L).cast("int").as("x"),
         (col("l_partkey") % L).cast("int").as("y"),
-        (col("l_suppkey") % L).cast("int").as("z"))
-      .agg((sum(col("l_quantity").cast("decimal(18,2)")) * 100)
-        .cast("long").as("v"))
+        (col("l_suppkey") % L).cast("int").as("z"),
+        rowCents)
+
+  /** A lineitem row's quantity in integer cents, exact through DECIMAL:
+    * summed per voxel it equals the oracle's
+    * `CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS BIGINT)`. */
+  private def rowCents =
+    expr("CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT)").as("v")
 
   /** Per-session per-edge Fisher-z facts (g, p1, p2, z_fp) from a
     * (g, t, x, y, z, v-cents) series — the first-level relation the
@@ -1470,7 +1491,7 @@ object DesignImage extends QueryModule {
     "(CAST(s2 AS DOUBLE) / n - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n))"
 
   def moduleRoles(s: SparkSession, d: String): DataFrame =
-    moduleRolesCore(connectomePairs(centsSeries(s, d)))
+    moduleRolesCore(connectomePairs(centsRows(s, d)))
 
   private def moduleRolesSql: String =
     s"""WITH $connectomeCtes,
@@ -1510,7 +1531,7 @@ object DesignImage extends QueryModule {
        |ORDER BY o.p""".stripMargin
 
   def eigenCentrality(s: SparkSession, d: String): DataFrame =
-    eigenCentralityCore(connectomePairs(centsSeries(s, d)))
+    eigenCentralityCore(connectomePairs(centsRows(s, d)))
 
   // ---- q208: data-driven modules (label propagation) + module roles -------
   // Closes q204's declared gap: the named practice (Power et al. 2011;
@@ -1629,7 +1650,7 @@ object DesignImage extends QueryModule {
       .toDF("module", "n_nodes", "e_in", "d_tot", "q_contrib", "q")
 
   def modularityQ(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomePairs(centsSeries(s, d))
+    val pe = connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS w")
     edgeModularity(pe, lpaModules(pe, maxRounds = connNP))
   }
@@ -1811,7 +1832,7 @@ object DesignImage extends QueryModule {
   }
 
   def modularityLouvain(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomePairs(centsSeries(s, d))
+    val pe = connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS w")
     edgeModularity(pe, louvainModules(pe))
   }
@@ -1931,7 +1952,7 @@ object DesignImage extends QueryModule {
   }
 
   def modularityLouvainMulti(s: SparkSession, d: String): DataFrame = {
-    val pe = connectomePairs(centsSeries(s, d))
+    val pe = connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS w")
     edgeModularity(pe, louvainTwoLevelModules(pe))
   }
@@ -2069,7 +2090,7 @@ object DesignImage extends QueryModule {
   }
 
   def betweenness(s: SparkSession, d: String): DataFrame =
-    betweennessCore(connectomePairs(centsSeries(s, d))
+    betweennessCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), bcSources)
 
   private def betweennessSql: String = {
@@ -2200,7 +2221,7 @@ object DesignImage extends QueryModule {
   }
 
   def modularityWeighted(s: SparkSession, d: String): DataFrame = {
-    val base = connectomePairs(centsSeries(s, d))
+    val base = connectomePairs(centsRows(s, d))
     modularityWeightedCore(
       base.selectExpr("p1", "p2", s"$wPosStr AS w"),
       lpaModules(base.selectExpr("p1", "p2", s"$lpaEdgeStr AS edge"), maxRounds = connNP))
@@ -2273,7 +2294,7 @@ object DesignImage extends QueryModule {
   // the pinned modularity tail; nothing is checkpointed.
 
   def modularityWeightedLouvain(s: SparkSession, d: String): DataFrame = {
-    val wp = connectomePairs(centsSeries(s, d))
+    val wp = connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w")
     modularityWeightedCore(wp, louvainModules(wp))
   }
@@ -2421,7 +2442,7 @@ object DesignImage extends QueryModule {
   }
 
   def richClubWeighted(s: SparkSession, d: String): DataFrame =
-    richClubWeightedCore(connectomePairs(centsSeries(s, d))
+    richClubWeightedCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def richClubWeightedSql: String =
@@ -2502,7 +2523,7 @@ object DesignImage extends QueryModule {
   }
 
   def assortativityWeighted(s: SparkSession, d: String): DataFrame =
-    assortativityWeightedCore(connectomePairs(centsSeries(s, d))
+    assortativityWeightedCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def assortativityWeightedSql: String =
@@ -2590,7 +2611,7 @@ object DesignImage extends QueryModule {
   }
 
   def pathMetricsWeighted(s: SparkSession, d: String): DataFrame =
-    pathMetricsWeightedCore(connectomePairs(centsSeries(s, d))
+    pathMetricsWeightedCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   /** The q234/q247 connection length ℓ = round(1e12 / w) as the pinned
@@ -2673,7 +2694,7 @@ object DesignImage extends QueryModule {
       .selectExpr("p", "round(CAST(t AS DOUBLE) / 1e12, 6) AS bc_w")
 
   def betweennessWeighted(s: SparkSession, d: String): DataFrame =
-    betweennessWeightedCore(connectomePairs(centsSeries(s, d))
+    betweennessWeightedCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"), bcSources)
 
   private def betweennessWeightedSql: String = {
@@ -2791,7 +2812,7 @@ object DesignImage extends QueryModule {
   }
 
   def weightedClustering(s: SparkSession, d: String): DataFrame =
-    weightedClusteringCore(connectomePairs(centsSeries(s, d))
+    weightedClusteringCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$wPosStr AS w"))
 
   private def weightedClusteringSql: String =
@@ -2855,7 +2876,7 @@ object DesignImage extends QueryModule {
       .orderBy("k") // the sort stays in the plan, past the pin
 
   def richClub(s: SparkSession, d: String): DataFrame =
-    richClubCore(connectomePairs(centsSeries(s, d)))
+    richClubCore(connectomePairs(centsRows(s, d)))
 
   private def richClubSql: String =
     s"""WITH $connectomeCtes,
@@ -2915,7 +2936,7 @@ object DesignImage extends QueryModule {
   // row, run as one pin over the driver-local q168 pair relation.
 
   def assortativity(s: SparkSession, d: String): DataFrame =
-    assortativityWeightedCore(connectomePairs(centsSeries(s, d))
+    assortativityWeightedCore(connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", "edge AS w"))
 
   private def assortativitySql: String =
@@ -3023,7 +3044,7 @@ object DesignImage extends QueryModule {
   }
 
   def attackRobustness(s: SparkSession, d: String): DataFrame =
-    attackCore(connectomePairs(centsSeries(s, d)))
+    attackCore(connectomePairs(centsRows(s, d)))
 
   private def attackSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -3136,7 +3157,7 @@ object DesignImage extends QueryModule {
     * spec can pin round-count convergence on the REAL fixture graph,
     * not just planted shapes. */
   private[graft] def corenessPairs(s: SparkSession, d: String): DataFrame =
-    connectomePairs(centsSeries(s, d))
+    connectomePairs(centsRows(s, d))
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge")
 
   def coreness(s: SparkSession, d: String): DataFrame =
@@ -3200,13 +3221,13 @@ object DesignImage extends QueryModule {
   // window (count skips them); a pair flat in EVERY window reads
   // n_win = 0 with NULL mean/sd.
   //
-  // Scale shape: one data-sized exchange (the parcel-series aggregate,
-  // checkpointed); the window expansion multiplies the NP·NT relation by
-  // ≤ wl/step = 2 live windows per TR, and that expansion is pinned once
-  // to the driver pair-moment kernel (GraphLoops.pairMoments, key ws),
-  // which returns the |w|·NP² window moments as a LocalRelation — no
-  // pair join. The across-window moments are |w|·NP²-bounded. No window
-  // function.
+  // Scale shape: one data-sized exchange (the parcel-series aggregate over
+  // lineitem rows, gathered to the driver once); the window expansion
+  // multiplies that NP·NT relation by ≤ wl/step = 2 live windows per TR,
+  // and the expansion is pinned once to the driver pair-moment kernel
+  // (GraphLoops.pairMoments, key ws), which returns the |w|·NP² window
+  // moments as a LocalRelation — no pair join. The across-window moments
+  // are |w|·NP²-bounded. No window function.
 
   private val dfcWl = 10
   private val dfcStep = 5
@@ -3252,7 +3273,7 @@ object DesignImage extends QueryModule {
       .orderBy("p1", "p2")
 
   def dynamicConnectivity(s: SparkSession, d: String): DataFrame =
-    dfcCore(centsSeries(s, d))
+    dfcCore(centsRows(s, d))
 
   private def dynamicConnectivitySql: String =
     s"""WITH $centsSeriesCte,
@@ -3359,7 +3380,7 @@ object DesignImage extends QueryModule {
 
   def dfcStates(s: SparkSession, d: String): DataFrame =
     dfcStatesFromVectors(
-      dfcWindowR(centsSeries(s, d))
+      dfcWindowR(centsRows(s, d))
         .selectExpr("ws", "p1", "p2", "COALESCE(r_fp, CAST(0 AS BIGINT)) AS v"))
 
   /** The generated series → window-vector CTE prefix (ends in
@@ -3551,7 +3572,7 @@ object DesignImage extends QueryModule {
 
   def dfcTransitions(s: SparkSession, d: String): DataFrame =
     dfcTransitionsFromVectors(
-      dfcWindowR(centsSeries(s, d))
+      dfcWindowR(centsRows(s, d))
         .selectExpr("ws", "p1", "p2", "COALESCE(r_fp, CAST(0 AS BIGINT)) AS v"))
 
   private def dfcTransitionsSql: String =
@@ -3649,7 +3670,7 @@ object DesignImage extends QueryModule {
   }
 
   def dfcModuleStability(s: SparkSession, d: String): DataFrame =
-    dfcModuleStabilityCore(dfcWindowR(centsSeries(s, d)))
+    dfcModuleStabilityCore(dfcWindowR(centsRows(s, d)))
 
   /** The keyed LPA round CTEs: klp0 … klp{rounds} over
     * kparcels(ws, p) / ksym(ws, p, q), ending in `klpmod(ws, p, lab)`.
@@ -3761,7 +3782,7 @@ object DesignImage extends QueryModule {
   }
 
   def dfcFlexibility(s: SparkSession, d: String): DataFrame =
-    dfcFlexibilityCore(dfcWindowR(centsSeries(s, d)))
+    dfcFlexibilityCore(dfcWindowR(centsRows(s, d)))
 
   private def dfcFlexibilitySql: String =
     s"""WITH $dfcVectorCtes,
@@ -3849,7 +3870,7 @@ object DesignImage extends QueryModule {
   }
 
   def moduleAllegiance(s: SparkSession, d: String): DataFrame =
-    moduleAllegianceCore(dfcWindowR(centsSeries(s, d)))
+    moduleAllegianceCore(dfcWindowR(centsRows(s, d)))
 
   private def moduleAllegianceSql: String =
     s"""WITH $dfcVectorCtes,
@@ -3892,12 +3913,12 @@ object DesignImage extends QueryModule {
   // membership. A single-member module has no within partners →
   // recruitment NULL (not 0 — the q32-class honest-null rule).
   //
-  // Scale shape: ONE data-sized exchange — the parcel-series aggregate,
-  // checkpointed once and pinned by both chains: the q236 keyed chain
-  // (window pair moments, driver LPA per window) and the q208 static
-  // chain (pair moments, driver LPA). Past it every relation is
-  // driver-local: a |W|·NP²-bounded ordered-pair fold and an NP-bounded
-  // output, pinned as one tail.
+  // Scale shape: ONE data-sized exchange — the parcel-series aggregate
+  // over lineitem rows, gathered to the driver once and read by both
+  // chains: the q236 keyed chain (window pair moments, driver LPA per
+  // window) and the q208 static chain (pair moments, driver LPA). Past it
+  // every relation is driver-local: a |W|·NP²-bounded ordered-pair fold
+  // and an NP-bounded output, pinned as one tail.
 
   /** Recruitment/integration from a (ws, p1, p2, r_fp) windowed-
     * correlation relation and a (p, m) static module relation. */
@@ -3930,7 +3951,7 @@ object DesignImage extends QueryModule {
   }
 
   def recruitment(s: SparkSession, d: String): DataFrame = {
-    val par = parcelSeries(centsSeries(s, d), Nil) // ONE aggregate, both chains
+    val par = parcelSeries(centsRows(s, d), Nil) // ONE aggregate, both chains
     val pe = connectomePairsOf(par)
       .selectExpr("p1", "p2", s"$lpaEdgeStr AS edge")
     recruitmentCore(dfcWindowROf(par), lpaModules(pe, maxRounds = connNP))
@@ -4040,7 +4061,7 @@ object DesignImage extends QueryModule {
   }
 
   def percolation(s: SparkSession, d: String): DataFrame =
-    percolationCore(connectomePairs(centsSeries(s, d)))
+    percolationCore(connectomePairs(centsRows(s, d)))
 
   private def percolationSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -4112,7 +4133,7 @@ object DesignImage extends QueryModule {
   }
 
   def pathMetrics(s: SparkSession, d: String): DataFrame =
-    pathMetricsCore(connectomePairs(centsSeries(s, d)))
+    pathMetricsCore(connectomePairs(centsRows(s, d)))
 
   private def pathMetricsSql: String =
     // NOTE: under WITH RECURSIVE, DuckDB gives ANY top-level-UNION CTE
@@ -4193,7 +4214,7 @@ object DesignImage extends QueryModule {
   }
 
   def smallWorld(s: SparkSession, d: String): DataFrame =
-    smallWorldCore(connectomePairs(centsSeries(s, d)))
+    smallWorldCore(connectomePairs(centsRows(s, d)))
 
   private def smallWorldSql: String =
     s"""WITH RECURSIVE $connectomeCtes,
@@ -4271,9 +4292,9 @@ object DesignImage extends QueryModule {
   // diagonal-hit verdict.
   //
   // Scale shape: ONE data-sized exchange (the (g, h)-keyed parcel-series
-  // aggregate, checkpointed and pinned once to the driver pair-moment
-  // kernel, GraphLoops.pairMoments, keys g and h); moments, r, and the
-  // identification matrix are GRuns·NP²-bounded; the argmax window
+  // aggregate over lineitem rows, gathered to the driver once for the
+  // pair-moment kernel, GraphLoops.pairMoments, keys g and h); moments, r,
+  // and the identification matrix are GRuns·NP²-bounded; the argmax window
   // partitions by ga over GRuns²-sized rows. At atlas scale the edge vectors are the standing
   // per-scan artifact (NP²/2 rows each) a fingerprint service stores.
 
@@ -4323,19 +4344,18 @@ object DesignImage extends QueryModule {
   }
 
   /** The (g, h, t, x, y, z, v) two-scans-per-session series feeding
-    * q183 and q190. */
+    * q183 and q190, at row grain like [[sessionSeries]]. */
   private def fpSeries(s: SparkSession, d: String): DataFrame =
     lineitem(s, d)
-      .groupBy(
+      .select(
         (col("l_linenumber") % GRuns).cast("int").as("g"),
         (col("l_extendedprice").cast("decimal(18,2)") * 100)
           .cast("long").mod(2).cast("int").as("h"),
         ((col("l_orderkey") + col("l_linenumber") * 11) % NT).cast("int").as("t"),
         (col("l_orderkey") % L).cast("int").as("x"),
         (col("l_partkey") % L).cast("int").as("y"),
-        (col("l_suppkey") % L).cast("int").as("z"))
-      .agg((sum(col("l_quantity").cast("decimal(18,2)")) * 100)
-        .cast("long").as("v"))
+        (col("l_suppkey") % L).cast("int").as("z"),
+        rowCents)
 
   def fingerprint(s: SparkSession, d: String): DataFrame =
     fingerprintCore(scanEdgeVectors(fpSeries(s, d)))
@@ -4352,11 +4372,11 @@ object DesignImage extends QueryModule {
   // exact integer series. Same edge/degree tail semantics as q168
   // (threshold the ROUNDED partial r at |r| ≥ 0.1).
   //
-  // Scale shape: ONE data-sized exchange (the parcel-series aggregate,
-  // checkpointed); g and the parcel-vs-g moments are NT- and NP-bounded
-  // Spark aggregates over it; the NP² pair moments come off the driver
-  // (GraphLoops.pairMoments pins the checkpoint once) as a LocalRelation;
-  // the partial-r projection and q168's degree fold are broadcast-class.
+  // Scale shape: ONE data-sized exchange (the parcel-series aggregate over
+  // lineitem rows, gathered to the driver once); the NP² pair moments come
+  // off the driver (GraphLoops.pairMoments) as a LocalRelation, and g, the
+  // NP-bounded parcel-vs-g moments and the partial-r joins over them run
+  // as ONE pin; q168's degree fold is broadcast-class.
   // Undefined guards: any degenerate marginal
   // (zero-variance parcel or |r_xg| = 1 — a parcel that IS the global
   // signal) yields NULL r, never a fabricated edge.
@@ -4386,16 +4406,18 @@ object DesignImage extends QueryModule {
            |  sqrt($NT * CAST(sgg AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE))) END AS r_pg""".stripMargin.replace("\n", " "))
     val mom = GraphLoops.pairMoments(par, Nil, "DesignImage.gsrConnectomeCore")
       .selectExpr("p1", "p2", s"$connRStr AS r_xy")
-    val pairs = mom
+    // every input is driver-local and NP²-bounded: one pin runs the
+    // marginals and the partial-r joins in one task each
+    val pairs = graft.util.Loops.pin(mom
       .join(broadcast(pg.selectExpr("p AS p1", "r_pg AS r_xg")), Seq("p1"))
       .join(broadcast(pg.selectExpr("p AS p2", "r_pg AS r_yg")), Seq("p2"))
       .selectExpr("p1", "p2", s"round($gsrPartialStr, 6) AS r_par")
-      .selectExpr("p1", "p2", "r_par", s"$connEdgeStr AS edge")
+      .selectExpr("p1", "p2", "r_par", s"$connEdgeStr AS edge"))
     connectomeDegrees(pairs, Nil)
   }
 
   def gsrConnectome(s: SparkSession, d: String): DataFrame =
-    gsrConnectomeCore(centsSeries(s, d))
+    gsrConnectomeCore(centsRows(s, d))
 
   private def gsrConnectomeSql: String =
     s"""WITH $centsSeriesCte,
@@ -4651,11 +4673,12 @@ object DesignImage extends QueryModule {
   // the SURVIVING frames — so the moments carry a data-dependent n
   // (count per pair) instead of q168's dense NT.
   //
-  // Scale shape: the series is checkpointed once for its two readers;
-  // every post-series relation is NT- or NP²-bounded. The lag/censor
-  // windows run on the NT-row global-signal relation (bounded — the q151
-  // distinct-relation class, not a data-sized window), and the kept
-  // frames' parcel aggregate (checkpointed) is pinned once to the driver
+  // Scale shape: ONE data-sized exchange — the parcel series over
+  // lineitem rows, gathered to the driver once — feeds both readers: the
+  // global signal is its per-t sum (Σ_p pv at t, the NULL-p group
+  // included, is Σ v at t), so the lag/censor windows run on an NT-row
+  // relation (the q151 distinct-relation class, not a data-sized window),
+  // and the kept frames' rows of it are pinned once to the driver
   // pair-moment kernel (GraphLoops.pairMoments), whose n — the kept
   // frames a pair shares — is n_kept.
 
@@ -4671,14 +4694,15 @@ object DesignImage extends QueryModule {
   private val scnSpikeStr = "CAST(dv AS DOUBLE) > 2.5 * med"
 
   def scrubbedConnectome(s: SparkSession, d: String): DataFrame =
-    scrubbedConnectomeCore(centsSeries(s, d))
+    scrubbedConnectomeCore(centsRows(s, d))
 
   /** The q178 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant spike frames and censored-frame garbage. */
-  private[graft] def scrubbedConnectomeCore(series0: DataFrame): DataFrame = {
-    // feeds the censor derivation AND the parcel moments — pin once
-    val series = series0.localCheckpoint()
-    val dv = series.groupBy("t").agg(sum("v").as("g"))
+  private[graft] def scrubbedConnectomeCore(series: DataFrame): DataFrame = {
+    // the gathered parcel series feeds the censor derivation AND the pair
+    // moments: Σ_p pv at t, the NULL-p group included, is Σ v at t
+    val par = parcelSeries(series, Nil)
+    val dv = par.groupBy("t").agg(sum("pv").as("g"))
       .selectExpr("t", "abs(COALESCE(g - lag(g) OVER (ORDER BY t), 0)) AS dv")
     val keep = dv.crossJoin(broadcast(dv.agg(expr("percentile(dv, 0.5)").as("med"))))
       .selectExpr("t", s"CASE WHEN $scnSpikeStr THEN 1 ELSE 0 END AS spike")
@@ -4686,8 +4710,7 @@ object DesignImage extends QueryModule {
         "ROWS BETWEEN 2 PRECEDING AND 1 FOLLOWING) AS censored")
       .filter(col("censored") === 0).select("t")
     // n = the surviving frames the pair shares
-    val mom = GraphLoops.pairMoments(
-        parcelSeries(series.join(broadcast(keep), Seq("t")), Nil), Nil,
+    val mom = GraphLoops.pairMoments(par.join(broadcast(keep), Seq("t")), Nil,
         "DesignImage.scrubbedConnectomeCore")
       .withColumn("n_kept", col("n"))
     connectomeDegrees(connectomeThreshold(mom, scnRStr, Seq("n_kept")),

@@ -96,6 +96,10 @@ object ProbeJobs {
          if prefixes.forall(_.exists(name.startsWith))) {
       def run(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count(): Unit }
       run() // warm
+      // drain the warm run's queued events first, or a late stage event
+      // of it lands in the counted run
+      org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(
+        spark.sparkContext, 10000)
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()

@@ -133,16 +133,34 @@ object Loops {
     // relation can OOM the driver (r20 verdict item 2). For any relation
     // actually under the cap the rows and their order are identical to a
     // plain collect (partition-order prefix of everything).
-    val rows = collectCapped(df, cap)
+    val rows = collectCapped(pinSession(df.sparkSession), df, cap)
     require(rows.length <= cap,
       s"$site got > $cap rows — not atlas-class loop state")
     rows
   }
 
-  private def collectCapped(df: DataFrame,
+  /** A data-sized plan with a BOUNDED result (an atlas aggregate of a
+    * scan), brought to the driver once and rebuilt as a LocalRelation.
+    * Unlike [[pin]], the collect runs on `df`'s own session: the scan and
+    * exchange below the bound keep full parallelism and AQE, where the
+    * pin session would run them in one task (the serial data-sized pin of
+    * q155/q156). Every later reader, pins included, then reads
+    * driver-local rows. Over `cap` rows it fails naming `site` — it never
+    * demotes and never runs the plan twice. The capped collect takes
+    * partitions incrementally, so it is one job when the result sits in
+    * one partition, as AQE coalesces an atlas aggregate. */
+  private[graft] def gather(df: DataFrame, site: String,
+      cap: Int = PinMaxRows): DataFrame = {
+    val rows = collectCapped(df.sparkSession, df, cap)
+    require(rows.length <= cap,
+      s"$site got > $cap rows — not an atlas-bounded result")
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+  }
+
+  private def collectCapped(session: SparkSession, df: DataFrame,
       cap: Int): Array[org.apache.spark.sql.Row] =
     org.apache.spark.sql.graft.PlanBridge
-      .onSession(pinSession(df.sparkSession), df)
+      .onSession(session, df)
       .limit(cap + 1)
       .collect()
 
@@ -157,7 +175,7 @@ object Loops {
   /** [[pin]] with an injectable ceiling — package-private so the spec can
     * exercise the over-cap demotion without an 8M-row collect. */
   private[graft] def pinWithCap(df: DataFrame, cap: Int): DataFrame = {
-    val rows = collectCapped(df, cap)
+    val rows = collectCapped(pinSession(df.sparkSession), df, cap)
     if (rows.length > cap) fresh(df)
     else df.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), df.schema)

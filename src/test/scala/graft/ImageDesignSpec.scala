@@ -134,6 +134,16 @@ class ImageDesignSpec extends SparkSpec {
     assert(out === Map(0 -> ((2L, 2.0)), 1 -> ((1L, 5.0))))
   }
 
+  test("voxelRows summed per voxel equal the cents voxel series on sf0.01") {
+    val di = graft.queries.DesignImage
+    val summed = di.centsRows(spark, sf001)
+      .groupBy("t", "x", "y", "z").agg(sum("v").as("v"))
+    val cents = di.centsSeries(spark, sf001)
+    val n = cents.count()
+    assert(n > 0 && summed.count() == n)
+    assert(summed.exceptAll(cents).isEmpty && cents.exceptAll(summed).isEmpty)
+  }
+
   test("resampleAffineNN: diag(2) affine ≡ resampleHalf; identity ≡ input") {
     val cells = for {
       x <- 0 to 5; y <- 0 to 5; z <- 0 to 5

@@ -30,4 +30,21 @@ class LoopsSpec extends SparkSpec {
       .forall(_.getClass.getSimpleName.contains("LocalRelation")))
   }
 
+  test("gather under the cap returns df.collect() as a driver-local relation") {
+    val df = spark.range(40).select((col("id") % 6).as("k"), col("id").as("v"))
+      .groupBy("k").agg(sum("v").as("s"))
+    val g = graft.util.Loops.gather(df, "LoopsSpec.gather", 100)
+    assert(g.schema == df.schema)
+    assert(g.collect().toSeq == df.collect().toSeq)
+    assert(g.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.getClass.getSimpleName.contains("LocalRelation")))
+  }
+
+  test("gather over the cap fails naming the site — no demotion") {
+    val df = spark.range(50).select(col("id"), (col("id") % 7).as("v"))
+    val e = intercept[IllegalArgumentException](
+      graft.util.Loops.gather(df, "LoopsSpec.overCap", 10)) // 50 rows > cap
+    assert(e.getMessage.contains("LoopsSpec.overCap"), e.getMessage)
+  }
+
 }

@@ -739,4 +739,50 @@ class PropertySpec extends SparkSpec {
       graft.queries.GraphLoops.pairMoments(decOver, Nil, site))
     assert(e2.getMessage.contains(site) && e2.getMessage.contains("DECIMAL(38,0)"), e2.getMessage)
   }
+
+  test("property: parcel series and pair moments over rows equal them over the voxel aggregate") {
+    val s = spark
+    import s.implicits._
+    type DF = org.apache.spark.sql.DataFrame
+    // random keyed (k, t, x, y, z, v) row relations on a 4³ grid over 6
+    // TRs: ~40 rows a key drawn from 12 cells a key, so voxels repeat;
+    // v small signed (zeros and negatives) or NULL. Key 100 is one voxel
+    // at two t, two rows each (one NULL); key 200 is two voxels of one
+    // parcel, (0, 0, 0) and (12, 0, 0), both p = 0.
+    val v = Gen.frequency(6 -> Gen.choose(-40L, 40L).map(Option(_)),
+      1 -> Gen.const(Option(0L)), 1 -> Gen.const(Option.empty[Long]))
+    val cell = Gen.zip(Gen.choose(0, 5), Gen.choose(0, 3), Gen.choose(0, 3),
+      Gen.choose(0, 3))
+    val genRel = for {
+      nk <- Gen.choose(1, 3)
+      cells <- Gen.listOfN(nk * 12, cell)
+      picks <- Gen.listOfN(nk * 40, Gen.zip(Gen.choose(0, 11), v))
+    } yield {
+      val drawn = picks.zipWithIndex.map { case ((c, vv), n) =>
+        val k = n / 40
+        val (t, x, y, z) = cells(k * 12 + c)
+        (k, t, x, y, z, vv)
+      }
+      drawn ++ Seq((100, 0, 1, 2, 3, Option(4L)), (100, 0, 1, 2, 3, None),
+        (100, 1, 1, 2, 3, Option(-4L)), (100, 1, 1, 2, 3, Option(6L)),
+        (200, 0, 0, 0, 0, Option(3L)), (200, 0, 12, 0, 0, Option(-5L)),
+        (200, 1, 12, 0, 0, Option(7L)))
+    }
+    def sorted(df: DF) = df.collect().map(_.toString).sorted.toSeq
+    val site = "PropertySpec.parcelRows"
+    val di = graft.queries.DesignImage
+    for ((rel, gi) <- samples(genRel, 12).zipWithIndex) {
+      val rows = rel.toDF("k", "t", "x", "y", "z", "v")
+      val vox = rows.groupBy("k", "t", "x", "y", "z").agg(sum("v").as("v"))
+      assert(vox.count() < rows.count(), s"sample $gi repeats no voxel")
+      val (byRow, byVox) = (di.parcelSeries(rows, Seq("k")), di.parcelSeries(vox, Seq("k")))
+      assert(byRow.schema === byVox.schema && sorted(byRow) === sorted(byVox),
+        s"sample $gi: $rel")
+      assert(sorted(graft.queries.GraphLoops.pairMoments(byRow, Seq("k"), site)) ===
+        sorted(graft.queries.GraphLoops.pairMoments(byVox, Seq("k"), site)),
+        s"sample $gi pair moments")
+      assert(byRow.filter(col("k") === 200).select("p").distinct().count() == 1,
+        "key 200 is a single parcel")
+    }
+  }
 }
