@@ -1,12 +1,17 @@
 package graft.design
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.util.Loops
 
 /** Design-matrix construction operators (SURVEY.md §2.5, E1 lifecycle).
   * The reference builds a (time × regressor) Design_Matrix from trial events
-  * (nltools `onsets_to_dm`, ssm_loop.py:43); here the timeline is an explicit
-  * generated table and the boxcar is a range join.
+  * (nltools `onsets_to_dm`, ssm_loop.py:43). The trial scan and the hit
+  * aggregate are distributed; everything after them is TR-bounded (n
+  * samples × conditions) and runs as exact driver kernels over one
+  * gathered result.
   */
 object DesignOps {
 
@@ -23,41 +28,51 @@ object DesignOps {
 
   /** Boxcar expansion (nltools onsets_to_dm semantics, ssm_loop.py:43):
     * indicator(t, c) = 1 iff some trial of condition c satisfies
-    * onset <= t*TR < onset + duration. `events` must have columns
-    * (onset: double seconds, duration: double seconds, trial_type: string).
+    * onset <= t*TR < onset + duration, t in [0, n). `trials` has columns
+    * (onset, duration: double seconds, trial_type: string); a NULL onset or
+    * duration covers nothing. Output: a driver-local (t, c…) BIGINT
+    * relation in t order.
     *
-    * Implemented as a conditional aggregation over timeline × trials: the
-    * timeline is tiny (hundreds of rows) and broadcast, so the "cross join"
-    * is a broadcast nested loop whose output is immediately aggregated —
-    * no shuffle of the trials table beyond the final groupBy(t).
-    * `conditions` is passed explicitly so the output schema is static
-    * (Spark `.pivot` without values would scan the data twice to infer it).
-    */
-  def boxcar(tl: DataFrame, trials: DataFrame, conditions: Seq[String],
-      trSeconds: Double, n: Long): DataFrame = {
-    val indicators = conditions.map { c =>
-      max(when(col("trial_type") === c, 1L).otherwise(0L)).as(c)
-    }
-    // Bucket expansion instead of a |t|×|trials| nested-loop: each trial
-    // explodes only its candidate TR range (±1 bucket of slack so double
-    // rounding can never DROP a predicate-true pair), then the exact
-    // [onset, onset+duration) predicate filters the boundary. Cost is
-    // O(|trials|·dur/TR) rows into a plain hash aggregate — the shape that
-    // survives 100 TB of trials, unlike a nested-loop interval join.
-    val cand = trials
+    * Each trial explodes only its candidate TR range (±1 bucket of slack
+    * so double rounding never DROPS a predicate-true pair), the exact
+    * predicate filters the boundary and one hash aggregate keeps the
+    * distinct (t, condition) hits: O(|trials|·dur/TR) rows in, at most
+    * n·|conditions| out — gathered once (over `cap` it fails naming the
+    * site) and laid onto the timeline on the driver.
+    *
+    * A driver-local relation scans as one task per core, so a query that
+    * writes one out ends in `coalesce(1)`: one file, 90–96 ms against
+    * 104–110 ms for four (q35, sf0.01, local[4]). The kernels' own
+    * relations stay LocalRelations, so a gather over them runs no job. */
+  def boxcar(trials: DataFrame, conditions: Seq[String], trSeconds: Double,
+      n: Int, cap: Int = Loops.PinMaxRows): DataFrame = {
+    val hits = trials
+      .filter(col("trial_type").isin(conditions: _*))
       .withColumn("__t0", greatest(floor(col("onset") / trSeconds).cast("long"), lit(0L)))
       .withColumn("__t1",
-        least(floor((col("onset") + col("duration")) / trSeconds).cast("long") + 1, lit(n - 1)))
+        least(floor((col("onset") + col("duration")) / trSeconds).cast("long") + 1, lit(n - 1L)))
       .filter(col("__t0") <= col("__t1"))
       .select(explode(sequence(col("__t0"), col("__t1"))).as("t"),
         col("onset"), col("duration"), col("trial_type"))
       .filter(col("onset") <= col("t") * trSeconds &&
         col("t") * trSeconds < col("onset") + col("duration"))
-    val hits = cand.groupBy("t").agg(indicators.head, indicators.tail: _*)
-    tl.select("t")
-      .join(hits, Seq("t"), "left")
-      .na.fill(0L, conditions)
+      .select("t", "trial_type").distinct()
+    // the fill: every t the hits miss is 0 (each hit's t is in [0, n))
+    val cond = conditions.zipWithIndex.toMap
+    val x = Array.fill(conditions.size, n)(0L)
+    for (r <- Loops.gatheredRows(hits, "DesignOps.boxcar", cap))
+      x(cond(r.getString(1)))(r.getLong(0).toInt) = 1L
+    timeRelation(trials.sparkSession, conditions, n)(t => x.map(_(t)).toSeq)
   }
+
+  /** A driver-local (t BIGINT, `cols`… BIGINT) relation, one row per t in
+    * [0, n) in t order, `cells(t)` filling row t's columns. */
+  private def timeRelation(spark: SparkSession, cols: Seq[String], n: Int)(
+      cells: Int => Seq[Long]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList((0 until n).map(t => Row.fromSeq(t.toLong +: cells(t))): _*),
+      StructType((StructField("t", LongType, nullable = false) +:
+        cols.map(StructField(_, LongType, nullable = false)))))
 
   /** DCT high-pass basis (nltools add_dct_basis, ssm_loop.py:55): appends
     * cosine regressors dct_k(t) = cos(π·k·(2t+1)/(2N)) for k = 1..K.
@@ -108,28 +123,32 @@ object DesignOps {
     raw.map(v => math.rint(v / s * 1e6).toLong) // normalized, fixed-point
   }
 
-  /** Causal finite-kernel convolution of integer-valued indicator columns
-    * with a fixed-point kernel: out(t) = (Σ_τ h_int(τ)·x(t−τ)) / 1e6.
-    * Implemented as a broadcast kernel-table join + exact integer sum —
-    * the SQL-expressible form of W4 (SURVEY.md §2.5), oracle-checkable.
-    * At scale this shuffles |t|·len rows grouped back to |t| — with a
-    * per-run partition key the groupBy stays partition-local.
-    */
-  def convolve(dm: DataFrame, spark: org.apache.spark.sql.SparkSession,
-      kernel: Array[Long], cols: Seq[String], n: Int): DataFrame = {
-    import spark.implicits._
-    val kdf = kernel.zipWithIndex.map { case (h, tau) => (tau.toLong, h) }
-      .toSeq.toDF("tau", "h")
-    // scatter form: x(t) contributes h(τ) at out(t+τ); clip to [0, n)
-    val taps = dm
-      .join(broadcast(kdf), expr("true"))
-      .withColumn("__tt", col("t") + col("tau"))
-      .filter(col("__tt") < n)
-    val sums = cols.map(c => sum(col("h") * col(c)).as(s"__conv_$c"))
-    val out = taps.groupBy(col("__tt").as("t")).agg(sums.head, sums.tail: _*)
-    cols.foldLeft(out) { (acc, c) =>
-      acc.withColumn(s"conv_$c", col(s"__conv_$c").cast("double") / 1e6)
-        .drop(s"__conv_$c")
+  /** Causal convolution of integer (t, cols…) design columns with a
+    * fixed-point kernel (W4, SURVEY.md §2.5): conv_c(t) =
+    * (Σ_τ h(τ)·x(t−τ)) / 1e6 for t in [0, n). `dm` is gathered (≤ `cap`
+    * rows; a missing t is 0, a t outside [0, n) is ignored, a NULL x
+    * fails), [[convolveInts]] sums exactly on the driver, and only the
+    * scaling to double is a Catalyst projection. */
+  def convolve(dm: DataFrame, kernel: Array[Long], cols: Seq[String], n: Int,
+      cap: Int = Loops.PinMaxRows): DataFrame = {
+    val rows = Loops.gatheredRows(dm.select(("t" +: cols).map(col): _*),
+      "DesignOps.convolve", cap)
+    val x = Array.fill(cols.size, n)(0L)
+    for (r <- rows; t = r.getAs[Number](0).longValue if t >= 0 && t < n;
+         c <- cols.indices) {
+      require(!r.isNullAt(c + 1), s"DesignOps.convolve: NULL ${cols(c)} at t=$t")
+      x(c)(t.toInt) = Math.addExact(x(c)(t.toInt), r.getAs[Number](c + 1).longValue)
     }
+    val y = x.map(convolveInts(_, kernel))
+    val sums = cols.map(c => s"__conv_$c")
+    timeRelation(dm.sparkSession, sums, n)(t => y.map(_(t)).toSeq)
+      .select(col("t") +: cols.map(c =>
+        (col(s"__conv_$c").cast("double") / 1e6).as(s"conv_$c")): _*)
   }
+
+  /** y(t) = Σ_τ h(τ)·x(t−τ) over t − τ in [0, |x|), exact: a BIGINT
+    * overflow throws. */
+  def convolveInts(x: Array[Long], h: Array[Long]): Array[Long] =
+    Array.tabulate(x.length)(t => (0 to math.min(t, h.length - 1)).foldLeft(0L)(
+      (acc, tau) => Math.addExact(acc, Math.multiplyExact(h(tau), x(t - tau)))))
 }

@@ -36,6 +36,7 @@ object GraftFunctions {
       reg.createOrReplaceTempFunction(name, builder, "scala_udf")
 
     TCdf.register(spark)
+    add("ntz_micros")(e => NtzMicros(e.head))
     add("poly_hash")(e => Hashing.PolyHashString(e.head))
     add("poly_hash_longs")(e => Hashing.PolyHashLongs(e.head))
     add("min_gram_hash")(e => Hashing.MinGramHash(e.head, e(1)))

@@ -1,7 +1,8 @@
 package graft.glm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructType}
 
 /** Linear-model operators — the reference's analytical core (SURVEY.md §2.6:
   * mass-univariate OLS `regress()`, ssm_loop.py:90-97).
@@ -12,10 +13,10 @@ import org.apache.spark.sql.functions._
   *  - `massGLM`/`massBetas`: per-group multi-regressor OLS against a
   *    SHARED design matrix X — the ssm_loop shape (one X, millions of
   *    voxels). The k×n pinv = (XᵀX)⁻¹Xᵀ is computed on the driver
-  *    (LinAlg), scaled to integers (×1e9, round) and broadcast as a
-  *    long-form literal table; betas are then one join + exact-DECIMAL
-  *    groupBy sum. This is the SQL-MIRRORABLE spec form (q33's oracle
-  *    transcribes it); its hash aggregate carries k rows per observation.
+  *    (LinAlg) and scaled to integers (×1e9, round); the (group, t)
+  *    series — |groups|·n rows — is gathered once and the betas are
+  *    exact DECIMAL sums on the driver. q33's oracle transcribes the same
+  *    sums as a literal-table join.
   *  - `massGLMPacked`: the PRODUCTION shuffle shape (q48/q60) — each
   *    series packs into an n-slot exact-int64 array by one aggregation;
   *    all per-regressor sums become exact dot-product projections.
@@ -84,32 +85,58 @@ object GlmOps {
       .withColumn("resid", col(yCol) - (col("beta0") + col("beta1") * col(xCol)))
   }
 
-  /** The long-form scaled pinv relation: rows (t, j, w) with
-    * w = round(pinv(j)(t) · Scale). */
-  def pinvTable(spark: SparkSession, x: LinAlg.Mat): DataFrame = {
-    val p = LinAlg.pinv(x) // k × n
-    val rows = for {
-      j <- p.indices
-      t <- p(j).indices
-    } yield (t.toLong, j.toLong, math.rint(p(j)(t) * Scale).toLong)
-    import spark.implicits._
-    rows.toDF("t", "j", "w")
+  /** Mass-univariate OLS betas: `series` is the long relation
+    * (group, t, y_dec), y_dec an exact DECIMAL of scale 2; X is the shared
+    * n×k design. β(g, j) = (Σ_t w(j,t)·y(g,t)) / Scale, w = round(pinv(j)(t)
+    * · Scale). Rows with t outside [0, n) are ignored and missing t are
+    * zero. The |groups|·n series is gathered once (over `cap` it fails
+    * naming the site) and summed exactly by [[betaSums]]; only the scaling
+    * to double is a Catalyst projection. Groups come in first-seen order. */
+  def massBetas(series: DataFrame, x: LinAlg.Mat, groupCol: String,
+      cap: Int = graft.util.Loops.PinMaxRows): DataFrame = {
+    val site = "GlmOps.massBetas"
+    val rows = graft.util.Loops.gatheredRows(
+      series.select(col(groupCol), col("t"), col("y_dec")), site, cap)
+    val p = LinAlg.pinv(x)
+    val sums = betaSums(
+      rows.iterator.filterNot(_.isNullAt(1)).map(r =>
+        (r.get(0), r.getAs[Number](1).longValue, r.getAs[java.math.BigDecimal](2))).toSeq,
+      p.map(_.map(v => math.rint(v * Scale).toLong)), site)
+    series.sparkSession.createDataFrame(
+      java.util.Arrays.asList(sums.map { case (g, j, v) => Row(g, j.toLong, v) }: _*),
+      StructType(Seq(series.schema(groupCol),
+        StructField("j", LongType, nullable = false),
+        StructField("__s", DecimalType(38, 2)))))
+      .select(col(groupCol), col("j"),
+        (col("__s").cast("double") / Scale.toDouble).as("beta"))
   }
 
-  /** Mass-univariate OLS betas: `series` is the long relation
-    * (group, t, y_dec) with y_dec exact DECIMAL; X is the shared n×k design.
-    * β(g, j) = (Σ_t w(j,t)·y(g,t)) / Scale via broadcast join + exact sum.
-    * Rows with t outside [0, n) are ignored; missing t contribute zero —
-    * matching a zero-filled dense series.
-    */
-  def massBetas(spark: SparkSession, series: DataFrame, x: LinAlg.Mat,
-      groupCol: String): DataFrame =
-    series
-      .join(broadcast(pinvTable(spark, x)), "t")
-      .groupBy(col(groupCol), col("j"))
-      .agg(sum(col("w") * col("y_dec")).as("__s"))
-      .withColumn("beta", col("__s").cast("double") / Scale.toDouble)
-      .select(col(groupCol), col("j"), col("beta"))
+  /** The exact sums Σ_t w(j,t)·y(g,t) of [[massBetas]], per group g in
+    * first-seen order and j in 0 until k, for a k×n weight matrix `w`.
+    * Rows with t outside [0, n) are ignored, a NULL y adds no term, and a
+    * sum with no term is NULL. A term or sum beyond DECIMAL(38,2) throws
+    * naming `site`, as Spark's ANSI decimal sum does. */
+  def betaSums(series: Iterable[(Any, Long, java.math.BigDecimal)],
+      w: Array[Array[Long]], site: String): Seq[(Any, Int, java.math.BigDecimal)] = {
+    val n = w.headOption.fold(0)(_.length)
+    def dec38(v: java.math.BigDecimal): java.math.BigDecimal = {
+      val d = v.setScale(2)
+      if (d.unscaledValue.abs.compareTo(Decimal38) >= 0) throw new ArithmeticException(
+        s"$site: beta sum $d overflows DECIMAL(38,2)")
+      d
+    }
+    val acc = collection.mutable.LinkedHashMap.empty[Any, Array[java.math.BigDecimal]]
+    for ((g, t, y) <- series if t >= 0 && t < n) {
+      val s = acc.getOrElseUpdate(g, new Array(w.length))
+      if (y != null) for (j <- w.indices) {
+        val term = dec38(java.math.BigDecimal.valueOf(w(j)(t.toInt)).multiply(y))
+        s(j) = if (s(j) == null) term else dec38(s(j).add(term))
+      }
+    }
+    for ((g, s) <- acc.toSeq; j <- s.indices) yield (g, j, s(j))
+  }
+
+  private val Decimal38 = java.math.BigInteger.TEN.pow(38)
 
   /** The combined design-weight relation: rows (t, j, w, wx) with
     * w = round(pinv(j)(t) · Scale) and wx = round(X(t)(j) · Scale). One

@@ -66,12 +66,11 @@ object DesignImage extends QueryModule {
       col("value").as("duration"),
       col("event_type").as("trial_type"),
     )
-    val tl = DesignOps.timeline(s, 168, 3600.0)
-    val box = DesignOps.boxcar(tl, trials, Seq("click", "purchase"), 3600.0, 168L)
+    val box = DesignOps.boxcar(trials, Seq("click", "purchase"), 3600.0, 168)
     DesignOps
-      .convolve(box, s, DesignOps.hrfKernelInts(1.0, kernelLen),
+      .convolve(box, DesignOps.hrfKernelInts(1.0, kernelLen),
         Seq("click", "purchase"), 168)
-      .orderBy("t")
+      .orderBy("t").coalesce(1) // one output file: see DesignOps.boxcar
   }
 
   private def hrfConvolveSql: String = {
@@ -839,10 +838,9 @@ object DesignImage extends QueryModule {
   // there in exact integer arithmetic — no self-join, no checkpoint, no
   // second exchange — so r, the threshold and the edge column are
   // projections of one LocalRelation (`connectomePairs`, what every
-  // connectome consumer reads); only the degree fold is a
-  // (broadcast-class) Spark aggregate, and only q168, q178 and q194, whose
-  // outputs carry the degrees, run it. At atlas scale (NP ≈ 10²-10³) the
-  // gather is NP·NT rows and the pair relation NP²/2.
+  // connectome consumer reads); q168, q178 and q194, whose outputs carry
+  // the degrees, add the degree fold on the driver. At atlas scale
+  // (NP ≈ 10²-10³) the gather is NP·NT rows and the pair relation NP²/2.
 
   private val connNP = 12
   private val connNumStr =
@@ -913,17 +911,24 @@ object DesignImage extends QueryModule {
       .selectExpr(keep ++ Seq("r_par", s"$connEdgeStr AS edge"): _*)
   }
 
+  /** The degree step of q168/q178/q194: each parcel's degree is its
+    * number of edge = 1 pair ends (the oracle's UNION ALL count), carried
+    * onto every pair as deg_p1/deg_p2 (0 for a parcel without edges).
+    * `pairs` is driver-local, so the fold runs on the driver over its
+    * rows — no job, no scan fan-out over the 66-row relation. */
   private def connectomeDegrees(pairs: DataFrame,
       extraCols: Seq[String]): DataFrame = {
-    val keep = Seq("p1", "p2") ++ extraCols
-    val ones = pairs.filter(col("edge") === 1)
-    val deg = ones.selectExpr("p1 AS p").union(ones.selectExpr("p2 AS p"))
-      .groupBy("p").agg(count(lit(1)).as("deg"))
-    pairs
-      .join(broadcast(deg.selectExpr("p AS p1", "deg AS deg_p1")), Seq("p1"), "left")
-      .join(broadcast(deg.selectExpr("p AS p2", "deg AS deg_p2")), Seq("p2"), "left")
-      .na.fill(0L, Seq("deg_p1", "deg_p2"))
-      .selectExpr(keep ++ Seq("r_par", "edge", "deg_p1", "deg_p2"): _*)
+    val sel = pairs.selectExpr(Seq("p1", "p2") ++ extraCols ++ Seq("r_par", "edge"): _*)
+    val rows = graft.util.Loops.pinnedRows(sel, "DesignImage.connectomeDegrees")
+    val edge = sel.schema.fieldIndex("edge")
+    val deg = rows.toSeq
+      .filter(_.getLong(edge) == 1L)
+      .flatMap(r => Seq(r.get(0), r.get(1)))
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    GraphLoops.local(pairs.sparkSession, sel.schema.fields.toSeq ++
+        Seq("deg_p1", "deg_p2").map(StructField(_, LongType, nullable = false)),
+      rows.toSeq.map(r => r.toSeq ++ Seq(deg.getOrElse(r.get(0), 0L),
+        deg.getOrElse(r.get(1), 0L))))
       .orderBy("p1", "p2")
   }
 
@@ -1103,18 +1108,16 @@ object DesignImage extends QueryModule {
     * specs can plant z patterns and alphas. */
   private[graft] def edgeInferenceCore(s: SparkSession, facts: DataFrame,
       alphaOverM: Double): DataFrame = {
-    // fl is GRuns·NP²-bounded but sits behind the DATA-SIZED session-series
-    // aggregate, and signFlipParts reads it twice (base + perms) — without
-    // a checkpoint q182 re-ran the full lineitem chain per consumer (the
-    // same miss nbsCore fixed in r20; r20 verdict item 3). sf is then
-    // NP²-bounded with two consumers (bh + the verdict join), but its plan
-    // is the fl×PermP expansion: checkpoint it distributed (fresh), not
-    // single-partition on the pin session.
+    // fl is GRuns·NP²-bounded and a projection of pairMoments' driver-local
+    // relation, so its two readers in signFlipCore (base + perms) re-read
+    // driver rows, not the session-series scan. sf is NP²-bounded with two
+    // consumers (bh + the verdict join), but its plan is the fl×PermP
+    // expansion: checkpoint it distributed (fresh), not single-partition
+    // on the pin session.
     val fl = facts
       .filter(col("z_fp").isNotNull)
       .select(col("p1").as("run"), col("p2").as("j"), col("g"),
         col("z_fp").as("b_fp"))
-      .localCheckpoint()
     val sf = graft.util.Loops.fresh(Glm.signFlipCore(s, fl))
     val bh = Glm.fdrBhCore(sf, alphaOverM)
       .select("run", "j", "rk", "kbh", "rejected")
@@ -1230,16 +1233,14 @@ object DesignImage extends QueryModule {
   /** The q196 body over q182's (g, p1, p2, z_fp) facts — spec-plantable. */
   private[graft] def nbsCore(s: SparkSession, facts: DataFrame,
       tPrim: Double): DataFrame = {
-    // fl is GRuns·NP²-bounded (264 rows at the fixture) but sits behind
-    // the DATA-SIZED session-series aggregate — without a checkpoint its
-    // consumers (the observed t and the permutations) re-ran the full
-    // lineitem chain each (r20, stage accounting: an 8 s re-aggregate
-    // stage). One checkpoint = one data pass per run.
+    // fl is GRuns·NP²-bounded (264 rows at the fixture) and a projection
+    // of pairMoments' driver-local relation, so its consumers (the
+    // observed t and the permutations) read driver rows, never the
+    // session-series scan.
     val fl = facts
       .filter(col("z_fp").isNotNull)
       .select(col("p1").as("run"), col("p2").as("j"), col("g"),
         col("z_fp").as("b_fp"))
-      .localCheckpoint()
     val (base, permT) = Glm.signFlipParts(s, fl)
     val obsE = base
       .filter(expr(s"t_obs IS NOT NULL AND abs(t_obs) > $tPrim"))

@@ -105,15 +105,19 @@ object Glm extends QueryModule {
     // `ts div 1000 - baseUs >= 0` BEFORE bucketing: Spark `div` truncates
     // toward zero while the oracle's `//` floors, so a pre-baseUs event
     // would land in bucket 0 here but bucket −1 (excluded by the design
-    // join) in the oracle. On nonnegative differences the two agree.
+    // join) in the oracle. On nonnegative differences the two agree. The
+    // design's t < N filter also runs before the aggregate, so the series
+    // massBetas gathers is at most |g|·N rows.
     val series = events(s, d)
       .filter(expr(s"ts div 1000 - $baseUs >= 0"))
       .select(
         (col("user_id") % 20).as("g"),
         expr(s"(ts div 1000 - $baseUs) div $bucketUs").as("t"),
         col("value").cast("decimal(18,2)").as("y_dec"),
-      ).groupBy("g", "t").agg(sum("y_dec").as("y_dec"))
-    GlmOps.massBetas(s, series, design, "g").orderBy("g", "j")
+      ).filter(col("t") < N)
+      .groupBy("g", "t").agg(sum("y_dec").as("y_dec"))
+    GlmOps.massBetas(series, design, "g").orderBy("g", "j")
+      .coalesce(1) // one output file: see DesignOps.boxcar
   }
 
   private def massGlmSql: String = {

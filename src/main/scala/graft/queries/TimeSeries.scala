@@ -63,10 +63,9 @@ object TimeSeries extends QueryModule {
       col("value").as("duration"),
       col("event_type").as("trial_type"),
     )
-    val tl = DesignOps.timeline(s, 168, 3600.0)
     DesignOps
-      .boxcar(tl, trials, Seq("click", "error", "purchase", "signup", "view"), 3600.0, 168L)
-      .orderBy("t")
+      .boxcar(trials, Seq("click", "error", "purchase", "signup", "view"), 3600.0, 168)
+      .orderBy("t").coalesce(1) // one output file: see DesignOps.boxcar
   }
 
   private val boxcarDesignSql =

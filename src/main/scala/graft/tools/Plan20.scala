@@ -95,7 +95,10 @@ object ProbeJobs {
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
          if prefixes.forall(_.exists(name.startsWith))) {
       def run(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count(): Unit }
+      val compiles = org.apache.spark.sql.graft.PlanBridge.janinoCompiles _
+      val c0 = compiles()
       run() // warm
+      val c1 = compiles()
       // drain the warm run's queued events first, or a late stage event
       // of it lands in the counted run
       org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(
@@ -105,13 +108,15 @@ object ProbeJobs {
       val t0 = System.nanoTime()
       run()
       val wall = (System.nanoTime() - t0) / 1e9
+      val c2 = compiles()
       // listener events are async; drain the bus before reading counts
       // (a fixed sleep under-reported on slow runs — r20 ADVICE)
       org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(
         spark.sparkContext, 10000)
       spark.sparkContext.removeSparkListener(listener)
       println(f"[jobs] $name wall=$wall%.2f s jobs=${jobs.get} stages=${stages.get} " +
-        f"tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2f s")
+        f"tasks=${tasks.get} taskTime=${taskMs.get / 1000.0}%.2f s " +
+        f"janino=${c2 - c1} (warm run ${c1 - c0})")
       if (sys.env.contains("SPARK_GRAFT_STAGES")) {
         import scala.jdk.CollectionConverters._
         stageRows.asScala.toSeq.sortBy(-_._1).take(8).foreach { case (ms, nt, nm) =>

@@ -150,11 +150,18 @@ object Loops {
     * partitions incrementally, so it is one job when the result sits in
     * one partition, as AQE coalesces an atlas aggregate. */
   private[graft] def gather(df: DataFrame, site: String,
-      cap: Int = PinMaxRows): DataFrame = {
+      cap: Int = PinMaxRows): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(gatheredRows(df, site, cap): _*), df.schema)
+
+  /** The rows of [[gather]] alone, for driver kernels that continue on
+    * them. */
+  private[graft] def gatheredRows(df: DataFrame, site: String,
+      cap: Int = PinMaxRows): Array[org.apache.spark.sql.Row] = {
     val rows = collectCapped(df.sparkSession, df, cap)
     require(rows.length <= cap,
       s"$site got > $cap rows — not an atlas-bounded result")
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    rows
   }
 
   private def collectCapped(session: SparkSession, df: DataFrame,

@@ -44,7 +44,7 @@ import org.apache.spark.sql.types.StructType
   * nothing.
   */
 object Snapshots {
-  private type Snapshot = Vector[(String, Long, Long)]
+  private[graft] type Snapshot = Vector[(String, Long, Long)]
   private final case class Key(site: String, id: String,
       confs: Seq[(String, String)])
   private final case class Entry(snapshot: Snapshot, value: Any)
@@ -53,18 +53,20 @@ object Snapshots {
 
   /** Every file under `path` (recursively; the path itself when it is a
     * file), sorted. A missing path has the empty snapshot, and the
-    * derivation then fails exactly as the uncached read would. */
-  private def snapshot(spark: SparkSession, path: String): Snapshot = {
+    * derivation then fails exactly as the uncached read would. The walk
+    * uses `listStatus`, not `listFiles`: the latter builds a
+    * LocatedFileStatus per file, which reads the file's permission, and
+    * on the local file system without Hadoop's native library that is
+    * one `ls -ld` process per file. */
+  private[graft] def snapshot(spark: SparkSession, path: String): Snapshot = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val b = Vector.newBuilder[(String, Long, Long)]
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        b += ((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-    } catch { case _: java.io.FileNotFoundException => }
+    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else b += ((st.getPath.toString, st.getLen, st.getModificationTime))
+    }
+    try walk(p) catch { case _: java.io.FileNotFoundException => }
     b.result().sorted
   }
 

@@ -42,13 +42,11 @@ object Tables {
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => raw
       case org.apache.spark.sql.types.TimestampNTZType =>
-        // wall-clock-as-UTC via NTZ DIFFERENCE arithmetic — timezone-free
-        // by construction, so no session mutation: the earlier
-        // cast-to-timestamp route read the session timezone, and pinning
-        // it here silently overrode whatever an embedding session had
-        // deliberately set, for every later query on the shared session
-        raw.withColumn("ts", expr(
-          "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) * 1000L"))
+        // wall-clock-as-UTC: the NTZ value's stored microseconds, read
+        // directly — timezone-free, so no session mutation (a
+        // cast-to-timestamp route would read the session timezone)
+        raw.withColumn("ts",
+          graft.functions.NtzMicros.ntz_micros(col("ts")) * 1000L)
       case _ =>
         // instant-typed vintage: unix_micros reads the instant directly
         // (timezone-free)

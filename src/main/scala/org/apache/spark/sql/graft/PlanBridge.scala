@@ -28,4 +28,10 @@ object PlanBridge {
   def waitListenerBusEmpty(sc: org.apache.spark.SparkContext,
       timeoutMs: Long): Unit =
     sc.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** Janino compiles of generated classes so far in this JVM (the count
+    * of Spark's `CodegenMetrics` compilation-time histogram): a codegen
+    * cache hit adds none. */
+  def janinoCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

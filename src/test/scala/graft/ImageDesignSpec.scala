@@ -253,7 +253,7 @@ class ImageDesignSpec extends SparkSpec {
     val n = 30
     val dm = (0 until n).map(t => (t.toLong, if (t == 3) 1L else 0L)).toDF("t", "x")
     val k = DesignOps.hrfKernelInts(1.0, 10)
-    val out = DesignOps.convolve(dm, spark, k, Seq("x"), n)
+    val out = DesignOps.convolve(dm, k, Seq("x"), n)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("conv_x")).toMap
     for (tau <- 0 until 10)
       assert(math.abs(out(3L + tau) - k(tau) / 1e6) < 1e-12)

@@ -47,4 +47,25 @@ class LoopsSpec extends SparkSpec {
     assert(e.getMessage.contains("LoopsSpec.overCap"), e.getMessage)
   }
 
+  test("each GLM design gather fails naming its site over its cap") {
+    import graft.design.DesignOps
+    val s = spark
+    import s.implicits._
+    // 3 distinct (t, condition) hits > cap 2
+    val trials = Seq((0.0, 3.0, "A")).toDF("onset", "duration", "trial_type")
+    val box = intercept[IllegalArgumentException](
+      DesignOps.boxcar(trials, Seq("A"), 1.0, 5, cap = 2))
+    assert(box.getMessage.contains("DesignOps.boxcar"), box.getMessage)
+    val dm = (0 until 4).map(t => (t.toLong, 1L)).toDF("t", "x")
+    val conv = intercept[IllegalArgumentException](
+      DesignOps.convolve(dm, Array(1L), Seq("x"), 4, cap = 3))
+    assert(conv.getMessage.contains("DesignOps.convolve"), conv.getMessage)
+    val series = (0 until 4).map(t => ("a", t.toLong, BigDecimal(t)))
+      .toDF("g", "t", "y_dec").withColumn("y_dec", col("y_dec").cast("decimal(18,2)"))
+    val x = Array.tabulate(4, 1)((_, _) => 1.0)
+    val betas = intercept[IllegalArgumentException](
+      graft.glm.GlmOps.massBetas(series, x, "g", cap = 3))
+    assert(betas.getMessage.contains("GlmOps.massBetas"), betas.getMessage)
+  }
+
 }

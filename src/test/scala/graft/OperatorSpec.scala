@@ -44,12 +44,44 @@ class OperatorSpec extends SparkSpec {
     assert(out.toSeq == Seq(("p1", Some(100.0)), ("p2", Some(40.0)), ("p3", None)))
   }
 
+  test("events ts: the NTZ and instant vintages normalize bit-identically under a non-UTC zone") {
+    // wall clocks around the epoch, a Los Angeles DST gap and a leap day;
+    // the NTZ vintage stores each as a wall clock, the instant vintage as
+    // that wall clock read in UTC. (`timestampdiff` from the NTZ epoch,
+    // the conversion before ntz_micros, reads the session zone: it puts
+    // the DST-gap wall clock an hour late.)
+    val walls = Seq("1969-12-31 23:59:59.999999", "1970-01-01 00:00:00",
+      "2024-03-10 02:30:00.123456", "2024-02-29 23:59:59.5", "2024-11-03 01:30:00")
+    val expected = walls.map { w =>
+      val t = java.time.LocalDateTime.parse(w.replace(' ', 'T'))
+      t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L + t.getNano
+    }
+    val la = spark.newSession()
+    la.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts").toString
+    val lit = walls.map(w => s"('$w')").mkString(", ")
+    la.sql(s"SELECT i, CAST(w AS TIMESTAMP_NTZ) AS ts FROM " +
+      s"(SELECT posexplode(array($lit)) AS (i, w))").write.parquet(s"$dir/ntz")
+    la.sql(s"SELECT i, CAST(concat(w, 'Z') AS TIMESTAMP) AS ts FROM " +
+      s"(SELECT posexplode(array($lit)) AS (i, w))").write.parquet(s"$dir/ltz")
+    def nanos(vintage: String): Seq[Long] = {
+      val raw = la.read.parquet(s"$dir/$vintage")
+      graft.util.Tables.normalizeTsNanos(raw).orderBy("i").select("ts").as[Long].collect().toSeq
+    }
+    assert(la.read.parquet(s"$dir/ntz").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+    assert(la.read.parquet(s"$dir/ltz").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    assert(nanos("ntz") == expected)
+    assert(nanos("ltz") == expected)
+  }
+
   test("boxcar: trial straddling a sample edge covers only samples in [onset, onset+dur)") {
-    val tl = DesignOps.timeline(spark, 5, 1.0) // samples at t=0..4 sec
-    // trial covers [1.0, 3.0): samples 1, 2 — not 3 (right-open), not 0
+    // samples at t=0..4 sec; the trial covers [1.0, 3.0): samples 1, 2 —
+    // not 3 (right-open), not 0
     val trials = Seq((1.0, 2.0, "A")).toDF("onset", "duration", "trial_type")
     val out = DesignOps
-      .boxcar(tl, trials, Seq("A"), 1.0, 5L)
+      .boxcar(trials, Seq("A"), 1.0, 5)
       .orderBy("t")
       .select("A")
       .as[Long]
@@ -58,9 +90,8 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("boxcar: abutting trials of different types don't bleed") {
-    val tl = DesignOps.timeline(spark, 4, 1.0)
     val trials = Seq((0.0, 2.0, "A"), (2.0, 2.0, "B")).toDF("onset", "duration", "trial_type")
-    val rows = DesignOps.boxcar(tl, trials, Seq("A", "B"), 1.0, 4L).orderBy("t")
+    val rows = DesignOps.boxcar(trials, Seq("A", "B"), 1.0, 4).orderBy("t")
       .select("A", "B").as[(Long, Long)].collect()
     assert(rows.toSeq == Seq((1L, 0L), (1L, 0L), (0L, 1L), (0L, 1L)))
   }

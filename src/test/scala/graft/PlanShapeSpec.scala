@@ -25,10 +25,61 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "dimension join degraded to SMJ")
   }
 
-  test("q33: mass GLM betas use a broadcast pinv and hash aggregation") {
-    val p = plan("q33_mass_glm_betas")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"))
-    assert(p.contains("HashAggregate"))
+  /** A warm run of query `name` built and written to parquet, as a dump
+    * does, on a session with the engine's optimizer rules installed: the
+    * query's optimized plan, the jobs of the second run and the executed
+    * plans of every action it took (the gathers and the write). */
+  private def warmRun(name: String): (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      Int, Seq[String]) = {
+    val s = spark.newSession()
+    graft.plans.TopKPerKey.install(s)
+    val out = java.nio.file.Files.createTempDirectory("graft-planshape").toString
+    def run() = {
+      val df = SparkEntry.queries(name)(s, sf001)
+      df.write.mode("overwrite").parquet(out)
+      df
+    }
+    run()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan.toString): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+    s.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(jl)
+    val df = try run() finally {
+      org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
+      spark.sparkContext.removeSparkListener(jl)
+      s.listenerManager.unregister(ql)
+    }
+    import scala.jdk.CollectionConverters._
+    (df.queryExecution.optimizedPlan, jobs.get, plans.asScala.toSeq)
+  }
+
+  test("q16/q35/q33: the GLM design stages run at most 3 jobs and no range exchange") {
+    // one hash aggregate gathered to the driver (a shuffle-map job and a
+    // result job), the driver kernels, and the write; the final sort folds
+    // into the driver-local rows
+    for (name <- Seq("q16_boxcar_design", "q35_hrf_convolve", "q33_mass_glm_betas")) {
+      val (_, jobs, plans) = warmRun(name)
+      assert(jobs <= 3, s"$name ran $jobs jobs:\n${plans.mkString("\n")}")
+      assert(!plans.exists(_.contains("rangepartitioning")), s"$name:\n${plans.mkString("\n")}")
+    }
+  }
+
+  test("q33: the series is one hash aggregate; the betas are driver-local") {
+    val (opt, _, plans) = warmRun("q33_mass_glm_betas")
+    assert(plans.exists(_.contains("HashAggregate")), plans.mkString("\n"))
+    assert(!plans.exists(p => p.contains("Join")), plans.mkString("\n"))
+    assert(opt.collectLeaves().forall(_.nodeName == "LocalRelation"), opt.toString)
   }
 
   test("massGLM: broadcast hints only on constant design tables, never on per-group relations") {
@@ -129,11 +180,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q16: boxcar has no nested-loop over the timeline×trials product") {
-    val p = plan("q16_boxcar_design")
-    // bucket expansion: Generate (explode) + hash agg; the only BNLJ-free
-    // requirement is that the TRIALS side is never cross-joined in full
-    assert(p.contains("Generate"))
-    assert(p.contains("HashAggregate"))
+    // bucket expansion: Generate (explode) + hash agg, in the gathered hit
+    // aggregate; the TRIALS side is never cross-joined in full
+    val (_, _, plans) = warmRun("q16_boxcar_design")
+    assert(plans.exists(p => p.contains("Generate") && p.contains("HashAggregate")),
+      plans.mkString("\n"))
+    assert(!plans.exists(p => p.contains("NestedLoopJoin") || p.contains("CartesianProduct")),
+      plans.mkString("\n"))
   }
 
   test("q23: simhash is a pure map stage — no exchange, no generate") {

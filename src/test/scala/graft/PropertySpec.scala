@@ -30,7 +30,7 @@ class PropertySpec extends SparkSpec {
       val df = a.zip(b).zipWithIndex
         .map { case ((av, bv), t) => (t.toLong, av, bv, av + bv) }
         .toDF("t", "a", "b", "ab")
-      val out = DesignOps.convolve(df, s, kernel, Seq("a", "b", "ab"), 12)
+      val out = DesignOps.convolve(df, kernel, Seq("a", "b", "ab"), 12)
         .collect()
       out.foreach { r =>
         val lhs = r.getAs[Double]("conv_ab")
@@ -38,6 +38,97 @@ class PropertySpec extends SparkSpec {
         assert(math.abs(lhs - rhs) < 1e-9, s"linearity broken at $r")
       }
     }
+  }
+
+  test("property: boxcar equals the brute-force interval test on seeded trials") {
+    val s = spark
+    import s.implicits._
+    val conds = Seq("A", "B", "C")
+    val tr = 2.0
+    // onsets before 0 and past n·TR, durations that cross n, NULL onset or
+    // duration, a condition outside the design
+    val trial = for {
+      onset <- Gen.option(Gen.choose(-10.0, 30.0))
+      dur <- Gen.option(Gen.choose(0.0, 12.0))
+      tt <- Gen.oneOf("A", "B", "C", "D")
+    } yield (onset, dur, tt)
+    val gen = for {
+      n <- Gen.choose(1, 12)
+      k <- Gen.choose(0, 8)
+      trials <- Gen.listOfN(k, trial)
+    } yield (n, trials)
+    for ((n, trials) <- samples(gen, 12) :+ ((5, Nil))) {
+      val ref = (0 until n).map { t =>
+        t.toLong +: conds.map(c => if (trials.exists {
+          case (Some(o), Some(d), `c`) => o <= t * tr && t * tr < o + d
+          case _ => false
+        }) 1L else 0L)
+      }
+      val got = DesignOps.boxcar(trials.toDF("onset", "duration", "trial_type"),
+        conds, tr, n).collect().map(_.toSeq).toSeq
+      assert(got == ref, s"n=$n trials=$trials")
+    }
+  }
+
+  test("property: driver convolution equals the scatter-form sum on seeded series") {
+    val s = spark
+    import s.implicits._
+    val gen = for {
+      n <- Gen.choose(0, 20)
+      len <- Gen.choose(1, 25)
+      x <- Gen.listOfN(n, Gen.choose(-3L, 3L))
+      h <- Gen.listOfN(len, Gen.choose(-1000000L, 1000000L))
+    } yield (x.toArray, h.toArray)
+    for ((x, h) <- samples(gen, 16)) {
+      val n = x.length
+      val ref = new Array[Long](n)
+      for (t0 <- x.indices; tau <- h.indices if t0 + tau < n) ref(t0 + tau) += h(tau) * x(t0)
+      assert(DesignOps.convolveInts(x, h).toSeq == ref.toSeq)
+      // a row at t >= n is ignored
+      val dm = (x.zipWithIndex.map { case (v, t) => (t.toLong, v) } :+ ((n + 2L, 7L)))
+        .toSeq.toDF("t", "x")
+      val out = DesignOps.convolve(dm, h, Seq("x"), n).collect()
+      assert(out.map(_.getLong(0)).toSeq == (0 until n).map(_.toLong))
+      assert(out.map(_.getDouble(1)).toSeq == ref.map(_.toDouble / 1e6).toSeq)
+    }
+    intercept[ArithmeticException](DesignOps.convolveInts(Array(Long.MaxValue / 2), Array(3L)))
+  }
+
+  test("property: driver mass betas equal the brute-force exact sums on seeded series") {
+    import graft.glm.{GlmOps, LinAlg}
+    val s = spark
+    import s.implicits._
+    val n = 10
+    val x: LinAlg.Mat = Array.tabulate(n, 3) { (t, j) =>
+      j match {
+        case 0 => 1.0
+        case 1 => (t - (n - 1) / 2.0) / 10.0
+        case _ => math.cos(math.Pi * (2 * t + 1) / (2.0 * n))
+      }
+    }
+    val w = LinAlg.pinv(x).map(_.map(v => math.rint(v * GlmOps.Scale).toLong))
+    // negative user_id % 20 groups, t < 0 and t >= N rows, NULL y
+    val row = for {
+      uid <- Gen.choose(-45L, 45L)
+      t <- Gen.choose(-2L, n + 3L)
+      y <- Gen.option(Gen.choose(-99999L, 99999L))
+    } yield (uid % 20, t, y.map(c => BigDecimal(c, 2)))
+    for (rows <- samples(Gen.choose(0, 40).flatMap(Gen.listOfN(_, row)), 12) :+ Nil) {
+      val series = rows.toDF("g", "t", "y_dec")
+        .withColumn("y_dec", col("y_dec").cast("decimal(18,2)"))
+      val got = GlmOps.massBetas(series, x, "g").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> Option(r.get(2))).toMap
+      val in = rows.filter { case (_, t, _) => t >= 0 && t < n }
+      val ref = (for (g <- in.map(_._1).distinct; j <- 0 until 3) yield {
+        val terms = in.collect { case (`g`, t, Some(y)) =>
+          java.math.BigDecimal.valueOf(w(j)(t.toInt)).multiply(y.bigDecimal) }
+        (g, j.toLong) -> terms.reduceOption(_ add _).map(v => v.doubleValue / GlmOps.Scale)
+      }).toMap
+      assert(got == ref, s"rows=$rows")
+    }
+    val e = intercept[ArithmeticException](GlmOps.betaSums(
+      Seq(("a", 0L, new java.math.BigDecimal("1e35"))), Array(Array(1000L)), "PropertySpec"))
+    assert(e.getMessage.contains("PropertySpec"), e.getMessage)
   }
 
   test("property: pointer-doubling CC labels equal a union-find oracle") {

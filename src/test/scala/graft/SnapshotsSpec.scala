@@ -63,6 +63,36 @@ class SnapshotsSpec extends SparkSpec {
     assert(second.collect().toSeq == Seq(Row(2L, 0.5)))
   }
 
+  test("a nested directory tree snapshots every file, and a deep append changes it") {
+    val s = spark
+    import s.implicits._
+    val p = tmp("graft-snap-nested") + "/t"
+    Seq((1L, "a", 1), (2L, "b", 2)).toDF("id", "a", "k").write.partitionBy("k").parquet(p)
+    Seq((3L, "c")).toDF("id", "a").write.parquet(p + "/k=3/sub")
+    // the reference: Hadoop's recursive listFiles over the same tree
+    def listed(): Vector[(String, Long, Long)] = {
+      val path = new org.apache.hadoop.fs.Path(p)
+      val it = path.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(path, true)
+      val b = Vector.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val st = it.next()
+        b += ((st.getPath.toString, st.getLen, st.getModificationTime))
+      }
+      b.result().sorted
+    }
+    val first = Snapshots.snapshot(spark, p)
+    assert(first == listed())
+    assert(first.exists(_._1.contains("/k=3/sub/part-")), first)
+    Seq((4L, "d")).toDF("id", "a").write.mode("append").parquet(p + "/k=3/sub")
+    val second = Snapshots.snapshot(spark, p)
+    assert(second == listed())
+    assert(second.size > first.size)
+    // a file path snapshots itself; a missing path is empty
+    val file = first.find(_._1.endsWith(".parquet")).get._1
+    assert(Snapshots.snapshot(spark, file) == first.filter(_._1 == file))
+    assert(Snapshots.snapshot(spark, p + "/missing").isEmpty)
+  }
+
   test("two Tables.documents reads are distinct Datasets and self-join") {
     val s = spark
     import s.implicits._
