@@ -11,7 +11,7 @@ import graft.util.Loops
   * (nltools `onsets_to_dm`, ssm_loop.py:43). The trial scan and the hit
   * aggregate are distributed; everything after them is TR-bounded (n
   * samples × conditions) and runs as exact driver kernels over one
-  * gathered result.
+  * folded result.
   */
 object DesignOps {
 
@@ -35,15 +35,16 @@ object DesignOps {
     *
     * Each trial explodes only its candidate TR range (±1 bucket of slack
     * so double rounding never DROPS a predicate-true pair), the exact
-    * predicate filters the boundary and one hash aggregate keeps the
+    * predicate filters the boundary and a [[Loops.fold]] keeps the
     * distinct (t, condition) hits: O(|trials|·dur/TR) rows in, at most
-    * n·|conditions| out — gathered once (over `cap` it fails naming the
-    * site) and laid onto the timeline on the driver.
+    * n·|conditions| out per partition and after the merge — one job, no
+    * exchange (over `cap` it fails naming the site) — laid onto the
+    * timeline on the driver.
     *
     * A driver-local relation scans as one task per core, so a query that
     * writes one out ends in `coalesce(1)`: one file, 90–96 ms against
     * 104–110 ms for four (q35, sf0.01, local[4]). The kernels' own
-    * relations stay LocalRelations, so a gather over them runs no job. */
+    * relations stay LocalRelations, so a pin over them runs no job. */
   def boxcar(trials: DataFrame, conditions: Seq[String], trSeconds: Double,
       n: Int, cap: Int = Loops.PinMaxRows): DataFrame = {
     val hits = trials
@@ -56,11 +57,11 @@ object DesignOps {
         col("onset"), col("duration"), col("trial_type"))
       .filter(col("onset") <= col("t") * trSeconds &&
         col("t") * trSeconds < col("onset") + col("duration"))
-      .select("t", "trial_type").distinct()
     // the fill: every t the hits miss is 0 (each hit's t is in [0, n))
     val cond = conditions.zipWithIndex.toMap
     val x = Array.fill(conditions.size, n)(0L)
-    for (r <- Loops.gatheredRows(hits, "DesignOps.boxcar", cap))
+    for (r <- Loops.foldedRows(hits, Seq("t", "trial_type"), Nil,
+        "DesignOps.boxcar", cap))
       x(cond(r.getString(1)))(r.getLong(0).toInt) = 1L
     timeRelation(trials.sparkSession, conditions, n)(t => x.map(_(t)).toSeq)
   }
@@ -125,13 +126,14 @@ object DesignOps {
 
   /** Causal convolution of integer (t, cols…) design columns with a
     * fixed-point kernel (W4, SURVEY.md §2.5): conv_c(t) =
-    * (Σ_τ h(τ)·x(t−τ)) / 1e6 for t in [0, n). `dm` is gathered (≤ `cap`
+    * (Σ_τ h(τ)·x(t−τ)) / 1e6 for t in [0, n). `dm` is bounded by contract
+    * (a [[boxcar]] LocalRelation, so the capped pin runs no job: ≤ `cap`
     * rows; a missing t is 0, a t outside [0, n) is ignored, a NULL x
     * fails), [[convolveInts]] sums exactly on the driver, and only the
     * scaling to double is a Catalyst projection. */
   def convolve(dm: DataFrame, kernel: Array[Long], cols: Seq[String], n: Int,
       cap: Int = Loops.PinMaxRows): DataFrame = {
-    val rows = Loops.gatheredRows(dm.select(("t" +: cols).map(col): _*),
+    val rows = Loops.pinnedRows(dm.select(("t" +: cols).map(col): _*),
       "DesignOps.convolve", cap)
     val x = Array.fill(cols.size, n)(0L)
     for (r <- rows; t = r.getAs[Number](0).longValue if t >= 0 && t < n;

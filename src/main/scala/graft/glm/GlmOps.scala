@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructField, StructTyp
   *    SHARED design matrix X — the ssm_loop shape (one X, millions of
   *    voxels). The k×n pinv = (XᵀX)⁻¹Xᵀ is computed on the driver
   *    (LinAlg) and scaled to integers (×1e9, round); the (group, t)
-  *    series — |groups|·n rows — is gathered once and the betas are
-  *    exact DECIMAL sums on the driver. q33's oracle transcribes the same
-  *    sums as a literal-table join.
+  *    series — |groups|·n rows — is folded once (per-partition sums
+  *    merged on the driver) and the betas are exact DECIMAL sums there.
+  *    q33's oracle transcribes the same sums as a literal-table join.
   *  - `massGLMPacked`: the PRODUCTION shuffle shape (q48/q60) — each
   *    series packs into an n-slot exact-int64 array by one aggregation;
   *    all per-regressor sums become exact dot-product projections.
@@ -85,18 +85,21 @@ object GlmOps {
       .withColumn("resid", col(yCol) - (col("beta0") + col("beta1") * col(xCol)))
   }
 
-  /** Mass-univariate OLS betas: `series` is the long relation
-    * (group, t, y_dec), y_dec an exact DECIMAL of scale 2; X is the shared
-    * n×k design. β(g, j) = (Σ_t w(j,t)·y(g,t)) / Scale, w = round(pinv(j)(t)
-    * · Scale). Rows with t outside [0, n) are ignored and missing t are
-    * zero. The |groups|·n series is gathered once (over `cap` it fails
-    * naming the site) and summed exactly by [[betaSums]]; only the scaling
-    * to double is a Catalyst projection. Groups come in first-seen order. */
+  /** Mass-univariate OLS betas: `series` is the long relation of
+    * observations (group, t, y_dec), y_dec an exact DECIMAL of scale 2,
+    * several rows per (group, t) allowed; X is the shared n×k design.
+    * β(g, j) = (Σ_t w(j,t)·y(g,t)) / Scale, y(g, t) the sum of the group's
+    * y_dec at t and w = round(pinv(j)(t) · Scale). Rows with t outside
+    * [0, n) are ignored and missing t are zero. y(g, t) is one
+    * [[graft.util.Loops.fold]] — per-partition sums merged on the driver,
+    * at most |groups|·n rows (over `cap` it fails naming the site) — and
+    * [[betaSums]] sums the betas exactly; only the scaling to double is a
+    * Catalyst projection. Groups come in ascending order. */
   def massBetas(series: DataFrame, x: LinAlg.Mat, groupCol: String,
       cap: Int = graft.util.Loops.PinMaxRows): DataFrame = {
     val site = "GlmOps.massBetas"
-    val rows = graft.util.Loops.gatheredRows(
-      series.select(col(groupCol), col("t"), col("y_dec")), site, cap)
+    val rows = graft.util.Loops.foldedRows(
+      series, Seq(groupCol, "t"), Seq("y_dec"), site, cap)
     val p = LinAlg.pinv(x)
     val sums = betaSums(
       rows.iterator.filterNot(_.isNullAt(1)).map(r =>

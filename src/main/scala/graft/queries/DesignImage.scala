@@ -831,16 +831,16 @@ object DesignImage extends QueryModule {
   // semantics (n = NT); r is the shared expression, ROUNDED to 6 dp
   // BEFORE thresholding so an engine's last-ulp can't flip an edge.
   //
-  // Scale shape: ONE data-sized exchange — lineitem rows summed straight
-  // into the parcel series, combining map-side to NP·NT rows, with no
-  // voxel aggregate between — and one collect of those rows to the driver
-  // (parcelSeries' gather). GraphLoops.pairMoments folds the pair moments
+  // Scale shape: ONE data-sized scan, no exchange — lineitem rows summed
+  // straight into the parcel series per partition, with no voxel
+  // aggregate between, and the NP·NT-row partials merged on the driver
+  // (parcelSeries' fold). GraphLoops.pairMoments folds the pair moments
   // there in exact integer arithmetic — no self-join, no checkpoint, no
   // second exchange — so r, the threshold and the edge column are
   // projections of one LocalRelation (`connectomePairs`, what every
   // connectome consumer reads); q168, q178 and q194, whose outputs carry
   // the degrees, add the degree fold on the driver. At atlas scale
-  // (NP ≈ 10²-10³) the gather is NP·NT rows and the pair relation NP²/2.
+  // (NP ≈ 10²-10³) the merged fold is NP·NT rows and the pair relation NP²/2.
 
   private val connNP = 12
   private val connNumStr =
@@ -878,7 +878,7 @@ object DesignImage extends QueryModule {
   /** The data-sized parcel aggregate every connectome starts from:
     * (`keys`…, p, t, pv = Σ v) over the coordinate-hash atlas of a
     * (`keys`…, t, x, y, z, v) series — NP·NT rows per key, the relation
-    * [[GraphLoops.pairMoments]] pins.
+    * [[GraphLoops.pairMoments]] reads.
     *
     * The series may be at row grain (one row per lineitem row, several
     * per voxel) or at voxel grain: p is a function of (x, y, z) and pv a
@@ -886,18 +886,16 @@ object DesignImage extends QueryModule {
     * `S / 100.0 → DECIMAL(18,2) → × 100 → BIGINT` round trip returns
     * every voxel sum S below 2⁵² cents unchanged, so up to that bound the
     * row-grain pv equals the voxel-grain one exactly; the row grain skips
-    * the voxel exchange, leaving ONE data-sized exchange.
+    * the voxel aggregate.
     *
-    * The aggregate ends in [[graft.util.Loops.gather]]: one capped collect
-    * on the caller's session (full parallelism, AQE), returned as a
-    * LocalRelation, so the pin and every other reader read driver-local
-    * rows — no checkpoint, no second job over the scan. */
+    * The aggregate is a [[graft.util.Loops.fold]]: each scan partition sums
+    * its rows into parcels and the partials merge on the driver — one job,
+    * no exchange — returned as a LocalRelation in (keys, p, t) order, which
+    * [[GraphLoops.pairMoments]] and every other reader read driver-local. */
   private[graft] def parcelSeries(series: DataFrame, keys: Seq[String]): DataFrame =
-    graft.util.Loops.gather(series
-      .selectExpr(keys ++ Seq(
-        s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p", "t", "v"): _*)
-      .groupBy((keys ++ Seq("p", "t")).map(col): _*).agg(sum("v").as("pv")),
-      "DesignImage.parcelSeries")
+    graft.util.Loops.fold(series.selectExpr(keys ++ Seq(
+        s"CAST((x * 7 + y * 11 + z * 13) % $connNP AS INT) AS p", "t", "v AS pv"): _*),
+      keys ++ Seq("p", "t"), Seq("pv"), "DesignImage.parcelSeries")
 
   /** The shared moments → r → edges → degrees tail of q168/q178, in two
     * steps: threshold the rounded r, then fold per-parcel degree and join
@@ -1061,9 +1059,9 @@ object DesignImage extends QueryModule {
   // chain (the q158 atanh discipline); everything after z_fp is integer
   // permutation arithmetic plus the shared t expression strings.
   //
-  // Scale shape: ONE data-sized exchange (the per-session parcel-series
-  // aggregate over lineitem rows, map-side combined to GRuns·NP·NT rows
-  // and gathered to the driver once); the driver pair-moment kernel
+  // Scale shape: ONE data-sized scan, no exchange (the per-session
+  // parcel-series fold over lineitem rows, GRuns·NP·NT-row partials
+  // merged on the driver); the driver pair-moment kernel
   // (GraphLoops.pairMoments, key g) returns the GRuns·NP² moments as a
   // LocalRelation that r and z project; the PermP expansion and BH are
   // GRuns·NP²-bounded. BH ranks
@@ -1109,16 +1107,17 @@ object DesignImage extends QueryModule {
   private[graft] def edgeInferenceCore(s: SparkSession, facts: DataFrame,
       alphaOverM: Double): DataFrame = {
     // fl is GRuns·NP²-bounded and a projection of pairMoments' driver-local
-    // relation, so its two readers in signFlipCore (base + perms) re-read
-    // driver rows, not the session-series scan. sf is NP²-bounded with two
-    // consumers (bh + the verdict join), but its plan is the fl×PermP
-    // expansion: checkpoint it distributed (fresh), not single-partition
-    // on the pin session.
+    // relation, so its two readers (base + perms) re-read driver rows, not
+    // the session-series scan; base is pinned (see Glm.signFlipParts). sf
+    // is NP²-bounded with two consumers (bh + the verdict join), but its
+    // plan is the fl×PermP expansion: checkpoint it distributed (fresh),
+    // not single-partition on the pin session.
     val fl = facts
       .filter(col("z_fp").isNotNull)
       .select(col("p1").as("run"), col("p2").as("j"), col("g"),
         col("z_fp").as("b_fp"))
-    val sf = graft.util.Loops.fresh(Glm.signFlipCore(s, fl))
+    val (base, permT) = Glm.signFlipParts(s, fl, pinBase = true)
+    val sf = graft.util.Loops.fresh(Glm.signFlipFromParts(base, permT))
     val bh = Glm.fdrBhCore(sf, alphaOverM)
       .select("run", "j", "rk", "kbh", "rejected")
     sf.join(bh, Seq("run", "j"), "left")
@@ -1241,7 +1240,7 @@ object DesignImage extends QueryModule {
       .filter(col("z_fp").isNotNull)
       .select(col("p1").as("run"), col("p2").as("j"), col("g"),
         col("z_fp").as("b_fp"))
-    val (base, permT) = Glm.signFlipParts(s, fl)
+    val (base, permT) = Glm.signFlipParts(s, fl, pinBase = true)
     val obsE = base
       .filter(expr(s"t_obs IS NOT NULL AND abs(t_obs) > $tPrim"))
       .selectExpr("CAST(-1 AS BIGINT) AS k", "CAST(run AS INT) AS a",
@@ -3222,8 +3221,8 @@ object DesignImage extends QueryModule {
   // window (count skips them); a pair flat in EVERY window reads
   // n_win = 0 with NULL mean/sd.
   //
-  // Scale shape: one data-sized exchange (the parcel-series aggregate over
-  // lineitem rows, gathered to the driver once); the window expansion
+  // Scale shape: one data-sized scan, no exchange (the parcel-series fold
+  // over lineitem rows, merged on the driver); the window expansion
   // multiplies that NP·NT relation by ≤ wl/step = 2 live windows per TR,
   // and the expansion is pinned once to the driver pair-moment kernel
   // (GraphLoops.pairMoments, key ws), which returns the |w|·NP² window
@@ -3914,8 +3913,8 @@ object DesignImage extends QueryModule {
   // membership. A single-member module has no within partners →
   // recruitment NULL (not 0 — the q32-class honest-null rule).
   //
-  // Scale shape: ONE data-sized exchange — the parcel-series aggregate
-  // over lineitem rows, gathered to the driver once and read by both
+  // Scale shape: ONE data-sized scan, no exchange — the parcel-series
+  // fold over lineitem rows, merged on the driver once and read by both
   // chains: the q236 keyed chain (window pair moments, driver LPA per
   // window) and the q208 static chain (pair moments, driver LPA). Past it
   // every relation is driver-local: a |W|·NP²-bounded ordered-pair fold
@@ -4292,8 +4291,8 @@ object DesignImage extends QueryModule {
   // with the per-row argmax (ties to the smallest candidate) and the
   // diagonal-hit verdict.
   //
-  // Scale shape: ONE data-sized exchange (the (g, h)-keyed parcel-series
-  // aggregate over lineitem rows, gathered to the driver once for the
+  // Scale shape: ONE data-sized scan, no exchange (the (g, h)-keyed
+  // parcel-series fold over lineitem rows, merged on the driver for the
   // pair-moment kernel, GraphLoops.pairMoments, keys g and h); moments, r,
   // and the identification matrix are GRuns·NP²-bounded; the argmax window
   // partitions by ga over GRuns²-sized rows. At atlas scale the edge vectors are the standing
@@ -4373,8 +4372,8 @@ object DesignImage extends QueryModule {
   // exact integer series. Same edge/degree tail semantics as q168
   // (threshold the ROUNDED partial r at |r| ≥ 0.1).
   //
-  // Scale shape: ONE data-sized exchange (the parcel-series aggregate over
-  // lineitem rows, gathered to the driver once); the NP² pair moments come
+  // Scale shape: ONE data-sized scan, no exchange (the parcel-series fold
+  // over lineitem rows, merged on the driver); the NP² pair moments come
   // off the driver (GraphLoops.pairMoments) as a LocalRelation, and g, the
   // NP-bounded parcel-vs-g moments and the partial-r joins over them run
   // as ONE pin; q168's degree fold is broadcast-class.
@@ -4674,8 +4673,8 @@ object DesignImage extends QueryModule {
   // the SURVIVING frames — so the moments carry a data-dependent n
   // (count per pair) instead of q168's dense NT.
   //
-  // Scale shape: ONE data-sized exchange — the parcel series over
-  // lineitem rows, gathered to the driver once — feeds both readers: the
+  // Scale shape: ONE data-sized scan, no exchange — the parcel-series
+  // fold over lineitem rows, merged on the driver — feeds both readers: the
   // global signal is its per-t sum (Σ_p pv at t, the NULL-p group
   // included, is Σ v at t), so the lag/censor windows run on an NT-row
   // relation (the q151 distinct-relation class, not a data-sized window),
@@ -4700,7 +4699,7 @@ object DesignImage extends QueryModule {
   /** The q178 body from a (t, x, y, z, v-cents) series — split out so
     * specs can plant spike frames and censored-frame garbage. */
   private[graft] def scrubbedConnectomeCore(series: DataFrame): DataFrame = {
-    // the gathered parcel series feeds the censor derivation AND the pair
+    // the folded parcel series feeds the censor derivation AND the pair
     // moments: Σ_p pv at t, the NULL-p group included, is Σ v at t
     val par = parcelSeries(series, Nil)
     val dv = par.groupBy("t").agg(sum("pv").as("g"))

@@ -106,8 +106,8 @@ object Glm extends QueryModule {
     // toward zero while the oracle's `//` floors, so a pre-baseUs event
     // would land in bucket 0 here but bucket −1 (excluded by the design
     // join) in the oracle. On nonnegative differences the two agree. The
-    // design's t < N filter also runs before the aggregate, so the series
-    // massBetas gathers is at most |g|·N rows.
+    // design's t < N filter also runs before massBetas' (g, t) fold, so
+    // the folded series is at most |g|·N rows.
     val series = events(s, d)
       .filter(expr(s"ts div 1000 - $baseUs >= 0"))
       .select(
@@ -115,7 +115,6 @@ object Glm extends QueryModule {
         expr(s"(ts div 1000 - $baseUs) div $bucketUs").as("t"),
         col("value").cast("decimal(18,2)").as("y_dec"),
       ).filter(col("t") < N)
-      .groupBy("g", "t").agg(sum("y_dec").as("y_dec"))
     GlmOps.massBetas(series, design, "g").orderBy("g", "j")
       .coalesce(1) // one output file: see DesignOps.boxcar
   }
@@ -1084,16 +1083,24 @@ object Glm extends QueryModule {
   /** The permutation machinery shared by q148/q151/q152: from a
     * (run, g, j, b_fp) first-level relation, the observed-stat relation
     * `base` (run, j, n, q, t_obs) and the per-pattern stat relation
-    * `permT` (run, j, perm, t_p). */
-  private[graft] def signFlipParts(s: SparkSession,
-      firstLevel: DataFrame): (DataFrame, DataFrame) = {
-    val base = firstLevel.groupBy("run", "j")
+    * `permT` (run, j, perm, t_p).
+    *
+    * `pinBase` pins `base` (one row per hypothesis) for a driver-local
+    * first level (q182/q196): the permutation plan then holds no
+    * aggregate stage beside the expansion, so AQE creates its stages in
+    * one fixed order. With two such stages racing the range broadcast,
+    * the order they finish in renumbered the whole-stage classes on every
+    * run, and each run recompiled them. */
+  private[graft] def signFlipParts(s: SparkSession, firstLevel: DataFrame,
+      pinBase: Boolean = false): (DataFrame, DataFrame) = {
+    val base0 = firstLevel.groupBy("run", "j")
       .agg(expr("COUNT(*)").as("n"), expr("SUM(b_fp)").as("s1"),
         expr("SUM(CAST(b_fp AS DECIMAL(38,0)) * b_fp)").as("s2"))
       .selectExpr("run", "j", "n",
         "CAST(s1 AS DOUBLE) / (n * 1e6) AS m",
         "CAST(s2 AS DOUBLE) / 1e12 AS q")
       .selectExpr("run", "j", "n", "q", s"$permTStr AS t_obs")
+    val base = if (pinBase) graft.util.Loops.pin(base0) else base0
     val perms = firstLevel
       .crossJoin(s.range(PermP).select(col("id").as("perm")))
       .selectExpr("run", "j", "perm",

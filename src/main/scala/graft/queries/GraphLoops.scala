@@ -450,7 +450,8 @@ private[graft] object GraphLoops {
   }
 
   /** The Pearson pair moments of a (`keys`…, p, t, pv) parcel-series
-    * relation, pinned ONCE through the capped collect: per key and per
+    * relation — read as it is when driver-local (the folded parcel series),
+    * else pinned ONCE through the capped collect: per key and per
     * p1 < p2 pair sharing at least one t, one (keys…, p1, p2, n, sab, sa,
     * sb, saa, sbb) row over their common t — n its count, sa/sb the BIGINT
     * sums of each side's pv, sab/saa/sbb the DECIMAL(38,0) sums of
@@ -461,7 +462,7 @@ private[graft] object GraphLoops {
     * term to a sum, a sum with no term is NULL, a row with a NULL key, p
     * or t joins nothing, and a BIGINT or 38-digit overflow fails naming
     * `site`, as the ANSI sum does. (keys, p, t) must be unique — the grain of the
-    * parcel aggregate every caller pins. Rows come in first-seen key
+    * parcel aggregate every caller passes. Rows come in first-seen key
     * order, then (p1, p2) order; the call logs one `pair_moments` line. */
   def pairMoments(par: DataFrame, keys: Seq[String], site: String): DataFrame = {
     val k = keys.size
@@ -469,8 +470,10 @@ private[graft] object GraphLoops {
       integralIds(par.schema("pv").dataType),
       s"$site: p and pv must be integral, got " +
         s"${par.schema("p").dataType}/${par.schema("pv").dataType}")
-    val rows = graft.util.Loops.pinnedRows(
-      par.select((keys ++ Seq("p", "t", "pv")).map(col): _*), site)
+    // a driver-local series (the fold's LocalRelation) is read as it is
+    val sel = par.select((keys ++ Seq("p", "t", "pv")).map(col): _*)
+    val rows = graft.util.Loops.localRows(sel)
+      .getOrElse(graft.util.Loops.pinnedRows(sel, site))
     // per key, per parcel: t → pv (null for a NULL pv)
     val cells = collection.mutable.LinkedHashMap.empty[Row,
       collection.mutable.Map[Any, collection.mutable.Map[Any, java.lang.Long]]]

@@ -95,7 +95,7 @@ object ProbeJobs {
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
          if prefixes.forall(_.exists(name.startsWith))) {
       def run(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count(): Unit }
-      val compiles = org.apache.spark.sql.graft.PlanBridge.janinoCompiles _
+      val compiles = () => org.apache.spark.sql.graft.PlanBridge.janinoCompiles
       val c0 = compiles()
       run() // warm
       val c1 = compiles()

@@ -1,6 +1,15 @@
 package graft.util
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, InterpretedOrdering,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 
 /** Loop-state checkpointing for iterative kernels.
   *
@@ -139,29 +148,192 @@ object Loops {
     rows
   }
 
-  /** A data-sized plan with a BOUNDED result (an atlas aggregate of a
-    * scan), brought to the driver once and rebuilt as a LocalRelation.
-    * Unlike [[pin]], the collect runs on `df`'s own session: the scan and
-    * exchange below the bound keep full parallelism and AQE, where the
-    * pin session would run them in one task (the serial data-sized pin of
-    * q155/q156). Every later reader, pins included, then reads
-    * driver-local rows. Over `cap` rows it fails naming `site` — it never
-    * demotes and never runs the plan twice. The capped collect takes
-    * partitions incrementally, so it is one job when the result sits in
-    * one partition, as AQE coalesces an atlas aggregate. */
-  private[graft] def gather(df: DataFrame, site: String,
-      cap: Int = PinMaxRows): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(gatheredRows(df, site, cap): _*), df.schema)
+  /** A bounded group-by of a data-sized plan, folded per partition and
+    * merged on the driver: `keys` ++ `sums` columns, one row per distinct
+    * key tuple (NULL is a key like any other) in ascending key order, each
+    * sum column the exact `sum(c)` of its group under Spark's sum result
+    * type — BIGINT for an integral column, DECIMAL(min(p + 10, 38), s) for
+    * a DECIMAL(p, s) one. A sum with no non-NULL term is NULL. With no
+    * `sums` it is the `distinct()` of the keys. The result is a driver-local
+    * relation (LocalRelation), so every later reader, pins included, reads
+    * it with no job.
+    *
+    * Each partition reads its rows as InternalRows (`queryExecution.toRdd`,
+    * no Row deserializer) into a hash map from key to exact sums: BIGINT
+    * through `Math.addExact`, DECIMAL as exact BigDecimal checked against
+    * the result precision. The partials merge by `treeAggregate`: at P
+    * partitions the driver holds about √P of them (one job, no shuffle at
+    * a few partitions; one executor-side reduce level at large P), and no
+    * data-sized row ever reaches the driver. Over `cap` keys — inside one
+    * partition or only after a merge — the fold fails naming `site`; an
+    * overflow throws an ArithmeticException naming `site`, as the ANSI sum
+    * does. It never demotes and never runs the plan twice. Each call logs
+    * one `graft.loops` `fold` line (site, partitions, partial rows shipped,
+    * merged rows). */
+  private[graft] def fold(df: DataFrame, keys: Seq[String], sums: Seq[String],
+      site: String, cap: Int = PinMaxRows): DataFrame = {
+    val (schema, rows) = folded(df, keys, sums, site, cap)
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
-  /** The rows of [[gather]] alone, for driver kernels that continue on
-    * them. */
-  private[graft] def gatheredRows(df: DataFrame, site: String,
-      cap: Int = PinMaxRows): Array[org.apache.spark.sql.Row] = {
-    val rows = collectCapped(df.sparkSession, df, cap)
-    require(rows.length <= cap,
-      s"$site got > $cap rows — not an atlas-bounded result")
-    rows
+  /** The rows of [[fold]] alone, for driver kernels that continue on them. */
+  private[graft] def foldedRows(df: DataFrame, keys: Seq[String], sums: Seq[String],
+      site: String, cap: Int = PinMaxRows): Array[Row] =
+    folded(df, keys, sums, site, cap)._2
+
+  private def folded(df: DataFrame, keys: Seq[String], sums: Seq[String],
+      site: String, cap: Int): (StructType, Array[Row]) = {
+    require(keys.nonEmpty, s"$site: a fold needs at least one key")
+    val sel = df.select((keys ++ sums).map(col): _*)
+    val k = keys.size
+    val keyTypes = sel.schema.fields.take(k).map(_.dataType)
+    val inTypes = sel.schema.fields.drop(k).map(_.dataType)
+    val outTypes: Array[DataType] = inTypes.map {
+      case ByteType | ShortType | IntegerType | LongType => LongType
+      case d: DecimalType => DecimalType(math.min(d.precision + 10, 38), d.scale)
+      case t => throw new IllegalArgumentException(
+        s"$site: fold sums integral or DECIMAL columns, got $t")
+    }
+    // one SQL execution, as an action's: its plan and metrics are listed
+    val (parts, merged) = SQLExecution.withNewExecutionId(sel.queryExecution,
+        Some(s"fold $site")) {
+      val partials = sel.queryExecution.toRdd.mapPartitions(it =>
+        Iterator(FoldState.of(it, keyTypes, inTypes, outTypes, site, cap)))
+      (partials.getNumPartitions, partials.treeAggregate(FoldState.empty)(
+        (a, b) => a.merge(b, outTypes, site, cap),
+        (a, b) => a.merge(b, outTypes, site, cap)))
+    }
+    if (merged.failure != null) throw merged.failure
+    val toKey = CatalystTypeConverters.createToScalaConverter(
+      StructType(sel.schema.fields.take(k)))
+    val ordered = merged.sums.asScala.toArray
+      .sortBy(_._1: InternalRow)(InterpretedOrdering.forSchema(keyTypes.toSeq))
+    val rows = ordered.map { case (key, s) =>
+      Row.fromSeq(toKey(key).asInstanceOf[Row].toSeq ++ s.toSeq)
+    }
+    foldLog.info(s"""{"event":"fold","site":"$site","partitions":""" +
+      s"""$parts,"partial_rows":${merged.shipped},""" +
+      s""""rows":${rows.length}}""")
+    (StructType(sel.schema.fields.take(k) ++ sums.zip(outTypes).map {
+      case (c, t) => StructField(c, t) }), rows)
+  }
+
+  /** The rows of a column selection of a driver-local relation (a
+    * LocalRelation, as [[fold]] and [[pin]] return), read with no job;
+    * None for any other plan. */
+  private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.analyzed match {
+      case Project(list, l: LocalRelation) if list.forall(_.isInstanceOf[Attribute]) =>
+        val at = list.map(a => l.output.indexWhere(_.exprId == a.exprId))
+        val toRow = CatalystTypeConverters.createToScalaConverter(l.schema)
+        Some(l.data.iterator.map { r =>
+          val full = toRow(r).asInstanceOf[Row]
+          Row.fromSeq(at.map(full.get))
+        }.toArray)
+      case _ => None
+    }
+
+  private val foldLog = org.slf4j.LoggerFactory.getLogger("graft.loops")
+
+  /** One partition's (or one merge's) [[fold]] state: key → exact sums (a
+    * java.lang.Long or java.math.BigDecimal per sum column, null before
+    * the first non-NULL term), the partial rows shipped into it, and the
+    * failure that ends the fold — carried as a value, so the driver throws
+    * it as itself rather than as a task failure. */
+  private final class FoldState(val sums: java.util.HashMap[UnsafeRow, Array[Any]],
+      var shipped: Long, var failure: Throwable) extends Serializable {
+
+    def merge(o: FoldState, outTypes: Array[DataType], site: String,
+        cap: Int): FoldState =
+      if (failure != null) this
+      else if (o.failure != null) o
+      else FoldState.guarded(this) {
+        shipped += o.shipped
+        o.sums.forEach { (key, s) =>
+          val mine = sums.get(key)
+          if (mine == null) sums.put(key, s)
+          else for (j <- s.indices if s(j) != null)
+            mine(j) = FoldState.add(mine(j), s(j), outTypes(j), site)
+        }
+        FoldState.checkCap(sums.size, site, cap)
+      }
+  }
+
+  private object FoldState {
+    def empty: FoldState = new FoldState(new java.util.HashMap, 0L, null)
+
+    def of(it: Iterator[InternalRow], keyTypes: Array[DataType],
+        inTypes: Array[DataType], outTypes: Array[DataType], site: String,
+        cap: Int): FoldState = {
+      val st = empty
+      guarded(st) {
+        val k = keyTypes.length
+        val key = UnsafeProjection.create(keyTypes)
+        val read: Array[InternalRow => Any] = inTypes.zipWithIndex.map {
+          case (ByteType, j) => (r: InternalRow) => r.getByte(k + j).toLong
+          case (ShortType, j) => (r: InternalRow) => r.getShort(k + j).toLong
+          case (IntegerType, j) => (r: InternalRow) => r.getInt(k + j).toLong
+          case (LongType, j) => (r: InternalRow) => r.getLong(k + j)
+          case (d: DecimalType, j) =>
+            (r: InternalRow) => r.getDecimal(k + j, d.precision, d.scale).toJavaBigDecimal
+        }
+        while (it.hasNext) {
+          val r = it.next()
+          val kr = key(r)
+          var s = st.sums.get(kr)
+          if (s == null) {
+            s = new Array[Any](inTypes.length)
+            st.sums.put(kr.copy(), s)
+            checkCap(st.sums.size, site, cap)
+          }
+          var j = 0
+          while (j < s.length) {
+            if (!r.isNullAt(k + j)) s(j) = add(s(j), read(j)(r), outTypes(j), site)
+            j += 1
+          }
+        }
+        st.shipped = st.sums.size
+      }
+    }
+
+    /** Run `body` on `st`, turning a cap or overflow failure into its
+      * state. */
+    def guarded(st: FoldState)(body: => Unit): FoldState = {
+      try body catch {
+        case e @ (_: ArithmeticException | _: IllegalArgumentException) =>
+          st.failure = e
+      }
+      st
+    }
+
+    def checkCap(n: Int, site: String, cap: Int): Unit =
+      require(n <= cap, s"$site got > $cap rows — not an atlas-bounded result")
+
+    /** a + b at the sum's result type; a null `a` is no term yet. */
+    def add(a: Any, b: Any, t: DataType, site: String): Any = t match {
+      case LongType =>
+        val (x, y) = (b.asInstanceOf[java.lang.Long].longValue,
+          if (a == null) 0L else a.asInstanceOf[java.lang.Long].longValue)
+        try java.lang.Long.valueOf(Math.addExact(x, y)) catch {
+          case _: ArithmeticException =>
+            throw new ArithmeticException(s"$site: BIGINT overflow in a fold sum")
+        }
+      case d: DecimalType =>
+        val v = b.asInstanceOf[java.math.BigDecimal]
+        checkDecimal(if (a == null) v else a.asInstanceOf[java.math.BigDecimal].add(v),
+          d, site)
+    }
+
+  }
+
+  /** `v` at DECIMAL(d.precision, d.scale), or an ArithmeticException
+    * naming `site` when it needs more digits — [[fold]]'s sum check. */
+  private[graft] def checkDecimal(v: java.math.BigDecimal, d: DecimalType,
+      site: String): java.math.BigDecimal = {
+    val r = v.setScale(d.scale)
+    if (r.precision - r.scale > d.precision - d.scale) throw new ArithmeticException(
+      s"$site: fold sum $r overflows DECIMAL(${d.precision},${d.scale})")
+    r
   }
 
   private def collectCapped(session: SparkSession, df: DataFrame,

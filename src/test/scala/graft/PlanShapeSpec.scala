@@ -28,7 +28,7 @@ class PlanShapeSpec extends SparkSpec {
   /** A warm run of query `name` built and written to parquet, as a dump
     * does, on a session with the engine's optimizer rules installed: the
     * query's optimized plan, the jobs of the second run and the executed
-    * plans of every action it took (the gathers and the write). */
+    * plans of every SQL execution it ran (the folds, pins and the write). */
   private def warmRun(name: String): (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       Int, Seq[String]) = {
     val s = spark.newSession()
@@ -45,6 +45,13 @@ class PlanShapeSpec extends SparkSpec {
     val jl = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet(): Unit
+      // a plan run without an action (a fold) is still one SQL execution
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            plans.add(x.physicalPlanDescription): Unit
+          case _ =>
+        }
     }
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -64,21 +71,21 @@ class PlanShapeSpec extends SparkSpec {
     (df.queryExecution.optimizedPlan, jobs.get, plans.asScala.toSeq)
   }
 
-  test("q16/q35/q33: the GLM design stages run at most 3 jobs and no range exchange") {
-    // one hash aggregate gathered to the driver (a shuffle-map job and a
-    // result job), the driver kernels, and the write; the final sort folds
-    // into the driver-local rows
+  test("q16/q35/q33: the GLM design stages run at most 2 jobs and no range exchange") {
+    // one fold merged on the driver (one job, no exchange), the driver
+    // kernels, and the write; the final sort folds into the driver-local
+    // rows
     for (name <- Seq("q16_boxcar_design", "q35_hrf_convolve", "q33_mass_glm_betas")) {
       val (_, jobs, plans) = warmRun(name)
-      assert(jobs <= 3, s"$name ran $jobs jobs:\n${plans.mkString("\n")}")
+      assert(jobs <= 2, s"$name ran $jobs jobs:\n${plans.mkString("\n")}")
       assert(!plans.exists(_.contains("rangepartitioning")), s"$name:\n${plans.mkString("\n")}")
     }
   }
 
-  test("q33: the series is one hash aggregate; the betas are driver-local") {
+  test("q33: the series folds with no exchange or join; the betas are driver-local") {
     val (opt, _, plans) = warmRun("q33_mass_glm_betas")
-    assert(plans.exists(_.contains("HashAggregate")), plans.mkString("\n"))
-    assert(!plans.exists(p => p.contains("Join")), plans.mkString("\n"))
+    assert(!plans.exists(p => p.contains("Join") || p.contains("Exchange")),
+      plans.mkString("\n"))
     assert(opt.collectLeaves().forall(_.nodeName == "LocalRelation"), opt.toString)
   }
 
@@ -180,11 +187,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q16: boxcar has no nested-loop over the timeline×trials product") {
-    // bucket expansion: Generate (explode) + hash agg, in the gathered hit
-    // aggregate; the TRIALS side is never cross-joined in full
+    // bucket expansion: Generate (explode) in the folded hit plan; the
+    // TRIALS side is never cross-joined in full
     val (_, _, plans) = warmRun("q16_boxcar_design")
-    assert(plans.exists(p => p.contains("Generate") && p.contains("HashAggregate")),
-      plans.mkString("\n"))
+    assert(plans.exists(_.contains("Generate")), plans.mkString("\n"))
     assert(!plans.exists(p => p.contains("NestedLoopJoin") || p.contains("CartesianProduct")),
       plans.mkString("\n"))
   }
@@ -315,16 +321,20 @@ class PlanShapeSpec extends SparkSpec {
     assert(!qe.executedPlan.toString.contains("Exchange"), qe.executedPlan.toString)
   }
 
-  test("q208/q215: building the edge relation runs one shuffle-map stage and no checkpoint") {
-    // the parcel series sums lineitem rows straight into parcels (one
-    // exchange) and is gathered to the driver; the pin reads those rows
+  test("q208/q215: building the edge relation runs one job, no shuffle output, no checkpoint") {
+    // the parcel series folds lineitem rows straight into parcels per
+    // partition and merges them on the driver; pairMoments reads those rows
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         stages.add((e.stageInfo.name,
           e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0))
     }
+    org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
     spark.sparkContext.addSparkListener(listener)
     try graft.queries.DesignImage.corenessPairs(spark, sf001) finally {
       org.apache.spark.sql.graft.PlanBridge.waitListenerBusEmpty(spark.sparkContext, 10000)
@@ -332,13 +342,14 @@ class PlanShapeSpec extends SparkSpec {
     }
     import scala.jdk.CollectionConverters._
     val all = stages.asScala.toSeq
-    assert(all.count(_._2) == 1, s"stages writing shuffle output: $all")
+    assert(jobs.get == 1, s"${jobs.get} jobs, stages: $all")
+    assert(!all.exists(_._2), s"stages writing shuffle output: $all")
     assert(!all.exists(_._1.startsWith("localCheckpoint")), s"stages: $all")
   }
 
   test("q213/q214/q218/q227/q228: the graph tail is pinned — LocalRelation leaves, only a sort") {
     // each reads q168's driver-local pair relation and pins its whole
-    // NP²-bounded tail: the parcel aggregate is gathered, not checkpointed,
+    // NP²-bounded tail: the parcel aggregate is folded, not checkpointed,
     // and nothing past the pin re-plans a join, aggregate or window
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation

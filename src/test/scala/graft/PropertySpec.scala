@@ -876,4 +876,65 @@ class PropertySpec extends SparkSpec {
         "key 200 is a single parcel")
     }
   }
+
+  test("property: the fold equals groupBy-sum and distinct at 1, 3 and 17 partitions; overflows fail") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    type DF = org.apache.spark.sql.DataFrame
+    val schema = StructType(Seq(StructField("k1", IntegerType), StructField("k2", StringType),
+      StructField("v", LongType), StructField("w", IntegerType),
+      StructField("d", DecimalType(28, 2))))
+    def rel(rows: Seq[Row], parts: Int): DF =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), schema)
+    // seeded rows: keys from small domains with NULLs, values signed, zero
+    // or NULL; key (7, "z") is planted with NULL values only (its sums
+    // are NULL)
+    def opt[A](g: Gen[A]): Gen[Any] =
+      Gen.frequency(5 -> g.map(v => v: Any), 1 -> Gen.const(null))
+    val genRow = for {
+      k1 <- opt(Gen.choose(0, 4)); k2 <- opt(Gen.oneOf("a", "b", "c"))
+      v <- opt(Gen.choose(-1000L, 1000L)); w <- opt(Gen.choose(-50, 50))
+      d <- opt(Gen.choose(-99999L, 99999L).map(c => new java.math.BigDecimal(
+        java.math.BigInteger.valueOf(c), 2)))
+    } yield Row(k1, k2, v, w, d)
+    val genRel = Gen.choose(0, 60).flatMap(Gen.listOfN(_, genRow))
+      .map(_ ++ Seq(Row(7, "z", null, null, null), Row(7, "z", null, null, null)))
+    val site = "PropertySpec.fold"
+    for ((rows, gi) <- (samples(genRel, 8) :+ Nil).zipWithIndex; parts <- Seq(1, 3, 17)) {
+      val df = rel(rows, parts)
+      val f = graft.util.Loops.fold(df, Seq("k1", "k2"), Seq("v", "w", "d"), site)
+      val agg = df.groupBy("k1", "k2")
+        .agg(sum("v").as("v"), sum("w").as("w"), sum("d").as("d")).orderBy("k1", "k2")
+      assert(f.schema === agg.schema, s"sample $gi/$parts schema")
+      assert(f.collect().toSeq === agg.collect().toSeq, s"sample $gi/$parts: $rows")
+      val dist = graft.util.Loops.foldedRows(df, Seq("k2", "w"), Nil, site).toSeq
+      assert(dist === df.select("k2", "w").distinct().orderBy("k2", "w").collect().toSeq,
+        s"sample $gi/$parts distinct")
+      if (rows.nonEmpty) assert(f.collect().exists(r => r.get(0) == 7 &&
+        r.isNullAt(2) && r.isNullAt(3) && r.isNullAt(4)), "the all-NULL group sums to NULL")
+    }
+    // overflows, inside one partition and only at the merge
+    val big = Long.MaxValue / 2 + 1
+    val dec38 = StructType(Seq(StructField("k", IntegerType), StructField("d", DecimalType(38, 2))))
+    val huge = new java.math.BigDecimal("600000000000000000000000000000000000.00")
+    for (parts <- Seq(1, 2)) {
+      val e1 = intercept[ArithmeticException](graft.util.Loops.fold(
+        rel(Seq(Row(1, "a", big, 0, null), Row(1, "a", big, 0, null)), parts),
+        Seq("k1"), Seq("v"), site))
+      assert(e1.getMessage.contains(site) && e1.getMessage.contains("BIGINT"), e1.getMessage)
+      val over = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(Row(1, huge), Row(1, huge)), parts), dec38)
+      val e2 = intercept[ArithmeticException](
+        graft.util.Loops.fold(over, Seq("k"), Seq("d"), site))
+      assert(e2.getMessage.contains(site) && e2.getMessage.contains("DECIMAL(38,2)"),
+        e2.getMessage)
+      // the ANSI sums the fold stands in for fail on the same inputs
+      intercept[ArithmeticException](over.groupBy("k").agg(sum("d")).collect())
+    }
+    // DECIMAL(28,2), the sum type of a DECIMAL(18,2) column, is range-checked
+    // the same way; its overflow needs ~10¹⁰ rows, so the check is planted
+    val e3 = intercept[ArithmeticException](graft.util.Loops.checkDecimal(
+      new java.math.BigDecimal("100000000000000000000000000.00"), DecimalType(28, 2), site))
+    assert(e3.getMessage.contains(site) && e3.getMessage.contains("DECIMAL(28,2)"), e3.getMessage)
+  }
 }
